@@ -60,3 +60,20 @@ def canonical_undirected(edges: DataFrame) -> DataFrame:
         F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
     )
     return e.where(F.col("src") != F.col("dst")).distinct()
+
+
+def undirected_adjacency(edges: DataFrame) -> DataFrame:
+    """Symmetric, self-loop-free, dedup'd ``(src, dst)`` adjacency,
+    hash-partitioned by ``src`` like ``edges`` (k-core / LPA).
+
+    The same set as ``symmetrize(canonical_undirected(edges))`` from ONE
+    exchange instead of two: the src clustering of the repartition already
+    satisfies the (src, dst) distinct, and every per-src aggregate or
+    window downstream reuses it.
+    """
+    nparts = edges.rdd.getNumPartitions()
+    return (
+        symmetrize(drop_self_loops(edges))
+        .repartition(nparts, "src")
+        .distinct()
+    )

@@ -129,12 +129,6 @@ class Graph:
         return g
 
     @classmethod
-    def from_id_edges(cls, edges: DataFrame, weight: str | None = None) -> "Graph":
-        """Build from an already-long-typed edge frame; vocab is identity
-        (name = string of id). Convenience for tests/benchmarks."""
-        return cls.from_edges(edges, weight=weight)
-
-    @classmethod
     def from_dense_ids(
         cls,
         edges: DataFrame,

@@ -6,37 +6,43 @@ dropped. Peel: starting at k=0, repeatedly remove every vertex of degree
 ≤ k (cascading) before moving to k+1; a vertex's coreness is the k it
 fell at. Isolated vertices (only self-loops) get coreness 0.
 
-Spark shape (round-5 delta-degree rewrite): per inner round, only the
+Both methods read ``canon.undirected_adjacency``, cached: symmetric,
+dedup'd, hash-partitioned by ``src``, built with one exchange.
+
+Iterated H-index (default): state ``h`` only for non-isolated vertices,
+h₀ = degree (a per-src aggregate of the cache). A round is
+``cache ⋈ broadcast(h)`` on ``dst``, then the descending window and the
+H-index aggregate on ``src``, both on the cache's own partitioning: a
+round adds NO exchange, only the |V|-row state moves. The hint is given
+only while the state's estimated bytes are within the session's
+``spark.sql.autoBroadcastJoinThreshold`` (``-1`` disables it); above it
+the same plan runs as a shuffle join. ``h`` never increases (Lü et al.
+2016), so an unchanged ``sum(h)``, observed on the job that materializes
+the state, is exactly the fixpoint. One vocab left join emits names and
+coreness 0 for isolated vertices.
+
+Peel (round-5 delta-degree rewrite): per inner round, only the
 just-peeled frontier joins the edge frame — ``sym ⋈ peel(dst) →
 groupBy(src)`` — and those neighbor counts are SUBTRACTED from the
 survivors' running degrees; no per-round full-degree re-aggregation and
-no per-round edge-set anti-join rewrite (the round-4 shape did both —
-two materialized edge rewrites plus a full re-agg every round). Each
-edge (x, u) is subtracted from x exactly once — at the round u peels —
-and contributions from already-dead x are dropped by the survivor join,
-so the running degree equals the recomputed one at every step.
-
-The persisted edge frame is compacted GEOMETRICALLY, not per round: when
-half the vertices alive at the last build have peeled, ``sym`` is
-semi-joined down to the survivors and re-persisted. Delta-only with an
-immutable edge set makes every round scan all E original rows (measured
-2056→1810 driver jobs but 83→125 s on the sf0.1 full graph — the
-always-full probe beat the job savings); per-round rewriting makes early
-rounds pay thousands of full materializations. Geometric compaction
-amortizes to O(E) total rewrite work (each edge is rewritten O(1) times
-in expectation under halving) while keeping every round's aggregation
-frontier-proportional. Empty k levels are skipped by jumping k to the
-minimum surviving degree (the reference's dense ladder is free in-core;
-on a cluster each empty level would be a wasted job).
+no per-round edge-set anti-join rewrite. Each edge (x, u) is subtracted
+from x exactly once — at the round u peels — and contributions from
+already-dead x are dropped by the survivor join, so the running degree
+equals the recomputed one at every step. The persisted edge frame is
+compacted GEOMETRICALLY: when half the vertices alive at the last build
+have peeled, ``sym`` is semi-joined down to the survivors and
+re-persisted (O(E) total rewrite work under halving, while every round's
+aggregation stays frontier-proportional). Empty k levels are skipped by
+jumping k to the minimum surviving degree.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from propagon_spark.canon import canonical_undirected, symmetrize
+from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
 from propagon_spark.plans.iterate import truncate_lineage
 
@@ -44,6 +50,7 @@ from propagon_spark.plans.iterate import truncate_lineage
 # and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
 # iterative kernels re-read their persisted frames every pass
 _STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
+_STATE_ROW_BYTES = 24  # Catalyst's row estimate for (src, h): header + 2 longs
 
 
 def kcore(g: Graph, method: str = "hindex") -> DataFrame:
@@ -70,85 +77,70 @@ def kcore(g: Graph, method: str = "hindex") -> DataFrame:
     return _kcore_peel(g)
 
 
+def _broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, as Catalyst
+    reads it (``-1``: broadcasting disabled)."""
+    try:
+        return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    except AttributeError:  # Spark Connect: no JVM session — no hint
+        return -1
+
+
+def _materialize_state(h: DataFrame) -> tuple[DataFrame, int | None, int]:
+    """Truncate ``(src, h)`` and return it with its ``sum(h)`` and row
+    count, both observed on the materializing job."""
+    obs = Observation()
+    out = truncate_lineage(
+        h.observe(obs, F.sum("h").alias("total"), F.count("*").alias("rows"))
+    )
+    m = obs.get
+    return out, m["total"], m["rows"]
+
+
+def _hindex_round(sym: DataFrame, h: DataFrame, broadcast: bool) -> DataFrame:
+    """One iterated-H-index round over the src-partitioned adjacency:
+    ``max(least(h_nbr, rank))`` over each src's descending neighbor
+    values (max t s.t. ≥ t neighbors have h ≥ t)."""
+    hn = h.select(F.col("src").alias("dst"), F.col("h").alias("_hn"))
+    nbr = sym.join(F.broadcast(hn) if broadcast else hn, "dst")
+    w = Window.partitionBy("src").orderBy(F.desc("_hn"))
+    return (
+        nbr.withColumn("_rk", F.row_number().over(w))
+        .groupBy("src")
+        .agg(F.max(F.least(F.col("_hn"), F.col("_rk"))).alias("h"))
+    )
+
+
 def _kcore_hindex(g: Graph) -> DataFrame:
-    """Iterated-H-index coreness: per round, every vertex's h becomes
-    the H-index of its neighbors' h values (max t s.t. ≥ t neighbors
-    have h ≥ t), computed as ``max(least(h_nbr, rank))`` over the
-    per-vertex descending sort — one shuffle join + one window sort per
-    round, all vertices in parallel, lineage truncated per round. The
-    sequence is monotonically non-increasing and lower-bounded by the
-    coreness, so the changed-count Observation hitting zero IS the
-    fixpoint."""
-    from pyspark.sql import Observation, Window
-
-    nparts = g.edges.rdd.getNumPartitions()
-    sym = (
-        symmetrize(canonical_undirected(g.edges))
-        .repartition(nparts, "src")
-        .persist(_STORAGE)
+    """Iterated-H-index coreness (see module docstring for the shape).
+    The sequence is monotonically non-increasing and lower-bounded by
+    the coreness, so an unchanged ``sum(h)`` IS the fixpoint."""
+    sym = undirected_adjacency(g.edges).persist(_STORAGE)
+    # h₀ = degree; this job also fills sym's cache
+    h, total, rows = _materialize_state(
+        sym.groupBy("src").agg(F.count("*").alias("h"))
     )
-    sym.count()
-
-    h = truncate_lineage(
-        g.vocab.select("id")
-        .join(
-            sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("h")),
-            "id",
-            "left",
-        )
-        .select("id", F.coalesce("h", F.lit(0)).cast("long").alias("h"))
-    )
-
+    budget = _broadcast_threshold(g.spark)
+    broadcast = 0 <= rows * _STATE_ROW_BYTES <= budget
     while True:
-        nbr = sym.join(
-            h.select(F.col("id").alias("dst"), F.col("h").alias("_hn")), "dst"
-        ).select("src", "_hn")
-        w = Window.partitionBy("src").orderBy(F.desc("_hn"))
-        hidx = (
-            nbr.withColumn("_rk", F.row_number().over(w))
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.max(F.least(F.col("_hn"), F.col("_rk"))).alias("_hi"))
-        )
-        obs = Observation()
-        nxt = (
-            h.withColumnRenamed("h", "_old")
-            .join(hidx, "id", "left")
-            .select(
-                "id",
-                F.coalesce("_hi", F.lit(0)).cast("long").alias("h"),
-                "_old",
-            )
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("h") != F.col("_old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .drop("_old")
-            .transform(truncate_lineage)
-        )
-        changed = obs.get["changed"]
-        h = nxt
-        if changed == 0:
+        h, nxt, _ = _materialize_state(_hindex_round(sym, h, broadcast))
+        if nxt == total:
             break
-
+        total = nxt
     sym.unpersist()
-    out = g.with_names(h.select("id", F.col("h").alias("coreness")))
-    return out.select("name", "id", "coreness").orderBy(
-        F.desc("coreness"), F.asc("id")
-    )
+
+    core = h.select(F.col("src").alias("id"), F.col("h").alias("coreness"))
+    out = g.vocab.join(F.broadcast(core) if broadcast else core, "id", "left")
+    return out.select(
+        "name", "id", F.coalesce("coreness", F.lit(0)).cast("long").alias("coreness")
+    ).orderBy(F.desc("coreness"), F.asc("id"))
 
 
 def _kcore_peel(g: Graph) -> DataFrame:
     """Reference-shaped peel cascade (see :func:`kcore`)."""
-    nparts = g.edges.rdd.getNumPartitions()
     # immutable for the whole peel: persisted blocks, read once per round
     # by the frontier join (never anti-joined down, never re-checkpointed)
-    sym = (
-        symmetrize(canonical_undirected(g.edges))
-        .repartition(nparts, "src")
-        .persist(_STORAGE)
-    )
+    sym = undirected_adjacency(g.edges).persist(_STORAGE)
 
     # state: (id, deg) of still-alive vertices; (id, coreness) accumulator
     alive = (

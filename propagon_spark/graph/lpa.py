@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from propagon_spark.canon import canonical_undirected, symmetrize
+from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
+from propagon_spark.plans.iterate import truncate_lineage
 
 # deserialized columnar cache: the serialized level costs ~1.5x to build
 # and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
@@ -42,11 +42,7 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
     vertices (only self-loops) keep their own label.
     """
     nparts = g.edges.rdd.getNumPartitions()
-    sym = (
-        symmetrize(canonical_undirected(g.edges))
-        .repartition(nparts, "src")
-        .persist(_STORAGE)
-    )
+    sym = undirected_adjacency(g.edges).persist(_STORAGE)
     sym.count()
 
     labels = (

@@ -703,7 +703,6 @@ def pagerank(
     )
     scatter.unpersist()
     vstat.unpersist()
-    edges.unpersist()
     return PageRankResult(
         scores=scores,
         ranks=ranks,

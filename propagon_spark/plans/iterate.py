@@ -8,8 +8,8 @@ carries origin statistics/constraints/ordering captured from the parent
 plan, and when the checkpointed frame is referenced more than once per
 step (scatter + delta joins) that carried state itself compounds —
 empirically the ``localCheckpoint`` *call* doubles in cost per iteration
-from ~iteration 18 on a 3-node graph (measured on Spark 4.1.2; see
-tests/test_perf_iteration.py).
+from ~iteration 18 on a 3-node graph (a one-off measurement on Spark
+4.1.2; no test in the suite pins it).
 
 :func:`truncate_lineage` fixes this by re-wrapping the checkpointed RDD
 in a **fresh, bare** ``LogicalRDD`` via ``internalCreateDataFrame`` — no

@@ -44,6 +44,28 @@ def make_edges(spark, rows, weights=False):
 
 
 @pytest.fixture(scope="session")
+def tournament(tmp_path_factory):
+    """A generated stand-in for a season corpus: 30 teams ``"0".."29"``,
+    every pair meets 4 times, one ``winner loser 1`` row per game
+    (seeded; higher-numbered teams win more often). Returns the file path
+    and each team's win count, which is its out-strength."""
+    import random
+
+    rng = random.Random(2018)
+    games = []
+    for a in range(30):
+        for b in range(a + 1, 30):
+            for _ in range(4):
+                games.append((b, a) if rng.random() < 0.5 + (b - a) / 80 else (a, b))
+    path = tmp_path_factory.mktemp("corpus") / "tournament.edges"
+    path.write_text("".join(f"{w} {lo} 1\n" for w, lo in games))
+    wins = {str(t): 0.0 for t in range(30)}
+    for w, _ in games:
+        wins[str(w)] += 1.0
+    return str(path), wins
+
+
+@pytest.fixture(scope="session")
 def small_graph_rows():
     # clients/python/tests/conftest.py:24-29 — (a,b),(b,c),(c,a),(a,c),(b,a)
     return [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("b", "a")]

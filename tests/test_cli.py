@@ -18,6 +18,15 @@ from propagon_spark.cli import run
 
 BASEBALL = "/root/reference/examples/tournament/baseball.2018.edges"
 GOLDEN = "/root/reference/crates/propagon-cli/tests/golden/page-rank.out"
+BIRANK_GOLDEN = os.path.join(os.path.dirname(GOLDEN), "birank.out")
+
+
+def _needs(*paths):
+    """Golden comparisons run only where the reference corpus exists."""
+    return pytest.mark.skipif(
+        not all(map(os.path.exists, paths)),
+        reason="reference corpus not available",
+    )
 
 
 def _parse_scores(text: str) -> dict[str, float]:
@@ -30,6 +39,7 @@ def _parse_scores(text: str) -> dict[str, float]:
     return out
 
 
+@_needs(BASEBALL, GOLDEN)
 def test_cli_pagerank_matches_reference_golden(spark, capsys):
     buf = io.StringIO()
     rc = run(["graph", "page-rank", "--matches", BASEBALL], spark=spark, out=buf)
@@ -46,21 +56,22 @@ def test_cli_pagerank_matches_reference_golden(spark, capsys):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_cli_degree_and_formats(spark, tmp_path):
+def test_cli_degree_and_formats(spark, tmp_path, tournament):
+    corpus, wins = tournament
     buf = io.StringIO()
-    rc = run(["graph", "degree", "--direction", "out", BASEBALL],
+    rc = run(["graph", "degree", "--direction", "out", corpus],
              spark=spark, out=buf)
     assert rc == 0
     got = _parse_scores(buf.getvalue())
-    # rows are 'winner loser 1', so out-strength = wins: 2018 MLB
-    assert got["21"] == 108.0
+    # rows are 'winner loser 1', so out-strength = wins
+    assert got == wins
 
     # jsonl format: header line + one model line per entity
     import json
 
     buf = io.StringIO()
     state = str(tmp_path / "deg.jsonl")
-    rc = run(["graph", "degree", "--direction", "out", BASEBALL,
+    rc = run(["graph", "degree", "--direction", "out", corpus,
               "--format", "jsonl", "--save-state", state],
              spark=spark, out=buf)
     assert rc == 0
@@ -75,9 +86,9 @@ def test_cli_degree_and_formats(spark, tmp_path):
     assert head2["algorithm"] == "degree" and loaded.count() == 30
 
 
-def test_cli_hits_two_section_and_components(spark, tmp_path):
+def test_cli_hits_two_section_and_components(spark, tmp_path, tournament):
     buf = io.StringIO()
-    rc = run(["graph", "hits", "--iterations", "5", BASEBALL],
+    rc = run(["graph", "hits", "--iterations", "5", tournament[0]],
              spark=spark, out=buf)
     assert rc == 0
     sections = buf.getvalue().split("\n\n")
@@ -151,6 +162,7 @@ def _spearman(a: dict, b: dict) -> float:
     return float(np.corrcoef(ra, rb)[0, 1])
 
 
+@_needs(BASEBALL, BIRANK_GOLDEN)
 def test_cli_birank_golden_spearman(spark):
     # the reference's own tier-S golden for RNG-divergent algos
     # (golden.rs:176-212): section-wise Spearman >= 0.95 vs birank.out
@@ -158,9 +170,7 @@ def test_cli_birank_golden_spearman(spark):
     rc = run(["graph", "birank", BASEBALL], spark=spark, out=buf)
     assert rc == 0
     got_lines = [ln for ln in buf.getvalue().splitlines() if ": " in ln]
-    with open(
-        "/root/reference/crates/propagon-cli/tests/golden/birank.out"
-    ) as f:
+    with open(BIRANK_GOLDEN) as f:
         want_lines = [ln for ln in f.read().splitlines() if ": " in ln]
     assert len(got_lines) == len(want_lines) == 60
     mid_g, mid_w = len(got_lines) // 2, len(want_lines) // 2
@@ -174,9 +184,9 @@ def test_cli_birank_golden_spearman(spark):
     assert rho_p >= 0.95, f"birank p-side spearman {rho_p}"
 
 
-def test_cli_bootstrap_intervals(spark):
+def test_cli_bootstrap_intervals(spark, tournament):
     buf = io.StringIO()
-    rc = run(["graph", "degree", BASEBALL, "--bootstrap", "4"],
+    rc = run(["graph", "degree", tournament[0], "--bootstrap", "4"],
              spark=spark, out=buf)
     assert rc == 0
     lines = [ln for ln in buf.getvalue().splitlines() if ln.strip()]
@@ -184,10 +194,10 @@ def test_cli_bootstrap_intervals(spark):
     assert "[" in lines[0] and "rank [" in lines[0]
 
 
-def test_installed_console_script_end_to_end():
+def test_installed_console_script_end_to_end(tournament):
     # packaging smoke (pyproject.toml [project.scripts]): the INSTALLED
     # `propagon-spark` entry point — its own process, its own Spark
-    # session — reproduces team degree on the reference corpus. Skipped
+    # session — reproduces team degree on the generated corpus. Skipped
     # when the package isn't pip-installed (source-checkout-only runs).
     import shutil
     import subprocess
@@ -197,13 +207,9 @@ def test_installed_console_script_end_to_end():
         pytest.skip("propagon-spark console script not installed")
     env = dict(os.environ, PROPAGON_SPARK_MASTER="local[2]")
     out = subprocess.run(
-        [exe, "graph", "degree", BASEBALL, "--direction", "out"],
+        [exe, "graph", "degree", tournament[0], "--direction", "out"],
         capture_output=True, text=True, timeout=300, env=env,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    scores = _parse_scores(out.stdout)
-    # 2018 MLB wins (edges are winner->loser, so OUT-degree): top-3
-    # teams 21:108, 22:103, 24:100
-    assert len(scores) == 30
-    top = sorted(scores, key=lambda k: -scores[k])[:3]
-    assert top == ["21", "22", "24"]
+    # edges are winner->loser, so OUT-degree = wins
+    assert _parse_scores(out.stdout) == tournament[1]

@@ -15,6 +15,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -33,6 +34,14 @@ def _live_exchanges(df) -> int:
     under InMemoryRelation is display-only (already materialized) and
     excluded."""
     return _plan(df).split("InMemoryRelation")[0].count("Exchange")
+
+
+def _live_shuffles(df) -> int:
+    """Live shuffle exchanges: as :func:`_live_exchanges`, but a
+    ``BroadcastExchange`` (the |V|-row build side of a broadcast join)
+    does not count."""
+    live = _plan(df).split("InMemoryRelation")[0]
+    return len(re.findall(r"(?<![A-Za-z])Exchange", live))
 
 
 def _raw_edges(spark):
@@ -113,3 +122,33 @@ def test_lsh_candidate_distinct_keys_on_id_pair_only(spark):
     for ln in dedup_aggs:
         keys = ln.split("keys=[", 1)[1].split("]", 1)[0]
         assert "_qv" not in keys and "_cv" not in keys and "embedding" not in keys
+
+
+def test_undirected_adjacency_single_exchange(spark):
+    # the k-core / LPA adjacency: loop drop + both directions + dedup from
+    # ONE exchange (the src repartition also satisfies the distinct)
+    from propagon_spark.canon import undirected_adjacency
+
+    g = Graph.from_dense_ids(_raw_edges(spark), weight="weight")
+    try:
+        assert _live_exchanges(undirected_adjacency(g.edges)) == 1
+    finally:
+        g.unpersist()
+
+
+def test_kcore_round_adds_no_exchange(spark):
+    # an iterated-H-index round: the cached adjacency joins the broadcast
+    # vertex state on dst, then window + aggregate on src reuse the cache's
+    # src partitioning — no shuffle exchange at all
+    from propagon_spark.canon import undirected_adjacency
+    from propagon_spark.graph.kcore import _hindex_round
+    from propagon_spark.plans.iterate import truncate_lineage
+
+    g = Graph.from_dense_ids(_raw_edges(spark), weight="weight")
+    sym = undirected_adjacency(g.edges).persist()
+    try:
+        h = truncate_lineage(sym.groupBy("src").agg(F.count("*").alias("h")))
+        assert _live_shuffles(_hindex_round(sym, h, broadcast=True)) == 0
+    finally:
+        sym.unpersist()
+        g.unpersist()
