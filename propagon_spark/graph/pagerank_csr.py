@@ -14,8 +14,8 @@ Each iteration broadcasts the dense rank vector (ids are dense 0..n-1
 by construction — see ids.py) and every bucket task computes its gather
 with a vectorized ``np.bincount`` over its mmapped shard columns inside
 an RDD ``mapPartitions`` over the ~nblocks-item bucket→paths control
-list (a DataFrame here re-paid Catalyst planning + Arrow stream setup
-every iteration — ~0.6 s/job of measured core-count-independent fixed
+list (a DataFrame here adds Catalyst planning + Arrow stream setup to
+every iteration; see ``_gather_factory`` for the measured per-job
 cost). Shards store **bucket-local dst indices**
 (``dst // nblocks``), so the per-shard accumulator is ``n/nblocks``
 doubles — L2-resident instead of an n-length memset per shard. Because
@@ -267,7 +267,8 @@ def _shard_writer_factory(blocks_dir: str, nblocks: int, np_dtype, ext: str):
     Parquet encode, no commit protocol. Files are written under
     temp names and atomically renamed at task end, so task retries are
     safe (a retry overwrites with identical content). Yields one
-    ``(bucket, path-prefix)`` row per non-empty bucket.
+    ``(bucket, path-prefix, rows)`` row per non-empty bucket, ``rows``
+    being the shard's edge count.
     """
 
     def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -307,13 +308,13 @@ def _shard_writer_factory(blocks_dir: str, nblocks: int, np_dtype, ext: str):
                 sdstl[lo:hi].tofile(h[2])
         rows = []
         for bucket, (prefix, fsrc, fdstl) in handles.items():
+            rows.append((bucket, prefix, fsrc.tell() // np.dtype(np_dtype).itemsize))
             fsrc.close()
             fdstl.close()
             for s in _SIDECARS:
                 os.replace(f"{prefix}{s}.{ext}{tmp_sfx}", f"{prefix}{s}.{ext}")
-            rows.append((bucket, prefix))
         if rows:
-            yield pd.DataFrame(rows, columns=["bucket", "path"])
+            yield pd.DataFrame(rows, columns=["bucket", "path", "rows"])
 
     return write
 
@@ -336,13 +337,18 @@ def _gather_factory(n: int, nblocks: int, ext: str, rank_bc, token: str):
 
     This is a plain RDD ``mapPartitions`` body, not a pandas UDF: the
     control plane is ~nblocks tiny rows per iteration, and routing them
-    through a DataFrame re-ran Catalyst analysis/optimization/codegen
-    plus Arrow stream setup EVERY iteration — ~0.6 s of measured
-    per-job fixed cost at any core count, the dominant gather term at 8
-    cores (see BENCH/RUNS.md round-4 phase tables). The data plane (the
-    edge blocks, where the 222M-edge SpMV actually runs) stays mmap'd
-    raw columns + ``np.bincount``; only the bucket→paths routing rides
-    the RDD."""
+    through a DataFrame re-runs Catalyst analysis/optimization/codegen
+    plus Arrow stream setup EVERY iteration. Round 4 measured ~0.6 s of
+    per-job fixed cost for that at any core count (BENCH/RUNS.md phase
+    tables), but most of it was the per-task Python worker start-up that
+    ``propagon_spark._daemon`` removes. Re-measured with the engine
+    daemon (4-core host, ``local[2]``, 2 tasks, median of 10 jobs): a
+    ``mapInPandas`` job over a 16-row frame takes 0.21-0.24 s wall, the
+    same RDD job 0.11 s (stock daemon: 0.38 and 0.27 s). A whole CSR
+    turn on the 93.7k-edge ``pagerank-cold`` bench graph (broadcast,
+    gather, driver update) is ~0.1 s. The data plane (the edge blocks,
+    where the 222M-edge SpMV actually runs) stays mmap'd raw columns +
+    ``np.bincount``; only the bucket→paths routing rides the RDD."""
     nlocal = (n + nblocks - 1) // nblocks
 
     def gather(items: Iterator[tuple]) -> Iterator[tuple]:
@@ -385,9 +391,6 @@ def pagerank_csr(
     sc = spark.sparkContext
     n = g.num_vertices
     t_setup = time.monotonic()
-
-    n_edges = edges.count()  # materialize the persisted canonical frame ONCE
-    t_dedup = time.monotonic()
 
     # materialize dst-partitioned CSR block files once; workers mmap and
     # cache their blocks, so per-iteration traffic is one rank-vector
@@ -444,19 +447,26 @@ def pagerank_csr(
                     _shard_writer_factory(
                         local_blocks_dir, nblocks, np_dtype, ext
                     ),
-                    schema="bucket int, path string",
+                    schema="bucket int, path string, rows long",
                 )
                 .collect()
             )
         finally:
             spark.conf.set(conf_key, old_batch)
+        # this write is the first job over the persisted canonical frame,
+        # so it materializes it; the shards' row counts replace a count()
+        t_dedup = t_setup
+        n_edges = 0
         for r in rows:
             by_bucket.setdefault(int(r["bucket"]), []).append(r["path"])
+            n_edges += r["rows"]
     else:
         # PORTABLE PATH (hdfs://, s3://, …): JVM-only dynamic-partitioned
         # Parquet write straight off the canonical frame's partitions;
         # gather tasks decode their bucket's files with pyarrow's
         # URI-aware reader on first touch.
+        n_edges = edges.count()  # materialize the persisted canonical frame
+        t_dedup = time.monotonic()
         (
             edges.select(
                 F.col("src").cast(id_type),
@@ -484,10 +494,9 @@ def pagerank_csr(
     # while the per-iteration task count tracks the session's width,
     # exactly as partition tuning would on a real cluster. A plain
     # parallelized RDD, not a DataFrame: the ~nblocks-row control frame
-    # paid Catalyst re-planning + Arrow stream setup per ITERATION
-    # (~0.6 s/job measured, core-count-independent — see
-    # _gather_factory's docstring); the RDD job ships the same rows in
-    # the task binary with none of that.
+    # paid Catalyst re-planning + Arrow stream setup per ITERATION (about
+    # twice the RDD job's fixed cost — see _gather_factory's docstring);
+    # the RDD job ships the same rows in the task binary with none of that.
     block_rows = [
         (b, ";".join(sorted(ps))) for b, ps in sorted(by_bucket.items())
     ]

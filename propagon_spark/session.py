@@ -142,7 +142,7 @@ def get_spark(
         # convergence fit accumulates every iteration's state on local
         # disk — measured: a 103.8M-vertex / 591.5M-edge fit at ~5 GB of
         # checkpoint blocks + shuffle per iteration filled a 75 GB
-        # scratch volume in minutes (BENCH/round5a_huge log, round 5).
+        # scratch volume in minutes (BENCH/RUNS.md, round 5).
         # The default 30min periodic-GC cadence is tuned for streaming;
         # 2min bounds in-flight orphaned state to a few iterations at
         # negligible GC cost (System.gc on a mostly-dead young gen).
@@ -150,6 +150,11 @@ def get_spark(
             "spark.cleaner.periodicGC.interval",
             os.environ.get("PROPAGON_PERIODIC_GC", "2min"),
         )
+        # pyspark.daemon plus a zipimport fix: on CPython < 3.13 every
+        # Python task re-read pyspark.zip's directory, ~0.2 s of fixed
+        # cost per task (see _daemon.py). Executors must import
+        # propagon_spark, as the CSR kernel already requires.
+        .config("spark.python.daemon.module", "propagon_spark._daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -188,11 +188,13 @@ def test_portable_parquet_block_path(g4, monkeypatch):
     # path bit-for-bit
     from propagon_spark.graph import pagerank_csr
 
-    local = scores_dict(
-        pagerank(g4, iterations=10, sink="uniform", impl="csr").scores
-    )
+    local_res = pagerank(g4, iterations=10, sink="uniform", impl="csr")
+    local = scores_dict(local_res.scores)
     monkeypatch.setattr(pagerank_csr, "_as_local_path", lambda p: None)
-    portable = scores_dict(
-        pagerank(g4, iterations=10, sink="uniform", impl="csr").scores
-    )
+    portable_res = pagerank(g4, iterations=10, sink="uniform", impl="csr")
+    portable = scores_dict(portable_res.scores)
     assert local == portable
+    # the shard writer's per-shard row counts sum to the dedup'd edges,
+    # the count the portable path takes with count()
+    assert local_res.timings["edge_rows"] == len(F1_EDGES)
+    assert portable_res.timings["edge_rows"] == len(F1_EDGES)
