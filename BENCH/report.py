@@ -39,6 +39,15 @@ _PHASES = [
 _CSR_ONLY_AGG = "setup_s"
 
 
+def efficiency(r: dict) -> float:
+    """A pair's headline efficiency: the conservative (min) repeat pair,
+    ``scaling_efficiency_min``; JSONs written before that key existed
+    fall back to ``min(efficiency_per_repeat)``, then the median."""
+    if "scaling_efficiency_min" in r:
+        return r["scaling_efficiency_min"]
+    return min(r.get("efficiency_per_repeat") or [r["scaling_efficiency"]])
+
+
 def load_pairs() -> list[dict]:
     pairs = []
     for path in sorted(glob.glob(os.path.join(BENCH, "scaling_*x*.json"))):
@@ -87,16 +96,17 @@ def main() -> None:
 Same PageRank job (damping 0.85, uniform sink, tol 1e-6) on the same
 input per pair, run at two parallelism levels in separate JVMs with one
 warm-up fit each; levels alternate within each repeat, efficiency is
-computed per repeat-pair and the reported number is the MEDIAN across
-repeats (/proc/loadavg is host-wide in this sandbox — per-run load at
-start is recorded for transparency). The CSR bucket/file layout
+computed per repeat-pair and the reported number is the conservative
+MIN pair, with the median alongside (/proc/loadavg is host-wide in
+this sandbox — per-run load at start is recorded for transparency). The CSR bucket/file layout
 is pinned across levels (nblocks = {head.get('nblocks', 32)}) so the
 comparison isolates parallelism. Efficiency = (T_N / T_4N) /
 (cores_4N / cores_N); target >= 0.8 (BASELINE.json).
 
 **Headline ({head['impl']} kernel, N={head['n']} → 4N={head['n4']},
 {head['low']['dedup_edges']:,} dedup'd directed edges): scaling
-efficiency {head['scaling_efficiency']}** (target >= 0.8,
+efficiency {efficiency(head)}** (min pair; median
+{head['scaling_efficiency']}; target >= 0.8,
 repeats {head['repeats']}).
 
 **Round 5 — the beyond-extrapolation datapoint (synth-huge,
@@ -160,13 +170,14 @@ that cap (the actual 10^12-file-scale path).
         if per_rep and len(per_rep) > 1:
             spread = (f"\n\nPer-repeat efficiencies: "
                       f"{', '.join(str(e) for e in per_rep)} "
-                      f"(median reported; the tables below show the "
-                      f"median repeat's own pair of runs).")
+                      f"(min reported, median {r['scaling_efficiency']}; "
+                      f"the tables below show the median repeat's own "
+                      f"pair of runs).")
         nv = lo.get("vertices")
         vtag = f", {nv:,} vertices" if nv else ""
         ptag = f", {r['tag']}" if r.get("tag") else ""
         md.append(f"""## {r['impl']} kernel, {r['n']} → {r['n4']} cores — \
-efficiency {r['scaling_efficiency']} ({r['input']}{vtag}, repeats {r['repeats']}{ptag}){spread}
+efficiency {efficiency(r)} ({r['input']}{vtag}, repeats {r['repeats']}{ptag}){spread}
 
 | level | cores | seconds | iterations | dedup edges | edges/sec | load start→end |
 |---|---|---|---|---|---|---|
@@ -226,7 +237,7 @@ would run on a cluster.
     with open(os.path.join(BENCH, "BASELINE.md"), "w") as f:
         f.write("\n".join(md))
     print(f"wrote BASELINE.md from {len(pairs)} pair(s): "
-          + ", ".join(f"{r['impl']}:{r['n']}x{r['n4']}={r['scaling_efficiency']}"
+          + ", ".join(f"{r['impl']}:{r['n']}x{r['n4']}={efficiency(r)}"
                       for r in pairs))
 
 

@@ -145,11 +145,6 @@ def extract_components(
     intended for small/medium component counts; at scale use
     :func:`write_components` (partitioned write) instead."""
     cc = connected_components(g, min_size=min_size)
-    comp_rows = (
-        cc.select("component", "component_size").distinct()
-        .orderBy(F.desc("component_size"), F.asc("component"))
-        .collect()
-    )
     edges_named = (
         g.edges.join(
             g.vocab.select(F.col("id").alias("src"), F.col("name").alias("src_name")),
@@ -163,21 +158,22 @@ def extract_components(
             cc.select(F.col("id").alias("src"), "component").distinct(), "src"
         )
     )
-    result = []
-    for r in comp_rows:
-        comp = r["component"]
-        members = [
-            x["name"]
-            for x in cc.where(F.col("component") == comp)
-            .orderBy("id")
-            .select("name")
-            .collect()
-        ]
-        cedges = edges_named.where(F.col("component") == comp).select(
-            F.col("src_name").alias("src"), F.col("dst_name").alias("dst"), "weight"
+    # one ordered collect: cc is sorted (size desc, component asc, id
+    # asc), so first appearance orders the components and members arrive
+    # in id order
+    members: dict[int, list[str]] = {}
+    for r in cc.select("component", "name").collect():
+        members.setdefault(r["component"], []).append(r["name"])
+    return [
+        (
+            names,
+            edges_named.where(F.col("component") == comp).select(
+                F.col("src_name").alias("src"), F.col("dst_name").alias("dst"),
+                "weight",
+            ),
         )
-        result.append((members, cedges))
-    return result
+        for comp, names in members.items()
+    ]
 
 
 def write_components(g: Graph, path: str, min_size: int = 1) -> None:

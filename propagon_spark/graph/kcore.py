@@ -6,20 +6,38 @@ dropped. Peel: starting at k=0, repeatedly remove every vertex of degree
 ≤ k (cascading) before moving to k+1; a vertex's coreness is the k it
 fell at. Isolated vertices (only self-loops) get coreness 0.
 
-Both methods read ``canon.undirected_adjacency``, cached: symmetric,
-dedup'd, hash-partitioned by ``src``, built with one exchange.
+Every method reads ``canon.undirected_adjacency``: symmetric, dedup'd,
+hash-partitioned by ``src``, built with one exchange.
 
-Iterated H-index (default): state ``h`` only for non-isolated vertices,
-h₀ = degree (a per-src aggregate of the cache). A round is
-``cache ⋈ broadcast(h)`` on ``dst``, then the descending window and the
-H-index aggregate on ``src``, both on the cache's own partitioning: a
-round adds NO exchange, only the |V|-row state moves. The hint is given
-only while the state's estimated bytes are within the session's
-``spark.sql.autoBroadcastJoinThreshold`` (``-1`` disables it); above it
-the same plan runs as a shuffle join. ``h`` never increases (Lü et al.
-2016), so an unchanged ``sum(h)``, observed on the job that materializes
-the state, is exactly the fixpoint. One vocab left join emits names and
-coreness 0 for isolated vertices.
+Iterated H-index (default): h₀ = degree, h_{n+1}[v] = H-index of
+{h_n[u] : u ∈ N(v)}. ``h`` never increases and its fixpoint is exactly
+the coreness (Lü et al. 2016), however the synchronous rounds are
+executed. Two executions, selected by the vertex count against the edge-
+block store's bound (``plans.blocks.DRIVER_STATE_MAX_VERTICES``, the one
+CSR PageRank uses):
+
+- **Edge-block store** (n ≤ the bound): the adjacency is written once as
+  dst-bucketed worker shards and unpersisted; ``h`` is a dense driver
+  vector (int32 below 2³¹ vertices). h₀ is one bincount round; a later
+  round is ONE Python-worker RDD job — broadcast ``h``, a segmented
+  H-index per bucket over its ``(src, dst_local)`` columns
+  (:func:`_hindex`), the buckets' buffers assembled on the driver — with
+  no Catalyst planning, checkpoint or shuffle. Exact array equality
+  ``h_next == h`` on the driver stops the loop. Isolated vertices keep
+  their bucket accumulator's 0. One vocab join emits names.
+- **Dataflow** (n > the bound, :func:`_kcore_hindex`): state ``h`` only
+  for non-isolated vertices, h₀ = degree (a per-src aggregate of the
+  cached adjacency). A round is ``cache ⋈ broadcast(h)`` on ``dst``,
+  then the descending window and the H-index aggregate on ``src``, both
+  on the cache's own partitioning: a round adds NO exchange, only the
+  |V|-row state moves, but each is a planned query with a
+  ``localCheckpoint``. The hint is given only while the state's
+  estimated bytes are within the session's
+  ``spark.sql.autoBroadcastJoinThreshold`` (``-1`` disables it); above
+  it the same plan runs as a shuffle join. An unchanged ``sum(h)``,
+  observed on the job that materializes the state, is exactly the
+  fixpoint. One vocab left join emits names and coreness 0 for isolated
+  vertices.
 
 Peel (round-5 delta-degree rewrite): per inner round, only the
 just-peeled frontier joins the edge frame — ``sym ⋈ peel(dst) →
@@ -38,12 +56,15 @@ jumping k to the minimum surviving degree.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
+from propagon_spark.plans import blocks
 from propagon_spark.plans.iterate import truncate_lineage
 
 # deserialized columnar cache: the serialized level costs ~1.5x to build
@@ -60,10 +81,11 @@ def kcore(g: Graph, method: str = "hindex") -> DataFrame:
     Zhang, Zhang & Zhou, *Nature Physics* 2016) — h₀ = degree,
     h_{n+1}[v] = H-index of {h_n[u] : u ∈ N(v)}; the fixpoint is exactly
     the coreness. Converges in tens of rounds on real graphs, each round
-    one vertex-parallel join+window over the edge set — versus the
-    peel cascade's HUNDREDS of driver rounds (the sf0.1 full graph
-    cascades ~450 rounds; measured 86-125 s peel vs ~20 s hindex, same
-    output). Bounded round count × all-parallel rounds is the shape that
+    one vertex-parallel pass over the edge set (on the edge-block store
+    while the vertex state fits the driver, a dataflow join+window above
+    that; see the module docstring) — versus the peel cascade's HUNDREDS
+    of driver rounds (the sf0.1 full graph cascades ~450 rounds; measured
+    86-125 s peel vs ~20 s hindex, same output). Bounded round count × all-parallel rounds is the shape that
     survives a 1000-executor scale-up.
 
     ``method="peel"``: the reference-shaped Batagelj-Zaversnik cascade
@@ -72,9 +94,11 @@ def kcore(g: Graph, method: str = "hindex") -> DataFrame:
     """
     if method not in ("hindex", "peel"):
         raise ValueError(f"method must be hindex|peel, got {method!r}")
-    if method == "hindex":
-        return _kcore_hindex(g)
-    return _kcore_peel(g)
+    if method == "peel":
+        return _kcore_peel(g)
+    if g.num_vertices <= blocks.DRIVER_STATE_MAX_VERTICES:
+        return _kcore_blocks(g)
+    return _kcore_hindex(g)
 
 
 def _broadcast_threshold(spark: SparkSession) -> int:
@@ -108,6 +132,68 @@ def _hindex_round(sym: DataFrame, h: DataFrame, broadcast: bool) -> DataFrame:
         nbr.withColumn("_rk", F.row_number().over(w))
         .groupBy("src")
         .agg(F.max(F.least(F.col("_hn"), F.col("_rk"))).alias("h"))
+    )
+
+
+def _degree(_state, bucket: list, nlocal: int) -> np.ndarray:
+    """Store kernel: the bucket's vertex degrees (the adjacency is
+    symmetric, so in-degree is degree)."""
+    acc = np.zeros(nlocal, np.int64)
+    for _src, dstl in bucket:
+        acc += np.bincount(dstl, minlength=nlocal)
+    return acc
+
+
+def _hindex(h: np.ndarray, bucket: list, nlocal: int) -> np.ndarray:
+    """Store kernel: one iterated-H-index round for the bucket's
+    vertices. The bucket's edges are sorted by ``(dst_local, -h[src])``;
+    within a dst's segment the i-th value (1-based) is ``vals[i]``, and
+    the H-index is ``max_i min(vals[i], i)``."""
+    out = np.zeros(nlocal, h.dtype)
+    src = np.concatenate([b[0] for b in bucket])
+    dstl = np.concatenate([b[1] for b in bucket])
+    if len(dstl) == 0:
+        return out
+    vals = h[src]
+    order = np.lexsort((-vals, dstl))
+    d = dstl[order]
+    v = vals[order]
+    starts = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
+    lengths = np.diff(np.r_[starts, len(d)])
+    rank = np.arange(1, len(d) + 1) - np.repeat(starts, lengths)
+    out[d[starts]] = np.maximum.reduceat(np.minimum(v, rank), starts)
+    return out
+
+
+def _kcore_blocks(g: Graph) -> DataFrame:
+    """Iterated-H-index coreness on the edge-block store (see the module
+    docstring). ``h`` is non-increasing, so the first round that changes
+    nothing is the fixpoint."""
+    spark = g.spark
+    n = g.num_vertices
+    sym = undirected_adjacency(g.edges).persist(_STORAGE)
+    try:
+        store = blocks.build(sym, n)
+    finally:
+        sym.unpersist()  # the shards hold the adjacency from here on
+    with store:
+        # h ≤ degree < n: the store's id dtype (int32 below 2³¹) holds it
+        h = store.gather(_degree, None, np.int64).astype(store.dtype)
+        while True:
+            nxt = store.gather(_hindex, h, store.dtype)
+            if np.array_equal(nxt, h):
+                break
+            h = nxt
+
+    core = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64),
+                      "coreness": h.astype(np.int64)}),
+        "id long, coreness long not null",
+    )
+    broadcast = 0 <= n * _STATE_ROW_BYTES <= _broadcast_threshold(spark)
+    out = g.vocab.join(F.broadcast(core) if broadcast else core, "id")
+    return out.select("name", "id", "coreness").orderBy(
+        F.desc("coreness"), F.asc("id")
     )
 
 

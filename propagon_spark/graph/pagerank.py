@@ -51,6 +51,7 @@ from pyspark.storagelevel import StorageLevel
 from propagon_spark.canon import dedup_edges
 from propagon_spark.errors import InvalidParameterError, NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
+from propagon_spark.plans.blocks import DRIVER_STATE_MAX_VERTICES
 from propagon_spark.plans.checkpoint import CheckpointManager
 from propagon_spark.plans.iterate import truncate_lineage
 from propagon_spark.progress import as_progress
@@ -147,7 +148,7 @@ def pagerank(
     hub_threshold: int = 1_000_000,
     hub_salts: int = 16,
     impl: str = "auto",
-    csr_max_vertices: int = 10_000_000,
+    csr_max_vertices: int = DRIVER_STATE_MAX_VERTICES,
     progress=None,
 ) -> PageRankResult:
     """Fit PageRank. ``tol=None`` → fixed ``iterations`` (reference parity
@@ -159,9 +160,11 @@ def pagerank(
     newest durable checkpoint of the same run.
 
     ``impl``: ``"auto"`` picks the CSR-blocked vectorized kernel
-    (pagerank_csr.py — distributed edge blocks, broadcast vertex state, no
-    per-iteration shuffle) while ``num_vertices <= csr_max_vertices``, the
-    pure-dataflow join kernel beyond; force with ``"csr"`` / ``"join"``.
+    (pagerank_csr.py on the plans/blocks.py edge-block store — distributed
+    edge blocks, broadcast vertex state, no per-iteration shuffle) while
+    ``num_vertices <= csr_max_vertices`` (default: the store's
+    ``DRIVER_STATE_MAX_VERTICES``), the pure-dataflow join kernel beyond;
+    force with ``"csr"`` / ``"join"``.
 
     ``progress``: a :class:`propagon_spark.progress.Progress` or a bare
     ``callable(phase, metrics_row)`` invoked on the driver after every

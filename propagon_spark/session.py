@@ -75,7 +75,7 @@ def get_spark(
     # make propagon_spark importable in Python workers: without this,
     # cloudpickle serializes our UDF closures BY VALUE — every query ships
     # a fresh copy of the module globals, which silently defeats the
-    # worker-resident CSR block cache (pagerank_csr._BLOCK_CACHE) and
+    # worker-resident edge-block cache (plans.blocks._BLOCK_CACHE) and
     # re-imports nothing. On a cluster, ship the package with
     # ``spark-submit --py-files`` instead.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

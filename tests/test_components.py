@@ -85,3 +85,33 @@ def test_long_chain(spark):
     comps = {r["component"] for r in cc.collect()}
     assert len(comps) == 1
     g.unpersist()
+
+
+def _jobs_of(spark, fn):
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_extract_components_jobs_independent_of_component_count(spark):
+    # member lists come from one collect, not one query per component;
+    # the per-component edge frames stay lazy
+    jobs = {}
+    for k in (2, 8):
+        g = Graph.from_edges(
+            make_edges(spark, [(f"a{i}", f"b{i}") for i in range(k)])
+        )
+        comps = []
+        jobs[k] = _jobs_of(spark, lambda: comps.extend(extract_components(g)))
+        assert [m for m, _ in comps] == [[f"a{i}", f"b{i}"] for i in range(k)]
+        g.unpersist()
+    assert jobs[2] == jobs[8]

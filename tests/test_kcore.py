@@ -6,6 +6,16 @@ from conftest import make_edges
 
 from propagon_spark.graph import Graph
 from propagon_spark.graph.kcore import _broadcast_threshold, kcore
+from propagon_spark.plans import blocks
+
+
+@pytest.fixture(params=["blocks", "dataflow"])
+def hindex_path(request, monkeypatch):
+    """Run the H-index on the edge-block store or, with the store's
+    vertex bound forced to 0, on the dataflow rounds used above it."""
+    if request.param == "dataflow":
+        monkeypatch.setattr(blocks, "DRIVER_STATE_MAX_VERTICES", 0)
+    return request.param
 
 
 def clique(names):
@@ -45,7 +55,7 @@ def _random_rows():
             if a != b}
 
 
-def test_hindex_equals_peel_random_graph(spark):
+def test_hindex_equals_peel_random_graph(spark, hindex_path):
     # method equivalence on a non-trivial graph: the iterated-H-index
     # fixpoint must assign the exact coreness the reference-shaped peel
     # cascade assigns (Lü et al. 2016 theorem; also oracle-checked vs
@@ -58,9 +68,10 @@ def test_hindex_equals_peel_random_graph(spark):
     g.unpersist()
 
 
-def test_hindex_equals_peel_without_broadcast(spark):
-    # broadcasting disabled: the H-index rounds run the same plan as a
-    # shuffle join; a self-loop-only vertex must still get coreness 0
+def test_hindex_equals_peel_without_broadcast(spark, monkeypatch):
+    # broadcasting disabled: the dataflow H-index rounds run the same plan
+    # as a shuffle join; a self-loop-only vertex must still get coreness 0
+    monkeypatch.setattr(blocks, "DRIVER_STATE_MAX_VERTICES", 0)
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -77,3 +88,49 @@ def test_hindex_equals_peel_without_broadcast(spark):
     assert hi == pe
     assert hi["loop"] == 0
     assert max(hi.values()) >= 2
+
+
+def _block_dirs(spark):
+    import os
+    from urllib.parse import urlparse
+
+    ck = urlparse(spark.sparkContext.getCheckpointDir()).path
+    return {d for d in os.listdir(ck) if d.startswith("csr_blocks_")}
+
+
+def test_blocks_path_leaves_nothing_behind(spark, monkeypatch):
+    # the store path persists nothing past the call (no per-round
+    # checkpointed state, the adjacency released once the shards exist)
+    # and deletes its block directory
+    builds = []
+    build = blocks.build
+
+    def counting_build(*args):
+        builds.append(1)
+        return build(*args)
+
+    monkeypatch.setattr(blocks, "build", counting_build)
+    rows = clique(["p", "q", "r", "s"]) + [("s", "t"), ("t", "u"), ("u", "s")]
+    g = Graph.from_edges(make_edges(spark, rows))
+    jsc = spark.sparkContext._jsc
+    persisted, dirs = jsc.getPersistentRDDs().size(), _block_dirs(spark)
+    c = {r["name"]: r["coreness"] for r in kcore(g).collect()}
+    assert builds == [1]
+    assert jsc.getPersistentRDDs().size() == persisted
+    assert _block_dirs(spark) == dirs
+    g.unpersist()
+    assert c == {"p": 3, "q": 3, "r": 3, "s": 3, "t": 2, "u": 2}
+
+
+def test_portable_parquet_block_path(spark, monkeypatch):
+    # k-core on the hdfs/s3 block branch (JVM Parquet blocks, forced by
+    # making every path look remote) equals the local shard path
+    g = Graph.from_edges(
+        make_edges(spark, sorted(_random_rows() | {("loop", "loop")}))
+    )
+    local = [tuple(r) for r in kcore(g).collect()]
+    monkeypatch.setattr(blocks, "_as_local_path", lambda p: None)
+    portable = [tuple(r) for r in kcore(g).collect()]
+    g.unpersist()
+    assert local == portable
+    assert dict((n, c) for n, _, c in local)["loop"] == 0

@@ -186,11 +186,11 @@ def test_portable_parquet_block_path(g4, monkeypatch):
     # bucket == -1 rows) never triggers on a POSIX checkpoint dir — force
     # it by making every path look remote, and pin it to the local shard
     # path bit-for-bit
-    from propagon_spark.graph import pagerank_csr
+    from propagon_spark.plans import blocks
 
     local_res = pagerank(g4, iterations=10, sink="uniform", impl="csr")
     local = scores_dict(local_res.scores)
-    monkeypatch.setattr(pagerank_csr, "_as_local_path", lambda p: None)
+    monkeypatch.setattr(blocks, "_as_local_path", lambda p: None)
     portable_res = pagerank(g4, iterations=10, sink="uniform", impl="csr")
     portable = scores_dict(portable_res.scores)
     assert local == portable
