@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.errors import EmptyDatasetError
-from propagon_spark.ids import build_vocab
+from propagon_spark.ids import _build_vocab
 
 
 @dataclass
@@ -78,8 +78,8 @@ class Graph:
         # The input plan executes TWICE below — once under the vocab's
         # name-distinct scan, once under the interning join. For a plain
         # table scan that's neutral, but callers routinely pass expensive
-        # derivations (the co-commit SELF-JOIN: measured 2x ~17s at sf0.1,
-        # i.e. half of graph build), so materialize the normalized frame
+        # derivations (the co-commit pair aggregation: two shuffles over
+        # the repo table), so materialize the normalized frame
         # once and release it as soon as the interned edges are counted.
         raw.persist(StorageLevel.MEMORY_AND_DISK_DESER)
 
@@ -87,8 +87,7 @@ class Graph:
             raw.select(F.col("dst_name").alias("name"))
         )
         try:
-            vocab = build_vocab(names)  # materialized flat leaf (see ids.py)
-            n = vocab.count()
+            vocab, n = _build_vocab(names)  # flat leaf (see ids.py)
             if n == 0:
                 raise EmptyDatasetError("empty edge dataset")
 

@@ -15,25 +15,41 @@ equivalent to a *name*-ordered tie-break — a total order any independent
 implementation (or SQL oracle) can reproduce, independent of
 partitioning, parallelism, and hash seeds.
 
-Scalable rank assignment without a global sort bottleneck: bucket names
-by **driver-fixed range split points** (computed once from a seeded
-sample and inlined as literals), count per bucket, broadcast the
-cumulative offsets, then ``offset[bucket] + row_number() within bucket``.
-The split points MUST be literals: ``repartitionByRange`` re-samples
-boundaries per job, so the counts job and the ranking job can disagree —
-which silently yields duplicate/gapped ids (observed at sf0.1: PageRank
-mass exploded because the scatter join fanned out on duplicated ids).
-Ids are global name ranks, so the choice of split points never affects
-the result — only bucket balance.
+Rank assignment has two paths, split at the one driver-state bound
+every driver-held structure in the engine shares
+(``plans.blocks.DRIVER_STATE_MAX_VERTICES``, read at call time):
+
+- **At or below the bound** the distinct names are collected once as an
+  Arrow table, sorted on the driver with ``pyarrow.compute.sort_indices``
+  and numbered ``0..n-1``; the vocab frame is created from that Arrow
+  table. Arrow compares strings as unsigned bytes of their UTF-8 encoding,
+  which is exactly Spark's ``UTF8_BINARY`` string order (and Python's
+  ``sorted(key=str.encode)``), so the ids equal the distributed path's.
+  Arrow rather than a numpy object array: a 2M-name sort peaked at about
+  half the driver RSS.
+- **Above it**, no global sort bottleneck: bucket names by
+  **driver-fixed range split points** (computed once from a seeded
+  sample and inlined as literals), count per bucket, broadcast the
+  cumulative offsets, then ``offset[bucket] + row_number() within
+  bucket``. The split points MUST be literals: ``repartitionByRange``
+  re-samples boundaries per job, so the counts job and the ranking job
+  can disagree — which silently yields duplicate/gapped ids (observed at
+  sf0.1: PageRank mass exploded because the scatter join fanned out on
+  duplicated ids). Ids are global name ranks, so the choice of split
+  points never affects the result — only bucket balance.
 """
 
 from __future__ import annotations
 
 import functools
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from propagon_spark.plans import blocks
 from propagon_spark.plans.iterate import truncate_lineage
 
 #: target sample size per bucket when estimating split points
@@ -43,6 +59,13 @@ _SAMPLE_PER_BUCKET = 64
 def build_vocab(names: DataFrame, num_buckets: int | None = None) -> DataFrame:
     """Build ``(name, id)`` with dense, deterministic, order-preserving
     long ids. ``names`` must have a single column ``name``."""
+    return _build_vocab(names, num_buckets)[0]
+
+
+def _build_vocab(
+    names: DataFrame, num_buckets: int | None = None
+) -> tuple[DataFrame, int]:
+    """:func:`build_vocab` that also returns the vocab's row count."""
     spark = names.sparkSession
     if num_buckets is None:
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -52,7 +75,17 @@ def build_vocab(names: DataFrame, num_buckets: int | None = None) -> DataFrame:
     n = d.count()
     if n == 0:
         d.unpersist()
-        return spark.createDataFrame([], "name string, id long")
+        return spark.createDataFrame([], "name string, id long"), 0
+    if n <= blocks.DRIVER_STATE_MAX_VERTICES:
+        col = d.toArrow().column("name")
+        d.unpersist()
+        table = pa.table(
+            {
+                "name": col.take(pc.sort_indices(col)),
+                "id": np.arange(n, dtype=np.int64),
+            }
+        )
+        return spark.createDataFrame(table, "name string, id long"), n
 
     # driver-fixed split points from a seeded sample (deterministic for
     # the rest of this build; ids don't depend on the choice)
@@ -109,7 +142,7 @@ def build_vocab(names: DataFrame, num_buckets: int | None = None) -> DataFrame:
     # release the distinct-names cache
     out = truncate_lineage(out)
     d.unpersist()
-    return out
+    return out, n
 
 
 def vocab_size(vocab: DataFrame) -> int:

@@ -9,11 +9,17 @@ from ``src dst [weight]`` text files
 derivation layer is new, deterministic, and pure Spark SQL (SURVEY.md
 §7.2), cross-checkable row-for-row by a DuckDB oracle.
 
-Scale notes: the derivation's only hazard is the per-(repo, commit)
-self-join, which is O(g²) in the commit's file count; ``max_commit_files``
-caps it (giant merge/bot commits contribute noise, not signal). The cap
-is a fixed documented constant so results stay deterministic and
-SQL-expressible.
+Edge derivation is one ``groupBy(repo, commit)`` that collects each
+commit's sorted distinct paths, then generates the commit's file pairs
+inside the array and counts them per pair: two shuffle exchanges, no
+self-join (:func:`derive_edges`).
+
+Scale notes: a commit of g files is one aggregation buffer of O(g) paths
+until the cap test drops it, so a giant merge/bot commit costs O(g)
+memory on one task, not O(g) shuffle rows. Pair generation is O(g²) in
+the commit's file count; ``max_commit_files`` caps it (giant commits
+contribute noise, not signal). The cap is a fixed documented constant so
+results stay deterministic and SQL-expressible.
 """
 
 from __future__ import annotations
@@ -240,12 +246,20 @@ def derive_edges(
     """Co-commit edge derivation (SURVEY.md §7.2) — pure Catalyst.
 
     Files sharing a (repo, commit) group are linked; weight = number of
-    shared commits. ``a.path < b.path`` keeps one row per unordered pair;
+    shared commits. One row per unordered pair, ``src < dst`` by path;
     ``symmetric=True`` additionally emits the reverse direction (the
     directed reading PageRank wants). Commits touching more than
-    ``max_commit_files`` files are dropped before the self-join.
+    ``max_commit_files`` distinct paths are dropped before any pair is
+    formed. Rows with a null ``repo`` or ``commit`` contribute nothing; a
+    null ``path`` counts toward the cap but forms no pair.
 
-    Equivalent oracle SQL (DuckDB, same column names):
+    Plan: one ``groupBy(repo, commit)`` collects each commit's distinct
+    paths, sorted (``array_sort`` is Spark's binary string order, the
+    order of ``a.path < b.path``); the pairs ``(p[i], p[j]), i < j`` are
+    generated inside the array and counted per pair by a second
+    ``groupBy``. Two shuffle exchanges; no self-join.
+
+    The spec is the oracle SQL (DuckDB, same column names):
 
         WITH f AS (SELECT DISTINCT repo, commit, path FROM t),
         ok AS (SELECT repo, commit FROM f GROUP BY 1,2
@@ -257,25 +271,35 @@ def derive_edges(
         FROM fo a JOIN fo b USING (repo, commit)
         WHERE a.path < b.path GROUP BY 1, 2
     """
-    f = repo_df.select("repo", "commit", "path").distinct()
-    group_sizes = f.groupBy("repo", "commit").agg(F.count("*").alias("_gs"))
-    ok = group_sizes.where(F.col("_gs") <= max_commit_files).select(
-        "repo", "commit"
-    )
-    fo = f.join(ok, ["repo", "commit"], "left_semi")
-
-    a = fo.alias("a")
-    b = fo.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.repo") == F.col("b.repo"))
-            & (F.col("a.commit") == F.col("b.commit"))
-            & (F.col("a.path") < F.col("b.path")),
+    paths = F.col("_p")
+    groups = (
+        repo_df.where(F.col("repo").isNotNull() & F.col("commit").isNotNull())
+        .groupBy("repo", "commit")
+        .agg(
+            F.array_sort(F.collect_set("path")).alias("_p"),
+            F.max(F.col("path").isNull().cast("int")).alias("_np"),
         )
+        .where(
+            (F.size(paths) + F.col("_np") <= max_commit_files)
+            & (F.size(paths) >= 2)
+        )
+    )
+    pair = F.explode(
+        F.flatten(
+            F.transform(
+                paths,
+                lambda a, i: F.transform(
+                    F.slice(paths, i + 2, F.size(paths)),
+                    lambda b: F.struct(a.alias("a"), b.alias("b")),
+                ),
+            )
+        )
+    ).alias("_ab")
+    pairs = (
+        groups.select("repo", pair)
         .groupBy(
-            file_vertex(F.col("a.repo"), F.col("a.path")).alias("src"),
-            file_vertex(F.col("b.repo"), F.col("b.path")).alias("dst"),
+            file_vertex(F.col("repo"), F.col("_ab.a")).alias("src"),
+            file_vertex(F.col("repo"), F.col("_ab.b")).alias("dst"),
         )
         .agg(F.count("*").cast("double").alias("weight"))
     )

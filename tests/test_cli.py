@@ -195,19 +195,35 @@ def test_cli_bootstrap_intervals(spark, tournament):
 
 
 def test_installed_console_script_end_to_end(tournament):
-    # packaging smoke (pyproject.toml [project.scripts]): the INSTALLED
+    # packaging smoke (pyproject.toml [project.scripts]): the
     # `propagon-spark` entry point — its own process, its own Spark
-    # session — reproduces team degree on the generated corpus. Skipped
-    # when the package isn't pip-installed (source-checkout-only runs).
+    # session — reproduces team degree on the generated corpus. When the
+    # package isn't pip-installed (a source checkout), the entry point's
+    # `module:function` target is read from pyproject.toml and run the
+    # way the installed script would run it.
     import shutil
     import subprocess
+    import sys
+    import tomllib
 
-    exe = shutil.which("propagon-spark")
-    if exe is None:
-        pytest.skip("propagon-spark console script not installed")
     env = dict(os.environ, PROPAGON_SPARK_MASTER="local[2]")
+    exe = shutil.which("propagon-spark")
+    if exe is not None:
+        cmd = [exe]
+    else:
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        with open(os.path.join(root, "pyproject.toml"), "rb") as f:
+            target = tomllib.load(f)["project"]["scripts"]["propagon-spark"]
+        module, func = target.split(":")
+        cmd = [
+            sys.executable, "-c",
+            f"import sys; from {module} import {func}; sys.exit({func}())",
+        ]
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (root, env.get("PYTHONPATH")) if p
+        )
     out = subprocess.run(
-        [exe, "graph", "degree", tournament[0], "--direction", "out"],
+        [*cmd, "graph", "degree", tournament[0], "--direction", "out"],
         capture_output=True, text=True, timeout=300, env=env,
     )
     assert out.returncode == 0, out.stderr[-2000:]

@@ -152,3 +152,60 @@ def test_kcore_round_adds_no_exchange(spark):
     finally:
         sym.unpersist()
         g.unpersist()
+
+
+def test_derive_edges_two_shuffles(spark):
+    # one groupBy(repo, commit) with in-array pair generation, then the
+    # per-pair count: two shuffle exchanges and no (repo, commit) self-join
+    from propagon_spark.sources.repo_table import derive_edges
+
+    df = spark.createDataFrame(
+        [("r", f"f{i % 5}", f"c{i % 7}") for i in range(30)],
+        "repo string, path string, commit string",
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert _live_shuffles(derive_edges(df, symmetric=False)) == 2
+    finally:
+        spark.conf.set(key, old)
+
+
+def _stage_names_of(spark, fn) -> list[str]:
+    """Names of the stages of every Spark job ``fn()`` launches, counted by
+    job group (as ``test_components._jobs_of``)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "stage names")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    names = []
+    for job in st.getJobIdsForGroup(group):
+        for stage in st.getJobInfo(job).stageIds:
+            info = st.getStageInfo(stage)
+            if info is not None:
+                names.append(info.name)
+    return names
+
+
+def test_from_edges_runs_no_local_checkpoint_below_bound(spark):
+    # below the driver-state bound the vocab is sorted on the driver and
+    # created from Arrow: no bucket sample, window or localCheckpoint job
+    graphs = []
+    df = spark.createDataFrame(
+        [(f"v{i}", f"v{(i * 3 + 1) % 11}") for i in range(10)],
+        "src string, dst string",
+    )
+    names = _stage_names_of(spark, lambda: graphs.append(Graph.from_edges(df)))
+    try:
+        assert names
+        assert not [n for n in names if "localCheckpoint" in n]
+    finally:
+        graphs[0].unpersist()

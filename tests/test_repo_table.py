@@ -1,6 +1,10 @@
 """Repo-table synthesis, co-commit edge derivation, sha256 invariant
 (SURVEY.md §7.2, BASELINE.json input_hint)."""
 
+import collections
+import itertools
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -61,6 +65,78 @@ def test_commit_cap(spark):
     )
     e = derive_edges(df, max_commit_files=4, symmetric=False).collect()
     assert {(r["src"], r["dst"]) for r in e} == {("r:a.py", "r:b.py")}
+
+
+def _derived(spark, rows, **kw):
+    """``derive_edges(symmetric=False)`` over ``(repo, path, commit)`` rows
+    as ``{(src, dst): weight}``."""
+    df = spark.createDataFrame(rows, "repo string, path string, commit string")
+    return {
+        (r["src"], r["dst"]): r["weight"]
+        for r in derive_edges(df, symmetric=False, **kw).collect()
+    }
+
+
+def test_null_repo_or_commit_contributes_nothing(spark):
+    rows = [
+        ("r", "a", None), ("r", "b", None),
+        (None, "a", "c1"), (None, "b", "c1"),
+        ("r", "a", "c2"), ("r", "b", "c2"),
+    ]
+    assert _derived(spark, rows) == {("r:a", "r:b"): 1.0}
+
+
+def test_null_path_counts_toward_cap_but_forms_no_edge(spark):
+    # "full" has cap real paths plus one null path: cap + 1 distinct
+    # paths, so it is dropped; "fits" has cap - 1 real paths plus a null
+    rows = [("r", f"f{i}", "full") for i in range(3)] + [("r", None, "full")]
+    rows += [("r", "a", "fits"), ("r", "b", "fits"), ("r", None, "fits")]
+    assert _derived(spark, rows, max_commit_files=3) == {("r:a", "r:b"): 1.0}
+
+
+def test_duplicate_rows_count_once(spark):
+    rows = [("r", "a", "c1")] * 3 + [("r", "b", "c1")] * 2
+    rows += [("r", "c", "c1"), ("r", "d", "c1")]
+    # 4 distinct paths fit a cap of 4 although the commit has 7 rows
+    e = _derived(spark, rows, max_commit_files=4)
+    assert e == {
+        (f"r:{a}", f"r:{b}"): 1.0
+        for a, b in itertools.combinations("abcd", 2)
+    }
+
+
+def test_same_commit_in_two_repos_forms_no_cross_repo_edge(spark):
+    rows = [("r", "a", "c"), ("r", "b", "c"), ("s", "a", "c"), ("s", "z", "c")]
+    assert _derived(spark, rows) == {("r:a", "r:b"): 1.0, ("s:a", "s:z"): 1.0}
+
+
+def test_derive_edges_matches_python_reference(spark):
+    rng = random.Random(7)
+    repos = ["r0", "r1", "r2", None]
+    commits = [f"c{i}" for i in range(12)] + [None]
+    paths = [f"p{i}.py" for i in range(14)] + ["é.py", "Z.py", None]
+    rows = [
+        (rng.choice(repos), rng.choice(paths), rng.choice(commits))
+        for _ in range(250)
+    ]
+    rows += rng.sample(rows, 50)  # exact duplicates
+    cap = 6
+
+    groups = collections.defaultdict(set)
+    for repo, path, commit in rows:
+        if repo is not None and commit is not None:
+            groups[repo, commit].add(path)
+    want = collections.Counter()
+    for (repo, _), ps in groups.items():
+        if len(ps) <= cap:
+            real = sorted((p for p in ps if p is not None), key=str.encode)
+            for a, b in itertools.combinations(real, 2):
+                want[f"{repo}:{a}", f"{repo}:{b}"] += 1
+    assert want  # the table forms edges, and some groups exceed the cap
+    assert any(len(ps) > cap for ps in groups.values())
+    assert _derived(spark, rows, max_commit_files=cap) == {
+        k: float(v) for k, v in want.items()
+    }
 
 
 def test_sha_invariant_holds_and_detects(spark, repo_df):
