@@ -19,13 +19,13 @@ O(log diameter) behavior on long chains.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import symmetrize
 from propagon_spark.graph.core import Graph
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 from propagon_spark.progress import as_progress
 
 # deserialized columnar cache: the serialized level costs ~1.5x to build
@@ -34,7 +34,7 @@ from propagon_spark.progress import as_progress
 _STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
 
 
-def _min_label_fixpoint(g: Graph, prog=None) -> DataFrame:
+def _min_label_fixpoint(g: Graph, progress=None) -> DataFrame:
     """Return (id, label) with label = min vertex id reachable (undirected)."""
     nparts = g.edges.rdd.getNumPartitions()
     sym = (
@@ -45,17 +45,7 @@ def _min_label_fixpoint(g: Graph, prog=None) -> DataFrame:
     )
     sym.count()
 
-    labels = (
-        g.vocab.select("id", F.col("id").alias("label"))
-        .repartition(nparts, "id")
-        .transform(truncate_lineage)
-    )
-
-    rnd = 0
-    if prog is not None:
-        prog.start("components")
-    while True:
-        rnd += 1
+    def step(labels: DataFrame) -> DataFrame:
         # gather: min label over in-neighbors (sym is symmetric, so this is
         # the full undirected neighborhood)
         nbr_min = (
@@ -75,8 +65,9 @@ def _min_label_fixpoint(g: Graph, prog=None) -> DataFrame:
         lbl_of_lbl = labels.select(
             F.col("id").alias("l1"), F.col("label").alias("ll")
         )
-        obs = Observation()
-        updated = (
+        # labels feeds three branches of this plan: fixpoint truncates
+        # lineage every round or the logical plan grows exponentially
+        return (
             updated.join(lbl_of_lbl, "l1", "left")
             .select(
                 "id",
@@ -84,27 +75,19 @@ def _min_label_fixpoint(g: Graph, prog=None) -> DataFrame:
                 F.least(F.col("l1"), F.coalesce("ll", F.col("l1"))).alias("label"),
             )
             .repartition(nparts, "id")
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("label") != F.col("old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .drop("old")
-            # labels feeds three branches of this plan: truncate lineage
-            # every round or the logical plan grows exponentially; the
-            # changed-count rides the same job as an observed metric
-            .transform(truncate_lineage)
         )
-        changed = obs.get["changed"]
-        labels = updated
-        if prog is not None:
-            prog.iteration("components", {"round": rnd, "changed": int(changed)})
-        if changed == 0:
-            break
 
-    if prog is not None:
-        prog.finish()
+    labels, _ = fixpoint(
+        g.vocab.select("id", F.col("id").alias("label"))
+        .repartition(nparts, "id")
+        .transform(truncate_lineage),
+        step,
+        {"changed": F.sum(F.when(F.col("label") != F.col("old"), 1).otherwise(0))},
+        lambda _turn, m, _last: m["changed"] == 0,
+        progress=as_progress(progress),
+        phase="components",
+        row=lambda turn, m: {"round": turn, "changed": int(m["changed"])},
+    )
     sym.unpersist()
     return labels
 
@@ -120,7 +103,7 @@ def connected_components(
     ``progress``: Progress instance or ``callable(phase, metrics_row)``
     invoked per fixpoint round with ``{"round", "changed"}``
     (reference FR-3.5, ``progress.rs:1-30``)."""
-    labels = _min_label_fixpoint(g, prog=as_progress(progress))
+    labels = _min_label_fixpoint(g, progress)
     sizes = labels.groupBy("label").agg(F.count("*").alias("component_size"))
     out = (
         labels.join(sizes, "label")

@@ -8,8 +8,9 @@ L1 change of both vectors; a collapsed normalization (total ≤ 0 / NaN) is
 a typed error (``hits.rs:165-170``).
 
 Spark shape: two scatter-gather join+aggs per iteration; the L1
-normalizers ride along as broadcast 1-row aggregates; one driver action
-per iteration for the tolerance check.
+normalizers ride along as broadcast 1-row aggregates; the rounds run in
+``plans.iterate.fixpoint``, with the tolerance and collapse statistics
+observed on the job that materializes each iteration's state.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from propagon_spark.canon import dedup_edges
 from propagon_spark.errors import NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 from propagon_spark.progress import as_progress
 
 
@@ -40,19 +41,11 @@ def hits(
     tolerance: float = 1e-12,
     progress=None,
 ) -> HitsResult:
-    prog = as_progress(progress)
     nparts = g.edges.rdd.getNumPartitions()
     edges = truncate_lineage(dedup_edges(g.edges).repartition(nparts, "src"))
     n = g.num_vertices
 
-    state = truncate_lineage(g.vocab.select(
-        "id", F.lit(1.0 / n).alias("a"), F.lit(1.0 / n).alias("h")
-    ))
-
-    it = 0
-    prog.start("hits", total=iterations)
-    while it < iterations:
-        it += 1
+    def step(state: DataFrame) -> DataFrame:
         # a_raw[dst] = Σ h[src]
         a_raw = (
             edges.join(
@@ -78,46 +71,46 @@ def hits(
             .agg(F.sum("na").alias("hr"))
         )
         h_tot = h_raw.agg(F.sum("hr").alias("_ht"))
-        nxt = (
+        return (
             state.join(a_frame, "id")
             .join(h_raw, "id", "left")
             .crossJoin(F.broadcast(h_tot))
             .select(
                 "id",
-                "a",
-                "h",
-                F.col("na"),
-                (F.coalesce("hr", F.lit(0.0)) / F.col("_ht")).alias("nh"),
+                F.col("a").alias("old_a"),
+                F.col("h").alias("old_h"),
+                F.col("na").alias("a"),
+                (F.coalesce("hr", F.lit(0.0)) / F.col("_ht")).alias("h"),
             )
-            .transform(truncate_lineage_lazy)
         )
-        agg = nxt.agg(
-            (
-                F.sum(F.abs(F.col("a") - F.col("na")))
-                + F.sum(F.abs(F.col("h") - F.col("nh")))
-            ).alias("change"),
-            F.sum("na").alias("asum"),
-            F.sum("nh").alias("hsum"),
-        ).first()
-        change = agg["change"]
+
+    def settled(_turn: int, m: dict, _last) -> bool:
         if (
-            change is None
-            or not math.isfinite(change)
-            or agg["asum"] is None
-            or not math.isfinite(agg["asum"])
-            or agg["asum"] <= 0
-            or agg["hsum"] is None
-            or not math.isfinite(agg["hsum"])
-            or agg["hsum"] <= 0
+            any(v is None or not math.isfinite(v) for v in m.values())
+            or m["asum"] <= 0
+            or m["hsum"] <= 0
         ):
             raise NumericError("hits iteration collapsed (no edges reachable?)")
-        state = nxt.select(
-            "id", F.col("na").alias("a"), F.col("nh").alias("h")
-        )
-        prog.iteration("hits", {"iteration": it, "l1_delta": change})
-        if change < tolerance:
-            break
-    prog.finish()
+        return m["change"] < tolerance
+
+    state, it = fixpoint(
+        truncate_lineage(g.vocab.select(
+            "id", F.lit(1.0 / n).alias("a"), F.lit(1.0 / n).alias("h")
+        )),
+        step,
+        {
+            "change": F.sum(F.abs(F.col("old_a") - F.col("a")))
+            + F.sum(F.abs(F.col("old_h") - F.col("h"))),
+            "asum": F.sum("a"),
+            "hsum": F.sum("h"),
+        },
+        settled,
+        max_turns=iterations,
+        invariants=[edges],
+        progress=as_progress(progress),
+        phase="hits",
+        row=lambda turn, m: {"iteration": turn, "l1_delta": m["change"]},
+    )
 
     named = g.with_names(state)
     return HitsResult(

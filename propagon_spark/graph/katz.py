@@ -5,6 +5,10 @@ Weighted directed in-walks: ``x ← 1 + α·Aᵀx`` (no dedup, self-loops
 kept); defaults α=0.1, iterations=100, tolerance=1e-12 (L1 change);
 divergence guard: |x|₁ non-finite or > 1e12·n ⇒ typed error advising a
 lower α; reported score is ``x − 1`` (walks only).
+
+Spark shape: one scatter-gather join + ``groupBy(dst)`` per iteration,
+run by ``plans.iterate.fixpoint``; |x|₁ and the L1 change are observed
+on the job that materializes each iteration's state.
 """
 
 from __future__ import annotations
@@ -16,7 +20,7 @@ from pyspark.sql import functions as F
 
 from propagon_spark.errors import InvalidParameterError, NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 
 
 def katz(
@@ -32,17 +36,13 @@ def katz(
     edges = truncate_lineage(g.edges.repartition(nparts, "src"))
     n = g.num_vertices
 
-    x = truncate_lineage(g.vocab.select("id", F.lit(1.0).alias("x")))
-
-    it = 0
-    while it < iterations:
-        it += 1
+    def step(x: DataFrame) -> DataFrame:
         gathered = (
             edges.join(x.select(F.col("id").alias("src"), "x"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(F.col("weight") * F.col("x")).alias("m"))
         )
-        nxt = (
+        return (
             x.withColumnRenamed("x", "old")
             .join(gathered, "id", "left")
             .select(
@@ -52,21 +52,28 @@ def katz(
                     F.lit(1.0) + F.lit(alpha) * F.coalesce("m", F.lit(0.0))
                 ).alias("x"),
             )
-            .transform(truncate_lineage_lazy)
         )
-        agg = nxt.agg(
-            F.sum(F.abs(F.col("x"))).alias("mag"),
-            F.sum(F.abs(F.col("x") - F.col("old"))).alias("change"),
-        ).first()
-        mag, change = agg["mag"], agg["change"]
+
+    def settled(_turn: int, m: dict, _last) -> bool:
+        mag = m["mag"]
         if mag is None or not math.isfinite(mag) or mag > 1e12 * n:
             raise NumericError(
                 f"katz series diverged: alpha {alpha} is at or above 1/λ_max "
                 "for this graph — lower alpha"
             )
-        x = nxt.select("id", "x")
-        if change < tolerance:
-            break
+        return m["change"] < tolerance
+
+    x, _ = fixpoint(
+        truncate_lineage(g.vocab.select("id", F.lit(1.0).alias("x"))),
+        step,
+        {
+            "mag": F.sum(F.abs("x")),
+            "change": F.sum(F.abs(F.col("x") - F.col("old"))),
+        },
+        settled,
+        max_turns=iterations,
+        invariants=[edges],
+    )
 
     return sorted_scores(
         g.with_names(x.select("id", (F.col("x") - 1.0).alias("score"))).select(

@@ -6,7 +6,7 @@ dropped. Peel: starting at k=0, repeatedly remove every vertex of degree
 ≤ k (cascading) before moving to k+1; a vertex's coreness is the k it
 fell at. Isolated vertices (only self-loops) get coreness 0.
 
-Every method reads ``canon.undirected_adjacency``: symmetric, dedup'd,
+Both executions read ``canon.undirected_adjacency``: symmetric, dedup'd,
 hash-partitioned by ``src``, built with one exchange.
 
 Iterated H-index (default): h₀ = degree, h_{n+1}[v] = H-index of
@@ -34,38 +34,24 @@ CSR PageRank uses):
   ``localCheckpoint``. The hint is given only while the state's
   estimated bytes are within the session's
   ``spark.sql.autoBroadcastJoinThreshold`` (``-1`` disables it); above
-  it the same plan runs as a shuffle join. An unchanged ``sum(h)``,
-  observed on the job that materializes the state, is exactly the
-  fixpoint. One vocab left join emits names and coreness 0 for isolated
-  vertices.
-
-Peel (round-5 delta-degree rewrite): per inner round, only the
-just-peeled frontier joins the edge frame — ``sym ⋈ peel(dst) →
-groupBy(src)`` — and those neighbor counts are SUBTRACTED from the
-survivors' running degrees; no per-round full-degree re-aggregation and
-no per-round edge-set anti-join rewrite. Each edge (x, u) is subtracted
-from x exactly once — at the round u peels — and contributions from
-already-dead x are dropped by the survivor join, so the running degree
-equals the recomputed one at every step. The persisted edge frame is
-compacted GEOMETRICALLY: when half the vertices alive at the last build
-have peeled, ``sym`` is semi-joined down to the survivors and
-re-persisted (O(E) total rewrite work under halving, while every round's
-aggregation stays frontier-proportional). Empty k levels are skipped by
-jumping k to the minimum surviving degree.
+  it the same plan runs as a shuffle join. The rounds run in
+  ``plans.iterate.fixpoint``: an unchanged ``sum(h)``, observed on the
+  job that materializes the state, is exactly the fixpoint. One vocab
+  left join emits names and coreness 0 for isolated vertices.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
 from propagon_spark.plans import blocks
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import fixpoint, materialize
 
 # deserialized columnar cache: the serialized level costs ~1.5x to build
 # and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
@@ -83,19 +69,14 @@ def kcore(g: Graph, method: str = "hindex") -> DataFrame:
     the coreness. Converges in tens of rounds on real graphs, each round
     one vertex-parallel pass over the edge set (on the edge-block store
     while the vertex state fits the driver, a dataflow join+window above
-    that; see the module docstring) — versus the peel cascade's HUNDREDS
+    that; see the module docstring) — versus a peel cascade's HUNDREDS
     of driver rounds (the sf0.1 full graph cascades ~450 rounds; measured
-    86-125 s peel vs ~20 s hindex, same output). Bounded round count × all-parallel rounds is the shape that
-    survives a 1000-executor scale-up.
-
-    ``method="peel"``: the reference-shaped Batagelj-Zaversnik cascade
-    (``kcore.rs:40-100``), delta-degree + geometric compaction — kept as
-    the semantics mirror and equivalence oracle (see module docstring).
+    86-125 s peel vs ~20 s hindex, same output). Bounded round count ×
+    all-parallel rounds is the shape that survives a 1000-executor
+    scale-up. ``"hindex"`` is the only method.
     """
-    if method not in ("hindex", "peel"):
-        raise ValueError(f"method must be hindex|peel, got {method!r}")
-    if method == "peel":
-        return _kcore_peel(g)
+    if method != "hindex":
+        raise ValueError(f"method must be hindex, got {method!r}")
     if g.num_vertices <= blocks.DRIVER_STATE_MAX_VERTICES:
         return _kcore_blocks(g)
     return _kcore_hindex(g)
@@ -108,17 +89,6 @@ def _broadcast_threshold(spark: SparkSession) -> int:
         return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     except AttributeError:  # Spark Connect: no JVM session — no hint
         return -1
-
-
-def _materialize_state(h: DataFrame) -> tuple[DataFrame, int | None, int]:
-    """Truncate ``(src, h)`` and return it with its ``sum(h)`` and row
-    count, both observed on the materializing job."""
-    obs = Observation()
-    out = truncate_lineage(
-        h.observe(obs, F.sum("h").alias("total"), F.count("*").alias("rows"))
-    )
-    m = obs.get
-    return out, m["total"], m["rows"]
 
 
 def _hindex_round(sym: DataFrame, h: DataFrame, broadcast: bool) -> DataFrame:
@@ -203,16 +173,19 @@ def _kcore_hindex(g: Graph) -> DataFrame:
     the coreness, so an unchanged ``sum(h)`` IS the fixpoint."""
     sym = undirected_adjacency(g.edges).persist(_STORAGE)
     # h₀ = degree; this job also fills sym's cache
-    h, total, rows = _materialize_state(
-        sym.groupBy("src").agg(F.count("*").alias("h"))
+    h, m = materialize(
+        sym.groupBy("src").agg(F.count("*").alias("h")),
+        {"total": F.sum("h"), "rows": F.count("*")},
     )
     budget = _broadcast_threshold(g.spark)
-    broadcast = 0 <= rows * _STATE_ROW_BYTES <= budget
-    while True:
-        h, nxt, _ = _materialize_state(_hindex_round(sym, h, broadcast))
-        if nxt == total:
-            break
-        total = nxt
+    broadcast = 0 <= m["rows"] * _STATE_ROW_BYTES <= budget
+    h, _ = fixpoint(
+        h,
+        lambda h: _hindex_round(sym, h, broadcast),
+        {"total": F.sum("h")},
+        lambda _turn, m, last: m["total"] == last["total"],
+        initial_stats=m,
+    )
     sym.unpersist()
 
     core = h.select(F.col("src").alias("id"), F.col("h").alias("coreness"))
@@ -220,84 +193,3 @@ def _kcore_hindex(g: Graph) -> DataFrame:
     return out.select(
         "name", "id", F.coalesce("coreness", F.lit(0)).cast("long").alias("coreness")
     ).orderBy(F.desc("coreness"), F.asc("id"))
-
-
-def _kcore_peel(g: Graph) -> DataFrame:
-    """Reference-shaped peel cascade (see :func:`kcore`)."""
-    # immutable for the whole peel: persisted blocks, read once per round
-    # by the frontier join (never anti-joined down, never re-checkpointed)
-    sym = undirected_adjacency(g.edges).persist(_STORAGE)
-
-    # state: (id, deg) of still-alive vertices; (id, coreness) accumulator
-    alive = (
-        g.vocab.select("id")
-        .join(
-            sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg")),
-            "id",
-            "left",
-        )
-        .select("id", F.coalesce("deg", F.lit(0)).cast("long").alias("deg"))
-        .transform(truncate_lineage)
-    )
-    assigned = g.spark.createDataFrame([], "id long, coreness long")
-
-    k = 0
-    remaining = alive.count()
-    alive_at_build = remaining
-    while remaining > 0:
-        while True:
-            peel = truncate_lineage(alive.where(F.col("deg") <= k).select("id"))
-            n_peel = peel.count()
-            if n_peel == 0:
-                break
-            assigned = truncate_lineage(assigned.unionAll(
-                peel.select("id", F.lit(k).cast("long").alias("coreness"))
-            ))
-            remaining -= n_peel
-            if remaining == 0:
-                break
-            # delta-degree: count each survivor's edges INTO the peeled
-            # frontier (sym is symmetric, so dst-side matching sees every
-            # incident edge) and subtract. Contributions land once per
-            # edge; dead src rows fall out of the survivor left-join.
-            delta = (
-                sym.join(peel.withColumnRenamed("id", "dst"), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.count("*").alias("_removed"))
-            )
-            alive = truncate_lineage(
-                alive.join(peel, "id", "left_anti")
-                .join(delta, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.col("deg") - F.coalesce("_removed", F.lit(0))
-                    ).cast("long").alias("deg"),
-                )
-            )
-            # geometric compaction: once half the vertices alive at the
-            # last build have peeled, shrink the probe side to survivors
-            # (dead edges only waste scan time — degrees stay exact
-            # either way, each edge still deltas exactly once)
-            if remaining <= alive_at_build // 2:
-                ids = alive.select("id")
-                nxt = (
-                    sym.join(ids.withColumnRenamed("id", "src"), "src",
-                             "left_semi")
-                    .join(ids.withColumnRenamed("id", "dst"), "dst",
-                          "left_semi")
-                    .persist(_STORAGE)
-                )
-                nxt.count()
-                sym.unpersist()
-                sym = nxt
-                alive_at_build = remaining
-        if remaining == 0:
-            break
-        # jump the ladder to the next populated level (min surviving
-        # degree is > k here, else the inner loop would have peeled it)
-        k = alive.agg(F.min("deg")).first()[0]
-
-    sym.unpersist()
-    out = g.with_names(assigned).select("name", "id", "coreness")
-    return out.orderBy(F.desc("coreness"), F.asc("id"))

@@ -10,7 +10,9 @@ change); then fold the ground's mass back evenly:
 
 Spark shape: the ground node is one extra vertex id (n); the augmented
 edge frame is built once and the sweep is the shared scatter-gather
-kernel (one join + one groupBy per iteration).
+kernel (one join + one groupBy per iteration), run by
+``plans.iterate.fixpoint``: one job per iteration, the L1 change
+observed on it.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from pyspark.sql import functions as F
 from propagon_spark.canon import dedup_edges
 from propagon_spark.errors import NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 
 
 def leader_rank(
@@ -56,32 +58,32 @@ def leader_rank(
         .transform(truncate_lineage)
     )
 
-    it = 0
-    while it < iterations:
-        it += 1
-        nxt = (
-            pi.withColumnRenamed("pi", "old")
-            .join(
-                scatter.join(
-                    pi.select(F.col("id").alias("src"), "pi"), "src"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("pi") * F.col("inv")).alias("m")),
-                "id",
-                "left",
-            )
-            .select("id", "old", F.coalesce("m", F.lit(0.0)).alias("pi"))
-            .transform(truncate_lineage_lazy)
+    def step(pi: DataFrame) -> DataFrame:
+        gathered = (
+            scatter.join(pi.select(F.col("id").alias("src"), "pi"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("pi") * F.col("inv")).alias("m"))
         )
-        agg = nxt.agg(
-            F.sum(F.abs(F.col("pi") - F.col("old"))).alias("change")
-        ).first()
-        change = agg["change"]
+        return (
+            pi.withColumnRenamed("pi", "old")
+            .join(gathered, "id", "left")
+            .select("id", "old", F.coalesce("m", F.lit(0.0)).alias("pi"))
+        )
+
+    def settled(turn: int, m: dict, _last) -> bool:
+        change = m["change"]
         if change is None or not math.isfinite(change):
-            raise NumericError(f"leader-rank diverged at iteration {it}")
-        pi = nxt.select("id", "pi")
-        if change < tolerance:
-            break
+            raise NumericError(f"leader-rank diverged at iteration {turn}")
+        return change < tolerance
+
+    pi, _ = fixpoint(
+        pi,
+        step,
+        {"change": F.sum(F.abs(F.col("pi") - F.col("old")))},
+        settled,
+        max_turns=iterations,
+        invariants=[scatter],
+    )
 
     g_mass = pi.where(F.col("id") == ground).first()["pi"]
     scores = pi.where(F.col("id") != ground).select(

@@ -15,18 +15,20 @@ semantics (Raghavan et al. 2007) with deterministic tie-breaks
 Spark shape per round: one scatter join (labels onto symmetric edges),
 ``groupBy(dst, label).count()`` for neighborhood histograms, then a
 ``max_by``-style struct-max to pick (count desc, label asc) — two shuffles
-per round, all integer reductions, no floats and no Python.
+per round, all integer reductions, no floats and no Python. The rounds run
+in ``plans.iterate.fixpoint``; the changed-label count is observed on the
+job that materializes each round's labels.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 
 # deserialized columnar cache: the serialized level costs ~1.5x to build
 # and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
@@ -45,15 +47,7 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
     sym = undirected_adjacency(g.edges).persist(_STORAGE)
     sym.count()
 
-    labels = (
-        g.vocab.select("id", F.col("id").alias("label"))
-        .repartition(nparts, "id")
-        .transform(truncate_lineage)
-    )
-
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
+    def step(labels: DataFrame) -> DataFrame:
         # neighborhood label histogram: for each dst, count labels of its
         # neighbors (src side carries the labels)
         hist = (
@@ -66,29 +60,22 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
         best = hist.groupBy("id").agg(
             F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("b")
         ).select("id", (-F.col("b.nl")).alias("nlabel"))
-
-        obs = Observation()
-        updated = (
+        return (
             labels.withColumnRenamed("label", "old")
             .join(best, "id", "left")
             .select("id", "old", F.coalesce("nlabel", F.col("old")).alias("label"))
             .repartition(nparts, "id")
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("label") != F.col("old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .drop("old")
-            # labels appears twice in this plan → truncate lineage each
-            # round; the changed-count is an observed metric of the same job
-            .transform(truncate_lineage)
         )
-        changed = obs.get["changed"]
-        labels = updated
-        if changed == 0:
-            break
 
+    labels, _ = fixpoint(
+        g.vocab.select("id", F.col("id").alias("label"))
+        .repartition(nparts, "id")
+        .transform(truncate_lineage),
+        step,
+        {"changed": F.sum(F.when(F.col("label") != F.col("old"), 1).otherwise(0))},
+        lambda _turn, m, _last: m["changed"] == 0,
+        max_turns=max_rounds,
+    )
     sym.unpersist()
     out = g.with_names(labels).select("name", "id", "label")
     return out.orderBy("label", "id")

@@ -39,12 +39,11 @@ from __future__ import annotations
 
 import logging
 import math
-import os
 import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -53,7 +52,7 @@ from propagon_spark.errors import InvalidParameterError, NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
 from propagon_spark.plans.blocks import DRIVER_STATE_MAX_VERTICES
 from propagon_spark.plans.checkpoint import CheckpointManager
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import materialize, truncate_lineage
 from propagon_spark.progress import as_progress
 
 logger = logging.getLogger("propagon_spark.pagerank")
@@ -72,6 +71,14 @@ _STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
 # so tests can exercise the fallback on small graphs.
 _SKEW_PROBE_MIN_ROWS = 5_000_000
 _SKEW_MAX_RATIO = 4
+
+# Join-kernel gather layout (see pagerank()): from this many vertices on,
+# the gather runs as an explicit dst repartition over about
+# _KEYS_PER_TASK vertex keys per task; a sink-free convergence turn
+# chains at most _CHAIN_MAX power steps into one job.
+_REPART_MIN_VERTICES = 2_000_000
+_KEYS_PER_TASK = 100_000
+_CHAIN_MAX = 8
 
 
 @dataclass
@@ -207,7 +214,7 @@ def pagerank(
     #     grow with nparts on sparse graphs: distinct (partition, dst)
     #     pairs, modeled 47M @ nparts=4 vs 115M @ 16 on synth-wide);
     #   - loop_nparts pinned by SHAPE, not session width: enough
-    #     partitions that a task's table (~keys_per_task entries) stays
+    #     partitions that a task's table (~_KEYS_PER_TASK entries) stays
     #     cache-resident at any core count, and no task exceeds
     #     ~16M edge rows. More partitions never increase repart-mode
     #     shuffle volume (always exactly E rows), so the max() with the
@@ -220,24 +227,14 @@ def pagerank(
     # Dense/small graphs (n < 2M) keep the map-side-combine groupBy and
     # the session layout — the partial agg there cuts shuffle volume ~14×
     # (synth: E/(P·n) ≈ 14) and its tables are cache-resident anyway.
-    # Override with PROPAGON_JOIN_GATHER=agg|repart;
-    # PROPAGON_JOIN_KEYS_PER_TASK tunes the table bound (default 100k
-    # entries ≈ 3-5 MB per task map).
-    gather_mode = os.environ.get("PROPAGON_JOIN_GATHER", "auto")
-    if gather_mode not in ("auto", "agg", "repart"):
-        raise InvalidParameterError(
-            f"PROPAGON_JOIN_GATHER must be auto|agg|repart, got {gather_mode!r}"
-        )
-    if gather_mode == "auto":
-        gather_mode = "repart" if (not use_csr and n >= 2_000_000) else "agg"
+    gather_mode = (
+        "repart" if (not use_csr and n >= _REPART_MIN_VERTICES) else "agg"
+    )
     loop_nparts = nparts
     if gather_mode == "repart":
-        keys_per_task = int(
-            os.environ.get("PROPAGON_JOIN_KEYS_PER_TASK", "100000")
-        )
         loop_nparts = max(
             nparts,
-            -(-n // max(1, keys_per_task)),            # ceil
+            -(-n // _KEYS_PER_TASK),                   # ceil
             -(-g.num_edge_rows // 16_000_000),
         )
     # Join kernel (no reverse rewrite): fold the dedup INTO the scatter
@@ -373,8 +370,6 @@ def pagerank(
     # 591M edges was enough to overflow a 75 GB local-disk budget
     # (round-5 huge run). Release it the moment its derived frames exist.
     edges.unpersist(blocking=False)
-
-    timings_gather_mode = gather_mode
 
     # ---- init / resume -------------------------------------------------
     ckpt: CheckpointManager | None = None
@@ -527,9 +522,7 @@ def pagerank(
     # cost (Catalyst planning, scheduling, lineage materialization) while
     # bounding overshoot by the prediction error instead of a fixed C−1.
     two_phase = has_sinks and sink in ("uniform", "all")
-    chain_max = 1 if two_phase else (
-        int(os.environ.get("PROPAGON_JOIN_CHAIN", "0")) or 8
-    )
+    chain_max = 1 if two_phase else _CHAIN_MAX
     converged = False
     it = start_iter
     last_ckpt = start_iter
@@ -538,13 +531,9 @@ def pagerank(
     mass_cur = float(metrics[-1]["mass"]) if metrics else 1.0
     prev_l1: float | None = None
     rate: float | None = None
-    # PROPAGON_JOIN_PHASES=1: scaling-audit mode — forces single steps so
-    # per-turn seconds are per-ITERATION seconds. The gather/update phase
-    # split is recorded unconditionally (it falls out of the two-job
-    # structure); a trivial-job sample estimates the per-job fixed cost.
-    diag = os.environ.get("PROPAGON_JOIN_PHASES") == "1"
+    # the gather/update phase split falls out of the two-job structure
     timings = {"kernel": "join", "edge_rows": n_scatter,
-               "gather_mode": timings_gather_mode,
+               "gather_mode": gather_mode,
                "dedup_plan": "folded" if pre_partitioned else "separate",
                "loop_nparts": loop_nparts,
                "setup_s": time.monotonic() - t_setup, "iterate_s": 0.0,
@@ -557,17 +546,13 @@ def pagerank(
     aqe_key = "spark.sql.adaptive.enabled"
     aqe_old = spark.conf.get(aqe_key, "true")
     spark.conf.set(aqe_key, "false")
-    if diag:
-        t_f = time.monotonic()
-        spark.range(loop_nparts * 1000).repartition(loop_nparts, "id").count()
-        timings["fixed_job_s"] = time.monotonic() - t_f
 
     prog.start("pagerank", total=total_iters)
     try:
         while it < total_iters:
             t0 = time.monotonic()
             need_delta = tol is not None
-            if two_phase or diag:
+            if two_phase:
                 steps = 1
             elif tol is None:
                 steps = min(chain_max, total_iters - it)
@@ -580,25 +565,14 @@ def pagerank(
                 steps = max(1, min(chain_max, math.ceil(need)))
             steps = min(steps, total_iters - it)
 
-            if two_phase or diag:
+            if two_phase:
                 # job A: edge pass; Σm observed on the SAME job, so the
                 # sink-mass scalar costs no extra pass and no broadcast.
-                # diag forces this two-job shape on sink-free graphs too,
-                # so the audit gets the gather/update split per iteration
-                # (production sink-free runs use the cheaper chained job).
                 t_g = time.monotonic()
-                obs_g = Observation()
-                gath = truncate_lineage(
-                    gather_frame(ranks).observe(
-                        obs_g, F.sum("m").alias("sigma")
-                    )
-                )
-                sigma = float(obs_g.get["sigma"])
+                gath, m = materialize(gather_frame(ranks), {"sigma": F.sum("m")})
+                sigma = float(m["sigma"])
                 timings["iterate_gather_s"] += time.monotonic() - t_g
-                cur = update_from(
-                    gath, need_delta, ranks,
-                    mass_cur - sigma if two_phase else 0.0,
-                )
+                cur = update_from(gath, need_delta, ranks, mass_cur - sigma)
             else:
                 cur = ranks
                 pure = steps - 1 if need_delta else steps
@@ -609,11 +583,8 @@ def pagerank(
                         # job A: materialize the pure chain; the final
                         # delta-carrying step then references a LEAF
                         t_g = time.monotonic()
-                        obs_m = Observation()
-                        cur = truncate_lineage(
-                            cur.observe(obs_m, F.sum("rank").alias("mass"))
-                        )
-                        mass_cur = float(obs_m.get["mass"])
+                        cur, m = materialize(cur, {"mass": F.sum("rank")})
+                        mass_cur = float(m["mass"])
                         timings["iterate_gather_s"] += (
                             time.monotonic() - t_g
                         )
@@ -624,30 +595,11 @@ def pagerank(
             # Convergence metrics ride along as observed aggregates of the
             # SAME job (CollectMetrics): one Spark job per loop turn.
             t_u = time.monotonic()
-            obs = Observation()
+            stats = {"mass": F.sum("rank")}
             if need_delta:
-                new_ranks = truncate_lineage(
-                    cur.select(
-                        "id", "rank",
-                        F.abs(F.col("rank") - F.col("old")).alias("_d"),
-                    )
-                    .observe(
-                        obs,
-                        F.sum("_d").alias("l1"),
-                        F.sum("rank").alias("mass"),
-                    )
-                    .drop("_d")
-                )
-                agg = obs.get
-                l1 = float(agg["l1"])
-            else:
-                new_ranks = truncate_lineage(
-                    cur.select("id", "rank").observe(
-                        obs, F.sum("rank").alias("mass")
-                    )
-                )
-                agg = obs.get
-                l1 = None
+                stats["l1"] = F.sum(F.abs(F.col("rank") - F.col("old")))
+            new_ranks, agg = materialize(cur, stats, ["id", "rank"])
+            l1 = float(agg["l1"]) if need_delta else None
             mass = float(agg["mass"])
             if not math.isfinite(mass) or (
                 l1 is not None and not math.isfinite(l1)

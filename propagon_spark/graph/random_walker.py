@@ -11,20 +11,17 @@ Semantics:
 - power iteration from uniform; defaults iterations=1000, tol=1e-12.
 
 Spark shape: one pair-aggregation to build the transition frame, then the
-shared scatter-gather power iteration (same kernel family as
-rank-centrality / leader-rank).
+power iteration ``rank_centrality.stationary`` (the same walk update as
+rank-centrality).
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from propagon_spark.errors import EmptyDatasetError, InvalidParameterError, NumericError
-from propagon_spark.graph.core import sorted_scores
-from propagon_spark.ids import build_vocab
+from propagon_spark.errors import InvalidParameterError
+from propagon_spark.graph.rank_centrality import interned, stationary
 from propagon_spark.plans.iterate import truncate_lineage
 
 
@@ -40,24 +37,7 @@ def random_walker(
         raise InvalidParameterError(
             f"random-walker bias p must lie strictly in (0.5, 1), got {p}"
         )
-    raw = pairwise.select(
-        F.col("winner").cast("string").alias("w"),
-        F.col("loser").cast("string").alias("l"),
-        F.col("weight").cast("double").alias("x"),
-    )
-    if raw.rdd.isEmpty():
-        raise EmptyDatasetError("empty pairwise dataset")
-
-    vocab = build_vocab(
-        raw.select(F.col("w").alias("name")).unionAll(
-            raw.select(F.col("l").alias("name"))
-        )
-    )
-    n = vocab.count()
-
-    ids_w = vocab.select(F.col("name").alias("w"), F.col("id").alias("wi"))
-    ids_l = vocab.select(F.col("name").alias("l"), F.col("id").alias("li"))
-    rows = raw.join(ids_w, "w").join(ids_l, "l").select("wi", "li", "x")
+    vocab, n, rows = interned(pairwise)
 
     games = (
         rows.select(F.col("wi").alias("id"), "x")
@@ -100,46 +80,4 @@ def random_walker(
             )
         )
     )
-    stay = truncate_lineage(
-        vocab.select("id")
-        .join(
-            trans.groupBy(F.col("src").alias("id")).agg(
-                F.sum("p").alias("leave")
-            ),
-            "id",
-            "left",
-        )
-        .select("id", (1.0 - F.coalesce("leave", F.lit(0.0))).alias("stay"))
-    )
-
-    pi = truncate_lineage(vocab.select("id", F.lit(1.0 / n).alias("pi")))
-    it = 0
-    while it < iterations:
-        it += 1
-        gathered = (
-            trans.join(pi.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("p") * F.col("pi")).alias("m"))
-        )
-        nxt = (
-            stay.join(pi, "id")
-            .join(gathered, "id", "left")
-            .select(
-                "id",
-                F.col("pi").alias("old"),
-                (F.col("pi") * F.col("stay") + F.coalesce("m", F.lit(0.0))).alias(
-                    "pi"
-                ),
-            )
-            .transform(truncate_lineage)
-        )
-        delta = nxt.agg(F.sum(F.abs(F.col("pi") - F.col("old")))).first()[0]
-        if delta is None or not math.isfinite(delta):
-            raise NumericError(f"random-walker diverged at iteration {it}")
-        pi = nxt.select("id", "pi")
-        if delta < tolerance:
-            break
-
-    return sorted_scores(
-        vocab.join(pi, "id").select("name", F.col("pi").alias("score"))
-    )
+    return stationary(vocab, n, trans, iterations, tolerance, "random-walker")

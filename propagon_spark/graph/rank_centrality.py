@@ -11,7 +11,9 @@ Semantics:
 - stationary distribution sums to 1.
 
 Spark shape: one pair-aggregation pass builds the transition edge frame,
-then the shared scatter-gather power iteration.
+then the scatter-gather power iteration :func:`stationary` (shared with
+random_walker), run by ``plans.iterate.fixpoint``: one job per
+iteration, the L1 change observed on it.
 """
 
 from __future__ import annotations
@@ -24,14 +26,12 @@ from pyspark.sql import functions as F
 from propagon_spark.errors import EmptyDatasetError, NumericError
 from propagon_spark.graph.core import sorted_scores
 from propagon_spark.ids import build_vocab
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import fixpoint, release, truncate_lineage
 
 
-def rank_centrality(
-    pairwise: DataFrame, iterations: int = 200, tolerance: float = 1e-10
-) -> DataFrame:
-    """Fit on a ``(winner, loser, weight[, period])`` frame; returns
-    ``(name, score)`` (scores sum to 1)."""
+def interned(pairwise: DataFrame) -> tuple[DataFrame, int, DataFrame]:
+    """Intern a ``(winner, loser, weight[, period])`` frame: return the
+    ``(name, id)`` vocab, its size and the ``(wi, li, x)`` id rows."""
     raw = pairwise.select(
         F.col("winner").cast("string").alias("w"),
         F.col("loser").cast("string").alias("l"),
@@ -45,15 +45,82 @@ def rank_centrality(
             raw.select(F.col("l").alias("name"))
         )
     )
-    n = vocab.count()
-
     ids_w = vocab.select(F.col("name").alias("w"), F.col("id").alias("wi"))
     ids_l = vocab.select(F.col("name").alias("l"), F.col("id").alias("li"))
-    wins = (
-        raw.join(ids_w, "w")
-        .join(ids_l, "l")
-        .groupBy(F.col("wi").alias("a"), F.col("li").alias("b"))
-        .agg(F.sum("x").alias("wab"))
+    rows = raw.join(ids_w, "w").join(ids_l, "l").select("wi", "li", "x")
+    return vocab, vocab.count(), rows
+
+
+def stationary(
+    vocab: DataFrame,
+    n: int,
+    trans: DataFrame,
+    iterations: int,
+    tolerance: float,
+    kernel: str,
+) -> DataFrame:
+    """Power-iterate ``pi ← pi·stay + Σ p·pi`` from uniform over the
+    truncated transition frame ``trans`` (src, dst, p), with the implicit
+    self-loop ``stay = 1 − Σ leaving``, until the L1 change is below
+    ``tolerance``; return ``(name, score)``. Releases ``trans``."""
+    stay = truncate_lineage(
+        vocab.select("id")
+        .join(
+            trans.groupBy(F.col("src").alias("id")).agg(
+                F.sum("p").alias("leave")
+            ),
+            "id",
+            "left",
+        )
+        .select("id", (1.0 - F.coalesce("leave", F.lit(0.0))).alias("stay"))
+    )
+
+    def step(pi: DataFrame) -> DataFrame:
+        gathered = (
+            trans.join(pi.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("p") * F.col("pi")).alias("m"))
+        )
+        return (
+            stay.join(pi, "id")
+            .join(gathered, "id", "left")
+            .select(
+                "id",
+                F.col("pi").alias("old"),
+                (
+                    F.col("pi") * F.col("stay")
+                    + F.coalesce("m", F.lit(0.0))
+                ).alias("pi"),
+            )
+        )
+
+    def settled(turn: int, m: dict, _last) -> bool:
+        change = m["change"]
+        if change is None or not math.isfinite(change):
+            raise NumericError(f"{kernel} diverged at iteration {turn}")
+        return change < tolerance
+
+    pi, _ = fixpoint(
+        truncate_lineage(vocab.select("id", F.lit(1.0 / n).alias("pi"))),
+        step,
+        {"change": F.sum(F.abs(F.col("pi") - F.col("old")))},
+        settled,
+        max_turns=iterations,
+        invariants=[trans, stay],
+    )
+    return sorted_scores(
+        vocab.join(pi, "id").select("name", F.col("pi").alias("score"))
+    )
+
+
+def rank_centrality(
+    pairwise: DataFrame, iterations: int = 200, tolerance: float = 1e-10
+) -> DataFrame:
+    """Fit on a ``(winner, loser, weight[, period])`` frame; returns
+    ``(name, score)`` (scores sum to 1)."""
+    vocab, n, rows = interned(pairwise)
+    wins = rows.groupBy(F.col("wi").alias("a"), F.col("li").alias("b")).agg(
+        F.sum("x").alias("wab")
     )
 
     # unordered pair stats: (lo, hi, w_lo_beats_hi, w_hi_beats_lo)
@@ -93,46 +160,5 @@ def rank_centrality(
             )
         )
     )
-    leaving = trans.groupBy(F.col("src").alias("id")).agg(
-        F.sum("p").alias("leave")
-    )
-    stay = truncate_lineage(
-        vocab.select("id")
-        .join(leaving, "id", "left")
-        .select("id", (1.0 - F.coalesce("leave", F.lit(0.0))).alias("stay"))
-    )
-
-    pi = truncate_lineage(
-        vocab.select("id", F.lit(1.0 / n).alias("pi"))
-    )
-    it = 0
-    while it < iterations:
-        it += 1
-        gathered = (
-            trans.join(pi.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("p") * F.col("pi")).alias("m"))
-        )
-        nxt = (
-            stay.join(pi, "id")
-            .join(gathered, "id", "left")
-            .select(
-                "id",
-                F.col("pi").alias("old"),
-                (
-                    F.col("pi") * F.col("stay")
-                    + F.coalesce("m", F.lit(0.0))
-                ).alias("pi"),
-            )
-            .transform(truncate_lineage)
-        )
-        change = nxt.agg(F.sum(F.abs(F.col("pi") - F.col("old")))).first()[0]
-        if change is None or not math.isfinite(change):
-            raise NumericError(f"rank-centrality diverged at iteration {it}")
-        pi = nxt.select("id", "pi")
-        if change < tolerance:
-            break
-
-    return sorted_scores(
-        vocab.join(pi, "id").select("name", F.col("pi").alias("score"))
-    )
+    release(upair)  # trans and d_max hold all the loop reads of it
+    return stationary(vocab, n, trans, iterations, tolerance, "rank-centrality")

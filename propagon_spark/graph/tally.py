@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import fixpoint, materialize
 
 
 def as_graph(pairwise: DataFrame) -> DataFrame:
@@ -53,11 +53,15 @@ def tally(pairwise: DataFrame) -> DataFrame:
 def filter_min_count(pairwise: DataFrame, min_count: int) -> DataFrame:
     """Iteratively drop rows whose endpoints appear in fewer than
     ``min_count`` rows — cascading until a fixpoint
-    (``pairwise.rs:213-256``). Same driver loop as k-core peeling."""
+    (``pairwise.rs:213-256``). Each round is one ``fixpoint`` turn; its
+    row count, observed on the materializing job, stops the loop once it
+    no longer falls."""
     if min_count <= 1:
         return pairwise
-    cur = truncate_lineage(pairwise)
-    while True:
+    count = {"rows": F.count("*")}
+    cur, m = materialize(pairwise, count)
+
+    def step(cur: DataFrame) -> DataFrame:
         appearances = (
             cur.select(F.col("winner").alias("name"))
             .unionAll(cur.select(F.col("loser").alias("name")))
@@ -65,12 +69,13 @@ def filter_min_count(pairwise: DataFrame, min_count: int) -> DataFrame:
             .agg(F.count("*").alias("cnt"))
         )
         keep = appearances.where(F.col("cnt") >= min_count).select("name")
-        nxt = (
-            cur.join(keep.withColumnRenamed("name", "winner"), "winner", "left_semi")
-            .join(keep.withColumnRenamed("name", "loser"), "loser", "left_semi")
-            .transform(truncate_lineage)
-        )
-        before, after = cur.count(), nxt.count()
-        cur = nxt
-        if after == before or after == 0:
-            return cur.select("winner", "loser", "weight", "period")
+        return cur.join(
+            keep.withColumnRenamed("name", "winner"), "winner", "left_semi"
+        ).join(keep.withColumnRenamed("name", "loser"), "loser", "left_semi")
+
+    cur, _ = fixpoint(
+        cur, step, count,
+        lambda _turn, m, last: m["rows"] in (last["rows"], 0),
+        initial_stats=m,
+    )
+    return cur.select("winner", "loser", "weight", "period")

@@ -1,4 +1,4 @@
-"""Lineage truncation for driver-controlled iteration loops.
+"""Lineage truncation and the one round loop of the dataflow kernels.
 
 Iterative DataFrame programs are the classic Spark failure mode
 (SURVEY.md §4): without truncation the logical plan compounds per
@@ -17,30 +17,116 @@ origin stats, no constraints, no captured ordering — which keeps
 per-iteration planning cost constant. Falls back to plain
 ``localCheckpoint`` where the internal API is unavailable (e.g. Spark
 Connect).
+
+:func:`fixpoint` is the round loop of the dataflow kernels (katz,
+leader_rank, hits, rank_centrality, random_walker, components, lpa,
+k-core above the edge-block bound, tally's ``filter_min_count``):
+
+- a turn is ONE materializing job — the eager truncation — and the stop
+  statistics are observed (``Observation``) on that same job;
+- the previous state's checkpoint blocks are released once its successor
+  is materialized, and the loop-invariant frames when the loop ends;
+- the final state is kept: the kernel's lazy result reads it.
+
+Released blocks live in executor block managers, so a plan that still
+read one fails only across JVMs: run ``scripts/check_oracles.py`` under
+``PROPAGON_SPARK_MASTER='local-cluster[2,2,2048]'`` to check.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, Observation
+
+from propagon_spark.progress import SILENT, Progress
+
+_CHECKPOINT = "_checkpoint_rdd"  # instance attribute set by truncate_lineage
 
 
-def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` (localCheckpoint) and return a frame whose plan
-    is a bare leaf over the checkpointed blocks. O(1) plan size no matter
-    how it is composed downstream."""
-    ck = df.localCheckpoint(eager=eager)
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` (eager localCheckpoint, one job) and return a
+    frame whose plan is a bare leaf over the checkpointed blocks. O(1)
+    plan size no matter how it is composed downstream."""
+    ck = df.localCheckpoint(eager=True)
     try:
         spark = df.sparkSession
         jdf = ck._jdf  # noqa: SLF001 — classic-mode internal API
         jclean = spark._jsparkSession.internalCreateDataFrame(
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
-        return DataFrame(jclean, spark)
+        out = DataFrame(jclean, spark)
+        # the persisted RDD under localCheckpoint's LogicalRDD: release()
+        setattr(out, _CHECKPOINT, jdf.queryExecution().logical().rdd())
+        return out
     except Exception:  # Spark Connect or API drift — degraded but correct
         return ck
 
 
-def truncate_lineage_lazy(df: DataFrame) -> DataFrame:
-    """Chainable lazy variant (``df.transform(truncate_lineage_lazy)``):
-    the checkpoint materializes on the first downstream action."""
-    return truncate_lineage(df, eager=False)
+def release(df: DataFrame) -> None:
+    """Free the checkpoint blocks under a frame :func:`truncate_lineage`
+    returned; a no-op on any other frame and on a second call. Nothing
+    may read ``df``, or a lazy frame over it, afterwards."""
+    rdd = vars(df).pop(_CHECKPOINT, None)
+    if rdd is not None:
+        # what RDD.unpersist does, minus its warning that a locally
+        # checkpointed RDD cannot be recomputed (it never is, here)
+        rdd.context().unpersistRDD(rdd.id(), False)
+
+
+def materialize(
+    df: DataFrame, stats: dict[str, Column], columns: Sequence[str] = ()
+) -> tuple[DataFrame, dict]:
+    """Truncate ``df`` (projected to ``columns`` if given) and return it
+    with ``stats`` observed on the one job that materializes it."""
+    obs = Observation()
+    df = df.observe(obs, *(c.alias(k) for k, c in stats.items()))
+    return truncate_lineage(df.select(*columns) if columns else df), obs.get
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    stats: dict[str, Column],
+    stop: Callable[[int, dict, dict | None], bool],
+    max_turns: int | None = None,
+    invariants: Sequence[DataFrame] = (),
+    initial_stats: dict | None = None,
+    progress: Progress = SILENT,
+    phase: str = "",
+    row: Callable[[int, dict], dict] | None = None,
+) -> tuple[DataFrame, int]:
+    """Run ``state ← step(state)`` until ``stop(turn, stats, last)`` holds
+    or ``max_turns`` turns ran; return the final state and the turn count.
+
+    ``state`` is a :func:`truncate_lineage` frame, owned by the loop from
+    here on. ``step`` returns the successor's columns plus any that
+    ``stats`` read; only the state's columns are materialized. ``last``
+    is the previous turn's stats (``initial_stats`` at turn 1); ``stop``
+    may raise the kernel's ``NumericError``. ``invariants``: truncated
+    frames every step reads. With a ``row``, ``row(turn, stats)`` goes to
+    ``progress`` after each stop test.
+    """
+    columns = state.columns
+    turn, last = 0, initial_stats
+    try:
+        progress.start(phase, total=max_turns)
+        while max_turns is None or turn < max_turns:
+            turn += 1
+            nxt, m = materialize(step(state), stats, columns)
+            release(state)
+            state = nxt
+            done = stop(turn, m, last)
+            if row is not None:
+                progress.iteration(phase, row(turn, m))
+            if done:
+                break
+            last = m
+        progress.finish()
+    except BaseException:
+        release(state)
+        raise
+    finally:
+        for frame in invariants:
+            release(frame)
+    return state, turn

@@ -8,6 +8,9 @@ name-sorted columns). Usage::
     python3 scripts/check_oracles.py [sf_dir] [query ...]
 
 Defaults: sf_dir=/root/testdata/sf0.01, all oracle-backed queries.
+The Spark master is ``$PROPAGON_SPARK_MASTER`` or ``local[8]``; a multi-JVM run
+(``PROPAGON_SPARK_MASTER='local-cluster[2,2,2048]'``) also checks that no
+plan reads checkpoint blocks an iterative loop has released.
 """
 
 from __future__ import annotations
@@ -44,7 +47,8 @@ def main() -> None:
 
     from propagon_spark.session import get_spark
 
-    spark = get_spark(app_name="check-oracles", master="local[8]",
+    master = os.environ.get("PROPAGON_SPARK_MASTER", "local[8]")
+    spark = get_spark(app_name="check-oracles", master=master,
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -74,3 +74,31 @@ def small_graph_rows():
 def scores_dict(df):
     """Collect a (name, score) frame to {name: score}."""
     return {r["name"]: r["score"] for r in df.collect()}
+
+
+def peel_coreness(rows):
+    """Batagelj–Zaversnik coreness of the undirected, dedup'd,
+    self-loop-free reading of ``rows`` ((src, dst) name pairs), in plain
+    Python (``kcore.rs:40-100``): starting at k = 0, repeatedly remove
+    every vertex of degree ≤ k before moving to k + 1; a vertex's
+    coreness is the k it fell at. Self-loop-only vertices get 0."""
+    adj: dict[str, set] = {v: set() for e in rows for v in e}
+    for a, b in rows:
+        if a != b:
+            adj[a].add(b)
+            adj[b].add(a)
+    want = {}
+    alive = dict(adj)
+    k = 0
+    while alive:
+        peeled = True
+        while peeled:
+            peeled = False
+            for v in [v for v, nb in alive.items() if len(nb) <= k]:
+                want[v] = k
+                for u in alive[v]:
+                    alive[u].discard(v)
+                del alive[v]
+                peeled = True
+        k += 1
+    return want

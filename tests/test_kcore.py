@@ -2,7 +2,7 @@
 
 import pytest
 
-from conftest import make_edges
+from conftest import make_edges, peel_coreness
 
 from propagon_spark.graph import Graph
 from propagon_spark.graph.kcore import _broadcast_threshold, kcore
@@ -60,10 +60,10 @@ def test_hindex_equals_peel_random_graph(spark, hindex_path):
     # fixpoint must assign the exact coreness the reference-shaped peel
     # cascade assigns (Lü et al. 2016 theorem; also oracle-checked vs
     # the recursive-CTE peel at 3 scale factors by check_oracles.py)
-    g = Graph.from_edges(make_edges(spark, sorted(_random_rows())))
+    rows = sorted(_random_rows())
+    g = Graph.from_edges(make_edges(spark, rows))
     hi = {r["name"]: r["coreness"] for r in kcore(g, method="hindex").collect()}
-    pe = {r["name"]: r["coreness"] for r in kcore(g, method="peel").collect()}
-    assert hi == pe
+    assert hi == peel_coreness(rows)
     assert max(hi.values()) >= 2  # graph dense enough to be a real case
     g.unpersist()
 
@@ -77,15 +77,13 @@ def test_hindex_equals_peel_without_broadcast(spark, monkeypatch):
     spark.conf.set(key, "-1")
     try:
         assert _broadcast_threshold(spark) == -1  # the unhinted plan runs
-        g = Graph.from_edges(
-            make_edges(spark, sorted(_random_rows() | {("loop", "loop")}))
-        )
+        rows = sorted(_random_rows() | {("loop", "loop")})
+        g = Graph.from_edges(make_edges(spark, rows))
         hi = {r["name"]: r["coreness"] for r in kcore(g, method="hindex").collect()}
-        pe = {r["name"]: r["coreness"] for r in kcore(g, method="peel").collect()}
         g.unpersist()
     finally:
         spark.conf.set(key, old)
-    assert hi == pe
+    assert hi == peel_coreness(rows)
     assert hi["loop"] == 0
     assert max(hi.values()) >= 2
 

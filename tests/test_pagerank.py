@@ -161,24 +161,17 @@ def test_gather_repart_equivalence(g4, monkeypatch):
     # aggregate — picked automatically for >=2M-vertex sparse graphs,
     # where the map-side partial agg table thrashes DRAM) must produce
     # identical ranks to the default map-side-agg plan
-    monkeypatch.setenv("PROPAGON_JOIN_GATHER", "agg")
-    base = scores_dict(
-        pagerank(g4, iterations=10, sink="uniform", impl="join").scores
-    )
-    monkeypatch.setenv("PROPAGON_JOIN_GATHER", "repart")
-    repart = scores_dict(
-        pagerank(g4, iterations=10, sink="uniform", impl="join").scores
-    )
+    from propagon_spark.graph import pagerank as pr
+
+    res = pagerank(g4, iterations=10, sink="uniform", impl="join")
+    assert res.timings["gather_mode"] == "agg"  # 4 vertices < 2M
+    base = scores_dict(res.scores)
+    monkeypatch.setattr(pr, "_REPART_MIN_VERTICES", 0)
+    res = pagerank(g4, iterations=10, sink="uniform", impl="join")
+    assert res.timings["gather_mode"] == "repart"
+    repart = scores_dict(res.scores)
     for k in base:
         assert abs(base[k] - repart[k]) < 1e-12, k
-    # and the mode is recorded in the timings audit trail
-    monkeypatch.setenv("PROPAGON_JOIN_GATHER", "auto")
-    res = pagerank(g4, iterations=2, sink="uniform", impl="join")
-    assert res.timings["gather_mode"] == "agg"  # 4 vertices < 2M
-
-    monkeypatch.setenv("PROPAGON_JOIN_GATHER", "bogus")
-    with pytest.raises(InvalidParameterError):
-        pagerank(g4, iterations=1, sink="uniform", impl="join")
 
 
 def test_portable_parquet_block_path(g4, monkeypatch):

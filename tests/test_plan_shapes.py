@@ -17,9 +17,20 @@ import io
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
+from propagon_spark.graph.components import connected_components
 from propagon_spark.graph.core import Graph
+from propagon_spark.graph.hits import hits
+from propagon_spark.graph.katz import katz
+from propagon_spark.graph.kcore import kcore
+from propagon_spark.graph.leader_rank import leader_rank
+from propagon_spark.graph.lpa import label_propagation
+from propagon_spark.graph.random_walker import random_walker
+from propagon_spark.graph.rank_centrality import rank_centrality
+from propagon_spark.graph.tally import filter_min_count
+from propagon_spark.plans import blocks
 
 
 def _plan(df) -> str:
@@ -172,22 +183,27 @@ def test_derive_edges_two_shuffles(spark):
         spark.conf.set(key, old)
 
 
-def _stage_names_of(spark, fn) -> list[str]:
-    """Names of the stages of every Spark job ``fn()`` launches, counted by
-    job group (as ``test_components._jobs_of``)."""
+def _job_ids_of(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` launches, by job group (as
+    ``test_components._jobs_of``)."""
     import uuid
 
     sc = spark.sparkContext
     group = uuid.uuid4().hex
-    sc.setJobGroup(group, "stage names")
+    sc.setJobGroup(group, "job ids")
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    st = sc.statusTracker()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _stage_names_of(spark, fn) -> list[str]:
+    """Names of the stages of every Spark job ``fn()`` launches."""
+    st = spark.sparkContext.statusTracker()
     names = []
-    for job in st.getJobIdsForGroup(group):
+    for job in _job_ids_of(spark, fn):
         for stage in st.getJobInfo(job).stageIds:
             info = st.getStageInfo(stage)
             if info is not None:
@@ -209,3 +225,98 @@ def test_from_edges_runs_no_local_checkpoint_below_bound(spark):
         assert not [n for n in names if "localCheckpoint" in n]
     finally:
         graphs[0].unpersist()
+
+
+# --- the fixpoint loop: one job per turn, no checkpoint left behind -----
+
+def _loop_rows():
+    import random
+
+    rng = random.Random(6)
+    names = [f"v{i}" for i in range(60)]
+    return sorted({(a, b) for a, b in
+                   ((rng.choice(names), rng.choice(names)) for _ in range(300))
+                   if a != b})
+
+
+def _loop_inputs(spark):
+    rows = _loop_rows()
+    g = Graph.from_edges(
+        spark.createDataFrame(rows, "src string, dst string")
+    )
+    pairwise = spark.createDataFrame(
+        [(a, b, 1.0, 0) for a, b in rows],
+        "winner string, loser string, weight double, period int",
+    )
+    return g, pairwise
+
+
+def _kcore_dataflow(g):
+    from unittest import mock
+
+    with mock.patch.object(blocks, "DRIVER_STATE_MAX_VERTICES", 0):
+        return kcore(g)
+
+
+#: each migrated kernel as ``(graph, pairwise, turns) -> lazy result``
+_LOOPS = {
+    "katz": lambda g, pw, t: katz(g, alpha=0.01, iterations=t, tolerance=0.0),
+    "leader_rank": lambda g, pw, t: leader_rank(g, iterations=t, tolerance=0.0),
+    "hits": lambda g, pw, t: hits(g, iterations=t, tolerance=0.0).authorities,
+    "rank_centrality": lambda g, pw, t: rank_centrality(
+        pw, iterations=t, tolerance=0.0),
+    "random_walker": lambda g, pw, t: random_walker(
+        pw, iterations=t, tolerance=0.0),
+    "lpa": lambda g, pw, t: label_propagation(g, max_rounds=t),
+    "components": lambda g, pw, t: connected_components(g),
+    "kcore_dataflow": lambda g, pw, t: _kcore_dataflow(g),
+    "filter_min_count": lambda g, pw, t: filter_min_count(pw, 9),
+}
+
+#: jobs per turn: 1 for the single-plan walks; hits keeps its two
+#: broadcast normalizer jobs next to the materializing one
+_TURN_JOBS = {
+    "katz": 1, "leader_rank": 1, "hits": 3, "rank_centrality": 1,
+    "random_walker": 1,
+}
+
+
+@pytest.mark.parametrize("kernel", list(_TURN_JOBS))
+def test_fixpoint_runs_one_materializing_job_per_turn(spark, kernel):
+    # the stop statistics ride the job that materializes the state: no
+    # separate .agg().first() or count() job per turn
+    run = _LOOPS[kernel]
+    g, pw = _loop_inputs(spark)
+    try:
+        jobs = {t: len(_job_ids_of(spark, lambda t=t: run(g, pw, t).collect()))
+                for t in (3, 6)}
+    finally:
+        g.unpersist()
+    assert (jobs[6] - jobs[3]) / 3 == _TURN_JOBS[kernel]
+
+
+@pytest.mark.parametrize("kernel", list(_LOOPS))
+def test_fixpoint_keeps_only_the_final_state(spark, kernel):
+    # each turn releases its predecessor's checkpoint blocks and the loop
+    # releases its invariant frames: a call leaves at most the final
+    # state persisted, however many turns it ran. New RDD ids are
+    # counted, since the context cleaner may free older ones meanwhile;
+    # the results are held, so it cannot free a final state.
+    run = _LOOPS[kernel]
+    g, pw = _loop_inputs(spark)
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    growth, results = {}, []
+    try:
+        for turns in (3, 30):
+            before = persisted()
+            results.append(run(g, pw, turns))
+            results[-1].collect()
+            growth[turns] = len(persisted() - before)
+    finally:
+        g.unpersist()
+    assert growth[3] == growth[30] <= 1, growth
+

@@ -23,7 +23,7 @@ import random
 
 import pytest
 
-from tests.conftest import make_edges
+from tests.conftest import make_edges, peel_coreness
 
 
 def _rand_multigraph(seed: int, n: int = 10, m: int = 28):
@@ -171,28 +171,7 @@ def test_kcore_random_graphs_match_peel(spark, seed):
     from propagon_spark.graph.kcore import kcore
 
     rows = _rand_multigraph(seed, n=10, m=30)
-    und = _und_simple(rows)
-    adj: dict[str, set] = {}
-    for e in und:
-        a, b = tuple(e)
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    for v in {x for e in rows for x in e}:
-        adj.setdefault(v, set())
-    want = {}
-    alive = dict(adj)
-    k = 0
-    while alive:
-        peeled = True
-        while peeled:
-            peeled = False
-            for v in [v for v, nb in alive.items() if len(nb) <= k]:
-                want[v] = k
-                for u in alive[v]:
-                    alive[u].discard(v)
-                del alive[v]
-                peeled = True
-        k += 1
+    want = peel_coreness(rows)
     g = Graph.from_edges(make_edges(spark, rows))
     got = {r["name"]: r["coreness"] for r in kcore(g).collect()}
     assert got == want
