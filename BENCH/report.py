@@ -26,7 +26,7 @@ BENCH = os.path.dirname(os.path.abspath(__file__))
 
 _PHASES = [
     ("setup_dedup_s", "setup: canonicalize (distinct + persist)"),
-    ("setup_blocks_s", "setup: parallel worker-side shard write"),
+    ("setup_blocks_s", "setup: block store build (shard write; newer runs add canonicalize)"),
     ("setup_state_s", "setup: vertex state (out-degree collect)"),
     ("setup_s", "setup (canonicalize + persist + scatter build)"),
     ("gather_s", "gather (per-iteration distributed SpMV)"),
@@ -68,7 +68,7 @@ def load_pairs() -> list[dict]:
 
 def phase_rows(lo: dict, hi: dict, factor: float) -> str:
     tl, th = lo.get("timings", {}), hi.get("timings", {})
-    has_split = "setup_dedup_s" in tl
+    has_split = "setup_blocks_s" in tl
     out = []
     for key, label in _PHASES:
         if key == _CSR_ONLY_AGG and has_split:

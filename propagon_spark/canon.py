@@ -77,3 +77,17 @@ def undirected_adjacency(edges: DataFrame) -> DataFrame:
         .repartition(nparts, "src")
         .distinct()
     )
+
+
+def reverse_sinks(edges: DataFrame) -> DataFrame:
+    """PageRank's ``sink="reverse"`` topology rewrite of dedup'd edges
+    (``pagerank.rs:147-164``): each sink s (no out-edges) gets an edge
+    s→u to every distinct in-neighbor u. Every vertex is an edge
+    endpoint, so each sink has ≥1 in-neighbor and none remains."""
+    outs = edges.select("src").distinct()
+    sink_in = (
+        edges.join(outs.withColumnRenamed("src", "dst"), "dst", "left_anti")
+        .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        .distinct()
+    )
+    return edges.unionAll(sink_in)

@@ -33,7 +33,7 @@ datasets too).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -128,12 +128,8 @@ def bootstrap(
     sampler = resample_edges if method == "poisson" else resample_edges_exact
     all_scores = None
     for r in range(replicates):
-        rg = Graph(
-            vocab=g.vocab,
-            edges=sampler(g.edges, seed + r),
-            num_vertices=g.num_vertices,
-            num_edge_rows=g.num_edge_rows,
-        )
+        # g's vocab and names; its stores and frames stay g's own
+        rg = replace(g, edges=sampler(g.edges, seed + r), _owned={})
         s = fit(rg).select("name", "score").withColumn("_rep", F.lit(r))
         s = s.withColumn(
             "_rank",

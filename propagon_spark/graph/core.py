@@ -14,18 +14,47 @@ Scale notes:
 - vocab joins are broadcast when small, shuffle-hash otherwise (Catalyst /
   AQE decide from stats);
 - nothing here collects edges to the driver.
+
+Below the driver-state bound (``plans.blocks.DRIVER_STATE_MAX_VERTICES``)
+a Graph also holds its ``names`` on the driver, one Arrow column in id
+order (a dense-id Graph casts its ids on first use): k-core, LPA and CSR
+PageRank sort and name their results there (:meth:`Graph.emit`), so each
+is a ``LocalRelation`` whose collect runs no Spark job. Above the bound
+the names stay in the vocab frame and a forced CSR PageRank emits
+through a vocab join + ``orderBy``. A Graph owns one edge-block store
+per canonical form a kernel asks for (:meth:`Graph.store`:
+``"undirected"`` for k-core and LPA, ``"out"`` / ``"out_reverse"`` for
+CSR PageRank), built on first use, at most once per Graph. Stores and
+derived frames (:meth:`Graph.cached`) live until :meth:`Graph.unpersist`;
+a Graph that is garbage-collected first still deletes its stores' files.
 """
 
 from __future__ import annotations
 
+import weakref
+from collections.abc import Callable
+from contextlib import suppress
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
+from propagon_spark.canon import dedup_edges, reverse_sinks, undirected_adjacency
 from propagon_spark.errors import EmptyDatasetError
 from propagon_spark.ids import _build_vocab
+from propagon_spark.plans import blocks
+
+#: the canonical forms :meth:`Graph.store` builds, from the id-typed edges
+_FORMS: dict[str, Callable[[DataFrame], DataFrame]] = {
+    "undirected": undirected_adjacency,
+    "out": dedup_edges,
+    "out_reverse": lambda e: reverse_sinks(dedup_edges(e)),
+}
 
 
 @dataclass
@@ -37,13 +66,26 @@ class Graph:
         edges: ``(src: long, dst: long, weight: double)`` — parallel edges
             preserved (canonicalization is per-algorithm, see canon.py).
         num_vertices: entity count (== vocab rows).
+        names: the vocab's names in id order, held on the driver at or
+            below the driver-state bound (see :meth:`driver_names`);
+            None above it.
     """
 
     vocab: DataFrame
     edges: DataFrame
     num_vertices: int
     num_edge_rows: int
-    _persisted: list[DataFrame] = field(default_factory=list)
+    names: pa.ChunkedArray | pa.Array | None = None
+    #: what :meth:`unpersist` releases: the edge frame, the stores and
+    #: the derived frames, by key
+    _owned: dict[str, object] = field(default_factory=dict)
+    #: ids are their own names (:meth:`from_dense_ids`)
+    _dense: bool = False
+
+    def __post_init__(self):
+        # stores are files, which no JVM cleanup deletes: a Graph nobody
+        # unpersists releases them when it is garbage-collected
+        weakref.finalize(self, _release, self._owned, blocks.EdgeBlocks)
 
     @property
     def spark(self) -> SparkSession:
@@ -87,7 +129,7 @@ class Graph:
             raw.select(F.col("dst_name").alias("name"))
         )
         try:
-            vocab, n = _build_vocab(names)  # flat leaf (see ids.py)
+            vocab, n, names = _build_vocab(names)  # flat leaf (see ids.py)
             if n == 0:
                 raise EmptyDatasetError("empty edge dataset")
 
@@ -118,14 +160,7 @@ class Graph:
         finally:
             raw.unpersist(blocking=False)
 
-        g = cls(
-            vocab=vocab,
-            edges=e,
-            num_vertices=n,
-            num_edge_rows=m,
-        )
-        g._persisted = [e]
-        return g
+        return cls(vocab, e, n, m, names, {"edges": e})
 
     @classmethod
     def from_dense_ids(
@@ -175,17 +210,11 @@ class Graph:
                 ).first()["mx"]
                 + 1
             )
-        vocab = spark.range(num_vertices).select(
+        n = int(num_vertices)
+        vocab = spark.range(n).select(
             F.col("id").cast("string").alias("name"), F.col("id")
         )
-        g = cls(
-            vocab=vocab,
-            edges=e,
-            num_vertices=int(num_vertices),
-            num_edge_rows=m,
-        )
-        g._persisted = [e]
-        return g
+        return cls(vocab, e, n, m, None, {"edges": e}, _dense=True)
 
     def with_names(self, df: DataFrame, id_col: str = "id") -> DataFrame:
         """Join names back onto an id-keyed result frame."""
@@ -194,13 +223,77 @@ class Graph:
         )
         return df.join(v, id_col)
 
+    def _own(self, key: str, build: Callable[[], object]):
+        if key not in self._owned:
+            self._owned[key] = build()
+        return self._owned[key]
+
+    def store(self, form: str) -> blocks.EdgeBlocks:
+        """The edge-block store of canonical ``form`` (``"undirected"``,
+        ``"out"`` or ``"out_reverse"``), built on first use and kept
+        until :meth:`unpersist`."""
+        return self._own(form, lambda: blocks.build(_FORMS[form](self.edges), self.num_vertices))
+
+    def cached(self, key: str, frame: Callable[[], DataFrame]) -> DataFrame:
+        """``frame()`` persisted and materialized on first use, and kept
+        under ``key`` until :meth:`unpersist`."""
+
+        def build():
+            df = frame().persist(StorageLevel.MEMORY_AND_DISK_DESER)
+            df.count()
+            return df
+
+        return self._own(key, build)
+
+    def driver_names(self) -> pa.ChunkedArray | pa.Array | None:
+        """:attr:`names`; None above the bound. A Graph built without
+        them (a dense-id Graph, or one constructed directly) fills them on
+        first use: dense ids are cast on the driver, other vocabs are
+        collected with one sort job."""
+        if self.names is None and self.num_vertices <= blocks.DRIVER_STATE_MAX_VERTICES:
+            self.names = (
+                pc.cast(pa.array(np.arange(self.num_vertices)), pa.string()) if self._dense
+                else self.vocab.orderBy("id").toArrow().column("name")
+            )
+        return self.names
+
+    def emit(self, column: str, values: np.ndarray, sort_keys: list,
+             nullable: bool = True) -> DataFrame:
+        """A named result ``(name, id, column)`` ordered by ``sort_keys``
+        (pyarrow ``(column, order)`` pairs). ``values`` is the n-vector
+        of ``column`` by id (int64 or float64), ``nullable`` its
+        nullability; name and id keep the vocab's, so the schema is the
+        vocab join's. Below the bound it is sorted on the driver and
+        returned as one ``LocalRelation``; above it, a vocab join +
+        ``orderBy``."""
+        kind = LongType() if values.dtype.kind == "i" else DoubleType()
+        value = StructField(column, kind, nullable)
+        table = pa.table({"id": np.arange(self.num_vertices, dtype=np.int64), column: values})
+        names = self.driver_names()
+        if names is None:
+            frame = self.spark.createDataFrame(
+                table, StructType([StructField("id", LongType(), False), value]))
+            return self.with_names(frame).select("name", "id", column).orderBy(
+                *[F.desc(c) if o == "descending" else F.asc(c) for c, o in sort_keys])
+        table = table.add_column(0, "name", names)
+        vocab = self.vocab.schema
+        return self.spark.createDataFrame(
+            table.take(pc.sort_indices(table, sort_keys=sort_keys)),
+            StructType([vocab["name"], vocab["id"], value]),
+        )
+
     def unpersist(self) -> None:
-        for df in self._persisted:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._persisted = []
+        """Release the edge frame, every store and every derived frame."""
+        _release(self._owned, object)
+
+
+def _release(owned: dict[str, object], kind: type) -> None:
+    """Unpersist and forget the entries of ``owned`` that are ``kind``."""
+    for key, obj in list(owned.items()):
+        if isinstance(obj, kind):
+            del owned[key]
+            with suppress(Exception):
+                obj.unpersist()
 
 
 def sorted_scores(scored: DataFrame) -> DataFrame:

@@ -16,15 +16,18 @@ executed. Two executions, selected by the vertex count against the edge-
 block store's bound (``plans.blocks.DRIVER_STATE_MAX_VERTICES``, the one
 CSR PageRank uses):
 
-- **Edge-block store** (n ≤ the bound): the adjacency is written once as
-  dst-bucketed worker shards and unpersisted; ``h`` is a dense driver
-  vector (int32 below 2³¹ vertices). h₀ is one bincount round; a later
-  round is ONE Python-worker RDD job — broadcast ``h``, a segmented
-  H-index per bucket over its ``(src, dst_local)`` columns
-  (:func:`_hindex`), the buckets' buffers assembled on the driver — with
-  no Catalyst planning, checkpoint or shuffle. Exact array equality
-  ``h_next == h`` on the driver stops the loop. Isolated vertices keep
-  their bucket accumulator's 0. One vocab join emits names.
+- **Edge-block store** (n ≤ the bound): the Graph's ``"undirected"``
+  store (``Graph.store``), the adjacency as dst-bucketed worker shards.
+  The Graph builds it on the first k-core or LPA call and keeps it until
+  ``Graph.unpersist()``, so a later call starts at the rounds. ``h`` is
+  a dense driver vector (int32 below 2³¹ vertices); h₀ is the store's
+  ``src_degree``, counted by the build job. A round is ONE Python-worker
+  RDD job — broadcast ``h``, a segmented H-index per bucket over its
+  ``(src, dst_local)`` columns (:func:`_hindex`), the buckets' buffers
+  assembled on the driver — with no Catalyst planning, checkpoint or
+  shuffle. Exact array equality ``h_next == h`` on the driver stops the
+  loop. Isolated vertices keep degree 0. The result is named and sorted
+  on the driver (``Graph.emit``): a ``LocalRelation``, no vocab join.
 - **Dataflow** (n > the bound, :func:`_kcore_hindex`): state ``h`` only
   for non-isolated vertices, h₀ = degree (a per-src aggregate of the
   cached adjacency). A round is ``cache ⋈ broadcast(h)`` on ``dst``,
@@ -43,7 +46,6 @@ CSR PageRank uses):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -105,15 +107,6 @@ def _hindex_round(sym: DataFrame, h: DataFrame, broadcast: bool) -> DataFrame:
     )
 
 
-def _degree(_state, bucket: list, nlocal: int) -> np.ndarray:
-    """Store kernel: the bucket's vertex degrees (the adjacency is
-    symmetric, so in-degree is degree)."""
-    acc = np.zeros(nlocal, np.int64)
-    for _src, dstl in bucket:
-        acc += np.bincount(dstl, minlength=nlocal)
-    return acc
-
-
 def _hindex(h: np.ndarray, bucket: list, nlocal: int) -> np.ndarray:
     """Store kernel: one iterated-H-index round for the bucket's
     vertices. The bucket's edges are sorted by ``(dst_local, -h[src])``;
@@ -139,32 +132,17 @@ def _kcore_blocks(g: Graph) -> DataFrame:
     """Iterated-H-index coreness on the edge-block store (see the module
     docstring). ``h`` is non-increasing, so the first round that changes
     nothing is the fixpoint."""
-    spark = g.spark
-    n = g.num_vertices
-    sym = undirected_adjacency(g.edges).persist(_STORAGE)
-    try:
-        store = blocks.build(sym, n)
-    finally:
-        sym.unpersist()  # the shards hold the adjacency from here on
-    with store:
-        # h ≤ degree < n: the store's id dtype (int32 below 2³¹) holds it
-        h = store.gather(_degree, None, np.int64).astype(store.dtype)
-        while True:
-            nxt = store.gather(_hindex, h, store.dtype)
-            if np.array_equal(nxt, h):
-                break
-            h = nxt
-
-    core = spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(n, dtype=np.int64),
-                      "coreness": h.astype(np.int64)}),
-        "id long, coreness long not null",
-    )
-    broadcast = 0 <= n * _STATE_ROW_BYTES <= _broadcast_threshold(spark)
-    out = g.vocab.join(F.broadcast(core) if broadcast else core, "id")
-    return out.select("name", "id", "coreness").orderBy(
-        F.desc("coreness"), F.asc("id")
-    )
+    store = g.store("undirected")
+    # h ≤ degree < n: the store's id dtype (int32 below 2³¹) holds it
+    h = store.src_degree.astype(store.dtype)
+    while True:
+        nxt = store.gather(_hindex, h, store.dtype)
+        if np.array_equal(nxt, h):
+            break
+        h = nxt
+    return g.emit("coreness", h.astype(np.int64),
+                  [("coreness", "descending"), ("id", "ascending")],
+                  nullable=False)
 
 
 def _kcore_hindex(g: Graph) -> DataFrame:

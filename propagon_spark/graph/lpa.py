@@ -12,22 +12,33 @@ semantics (Raghavan et al. 2007) with deterministic tie-breaks
   reduction → identical assignments at any parallelism);
 - stop when no label changes or after ``max_rounds``.
 
-Spark shape per round: one scatter join (labels onto symmetric edges),
-``groupBy(dst, label).count()`` for neighborhood histograms, then a
-``max_by``-style struct-max to pick (count desc, label asc) — two shuffles
-per round, all integer reductions, no floats and no Python. The rounds run
-in ``plans.iterate.fixpoint``; the changed-label count is observed on the
-job that materializes each round's labels.
+Two executions, split at the edge-block store's bound
+(``plans.blocks.DRIVER_STATE_MAX_VERTICES``), as in k-core:
+
+- **Edge-block store** (n ≤ the bound): the Graph's ``"undirected"``
+  store, shared with k-core and kept until ``Graph.unpersist()``. A
+  round is ONE Python-worker job over the driver's ``label`` vector: a
+  segmented mode per bucket (:func:`_mode`); vertices whose
+  ``src_degree`` is 0 keep their label; exact array equality stops the
+  loop. The result is a driver-sorted ``LocalRelation`` (``Graph.emit``).
+- **Dataflow** (n > the bound): per round one scatter join (labels onto
+  symmetric edges), ``groupBy(dst, label).count()`` for neighborhood
+  histograms, then a ``max_by``-style struct-max to pick (count desc,
+  label asc) — two shuffles per round, all integer reductions. The
+  rounds run in ``plans.iterate.fixpoint``; the changed-label count is
+  observed on the job that materializes each round's labels.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
+from propagon_spark.plans import blocks
 from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 
 # deserialized columnar cache: the serialized level costs ~1.5x to build
@@ -41,8 +52,10 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
 
     ``label`` is the vertex id of the community's representative (min-id
     tie-breaking makes it deterministic). Isolated-after-canonicalization
-    vertices (only self-loops) keep their own label.
+    vertices (only self-loops) keep their own label. Ordered (label, id).
     """
+    if g.num_vertices <= blocks.DRIVER_STATE_MAX_VERTICES:
+        return _lpa_blocks(g, max_rounds)
     nparts = g.edges.rdd.getNumPartitions()
     sym = undirected_adjacency(g.edges).persist(_STORAGE)
     sym.count()
@@ -79,3 +92,42 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
     sym.unpersist()
     out = g.with_names(labels).select("name", "id", "label")
     return out.orderBy("label", "id")
+
+
+def _mode(label: np.ndarray, bucket: list, nlocal: int) -> np.ndarray:
+    """Store kernel: each of the bucket's vertices adopts its neighbors'
+    most frequent label, ties to the min label. The bucket's edges are
+    sorted by ``(dst_local, label[src])``; each run of equal pairs is one
+    label's count, and per dst the longest run, first in label order,
+    wins. Vertices without edges read 0 (the driver keeps their label)."""
+    out = np.zeros(nlocal, label.dtype)
+    src = np.concatenate([b[0] for b in bucket])
+    dstl = np.concatenate([b[1] for b in bucket])
+    if len(dstl) == 0:
+        return out
+    vals = label[src]
+    order = np.lexsort((vals, dstl))
+    d, v = dstl[order], vals[order]
+    starts = np.flatnonzero(np.r_[True, (d[1:] != d[:-1]) | (v[1:] != v[:-1])])
+    runs = np.diff(np.r_[starts, len(d)])
+    d, v = d[starts], v[starts]
+    best = np.lexsort((v, -runs, d))
+    first = best[np.r_[True, d[best][1:] != d[best][:-1]]]
+    out[d[first]] = v[first]
+    return out
+
+
+def _lpa_blocks(g: Graph, max_rounds: int) -> DataFrame:
+    """Label propagation on the edge-block store (module docstring)."""
+    store = g.store("undirected")
+    isolated = store.src_degree == 0
+    label = np.arange(g.num_vertices, dtype=store.dtype)
+    for _ in range(max_rounds):
+        nxt = store.gather(_mode, label, store.dtype)
+        nxt[isolated] = label[isolated]
+        if np.array_equal(nxt, label):
+            break
+        label = nxt
+    return g.emit("label", label.astype(np.int64),
+                  [("label", "ascending"), ("id", "ascending")],
+                  nullable=g.vocab.schema["id"].nullable)

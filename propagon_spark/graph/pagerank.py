@@ -43,16 +43,19 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from propagon_spark.canon import dedup_edges
+from propagon_spark.canon import dedup_edges, reverse_sinks
 from propagon_spark.errors import InvalidParameterError, NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
 from propagon_spark.plans.blocks import DRIVER_STATE_MAX_VERTICES
 from propagon_spark.plans.checkpoint import CheckpointManager
-from propagon_spark.plans.iterate import materialize, truncate_lineage
+from propagon_spark.plans.iterate import materialize, release, truncate_lineage
 from propagon_spark.progress import as_progress
 
 logger = logging.getLogger("propagon_spark.pagerank")
@@ -93,15 +96,11 @@ class PageRankResult:
     timings: dict = field(default_factory=dict)
 
 
-def _teleport_frame(g: Graph, seeds: dict[str, float] | None) -> DataFrame:
-    """(id, v) teleport distribution; uniform 1/n when seeds is None.
-
-    Seed validation mirrors ``pagerank.rs:106-131``: non-empty, weights
-    positive and finite, names must exist in the graph.
-    """
-    n = g.num_vertices
-    if seeds is None:
-        return g.vocab.select("id", F.lit(1.0 / n).alias("v"))
+def _seed_ids(g: Graph, seeds: dict[str, float]) -> np.ndarray:
+    """Validate ``seeds`` (``pagerank.rs:106-131``: non-empty, weights
+    positive and finite, names must exist in the graph) and return their
+    ids in ``seeds`` order. They resolve against the driver-held names
+    with no Spark job; above the bound, with one lookup join."""
     if len(seeds) == 0:
         raise InvalidParameterError("seed list must not be empty")
     for name, w in seeds.items():
@@ -109,35 +108,32 @@ def _teleport_frame(g: Graph, seeds: dict[str, float] | None) -> DataFrame:
             raise InvalidParameterError(
                 f"seed weight for {name!r} must be positive and finite, got {w!r}"
             )
+    keys = [str(k) for k in seeds]
+    names = g.driver_names()
+    if names is not None:
+        idx = pc.index_in(pa.array(keys, pa.string()), value_set=names)
+        known = dict(zip(keys, idx.to_pylist()))
+    else:
+        seed_df = g.spark.createDataFrame([(k,) for k in keys], "name string")
+        known = {r["name"]: r["id"] for r in seed_df.join(g.vocab, "name").collect()}
+    if any(known.get(k) is None for k in keys):
+        missing = sorted(k for k in seeds if known.get(str(k)) is None)
+        raise InvalidParameterError(f"unknown seed name(s): {missing}")
+    return np.array([known[k] for k in keys], dtype=np.int64)
+
+
+def _teleport_frame(g: Graph, seeds: dict[str, float] | None) -> DataFrame:
+    """(id, v) teleport distribution; uniform 1/n when seeds is None
+    (``seeds`` already checked by :func:`_seed_ids`)."""
+    n = g.num_vertices
+    if seeds is None:
+        return g.vocab.select("id", F.lit(1.0 / n).alias("v"))
     total = float(sum(seeds.values()))
     rows = [(str(k), float(v) / total) for k, v in seeds.items()]
     seed_df = g.spark.createDataFrame(rows, "name string, v double")
-    matched = seed_df.join(g.vocab, "name")
-    if matched.count() != len(rows):
-        known = {r["name"] for r in matched.select("name").collect()}
-        missing = sorted(set(seeds) - known)
-        raise InvalidParameterError(f"unknown seed name(s): {missing}")
     return g.vocab.join(seed_df, "name", "left").select(
         "id", F.coalesce("v", F.lit(0.0)).alias("v")
     )
-
-
-def _reverse_rewrite(edges: DataFrame) -> DataFrame:
-    """Sink::Reverse topology rewrite (``pagerank.rs:147-164``).
-
-    For each sink s (no out-edges), add edges s→u for every distinct
-    in-neighbor u of s. Every vertex is an edge endpoint, so each sink has
-    ≥1 in-neighbor and no sinks remain afterwards.
-    """
-    outs = edges.select("src").distinct()
-    sink_in = (
-        edges.join(
-            outs.withColumnRenamed("src", "dst"), "dst", "left_anti"
-        )  # edges whose dst is a sink
-        .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .distinct()
-    )
-    return edges.unionAll(sink_in)
 
 
 def pagerank(
@@ -188,15 +184,37 @@ def pagerank(
 
     spark = g.spark
     n = g.num_vertices
+    use_csr = impl == "csr" or (impl == "auto" and n <= csr_max_vertices)
+    # validate seeds up front (shared by both kernels)
+    seed_ids = None if seeds is None else _seed_ids(g, seeds)
+
+    # ---- init / resume (shared by both kernels) ------------------------
+    ckpt: CheckpointManager | None = None
+    if checkpoint_dir is not None:
+        ckpt = CheckpointManager(spark, checkpoint_dir, run_id or uuid.uuid4().hex)
+    metrics: list[dict] = []
+    start_iter, state = 0, None
+    if resume and ckpt is not None:
+        latest = ckpt.latest()
+        if latest is not None:
+            start_iter, state, metrics = latest
+    total_iters = iterations if tol is None else max_iterations
+
+    if use_csr:
+        from propagon_spark.graph.pagerank_csr import pagerank_csr
+
+        if seeds is not None:
+            total = float(sum(seeds.values()))
+            seeds = (seed_ids, [float(w) / total for w in seeds.values()])
+        return pagerank_csr(
+            g, damping, sink, seeds, tol, total_iters, checkpoint_interval,
+            ckpt, start_iter, state, metrics, prog,
+        )
+
     nparts = g.edges.rdd.getNumPartitions()
     t_setup = time.monotonic()
 
     # ---- one-time setup (loop-invariant, persisted) --------------------
-    # persist the canonicalized frame: the setup passes that follow
-    # (out-degrees, block/scatter build, sink detection) would otherwise
-    # each re-run the full-width distinct over the raw edge table
-    use_csr = impl == "csr" or (impl == "auto" and n <= csr_max_vertices)
-
     # Gather plan + loop partition LAYOUT, decided up front from graph
     # shape. Past a few million vertices every per-task hash table in the
     # loop (the shuffle-hash join's ranks build side, the gather
@@ -227,9 +245,7 @@ def pagerank(
     # Dense/small graphs (n < 2M) keep the map-side-combine groupBy and
     # the session layout — the partial agg there cuts shuffle volume ~14×
     # (synth: E/(P·n) ≈ 14) and its tables are cache-resident anyway.
-    gather_mode = (
-        "repart" if (not use_csr and n >= _REPART_MIN_VERTICES) else "agg"
-    )
+    gather_mode = "repart" if n >= _REPART_MIN_VERTICES else "agg"
     loop_nparts = nparts
     if gather_mode == "repart":
         loop_nparts = max(
@@ -245,7 +261,7 @@ def pagerank(
     # (src, dst) exchange plus a separate scatter repartition (verified
     # plan-level: no Exchange between the repartition, the dedup
     # HashAggregate, the out-degree agg, and the scatter join).
-    pre_partitioned = not use_csr and sink != "reverse"
+    pre_partitioned = sink != "reverse"
     if pre_partitioned:
         # SKEW GUARD: folding dedup into the src repartition removes the
         # partial aggregation that would otherwise collapse duplicate
@@ -278,23 +294,11 @@ def pagerank(
     else:
         edges = dedup_edges(g.edges)
         if sink == "reverse":
-            edges = _reverse_rewrite(edges)
+            edges = reverse_sinks(edges)
+    # persist the canonicalized frame: the setup passes that follow
+    # (out-degrees, scatter build, sink detection) would otherwise each
+    # re-run the full-width distinct over the raw edge table
     edges = edges.persist(_STORAGE)
-
-    # validate seeds up front (shared by both kernels)
-    _teleport_frame(g, seeds)
-
-    if use_csr:
-        try:
-            return _run_csr(
-                g, edges, damping=damping, sink=sink, seeds=seeds, tol=tol,
-                iterations=iterations, max_iterations=max_iterations,
-                checkpoint_interval=checkpoint_interval,
-                checkpoint_dir=checkpoint_dir, run_id=run_id, resume=resume,
-                prog=prog,
-            )
-        finally:
-            edges.unpersist()
 
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     # scatter frame: (src, dst, inv) — inverse out-degree folded in so the
@@ -354,7 +358,7 @@ def pagerank(
     # nothing. Detect it once (vertex-sized scan of the persisted frame)
     # and run the cheap single-reference step plan — the per-step sink
     # machinery (gather materialization + mass scalar) is pure overhead.
-    # `reverse` removes sinks by construction (_reverse_rewrite).
+    # `reverse` removes sinks by construction (canon.reverse_sinks).
     has_sinks = (
         sink != "reverse"
         and vstat.where(F.col("is_sink")).limit(1).count() > 0
@@ -371,22 +375,11 @@ def pagerank(
     # (round-5 huge run). Release it the moment its derived frames exist.
     edges.unpersist(blocking=False)
 
-    # ---- init / resume -------------------------------------------------
-    ckpt: CheckpointManager | None = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(spark, checkpoint_dir, run_id or uuid.uuid4().hex)
-
-    metrics: list[dict] = []
-    start_iter = 0
-    ranks = None
-    if resume and ckpt is not None:
-        latest = ckpt.latest()
-        if latest is not None:
-            start_iter, state, metrics = latest
-            ranks = truncate_lineage(
-                state.select("id", "rank").repartition(loop_nparts, "id")
-            )
-    if ranks is None:
+    if state is not None:
+        ranks = truncate_lineage(
+            state.select("id", "rank").repartition(loop_nparts, "id")
+        )
+    else:
         # init = teleport vector (pagerank.rs:170-173)
         ranks = truncate_lineage(vstat.select(
             "id", F.col("v").alias("rank")
@@ -487,7 +480,6 @@ def pagerank(
             ).alias("rank"),
         )
 
-    total_iters = iterations if tol is None else max_iterations
     # Step scheduling. Two shapes, chosen by whether a per-step SCALAR
     # barrier exists (pooled sink mass S — only when the graph actually
     # has sinks AND the policy redistributes):
@@ -565,11 +557,15 @@ def pagerank(
                 steps = max(1, min(chain_max, math.ceil(need)))
             steps = min(steps, total_iters - it)
 
+            # the turn's materialized intermediates, released with the
+            # superseded ranks once the new ranks are materialized
+            spent = [ranks]
             if two_phase:
                 # job A: edge pass; Σm observed on the SAME job, so the
                 # sink-mass scalar costs no extra pass and no broadcast.
                 t_g = time.monotonic()
                 gath, m = materialize(gather_frame(ranks), {"sigma": F.sum("m")})
+                spent.append(gath)
                 sigma = float(m["sigma"])
                 timings["iterate_gather_s"] += time.monotonic() - t_g
                 cur = update_from(gath, need_delta, ranks, mass_cur - sigma)
@@ -584,6 +580,7 @@ def pagerank(
                         # delta-carrying step then references a LEAF
                         t_g = time.monotonic()
                         cur, m = materialize(cur, {"mass": F.sum("rank")})
+                        spent.append(cur)
                         mass_cur = float(m["mass"])
                         timings["iterate_gather_s"] += (
                             time.monotonic() - t_g
@@ -616,6 +613,8 @@ def pagerank(
             prev_l1 = l1
 
             ranks = new_ranks
+            for frame in spent:
+                release(frame)
             mass_cur = mass
             it += steps
             metrics.append(
@@ -667,59 +666,3 @@ def pagerank(
         timings=timings,
     )
 
-
-def _run_csr(
-    g: Graph,
-    edges: DataFrame,
-    damping: float,
-    sink: str,
-    seeds: dict[str, float] | None,
-    tol: float | None,
-    iterations: int,
-    max_iterations: int,
-    checkpoint_interval: int,
-    checkpoint_dir: str | None,
-    run_id: str | None,
-    resume: bool,
-    prog=None,
-) -> PageRankResult:
-    """Dispatch to the CSR-blocked vectorized kernel (pagerank_csr.py)."""
-    from propagon_spark.graph.pagerank_csr import pagerank_csr, scores_from_vector
-
-    ckpt = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(g.spark, checkpoint_dir, run_id or uuid.uuid4().hex)
-
-    metrics: list[dict] = []
-    start_iter = 0
-    init_ranks = None
-    if resume and ckpt is not None:
-        latest = ckpt.latest()
-        if latest is not None:
-            start_iter, state, metrics = latest
-            init_ranks = state.select("id", "rank").toPandas()
-
-    if prog is not None:
-        prog.start(
-            "pagerank", total=max_iterations if tol is not None else iterations
-        )
-    try:
-        p, it, converged, metrics, timings = pagerank_csr(
-            g, edges, damping=damping, sink=sink, seeds=seeds, tol=tol,
-            iterations=iterations, max_iterations=max_iterations,
-            checkpoint_interval=checkpoint_interval, ckpt=ckpt,
-            start_iter=start_iter, init_ranks=init_ranks, metrics=metrics,
-            logger=logger, prog=prog,
-        )
-    finally:
-        if prog is not None:
-            prog.finish()
-    scores, ranks = scores_from_vector(g, p)
-    return PageRankResult(
-        scores=scores,
-        ranks=ranks,
-        iterations=it,
-        converged=converged if tol is not None else True,
-        metrics=metrics,
-        timings=timings,
-    )

@@ -1,8 +1,11 @@
 """CSR-blocked PageRank kernel (the north-star fast path).
 
 Runs the power iteration on the shared edge-block store
-(:mod:`propagon_spark.plans.blocks`): the canonical (src, dst) pairs are
-bucketed once by ``dst % nblocks`` into worker-written shard files, the
+(:mod:`propagon_spark.plans.blocks`): the Graph's ``"out"`` store (or
+``"out_reverse"`` for ``sink="reverse"``), the canonical (src, dst) pairs
+bucketed by ``dst % nblocks`` into worker-written shard files, built on
+the first CSR fit of a Graph and kept until ``Graph.unpersist()``. Its
+``src_degree``, counted by the build job, is the out-degree vector. The
 rank vector stays on the driver, and each iteration is one store round —
 broadcast ``p·inv_out``, a vectorized ``np.bincount`` per bucket over its
 mmapped shard columns (:func:`_spmv`), and the buckets' dense float64
@@ -19,6 +22,10 @@ join kernel in pagerank.py, which has no such cap. Driver-side numpy
 updates also make score sums bit-deterministic at any parallelism (fixed
 summation order), strictly stronger than the 1e-6 allclose contract.
 
+Seed names resolve against the Graph's driver-held names, and the
+scores are named and sorted on the driver (``Graph.emit``): a
+``LocalRelation``, with no lookup join or vocab join anywhere.
+
 Semantics are identical to pagerank.py (same sink policies / teleport /
 init / update rule); csr/join equality is pinned by the parametrized
 cases in tests/test_pagerank.py (impl="csr" vs impl="join").
@@ -32,11 +39,10 @@ import time
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from propagon_spark.errors import NumericError
-from propagon_spark.graph.core import Graph, sorted_scores
-from propagon_spark.plans import blocks
+from propagon_spark.graph.core import Graph
+from propagon_spark.graph.pagerank import PageRankResult, logger
 
 
 def _spmv(pdiv: np.ndarray, bucket: list, nlocal: int) -> np.ndarray:
@@ -52,93 +58,73 @@ def _spmv(pdiv: np.ndarray, bucket: list, nlocal: int) -> np.ndarray:
 
 def pagerank_csr(
     g: Graph,
-    edges: DataFrame,
     damping: float,
     sink: str,
-    seeds: dict[str, float] | None,
+    seeds: tuple[np.ndarray, list[float]] | None,
     tol: float | None,
-    iterations: int,
-    max_iterations: int,
+    total_iters: int,
     checkpoint_interval: int,
     ckpt,
     start_iter: int,
-    init_ranks: pd.DataFrame | None,
+    state: DataFrame | None,
     metrics: list[dict],
-    logger,
-    prog=None,
-):
-    """Run the CSR power iteration. ``edges`` is the canonicalized
-    (dedup'd, sink-rewritten), persisted id-typed edge frame. Returns
-    (rank_vector, iterations, converged, metrics, timings)."""
+    prog,
+) -> PageRankResult:
+    """Run the CSR power iteration on the Graph's ``"out"`` store
+    (``"out_reverse"`` for ``sink="reverse"``), from ``state`` (a
+    resumed ``(id, rank)`` checkpoint) or the teleport vector. ``seeds``
+    is ``(ids, normalized weights)``, None for a uniform teleport;
+    pagerank.py has validated every argument."""
     spark = g.spark
     n = g.num_vertices
     t_setup = time.monotonic()
-
-    # the block write is the first job over the persisted canonical
-    # frame, so it materializes it. Blocks hold ONLY (src, dst): the
-    # inverse out-degree is folded into the broadcast on the DRIVER
-    # (p·inv_out is n multiplies), so the build needs no join and every
+    # Blocks hold ONLY (src, dst): the inverse out-degree is folded into
+    # the broadcast on the DRIVER (p·inv_out is n multiplies), so every
     # iteration streams a third of the bytes.
-    with blocks.build(edges, n) as store:
-        t_blocks = time.monotonic()
+    store = g.store("out_reverse" if sink == "reverse" else "out")
+    t_blocks = time.monotonic()
+    bcast0, gather0 = store.bcast_s, store.gather_s
 
-        # driver-held vertex state --------------------------------------
-        if seeds is None:
-            v = np.full(n, 1.0 / n)
-        else:
-            total = float(sum(seeds.values()))
-            v = np.zeros(n)
-            seed_rows = (
-                spark.createDataFrame(
-                    [(str(k),) for k in seeds], "name string"
-                )
-                .join(g.vocab, "name")
-                .select("name", "id")
-                .collect()
-            )
-            id_of = {r["name"]: r["id"] for r in seed_rows}
-            for name, w in seeds.items():
-                v[id_of[str(name)]] = float(w) / total
+    # driver-held vertex state ------------------------------------------
+    if seeds is None:
+        v = np.full(n, 1.0 / n)
+    else:
+        v = np.zeros(n)
+        v[seeds[0]] = seeds[1]
 
-        # out-degree vector (one small collect): inv_out folds the
-        # division into the broadcast, and zero-outdegree rows ARE the
-        # sinks — no separate anti-join pass
-        odf = edges.groupBy("src").agg(F.count("*").alias("outdeg")).toPandas()
-        outdeg_vec = np.zeros(n)
-        outdeg_vec[odf["src"].to_numpy()] = odf["outdeg"].to_numpy()
-        inv_out = np.divide(
-            1.0, outdeg_vec, out=np.zeros(n), where=outdeg_vec > 0
-        )
-        sink_ids = np.nonzero(outdeg_vec == 0)[0].astype("int64")
+    # zero-outdegree rows ARE the sinks — no separate anti-join pass
+    outdeg_vec = store.src_degree.astype(np.float64)
+    inv_out = np.divide(1.0, outdeg_vec, out=np.zeros(n), where=outdeg_vec > 0)
+    sink_ids = np.nonzero(outdeg_vec == 0)[0].astype("int64")
 
-        if init_ranks is not None:
-            p = np.zeros(n)
-            p[init_ranks["id"].to_numpy()] = init_ranks["rank"].to_numpy()
-        else:
-            p = v.copy()
+    if state is not None:
+        init = state.select("id", "rank").toPandas()
+        p = np.zeros(n)
+        p[init["id"].to_numpy()] = init["rank"].to_numpy()
+    else:
+        p = v.copy()
 
-        total_iters = iterations if tol is None else max_iterations
-        converged = False
-        it = start_iter
-        # per-phase wall time: where an N→4N scaling run spends its
-        # seconds (setup = canonicalize+block write, bcast/gather =
-        # per-iteration distributed work, update = serial driver numpy)
-        timings = {
-            "kernel": "csr",
-            "nblocks": store.nblocks,
-            "edge_rows": store.edge_rows,
-            "setup_s": time.monotonic() - t_setup,
-            "setup_dedup_s": store.count_s,
-            "setup_blocks_s": store.build_s - store.count_s,
-            "setup_state_s": time.monotonic() - t_blocks,
-            "update_s": 0.0,
-        }
+    converged = False
+    it = start_iter
+    # per-phase wall time: setup = the store build (0 once the Graph
+    # holds it) + driver state, bcast/gather = per-iteration distributed
+    # work, update = serial driver numpy
+    timings = {
+        "kernel": "csr",
+        "nblocks": store.nblocks,
+        "edge_rows": store.edge_rows,
+        "setup_s": time.monotonic() - t_setup,
+        "setup_blocks_s": t_blocks - t_setup,
+        "setup_state_s": time.monotonic() - t_blocks,
+        "update_s": 0.0,
+    }
 
+    prog.start("pagerank", total=total_iters)
+    try:
         while it < total_iters:
             t0 = time.monotonic()
-            # p·inv_out on the driver (n multiplies) — elementwise
-            # identical to the join kernel's rank·inv, keeping csr/join
-            # parity exact
+            # p·inv_out on the driver (n multiplies) — elementwise identical
+            # to the join kernel's rank·inv, keeping csr/join parity exact
             gathered = store.gather(_spmv, p * inv_out, np.float64)
             t_g = time.monotonic()
 
@@ -168,8 +154,7 @@ def pagerank_csr(
                     "kernel": "csr",
                 }
             )
-            if prog is not None:
-                prog.iteration("pagerank", metrics[-1])
+            prog.iteration("pagerank", metrics[-1])
             logger.info(
                 "pagerank[csr] iter=%d l1=%.3e mass=%.6f %.2fs",
                 it, l1, mass, metrics[-1]["seconds"],
@@ -181,10 +166,19 @@ def pagerank_csr(
             if tol is not None and l1 < tol:
                 converged = True
                 break
-
-        timings["bcast_s"] = store.bcast_s
-        timings["gather_s"] = store.gather_s
-    return p, it, converged, metrics, timings
+    finally:
+        prog.finish()
+    timings["bcast_s"] = store.bcast_s - bcast0
+    timings["gather_s"] = store.gather_s - gather0
+    return PageRankResult(
+        scores=g.emit("score", p, [("score", "descending"), ("name", "ascending")])
+        .select("name", "score"),
+        ranks=_ranks_df(spark, p),
+        iterations=it,
+        converged=converged if tol is not None else True,
+        metrics=metrics,
+        timings=timings,
+    )
 
 
 def _ranks_df(spark, p: np.ndarray) -> DataFrame:
@@ -192,11 +186,3 @@ def _ranks_df(spark, p: np.ndarray) -> DataFrame:
         pd.DataFrame({"id": np.arange(len(p), dtype="int64"), "rank": p})
     )
 
-
-def scores_from_vector(g: Graph, p: np.ndarray) -> DataFrame:
-    ranks = _ranks_df(g.spark, p)
-    return sorted_scores(
-        g.with_names(ranks.select("id", F.col("rank").alias("score"))).select(
-            "name", "score"
-        )
-    ), ranks

@@ -12,21 +12,17 @@ lower-(degree, id) endpoint to the higher one — every vertex's oriented
 out-degree is O(sqrt(m)) — then join oriented edges on their source to
 enumerate wedges and semi-join the wedge closures against the oriented
 edge set. Skew-bounded by construction; both joins shuffle on vertex keys.
+The oriented edge frame is cached once per Graph (``Graph.cached``) and
+released by ``Graph.unpersist()``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import canonical_undirected
 from propagon_spark.graph.core import Graph
-
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
 
 
 def _oriented(g: Graph) -> DataFrame:
@@ -53,8 +49,7 @@ def _oriented(g: Graph) -> DataFrame:
 
 def triangles(g: Graph) -> DataFrame:
     """Return one row per triangle: ``(x, y, z)`` vertex ids with x<y<z."""
-    o = _oriented(g).persist(_STORAGE)
-    o.count()
+    o = g.cached("triangles.oriented", lambda: _oriented(g))
     # wedges centered at the low-order vertex: a→b, a→c with b != c
     w = (
         o.alias("e1")

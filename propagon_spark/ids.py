@@ -22,7 +22,9 @@ every driver-held structure in the engine shares
 - **At or below the bound** the distinct names are collected once as an
   Arrow table, sorted on the driver with ``pyarrow.compute.sort_indices``
   and numbered ``0..n-1``; the vocab frame is created from that Arrow
-  table. Arrow compares strings as unsigned bytes of their UTF-8 encoding,
+  table, and the sorted name column is returned too, for the Graph to
+  hold on the driver (its results below the bound are named and sorted
+  there). Arrow compares strings as unsigned bytes of their UTF-8 encoding,
   which is exactly Spark's ``UTF8_BINARY`` string order (and Python's
   ``sorted(key=str.encode)``), so the ids equal the distributed path's.
   Arrow rather than a numpy object array: a 2M-name sort peaked at about
@@ -64,8 +66,9 @@ def build_vocab(names: DataFrame, num_buckets: int | None = None) -> DataFrame:
 
 def _build_vocab(
     names: DataFrame, num_buckets: int | None = None
-) -> tuple[DataFrame, int]:
-    """:func:`build_vocab` that also returns the vocab's row count."""
+) -> tuple[DataFrame, int, pa.ChunkedArray | None]:
+    """:func:`build_vocab` that also returns the vocab's row count and,
+    at or below the driver-state bound, the names in id order."""
     spark = names.sparkSession
     if num_buckets is None:
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -75,17 +78,13 @@ def _build_vocab(
     n = d.count()
     if n == 0:
         d.unpersist()
-        return spark.createDataFrame([], "name string, id long"), 0
+        return spark.createDataFrame([], "name string, id long"), 0, None
     if n <= blocks.DRIVER_STATE_MAX_VERTICES:
         col = d.toArrow().column("name")
         d.unpersist()
-        table = pa.table(
-            {
-                "name": col.take(pc.sort_indices(col)),
-                "id": np.arange(n, dtype=np.int64),
-            }
-        )
-        return spark.createDataFrame(table, "name string, id long"), n
+        col = col.take(pc.sort_indices(col))
+        table = pa.table({"name": col, "id": np.arange(n, dtype=np.int64)})
+        return spark.createDataFrame(table, "name string, id long"), n, col
 
     # driver-fixed split points from a seeded sample (deterministic for
     # the rest of this build; ids don't depend on the choice)
@@ -142,7 +141,7 @@ def _build_vocab(
     # release the distinct-names cache
     out = truncate_lineage(out)
     d.unpersist()
-    return out, n
+    return out, n, None
 
 
 def vocab_size(vocab: DataFrame) -> int:

@@ -1,6 +1,11 @@
 """Distributed edge blocks + driver-held vertex state: the store behind
-CSR PageRank (graph/pagerank_csr.py) and k-core's H-index rounds
-(graph/kcore.py).
+CSR PageRank (graph/pagerank_csr.py), k-core's H-index rounds
+(graph/kcore.py) and label propagation (graph/lpa.py).
+
+A store is one canonical form of a Graph's edges. The Graph owns it
+(``Graph.store(form)``, graph/core.py): it is built on first use, at most
+once per Graph, and its block directory lives under the checkpoint dir
+until ``Graph.unpersist()`` closes it.
 
 An id-typed ``(src, dst)`` edge frame is bucketed once by
 ``dst % nblocks`` into per-task shard files written **by the Python
@@ -262,8 +267,10 @@ def _shard_writer_factory(blocks_dir: str, nblocks: int, np_dtype, ext: str):
     Parquet encode, no commit protocol. Files are written under
     temp names and atomically renamed at task end, so task retries are
     safe (a retry overwrites with identical content). Yields one
-    ``(bucket, path-prefix, rows)`` row per non-empty bucket, ``rows``
-    being the shard's edge count.
+    ``(bucket, path-prefix)`` row per non-empty bucket and one
+    ``bucket = -1`` row whose ``ids``/``counts`` buffers are the task's
+    sparse per-src edge counts (the store's degree vector, with no job
+    of its own).
     """
 
     def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -275,9 +282,11 @@ def _shard_writer_factory(blocks_dir: str, nblocks: int, np_dtype, ext: str):
         os.makedirs(blocks_dir, exist_ok=True)
         handles: dict[int, tuple] = {}
         edge = np.arange(nblocks + 1)
+        degs = []
         for pdf in batches:
             src = pdf["src"].to_numpy()
             dst = pdf["dst"].to_numpy()
+            degs.append(np.unique(src, return_counts=True))
             b = dst % nblocks
             order = np.argsort(b, kind="stable")
             bs = b[order]
@@ -303,13 +312,19 @@ def _shard_writer_factory(blocks_dir: str, nblocks: int, np_dtype, ext: str):
                 sdstl[lo:hi].tofile(h[2])
         rows = []
         for bucket, (prefix, fsrc, fdstl) in handles.items():
-            rows.append((bucket, prefix, fsrc.tell() // np.dtype(np_dtype).itemsize))
+            rows.append((bucket, prefix, None, None))
             fsrc.close()
             fdstl.close()
             for s in _SIDECARS:
                 os.replace(f"{prefix}{s}.{ext}{tmp_sfx}", f"{prefix}{s}.{ext}")
+        if degs:
+            ids, inv = np.unique(np.concatenate([u for u, _ in degs]),
+                                 return_inverse=True)
+            counts = np.bincount(inv, np.concatenate([c for _, c in degs]))
+            rows.append((-1, None, ids.astype(np_dtype).tobytes(),
+                         counts.astype(np.int64).tobytes()))
         if rows:
-            yield pd.DataFrame(rows, columns=["bucket", "path", "rows"])
+            yield pd.DataFrame(rows, columns=["bucket", "path", "ids", "counts"])
 
     return write
 
@@ -361,24 +376,22 @@ def _bucket_task(kernel: Kernel, state_bc, token: str, nblocks: int,
 
 class EdgeBlocks:
     """A built edge-block store: the bucket control RDD plus the block
-    directory it names. Use as a context manager (or call :meth:`close`)
-    so the blocks are deleted however the caller's loop ends.
+    directory it names, deleted by :meth:`unpersist`.
 
     Attributes:
         n: vertex count (length of every gathered vector).
         nblocks: bucket count (the layout; see :func:`build`).
         dtype: the id dtype of the shard columns (int32 below 2³¹
             vertices, else int64).
-        edge_rows: edges written.
-        count_s: time the portable path spent counting ``edges``
-            (0 on the worker-side shard path, which counts as it writes).
-        build_s: wall time of the whole build.
+        src_degree: int64 n-vector, each vertex's edge count as ``src``
+            (taken from the build job, not a job of its own).
+        edge_rows: edges written (``src_degree.sum()``).
         bcast_s / gather_s: accumulated per-round broadcast and
             gather-plus-assembly time.
     """
 
     def __init__(self, spark, blocks_dir, n, nblocks, ext, by_bucket,
-                 edge_rows, count_s, build_s):
+                 src_degree):
         self._sc = spark.sparkContext
         self._spark = spark
         self._dir = blocks_dir
@@ -387,9 +400,8 @@ class EdgeBlocks:
         self.n = n
         self.nblocks = nblocks
         self.dtype = np.int32 if ext == "i32" else np.int64
-        self.edge_rows = edge_rows
-        self.count_s = count_s
-        self.build_s = build_s
+        self.src_degree = src_degree
+        self.edge_rows = int(src_degree.sum())
         self.bcast_s = 0.0
         self.gather_s = 0.0
         self._nlocal = (n + nblocks - 1) // nblocks
@@ -431,14 +443,8 @@ class EdgeBlocks:
         self.gather_s += time.monotonic() - t_b
         return out
 
-    def close(self) -> None:
+    def unpersist(self) -> None:
         _hadoop_rm(self._spark, self._dir)
-
-    def __enter__(self) -> "EdgeBlocks":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
 
 
 def build(edges: DataFrame, n: int) -> EdgeBlocks:
@@ -448,11 +454,10 @@ def build(edges: DataFrame, n: int) -> EdgeBlocks:
     Blocks hold ONLY (src, dst) — int32 below 2^31 vertices, 8
     bytes/edge; anything per-vertex (PageRank's inverse out-degree,
     k-core's H values) rides the broadcast state instead. ``edges`` is
-    read once on the worker-side shard path and twice (count + write) on
-    the portable path: persist it if it is expensive to recompute."""
+    read once on the worker-side shard path; the portable path persists
+    it for its two reads (per-src counts + write)."""
     spark = edges.sparkSession
     sc = spark.sparkContext
-    t0 = time.monotonic()
     # a path all executors can read — on a cluster that's HDFS/S3 or a
     # shared mount, never the driver's /tmp
     ckdir = sc.getCheckpointDir()
@@ -471,20 +476,20 @@ def build(edges: DataFrame, n: int) -> EdgeBlocks:
         16, sc.defaultParallelism
     )
     ext = "i32" if n <= 2**31 - 1 else "i64"
+    src_degree = np.zeros(n, np.int64)
     try:
-        by_bucket, edge_rows, count_s = _write_blocks(
-            spark, edges, blocks_dir, nblocks, ext
+        by_bucket = _write_blocks(
+            spark, edges, blocks_dir, nblocks, ext, src_degree
         )
     except BaseException:
         _hadoop_rm(spark, blocks_dir)
         raise
-    return EdgeBlocks(spark, blocks_dir, n, nblocks, ext, by_bucket,
-                      edge_rows, count_s, time.monotonic() - t0)
+    return EdgeBlocks(spark, blocks_dir, n, nblocks, ext, by_bucket, src_degree)
 
 
-def _write_blocks(spark, edges, blocks_dir, nblocks, ext):
-    """Write the blocks; return ``({bucket: [paths]}, edge_rows,
-    count_s)``."""
+def _write_blocks(spark, edges, blocks_dir, nblocks, ext, src_degree):
+    """Write the blocks and add each src's edge count into
+    ``src_degree``; return ``{bucket: [paths]}``."""
     by_bucket: dict[int, list[str]] = {}
     local_blocks_dir = _as_local_path(blocks_dir)
     if local_blocks_dir is not None and not _shared_mount_probe(
@@ -513,37 +518,43 @@ def _write_blocks(spark, edges, blocks_dir, nblocks, ext):
                     _shard_writer_factory(
                         local_blocks_dir, nblocks, np_dtype, ext
                     ),
-                    schema="bucket int, path string, rows long",
+                    schema="bucket int, path string, ids binary, counts binary",
                 )
                 .collect()
             )
         finally:
             spark.conf.set(conf_key, old_batch)
-        # the shards' row counts replace a count() of the frame
-        edge_rows = 0
         for r in rows:
-            by_bucket.setdefault(int(r["bucket"]), []).append(r["path"])
-            edge_rows += r["rows"]
-        return by_bucket, edge_rows, 0.0
+            if r["bucket"] < 0:
+                # one task's srcs are distinct: an indexed add suffices
+                src_degree[np.frombuffer(r["ids"], np_dtype)] += np.frombuffer(
+                    r["counts"], np.int64
+                )
+            else:
+                by_bucket.setdefault(int(r["bucket"]), []).append(r["path"])
+        return by_bucket
 
     # PORTABLE PATH (hdfs://, s3://, …): JVM-only dynamic-partitioned
     # Parquet write straight off the frame's partitions; gather tasks
     # decode their bucket's files with pyarrow's URI-aware reader on
     # first touch.
-    t0 = time.monotonic()
-    edge_rows = edges.count()
-    count_s = time.monotonic() - t0
-    id_type = "int" if ext == "i32" else "long"
-    (
-        edges.select(
-            F.col("src").cast(id_type),
-            F.col("dst").cast(id_type),
-            F.pmod(F.col("dst"), F.lit(nblocks)).cast("int").alias("bucket"),
+    edges = edges.persist()
+    try:
+        deg = edges.groupBy("src").agg(F.count("*").alias("c")).toArrow()
+        src_degree[deg.column("src").to_numpy()] = deg.column("c").to_numpy()
+        id_type = "int" if ext == "i32" else "long"
+        (
+            edges.select(
+                F.col("src").cast(id_type),
+                F.col("dst").cast(id_type),
+                F.pmod(F.col("dst"), F.lit(nblocks)).cast("int").alias("bucket"),
+            )
+            .write.partitionBy("bucket")
+            .mode("overwrite")
+            .parquet(blocks_dir)
         )
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(blocks_dir)
-    )
+    finally:
+        edges.unpersist()
     # file listing through Spark, not os.listdir — works on any Hadoop FS
     try:
         block_files = spark.read.parquet(blocks_dir).inputFiles()
@@ -553,7 +564,7 @@ def _write_blocks(spark, edges, blocks_dir, nblocks, ext):
         m = re.search(r"bucket=(\d+)", f)
         if m:
             by_bucket.setdefault(int(m.group(1)), []).append(f)
-    return by_bucket, edge_rows, count_s
+    return by_bucket
 
 
 def _hadoop_rm(spark, path: str) -> None:
@@ -563,5 +574,5 @@ def _hadoop_rm(spark, path: str) -> None:
         jpath = jvm.org.apache.hadoop.fs.Path(path)
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
         fs.delete(jpath, True)
-    except Exception:
-        shutil.rmtree(path, ignore_errors=True)
+    except Exception:  # no JVM (the session is stopped)
+        shutil.rmtree(_as_local_path(path) or path, ignore_errors=True)

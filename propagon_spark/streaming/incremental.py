@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from propagon_spark.graph.core import Graph
+from propagon_spark.graph.core import Graph, sorted_scores
 
 
 def streaming_degree(
@@ -232,10 +232,11 @@ class StreamingPageRankRefit:
 
         # persist the period scores durably and re-read: the next period's
         # warm join must not drag this period's full lineage (or its
-        # now-superseded checkpoints) behind it
+        # now-superseded checkpoints) behind it. A Parquet scan keeps no
+        # row order across files, so the re-read is sorted again.
         out = os.path.join(self.scores_dir, f"p{batch_id}")
         res.scores.write.mode("overwrite").parquet(out)
-        self.scores = self.spark.read.parquet(out)
+        self.scores = sorted_scores(self.spark.read.parquet(out))
         self.periods.append(
             {
                 "period": int(batch_id),

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -29,6 +30,19 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def job_ids_of(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` launches, by job group."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job ids")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def make_edges(spark, rows, weights=False):

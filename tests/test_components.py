@@ -3,7 +3,7 @@ clients/python/tests/test_functions.py:7-24)."""
 
 import pytest
 
-from conftest import make_edges
+from conftest import job_ids_of, make_edges
 
 from propagon_spark.graph import Graph
 from propagon_spark.graph.components import (
@@ -87,21 +87,6 @@ def test_long_chain(spark):
     g.unpersist()
 
 
-def _jobs_of(spark, fn):
-    """Number of Spark jobs ``fn()`` launches, counted by job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = uuid.uuid4().hex
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_extract_components_jobs_independent_of_component_count(spark):
     # member lists come from one collect, not one query per component;
     # the per-component edge frames stay lazy
@@ -111,7 +96,7 @@ def test_extract_components_jobs_independent_of_component_count(spark):
             make_edges(spark, [(f"a{i}", f"b{i}") for i in range(k)])
         )
         comps = []
-        jobs[k] = _jobs_of(spark, lambda: comps.extend(extract_components(g)))
+        jobs[k] = len(job_ids_of(spark, lambda: comps.extend(extract_components(g))))
         assert [m for m, _ in comps] == [[f"a{i}", f"b{i}"] for i in range(k)]
         g.unpersist()
     assert jobs[2] == jobs[8]

@@ -96,10 +96,23 @@ def _block_dirs(spark):
     return {d for d in os.listdir(ck) if d.startswith("csr_blocks_")}
 
 
+def _src_degree(g, sym):
+    """Each vertex's edge count as ``src`` in ``sym``, by a Spark job."""
+    import numpy as np
+
+    deg = np.zeros(g.num_vertices, np.int64)
+    for r in sym.groupBy("src").count().collect():
+        deg[r["src"]] = r["count"]
+    return deg
+
+
 def test_blocks_path_leaves_nothing_behind(spark, monkeypatch):
-    # the store path persists nothing past the call (no per-round
-    # checkpointed state, the adjacency released once the shards exist)
-    # and deletes its block directory
+    # the Graph owns its stores: two k-core calls and an LPA call share
+    # ONE "undirected" build, and Graph.unpersist() deletes its block
+    # directory and leaves no new persistent RDD behind (the store path
+    # keeps no per-round state and no persisted adjacency)
+    from propagon_spark.graph.lpa import label_propagation
+
     builds = []
     build = blocks.build
 
@@ -109,26 +122,82 @@ def test_blocks_path_leaves_nothing_behind(spark, monkeypatch):
 
     monkeypatch.setattr(blocks, "build", counting_build)
     rows = clique(["p", "q", "r", "s"]) + [("s", "t"), ("t", "u"), ("u", "s")]
-    g = Graph.from_edges(make_edges(spark, rows))
     jsc = spark.sparkContext._jsc
-    persisted, dirs = jsc.getPersistentRDDs().size(), _block_dirs(spark)
-    c = {r["name"]: r["coreness"] for r in kcore(g).collect()}
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before, dirs = persisted(), _block_dirs(spark)
+    g = Graph.from_edges(make_edges(spark, rows))
+    c = [{r["name"]: r["coreness"] for r in kcore(g).collect()} for _ in range(2)]
+    label_propagation(g).collect()
     assert builds == [1]
-    assert jsc.getPersistentRDDs().size() == persisted
-    assert _block_dirs(spark) == dirs
+    assert len(_block_dirs(spark) - dirs) == 1  # held by the Graph
     g.unpersist()
-    assert c == {"p": 3, "q": 3, "r": 3, "s": 3, "t": 2, "u": 2}
+    assert persisted() - before == set()
+    assert _block_dirs(spark) == dirs
+    assert c[0] == c[1] == {"p": 3, "q": 3, "r": 3, "s": 3, "t": 2, "u": 2}
+
+
+def test_store_released_with_its_graph(spark):
+    # a Graph nobody unpersists still deletes its stores' blocks once it
+    # is garbage-collected: no kernel result reads a store
+    import gc
+
+    dirs = _block_dirs(spark)
+    g = Graph.from_edges(make_edges(spark, clique(["a", "b", "c"])))
+    assert {r["coreness"] for r in kcore(g).collect()} == {2}
+    edges = g.edges
+    assert len(_block_dirs(spark) - dirs) == 1
+    del g
+    gc.collect()
+    assert _block_dirs(spark) == dirs
+    edges.unpersist()
+
+
+def test_unpersist_drops_the_store(spark, monkeypatch):
+    # after Graph.unpersist() nothing holds the old store (its degree
+    # vector included); a rebuild is a new store, released exactly once
+    import gc
+    import weakref
+
+    released = []
+    unpersist = blocks.EdgeBlocks.unpersist
+
+    def counting_unpersist(self):
+        released.append(self._dir)
+        unpersist(self)
+
+    monkeypatch.setattr(blocks.EdgeBlocks, "unpersist", counting_unpersist)
+    dirs = _block_dirs(spark)
+    g = Graph.from_edges(make_edges(spark, clique(["a", "b", "c"])))
+    kcore(g).collect()
+    old = weakref.ref(g.store("undirected"))
+    g.unpersist()
+    gc.collect()
+    assert old() is None
+    kcore(g).collect()  # rebuilds from the edge frame's lineage
+    del g
+    gc.collect()
+    assert len(released) == len(set(released)) == 2
+    assert _block_dirs(spark) == dirs
 
 
 def test_portable_parquet_block_path(spark, monkeypatch):
     # k-core on the hdfs/s3 block branch (JVM Parquet blocks, forced by
-    # making every path look remote) equals the local shard path
-    g = Graph.from_edges(
-        make_edges(spark, sorted(_random_rows() | {("loop", "loop")}))
-    )
-    local = [tuple(r) for r in kcore(g).collect()]
+    # making every path look remote) equals the local shard path. A
+    # fresh Graph per branch: a Graph builds its store once. Both
+    # branches count each src's edges while they build.
+    from propagon_spark.canon import undirected_adjacency
+
+    rows = sorted(_random_rows() | {("loop", "loop")})
+    graphs = [Graph.from_edges(make_edges(spark, rows)) for _ in range(2)]
+    local = [tuple(r) for r in kcore(graphs[0]).collect()]
     monkeypatch.setattr(blocks, "_as_local_path", lambda p: None)
-    portable = [tuple(r) for r in kcore(g).collect()]
-    g.unpersist()
+    portable = [tuple(r) for r in kcore(graphs[1]).collect()]
+    for g in graphs:
+        assert (g.store("undirected").src_degree
+                == _src_degree(g, undirected_adjacency(g.edges))).all()
+        g.unpersist()
     assert local == portable
     assert dict((n, c) for n, _, c in local)["loop"] == 0

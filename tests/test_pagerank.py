@@ -6,7 +6,7 @@ import math
 
 import pytest
 
-from conftest import make_edges, scores_dict
+from conftest import job_ids_of, make_edges, scores_dict
 
 from propagon_spark.errors import InvalidParameterError
 from propagon_spark.graph import Graph
@@ -174,20 +174,60 @@ def test_gather_repart_equivalence(g4, monkeypatch):
         assert abs(base[k] - repart[k]) < 1e-12, k
 
 
-def test_portable_parquet_block_path(g4, monkeypatch):
+def test_portable_parquet_block_path(spark, monkeypatch):
     # the hdfs/s3 block-store branch (Parquet blocks, global-dst gather,
     # bucket == -1 rows) never triggers on a POSIX checkpoint dir — force
     # it by making every path look remote, and pin it to the local shard
-    # path bit-for-bit
+    # path bit-for-bit. A fresh Graph per branch: a Graph builds its
+    # store once.
+    import numpy as np
+
+    from propagon_spark.canon import dedup_edges
     from propagon_spark.plans import blocks
 
-    local_res = pagerank(g4, iterations=10, sink="uniform", impl="csr")
+    graphs = [Graph.from_edges(make_edges(spark, F1_EDGES)) for _ in range(2)]
+    local_res = pagerank(graphs[0], iterations=10, sink="uniform", impl="csr")
     local = scores_dict(local_res.scores)
     monkeypatch.setattr(blocks, "_as_local_path", lambda p: None)
-    portable_res = pagerank(g4, iterations=10, sink="uniform", impl="csr")
+    portable_res = pagerank(graphs[1], iterations=10, sink="uniform", impl="csr")
     portable = scores_dict(portable_res.scores)
     assert local == portable
-    # the shard writer's per-shard row counts sum to the dedup'd edges,
-    # the count the portable path takes with count()
+    # both branches count each src's edges while they build: the
+    # out-degrees, summing to the dedup'd edges
     assert local_res.timings["edge_rows"] == len(F1_EDGES)
     assert portable_res.timings["edge_rows"] == len(F1_EDGES)
+    for g in graphs:
+        want = np.zeros(g.num_vertices, np.int64)
+        for r in dedup_edges(g.edges).groupBy("src").count().collect():
+            want[r["src"]] = r["count"]
+        assert (g.store("out").src_degree == want).all()
+        g.unpersist()
+
+
+def test_seeded_csr_runs_no_lookup_job(spark):
+    # seed names resolve against the Graph's driver-held names: a seeded
+    # CSR fit runs the jobs an unseeded one does (its rounds), and an
+    # unknown seed fails with no Spark job at all
+    import re
+
+    g = Graph.from_edges(make_edges(spark, [("1", "2"), ("2", "3"), ("3", "1")]))
+    try:
+        kw = dict(damping=0.5, sink="none", iterations=5)
+        pagerank(g, impl="csr", **kw)  # builds the Graph's store
+        plain = len(job_ids_of(spark, lambda: pagerank(g, impl="csr", **kw)))
+        res = []
+        seeded = len(job_ids_of(spark, lambda: res.append(
+            pagerank(g, impl="csr", seeds={"1": 1.0}, **kw))))
+        assert seeded == plain == 5
+        join = scores_dict(pagerank(g, impl="join", seeds={"1": 1.0}, **kw).scores)
+        for k, v in scores_dict(res[0].scores).items():
+            assert abs(v - join[k]) < 1e-12, k
+        msg = re.escape("unknown seed name(s): ['nope']")
+        with pytest.raises(InvalidParameterError, match=msg):
+            job_ids_of(spark, lambda: pagerank(
+                g, impl="csr", seeds={"1": 1.0, "nope": 2.0}, **kw))
+        assert len(job_ids_of(spark, lambda: pytest.raises(
+            InvalidParameterError, pagerank, g, impl="csr",
+            seeds={"nope": 1.0}, **kw))) == 0
+    finally:
+        g.unpersist()

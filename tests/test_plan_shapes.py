@@ -20,6 +20,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import job_ids_of
+
 from propagon_spark.graph.components import connected_components
 from propagon_spark.graph.core import Graph
 from propagon_spark.graph.hits import hits
@@ -27,6 +29,7 @@ from propagon_spark.graph.katz import katz
 from propagon_spark.graph.kcore import kcore
 from propagon_spark.graph.leader_rank import leader_rank
 from propagon_spark.graph.lpa import label_propagation
+from propagon_spark.graph.pagerank import pagerank
 from propagon_spark.graph.random_walker import random_walker
 from propagon_spark.graph.rank_centrality import rank_centrality
 from propagon_spark.graph.tally import filter_min_count
@@ -183,27 +186,11 @@ def test_derive_edges_two_shuffles(spark):
         spark.conf.set(key, old)
 
 
-def _job_ids_of(spark, fn) -> list[int]:
-    """Ids of the Spark jobs ``fn()`` launches, by job group (as
-    ``test_components._jobs_of``)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = uuid.uuid4().hex
-    sc.setJobGroup(group, "job ids")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _stage_names_of(spark, fn) -> list[str]:
     """Names of the stages of every Spark job ``fn()`` launches."""
     st = spark.sparkContext.statusTracker()
     names = []
-    for job in _job_ids_of(spark, fn):
+    for job in job_ids_of(spark, fn):
         for stage in st.getJobInfo(job).stageIds:
             info = st.getStageInfo(stage)
             if info is not None:
@@ -251,11 +238,13 @@ def _loop_inputs(spark):
     return g, pairwise
 
 
-def _kcore_dataflow(g):
+def _dataflow(kernel, g, **kw):
+    """``kernel`` on its dataflow rounds: the edge-block store's vertex
+    bound forced to 0."""
     from unittest import mock
 
     with mock.patch.object(blocks, "DRIVER_STATE_MAX_VERTICES", 0):
-        return kcore(g)
+        return kernel(g, **kw)
 
 
 #: each migrated kernel as ``(graph, pairwise, turns) -> lazy result``
@@ -267,10 +256,14 @@ _LOOPS = {
         pw, iterations=t, tolerance=0.0),
     "random_walker": lambda g, pw, t: random_walker(
         pw, iterations=t, tolerance=0.0),
-    "lpa": lambda g, pw, t: label_propagation(g, max_rounds=t),
+    "lpa": lambda g, pw, t: _dataflow(label_propagation, g, max_rounds=t),
     "components": lambda g, pw, t: connected_components(g),
-    "kcore_dataflow": lambda g, pw, t: _kcore_dataflow(g),
+    "kcore_dataflow": lambda g, pw, t: _dataflow(kcore, g),
     "filter_min_count": lambda g, pw, t: filter_min_count(pw, 9),
+    # not a fixpoint loop: the join PageRank's hand loop, which releases
+    # each superseded ranks leaf and each turn's gather / chain leaf
+    "pagerank_join": lambda g, pw, t: pagerank(
+        g, impl="join", sink="uniform", iterations=t).scores,
 }
 
 #: jobs per turn: 1 for the single-plan walks; hits keeps its two
@@ -288,7 +281,7 @@ def test_fixpoint_runs_one_materializing_job_per_turn(spark, kernel):
     run = _LOOPS[kernel]
     g, pw = _loop_inputs(spark)
     try:
-        jobs = {t: len(_job_ids_of(spark, lambda t=t: run(g, pw, t).collect()))
+        jobs = {t: len(job_ids_of(spark, lambda t=t: run(g, pw, t).collect()))
                 for t in (3, 6)}
     finally:
         g.unpersist()

@@ -99,3 +99,6 @@ def test_streaming_refit_direct_replay(spark, tmp_path):
     refit.process_batch(spark.createDataFrame(P2, SCHEMA), 2)
     assert [p["period"] for p in refit.periods] == [0, 2]
     assert set(scores_dict(refit.scores)) == {"a", "b", "c", "d"}
+    # the period scores keep the fit's order (score desc, name asc)
+    rows = [(-r["score"], r["name"]) for r in refit.scores.collect()]
+    assert rows == sorted(rows)

@@ -54,3 +54,29 @@ def test_triangle_free(spark):
     g = Graph.from_edges(make_edges(spark, [("a", "b"), ("b", "c"), ("c", "d")]))
     assert triangle_total(g) == 0
     g.unpersist()
+
+
+def test_oriented_cache_owned_by_graph(spark, monkeypatch):
+    # the oriented edge frame is built once per Graph and released by
+    # Graph.unpersist(): no persisted RDD outlives the Graph
+    from propagon_spark.graph import triangles
+
+    builds = []
+    oriented = triangles._oriented
+
+    def counting(g):
+        builds.append(1)
+        return oriented(g)
+
+    monkeypatch.setattr(triangles, "_oriented", counting)
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    g = Graph.from_edges(make_edges(spark, clique(["a", "b", "c", "d"])))
+    assert [triangle_total(g) for _ in range(2)] == [4, 4]
+    assert builds == [1]
+    g.unpersist()
+    assert persisted() - before == set()
