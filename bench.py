@@ -23,6 +23,7 @@ cached read.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import sys
@@ -150,10 +151,22 @@ def main() -> None:
     edges, g = timed("graph_build", build, reps=1)
     n_edges = g.num_edge_rows
 
+    def fresh(fn):
+        """``fn`` on a Graph that shares ``g``'s cached edges but none of
+        its stores or derived frames, released after the call: a Graph
+        builds each of them once, so every repeat pays its own build."""
+        def run():
+            h = dataclasses.replace(g, _owned={})
+            try:
+                return fn(h)
+            finally:
+                h.unpersist()
+        return run
+
     # ---- headline: pagerank to 1e-6 -----------------------------------
     res = timed(
         "pagerank_1e6",
-        lambda: _run_pagerank(pagerank, g),
+        fresh(lambda h: _run_pagerank(pagerank, h)),
     )
     pr_secs = queries["pagerank_1e6"]
     # dedup'd directed edge count actually processed per iteration
@@ -162,8 +175,8 @@ def main() -> None:
 
     timed("degree_in", lambda: degree(g, "in").count())
     timed("connected_components", lambda: connected_components(g).count())
-    timed("lpa_5rounds", lambda: label_propagation(g, max_rounds=5).count())
-    timed("triangle_total", lambda: triangle_total(g))
+    timed("lpa_5rounds", fresh(lambda h: label_propagation(h, max_rounds=5).count()))
+    timed("triangle_total", fresh(triangle_total))
 
     # ---- documents / embeddings ---------------------------------------
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -13,7 +13,9 @@ Scale notes:
   partitioning instead of re-shuffling per iteration;
 - vocab joins are broadcast when small, shuffle-hash otherwise (Catalyst /
   AQE decide from stats);
-- nothing here collects edges to the driver.
+- edges reach the driver only as a small Graph's stores: at or below
+  ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` edge rows a store is one
+  Arrow collect of its canonical form, held in driver memory.
 
 Below the driver-state bound (``plans.blocks.DRIVER_STATE_MAX_VERTICES``)
 a Graph also holds its ``names`` on the driver, one Arrow column in id
@@ -24,7 +26,8 @@ the names stay in the vocab frame and a forced CSR PageRank emits
 through a vocab join + ``orderBy``. A Graph owns one edge-block store
 per canonical form a kernel asks for (:meth:`Graph.store`:
 ``"undirected"`` for k-core and LPA, ``"out"`` / ``"out_reverse"`` for
-CSR PageRank), built on first use, at most once per Graph. Stores and
+CSR PageRank), built on first use, at most once per Graph, on the
+driver or in worker shards (see above). Stores and
 derived frames (:meth:`Graph.cached`) live until :meth:`Graph.unpersist`;
 a Graph that is garbage-collected first still deletes its stores' files.
 """
@@ -232,7 +235,8 @@ class Graph:
         """The edge-block store of canonical ``form`` (``"undirected"``,
         ``"out"`` or ``"out_reverse"``), built on first use and kept
         until :meth:`unpersist`."""
-        return self._own(form, lambda: blocks.build(_FORMS[form](self.edges), self.num_vertices))
+        return self._own(form, lambda: blocks.build(
+            _FORMS[form](self.edges), self.num_vertices, self.num_edge_rows))
 
     def cached(self, key: str, frame: Callable[[], DataFrame]) -> DataFrame:
         """``frame()`` persisted and materialized on first use, and kept

@@ -17,15 +17,19 @@ block store's bound (``plans.blocks.DRIVER_STATE_MAX_VERTICES``, the one
 CSR PageRank uses):
 
 - **Edge-block store** (n ≤ the bound): the Graph's ``"undirected"``
-  store (``Graph.store``), the adjacency as dst-bucketed worker shards.
-  The Graph builds it on the first k-core or LPA call and keeps it until
-  ``Graph.unpersist()``, so a later call starts at the rounds. ``h`` is
-  a dense driver vector (int32 below 2³¹ vertices); h₀ is the store's
-  ``src_degree``, counted by the build job. A round is ONE Python-worker
-  RDD job — broadcast ``h``, a segmented H-index per bucket over its
-  ``(src, dst_local)`` columns (:func:`_hindex`), the buckets' buffers
-  assembled on the driver — with no Catalyst planning, checkpoint or
-  shuffle. Exact array equality ``h_next == h`` on the driver stops the
+  store (``Graph.store``). The Graph builds it on the first k-core or
+  LPA call and keeps it until ``Graph.unpersist()``, so a later call
+  starts at the rounds. ``h`` is a dense driver vector (int32 below 2³¹
+  vertices); h₀ is the store's ``src_degree``, counted at the build. A
+  round is a segmented H-index over ``(src, dst_local)`` columns
+  (:func:`_hindex`), with no Catalyst planning, checkpoint or shuffle.
+  Where it runs is the store's placement: for a Graph of at most
+  ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` edge rows the adjacency is
+  held on the driver as one bucket and a round is a call in the driver
+  process, with no Spark job; above that it is dst-bucketed worker
+  shards and a round is ONE Python-worker RDD job (broadcast ``h``, one
+  kernel call per bucket, the buckets' buffers assembled on the
+  driver). Exact array equality ``h_next == h`` on the driver stops the
   loop. Isolated vertices keep degree 0. The result is named and sorted
   on the driver (``Graph.emit``): a ``LocalRelation``, no vocab join.
 - **Dataflow** (n > the bound, :func:`_kcore_hindex`): state ``h`` only

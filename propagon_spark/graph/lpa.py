@@ -17,10 +17,13 @@ Two executions, split at the edge-block store's bound
 
 - **Edge-block store** (n ≤ the bound): the Graph's ``"undirected"``
   store, shared with k-core and kept until ``Graph.unpersist()``. A
-  round is ONE Python-worker job over the driver's ``label`` vector: a
-  segmented mode per bucket (:func:`_mode`); vertices whose
-  ``src_degree`` is 0 keep their label; exact array equality stops the
-  loop. The result is a driver-sorted ``LocalRelation`` (``Graph.emit``).
+  round is a segmented mode (:func:`_mode`) over the driver's ``label``
+  vector: a call in the driver process for a Graph of at most
+  ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` edge rows (the store is
+  held on the driver, no Spark job), ONE Python-worker job over the
+  store's worker shards above that. Vertices whose ``src_degree`` is 0
+  keep their label; exact array equality stops the loop. The result is
+  a driver-sorted ``LocalRelation`` (``Graph.emit``).
 - **Dataflow** (n > the bound): per round one scatter join (labels onto
   symmetric edges), ``groupBy(dst, label).count()`` for neighborhood
   histograms, then a ``max_by``-style struct-max to pick (count desc,

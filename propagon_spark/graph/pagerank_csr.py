@@ -2,17 +2,21 @@
 
 Runs the power iteration on the shared edge-block store
 (:mod:`propagon_spark.plans.blocks`): the Graph's ``"out"`` store (or
-``"out_reverse"`` for ``sink="reverse"``), the canonical (src, dst) pairs
-bucketed by ``dst % nblocks`` into worker-written shard files, built on
-the first CSR fit of a Graph and kept until ``Graph.unpersist()``. Its
-``src_degree``, counted by the build job, is the out-degree vector. The
-rank vector stays on the driver, and each iteration is one store round —
-broadcast ``p·inv_out``, a vectorized ``np.bincount`` per bucket over its
-mmapped shard columns (:func:`_spmv`), and the buckets' dense float64
-buffers assembled into the gathered vector. No join and no shuffle
-anywhere in the fit; the block layout, caching, cluster-safety (shared
-mount probe, portable Parquet path) and per-round costs are documented
-in the store module.
+``"out_reverse"`` for ``sink="reverse"``), the canonical (src, dst)
+pairs, built on the first CSR fit of a Graph and kept until
+``Graph.unpersist()``. Its ``src_degree``, counted at the build, is the
+out-degree vector. The rank vector stays on the driver, and each
+iteration is one store round of ``A^T·(p·inv_out)``, a vectorized
+``np.bincount`` (:func:`_spmv`). For a Graph of at most
+``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` edge rows the store is held
+on the driver and a round is one call in the driver process, with no
+Spark job. Above that the pairs are bucketed by ``dst % nblocks`` into
+worker-written shard files, and a round broadcasts ``p·inv_out``, runs
+the kernel per bucket over its mmapped shard columns and assembles the
+buckets' dense float64 buffers into the gathered vector. No join and no
+shuffle anywhere in the fit; the placements, block layout, caching,
+cluster-safety (shared mount probe, portable Parquet path) and per-round
+costs are documented in the store module.
 
 This is the right physical strategy while the vertex state fits the
 driver/executor memory (8 bytes/vertex: ~80 MB at 10^7). Beyond
@@ -107,8 +111,8 @@ def pagerank_csr(
     converged = False
     it = start_iter
     # per-phase wall time: setup = the store build (0 once the Graph
-    # holds it) + driver state, bcast/gather = per-iteration distributed
-    # work, update = serial driver numpy
+    # holds it) + driver state, bcast/gather = per-iteration store
+    # rounds (bcast 0 on a driver-held store), update = serial driver numpy
     timings = {
         "kernel": "csr",
         "nblocks": store.nblocks,

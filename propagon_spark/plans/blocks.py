@@ -1,13 +1,54 @@
-"""Distributed edge blocks + driver-held vertex state: the store behind
-CSR PageRank (graph/pagerank_csr.py), k-core's H-index rounds
-(graph/kcore.py) and label propagation (graph/lpa.py).
+"""Edge blocks + driver-held vertex state: the store behind CSR PageRank
+(graph/pagerank_csr.py), k-core's H-index rounds (graph/kcore.py) and
+label propagation (graph/lpa.py).
 
 A store is one canonical form of a Graph's edges. The Graph owns it
 (``Graph.store(form)``, graph/core.py): it is built on first use, at most
-once per Graph, and its block directory lives under the checkpoint dir
-until ``Graph.unpersist()`` closes it.
+once per Graph, and kept until ``Graph.unpersist()`` closes it. A round
+(``EdgeBlocks.gather(kernel, state, dtype)``) runs one per-bucket numpy
+kernel over ``(src, dst_local)`` columns and returns the n-vector.
 
-An id-typed ``(src, dst)`` edge frame is bucketed once by
+Placement. :func:`build` decides it once per store, from the Graph's
+``num_edge_rows`` against :data:`DRIVER_STORE_MAX_EDGE_ROWS`:
+
+- **Driver** (at or below the bound, :class:`DriverBlocks`): the form is
+  collected once with ``toArrow()`` and held as ONE bucket
+  (``nblocks = 1``, ``dst_local = dst``) in the store's id dtype; its
+  ``src_degree`` is an ``np.bincount``. A round calls the kernel in the
+  driver process: no broadcast, no Spark job, no shard file, no Python
+  worker. Driver bytes at the bound: a form has at most 2·10⁵ rows, held
+  as 8 B/edge of int32 columns (1.6 MB) plus the 8 B/vertex degree
+  vector. The collect's Arrow batches (21 of them at 2·10⁵ rows) are
+  another 8 B/edge while they are copied into the contiguous columns:
+  a 16 B/edge (3.2 MB) peak.
+- **Workers** (above the bound, :class:`EdgeBlocks`): worker-written
+  shard files, one Python-worker job per round, described below.
+
+The bound is where a driver round stops winning. One round per kernel
+on a seeded random Graph (n = rows/10, few reciprocal edges, so the
+undirected form has ~2× the Graph's rows: the worst case), median of 5
+after a warm-up, on a 4-core host. Milliseconds, driver / workers:
+
+|            |               local[2]               |               local[4]              |
+| Graph rows |     _spmv |    _hindex |       _mode |     _spmv |    _hindex |      _mode |
+|------------|-----------|------------|-------------|-----------|------------|------------|
+| 100k       | 0.7 / 106 |   46 / 154 |   100 / 131 | 0.7 / 157 |   47 / 163 |  103 / 150 |
+| 120k       | 0.7 / 119 |   58 / 119 |   127 / 103 | 0.8 / 126 |   55 / 145 |  128 / 155 |
+| 140k       | 0.8 / 108 |   56 / 133 |   149 / 122 | 0.9 / 117 |   62 / 129 |  138 / 150 |
+| 160k       | 1.2 / 111 |   76 / 130 |   165 / 144 | 1.1 / 120 |   80 / 138 |  154 / 144 |
+| 200k       |  1.6 / 94 |   94 / 121 |   212 / 123 |  1.1 / 99 |   84 / 125 |  192 / 133 |
+| 400k       | 3.3 / 100 |  209 / 133 |   425 / 228 | 2.9 / 135 |  207 / 180 |  513 / 242 |
+| 800k       | 5.4 / 118 |  377 / 205 |  1084 / 445 | 6.1 / 155 |  409 / 206 | 1057 / 350 |
+| 1.6M       |  17 / 113 |  931 / 445 |  2555 / 954 |  15 / 152 |  984 / 431 | 2465 / 650 |
+| 2.4M       |  34 / 120 | 1388 / 638 | 4228 / 1500 |  39 / 122 | 1637 / 460 | 4432 / 870 |
+
+``_spmv`` is a ``bincount`` and wins on the driver at every size; the
+sort-based ``_mode`` (LPA) is the slowest kernel, and its driver round
+is last no slower at 100k rows under ``local[2]`` (140k under
+``local[4]``). A worker round costs ~0.1 s of job overhead whatever its
+size.
+
+Worker placement. An id-typed ``(src, dst)`` edge frame is bucketed once by
 ``dst % nblocks`` into per-task shard files written **by the Python
 workers themselves** — one ``mapInPandas`` pass over the frame's existing
 partitions, each task streaming its Arrow batches straight to raw
@@ -30,10 +71,10 @@ so each vertex's value arrives from exactly one task and the driver
 ASSIGNS the collected buffers into the n-vector: per round, one n-vector
 broadcast out and nblocks dense buffers back — no join and no shuffle.
 
-This is the right physical strategy while the vertex state fits the
-driver/executor memory; :data:`DRIVER_STATE_MAX_VERTICES` is that bound
-for every kernel on the store, and each kernel keeps a pure-dataflow
-path above it.
+Either placement is the right physical strategy while the vertex state
+fits the driver/executor memory; :data:`DRIVER_STATE_MAX_VERTICES` is
+that bound for every kernel on the store, and each kernel keeps a
+pure-dataflow path above it.
 
 Cluster-safety: edge blocks live under the SparkContext checkpoint
 directory (set by session.get_spark / setCheckpointDir). When that
@@ -66,6 +107,11 @@ from pyspark.sql import functions as F
 #: runs on the edge-block store (8 bytes/vertex of float64 state: ~80 MB
 #: at 10^7). Above it, kernels fall back to their pure-dataflow paths.
 DRIVER_STATE_MAX_VERTICES = 10_000_000
+
+#: Largest Graph, in ``num_edge_rows``, whose stores are held on the
+#: driver (:class:`DriverBlocks`); a canonical form has at most twice
+#: as many rows. Set by the round timings in the module docstring.
+DRIVER_STORE_MAX_EDGE_ROWS = 100_000
 
 #: worker-process block cache: {(store_token, block_file): (src, dst)}.
 #: The per-round input to Python workers is only a list of BLOCK FILE
@@ -447,15 +493,49 @@ class EdgeBlocks:
         _hadoop_rm(self._spark, self._dir)
 
 
-def build(edges: DataFrame, n: int) -> EdgeBlocks:
-    """Write ``edges`` (id-typed ``(src, dst)`` over dense ids 0..n-1)
-    as dst-bucketed blocks under the session checkpoint dir.
+class DriverBlocks(EdgeBlocks):
+    """A store held in driver memory as ONE bucket: ``nblocks = 1``, so
+    ``dst_local`` is ``dst``. :meth:`gather` calls the kernel in this
+    process: no broadcast, no job, no shard file, no Python worker."""
+
+    def __init__(self, n: int, src: np.ndarray, dst: np.ndarray):
+        self.n = n
+        self.nblocks = 1
+        self.dtype = src.dtype
+        self.src_degree = np.bincount(src, minlength=n)
+        self.edge_rows = len(src)
+        self.bcast_s = 0.0
+        self.gather_s = 0.0
+        self._bucket = [(src, dst)]
+
+    def gather(self, kernel: Kernel, state, dtype) -> np.ndarray:
+        t0 = time.monotonic()
+        out = kernel(state, self._bucket, self.n).astype(dtype, copy=False)
+        self.gather_s += time.monotonic() - t0
+        return out
+
+    def unpersist(self) -> None:
+        self._bucket = []
+
+
+def build(edges: DataFrame, n: int, graph_rows: int) -> EdgeBlocks:
+    """Build the store of ``edges`` (id-typed ``(src, dst)`` over dense
+    ids 0..n-1), a canonical form of a Graph of ``graph_rows`` edge rows.
+
+    At or below :data:`DRIVER_STORE_MAX_EDGE_ROWS` the form is collected
+    once with ``toArrow()`` into a :class:`DriverBlocks`. Above it, it
+    is written as dst-bucketed blocks under the session checkpoint dir.
 
     Blocks hold ONLY (src, dst) — int32 below 2^31 vertices, 8
     bytes/edge; anything per-vertex (PageRank's inverse out-degree,
     k-core's H values) rides the broadcast state instead. ``edges`` is
     read once on the worker-side shard path; the portable path persists
     it for its two reads (per-src counts + write)."""
+    ext = "i32" if n <= 2**31 - 1 else "i64"
+    if graph_rows <= DRIVER_STORE_MAX_EDGE_ROWS:
+        id_type = "int" if ext == "i32" else "long"
+        t = edges.select(F.col("src").cast(id_type), F.col("dst").cast(id_type)).toArrow()
+        return DriverBlocks(n, t.column("src").to_numpy(), t.column("dst").to_numpy())
     spark = edges.sparkSession
     sc = spark.sparkContext
     # a path all executors can read — on a cluster that's HDFS/S3 or a
@@ -475,7 +555,6 @@ def build(edges: DataFrame, n: int) -> EdgeBlocks:
     nblocks = int(os.environ.get("PROPAGON_CSR_NBLOCKS", "0")) or max(
         16, sc.defaultParallelism
     )
-    ext = "i32" if n <= 2**31 - 1 else "i64"
     src_degree = np.zeros(n, np.int64)
     try:
         by_bucket = _write_blocks(

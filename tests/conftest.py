@@ -14,6 +14,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from propagon_spark.plans import blocks  # noqa: E402
 from propagon_spark.session import get_spark  # noqa: E402
 
 
@@ -43,6 +44,28 @@ def job_ids_of(spark, fn) -> list[int]:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def place_stores(monkeypatch, placement):
+    """Hold a Graph's edge-block stores on the driver (every test graph
+    is below ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS``) or, with that
+    bound forced to 0, in worker shard files."""
+    if placement == "workers":
+        monkeypatch.setattr(blocks, "DRIVER_STORE_MAX_EDGE_ROWS", 0)
+
+
+@pytest.fixture(params=["driver", "workers"])
+def store_placement(request, monkeypatch):
+    place_stores(monkeypatch, request.param)
+    return request.param
+
+
+def block_dirs(spark) -> set:
+    """The ``csr_blocks_*`` store directories under the checkpoint dir."""
+    from urllib.parse import urlparse
+
+    ck = urlparse(spark.sparkContext.getCheckpointDir()).path
+    return {d for d in os.listdir(ck) if d.startswith("csr_blocks_")}
 
 
 def make_edges(spark, rows, weights=False):

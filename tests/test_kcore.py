@@ -2,17 +2,19 @@
 
 import pytest
 
-from conftest import make_edges, peel_coreness
+from conftest import block_dirs, make_edges, peel_coreness, place_stores
 
 from propagon_spark.graph import Graph
 from propagon_spark.graph.kcore import _broadcast_threshold, kcore
 from propagon_spark.plans import blocks
 
 
-@pytest.fixture(params=["blocks", "dataflow"])
+@pytest.fixture(params=["driver", "workers", "dataflow"])
 def hindex_path(request, monkeypatch):
-    """Run the H-index on the edge-block store or, with the store's
-    vertex bound forced to 0, on the dataflow rounds used above it."""
+    """Run the H-index on the edge-block store, held on the driver or in
+    worker shards, or, with the store's vertex bound forced to 0, on the
+    dataflow rounds used above it."""
+    place_stores(monkeypatch, request.param)
     if request.param == "dataflow":
         monkeypatch.setattr(blocks, "DRIVER_STATE_MAX_VERTICES", 0)
     return request.param
@@ -88,14 +90,6 @@ def test_hindex_equals_peel_without_broadcast(spark, monkeypatch):
     assert max(hi.values()) >= 2
 
 
-def _block_dirs(spark):
-    import os
-    from urllib.parse import urlparse
-
-    ck = urlparse(spark.sparkContext.getCheckpointDir()).path
-    return {d for d in os.listdir(ck) if d.startswith("csr_blocks_")}
-
-
 def _src_degree(g, sym):
     """Each vertex's edge count as ``src`` in ``sym``, by a Spark job."""
     import numpy as np
@@ -113,6 +107,7 @@ def test_blocks_path_leaves_nothing_behind(spark, monkeypatch):
     # keeps no per-round state and no persisted adjacency)
     from propagon_spark.graph.lpa import label_propagation
 
+    place_stores(monkeypatch, "workers")
     builds = []
     build = blocks.build
 
@@ -127,31 +122,32 @@ def test_blocks_path_leaves_nothing_behind(spark, monkeypatch):
     def persisted():
         return set(jsc.getPersistentRDDs().keySet())
 
-    before, dirs = persisted(), _block_dirs(spark)
+    before, dirs = persisted(), block_dirs(spark)
     g = Graph.from_edges(make_edges(spark, rows))
     c = [{r["name"]: r["coreness"] for r in kcore(g).collect()} for _ in range(2)]
     label_propagation(g).collect()
     assert builds == [1]
-    assert len(_block_dirs(spark) - dirs) == 1  # held by the Graph
+    assert len(block_dirs(spark) - dirs) == 1  # held by the Graph
     g.unpersist()
     assert persisted() - before == set()
-    assert _block_dirs(spark) == dirs
+    assert block_dirs(spark) == dirs
     assert c[0] == c[1] == {"p": 3, "q": 3, "r": 3, "s": 3, "t": 2, "u": 2}
 
 
-def test_store_released_with_its_graph(spark):
+def test_store_released_with_its_graph(spark, monkeypatch):
     # a Graph nobody unpersists still deletes its stores' blocks once it
     # is garbage-collected: no kernel result reads a store
     import gc
 
-    dirs = _block_dirs(spark)
+    place_stores(monkeypatch, "workers")
+    dirs = block_dirs(spark)
     g = Graph.from_edges(make_edges(spark, clique(["a", "b", "c"])))
     assert {r["coreness"] for r in kcore(g).collect()} == {2}
     edges = g.edges
-    assert len(_block_dirs(spark) - dirs) == 1
+    assert len(block_dirs(spark) - dirs) == 1
     del g
     gc.collect()
-    assert _block_dirs(spark) == dirs
+    assert block_dirs(spark) == dirs
     edges.unpersist()
 
 
@@ -169,7 +165,8 @@ def test_unpersist_drops_the_store(spark, monkeypatch):
         unpersist(self)
 
     monkeypatch.setattr(blocks.EdgeBlocks, "unpersist", counting_unpersist)
-    dirs = _block_dirs(spark)
+    place_stores(monkeypatch, "workers")
+    dirs = block_dirs(spark)
     g = Graph.from_edges(make_edges(spark, clique(["a", "b", "c"])))
     kcore(g).collect()
     old = weakref.ref(g.store("undirected"))
@@ -180,7 +177,7 @@ def test_unpersist_drops_the_store(spark, monkeypatch):
     del g
     gc.collect()
     assert len(released) == len(set(released)) == 2
-    assert _block_dirs(spark) == dirs
+    assert block_dirs(spark) == dirs
 
 
 def test_portable_parquet_block_path(spark, monkeypatch):
@@ -190,6 +187,7 @@ def test_portable_parquet_block_path(spark, monkeypatch):
     # branches count each src's edges while they build.
     from propagon_spark.canon import undirected_adjacency
 
+    place_stores(monkeypatch, "workers")
     rows = sorted(_random_rows() | {("loop", "loop")})
     graphs = [Graph.from_edges(make_edges(spark, rows)) for _ in range(2)]
     local = [tuple(r) for r in kcore(graphs[0]).collect()]

@@ -6,7 +6,7 @@ import math
 
 import pytest
 
-from conftest import job_ids_of, make_edges, scores_dict
+from conftest import job_ids_of, make_edges, place_stores, scores_dict
 
 from propagon_spark.errors import InvalidParameterError
 from propagon_spark.graph import Graph
@@ -185,6 +185,7 @@ def test_portable_parquet_block_path(spark, monkeypatch):
     from propagon_spark.canon import dedup_edges
     from propagon_spark.plans import blocks
 
+    place_stores(monkeypatch, "workers")
     graphs = [Graph.from_edges(make_edges(spark, F1_EDGES)) for _ in range(2)]
     local_res = pagerank(graphs[0], iterations=10, sink="uniform", impl="csr")
     local = scores_dict(local_res.scores)
@@ -204,10 +205,11 @@ def test_portable_parquet_block_path(spark, monkeypatch):
         g.unpersist()
 
 
-def test_seeded_csr_runs_no_lookup_job(spark):
+def test_seeded_csr_runs_no_lookup_job(spark, store_placement):
     # seed names resolve against the Graph's driver-held names: a seeded
-    # CSR fit runs the jobs an unseeded one does (its rounds), and an
-    # unknown seed fails with no Spark job at all
+    # CSR fit runs the jobs an unseeded one does (one per round on worker
+    # shards, none on a driver-held store), and an unknown seed fails
+    # with no Spark job at all
     import re
 
     g = Graph.from_edges(make_edges(spark, [("1", "2"), ("2", "3"), ("3", "1")]))
@@ -218,7 +220,7 @@ def test_seeded_csr_runs_no_lookup_job(spark):
         res = []
         seeded = len(job_ids_of(spark, lambda: res.append(
             pagerank(g, impl="csr", seeds={"1": 1.0}, **kw))))
-        assert seeded == plain == 5
+        assert seeded == plain == {"workers": 5, "driver": 0}[store_placement]
         join = scores_dict(pagerank(g, impl="join", seeds={"1": 1.0}, **kw).scores)
         for k, v in scores_dict(res[0].scores).items():
             assert abs(v - join[k]) < 1e-12, k
