@@ -1075,8 +1075,8 @@ def _harmonic_sources_sql(depth: int, k: int) -> str:
     """SQL twin of the fixed-source scaled harmonic estimator: BFS from
     the ``k`` lexicographically smallest vertices, per-(node, depth)
     reacher counts divided by depth and folded in ascending depth
-    (mirroring _bfs_contrib's per-depth step aggregation in
-    propagon_spark/graph/harmonic.py), then scaled by n/k like the
+    (propagon_spark/graph/harmonic.py sums 1/d per pair instead; the
+    two agree to the 9 rounded digits), then scaled by n/k like the
     estimator (harmonic.rs:167-204)."""
     return f"""WITH RECURSIVE {ORACLE_EDGES_CTE},
 ce AS (SELECT src, dst FROM pairs WHERE weight >= 2),

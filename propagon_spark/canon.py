@@ -44,10 +44,11 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     """Undirected reading: each edge contributes both directions.
 
     Matches ``undirected_adjacency`` (``graph.rs:155-162``) which inserts
-    every edge into both endpoint lists. Output columns (src, dst) only.
+    every edge into both endpoint lists. Any other column (a weight)
+    rides along with its edge.
     """
-    e = edges.select("src", "dst")
-    return e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    swap = {"src": F.col("dst").alias("src"), "dst": F.col("src").alias("dst")}
+    return edges.unionAll(edges.select(*(swap.get(c, c) for c in edges.columns)))
 
 
 def canonical_undirected(edges: DataFrame) -> DataFrame:
@@ -73,7 +74,7 @@ def undirected_adjacency(edges: DataFrame) -> DataFrame:
     """
     nparts = edges.rdd.getNumPartitions()
     return (
-        symmetrize(drop_self_loops(edges))
+        symmetrize(drop_self_loops(edges).select("src", "dst"))
         .repartition(nparts, "src")
         .distinct()
     )

@@ -111,7 +111,7 @@ def _build_parser() -> argparse.ArgumentParser:
     hm.add_argument("--num-sampled", type=int, default=None,
                     help="Boldi–Vigna sampled-source estimator")
     hm.add_argument("--weighted", action="store_true",
-                    help="weights as lengths (Dijkstra) instead of BFS")
+                    help="weights as lengths instead of unit hops")
     _common(hm)
 
     cc = sub.add_parser("components")

@@ -11,9 +11,11 @@ Key semantics:
 - seeded random init (v2 RNG, default seed 2019), fixed 10 iterations.
 
 Spark mapping: two vocab spaces; the sweep is a join-agg with
-``w/(d_l·d_r)`` folded into the edge frame once; random init derived from
-``xxhash64(id, seed)`` — truly deterministic at any parallelism (unlike
-``F.rand``, whose stream is seeded per-partition). The stream still
+``w/(d_l·d_r)`` folded into the edge frame once; both sides live in one
+state frame ``(side, id, value)``, and each sweep (p from u, then u from
+the refreshed p) is one ``fixpoint`` turn, one materializing job; random
+init derived from ``xxhash64(id, seed)`` — truly deterministic at any
+parallelism (unlike ``F.rand``, whose stream is seeded per-partition). The stream still
 differs from the reference's Xoshiro, so parity with golden files is
 rank-correlation, not numeric — same tier-S contract as the reference's
 own golden tests (``crates/propagon-cli/tests/golden.rs:176-212``).
@@ -29,7 +31,7 @@ from pyspark.sql import functions as F
 from propagon_spark.errors import EmptyDatasetError
 from propagon_spark.graph.core import sorted_scores
 from propagon_spark.ids import build_vocab
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 
 
 @dataclass
@@ -108,41 +110,59 @@ def birank(
         u0 = hash01(F.col("id"), seed)
         p0 = hash01(F.col("id"), seed + 1)
     if src_init is not None:
-        u = truncate_lineage(
-            sv.join(
-                src_init.select("name", F.col("value").alias("_u0")),
-                "name",
-                "left",
-            ).select(
-                F.col("id").alias("si"),
-                F.coalesce("_u0", F.lit(0.0)).alias("u"),
+        u = sv.join(
+            src_init.select("name", F.col("value").alias("_u0")),
+            "name",
+            "left",
+        ).select("id", F.coalesce("_u0", F.lit(0.0)).alias("value"))
+    else:
+        u = sv.select("id", u0.alias("value"))
+    # side 0 = src (u), 1 = dst (p)
+    state = truncate_lineage(
+        u.select(F.lit(0).alias("side"), "id", "value").unionAll(
+            dv.select(F.lit(1).alias("side"), "id", p0.alias("value"))
+        )
+    )
+
+    def sweep(state: DataFrame) -> DataFrame:
+        # p ← normalized gather of u (alpha cancels with no priors), then
+        # u ← gather of the refreshed p. p is read twice, as output and
+        # by the u gather: the explicit not-null filter (the one the u
+        # join infers) makes both reads one plan, so they share one
+        # exchange (ReusedExchange) instead of gathering p twice
+        u = state.where(F.col("side") == 0).select(
+            F.col("id").alias("si"), F.col("value").alias("u")
+        )
+        p = (
+            en.join(u, "si")
+            .groupBy(F.col("di").alias("id"))
+            .agg(F.sum(F.col("nw") * F.col("u")).alias("value"))
+            .where(F.col("id").isNotNull())
+        )
+        u_new = (
+            en.join(p.withColumnRenamed("id", "di"), "di")
+            .groupBy(F.col("si").alias("id"))
+            .agg(F.sum(F.col("nw") * F.col("value")).alias("value"))
+        )
+        return u_new.select(F.lit(0).alias("side"), "id", "value").unionAll(
+            p.select(F.lit(1).alias("side"), "id", "value")
+        )
+
+    state, _ = fixpoint(
+        state,
+        sweep,
+        {},
+        lambda turn, m, last: False,
+        max_turns=iterations,
+        invariants=[en],
+    )
+
+    def scores(vocab: DataFrame, side: int) -> DataFrame:
+        side_state = state.where(F.col("side") == side)
+        return sorted_scores(
+            vocab.join(side_state, "id", "left").select(
+                "name", F.coalesce("value", F.lit(0.0)).alias("score")
             )
         )
-    else:
-        u = truncate_lineage(sv.select(F.col("id").alias("si"), u0.alias("u")))
-    p = truncate_lineage(dv.select(F.col("id").alias("di"), p0.alias("p")))
 
-    for _ in range(iterations):
-        # p ← normalized gather of u (alpha cancels with no priors)
-        p = truncate_lineage(
-            en.join(u, "si")
-            .groupBy("di")
-            .agg(F.sum(F.col("nw") * F.col("u")).alias("p"))
-        )
-        u = truncate_lineage(
-            en.join(p, "di")
-            .groupBy("si")
-            .agg(F.sum(F.col("nw") * F.col("p")).alias("u"))
-        )
-
-    src_scores = sorted_scores(
-        sv.join(u, sv["id"] == u["si"], "left").select(
-            "name", F.coalesce("u", F.lit(0.0)).alias("score")
-        )
-    )
-    dst_scores = sorted_scores(
-        dv.join(p, dv["id"] == p["di"], "left").select(
-            "name", F.coalesce("p", F.lit(0.0)).alias("score")
-        )
-    )
-    return BiRankResult(src_scores, dst_scores, iterations)
+    return BiRankResult(scores(sv, 0), scores(dv, 1), iterations)

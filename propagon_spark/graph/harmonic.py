@@ -26,10 +26,14 @@ parity.
 
 Spark shape: all sources advance one SSSP **together** — the state frame
 is keyed ``(source, node)`` so each round is one join + aggregation over
-the whole batch; rounds = eccentricity bound (unit) / shortest-path hop
-bound (weighted), not #sources. The weighted mode is Bellman-Ford-style
-dataflow relaxation: per round, frontier × adjacency → candidate
-distances, min-combine, keep strict improvements.
+the whole batch; rounds = shortest-path hop bound, not #sources. Both
+costs run one Bellman-Ford-style relaxation on ``fixpoint``; unit cost
+is every length 1.0, and relaxing only the pairs that improved in the
+last round is then exactly the depth-bounded BFS. Per round, the
+frontier (rows marked ``fresh``) × adjacency gives candidate distances,
+min-combined with the held distances in one aggregation; a strict
+improvement is fresh for the next round. The fresh count rides the
+round's one job and stops the loop at 0.
 """
 
 from __future__ import annotations
@@ -37,25 +41,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from propagon_spark.canon import dedup_edges, symmetrize
+from propagon_spark.canon import symmetrize
 from propagon_spark.errors import InvalidParameterError
 from propagon_spark.graph.core import Graph, sorted_scores
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 
 DEFAULT_SAMPLE_SEED = 2014
 
 #: one-BFS-per-vertex exact mode refuses above this vertex count unless
 #: the caller opts in with ``exact_max_vertices=None``
 EXACT_MAX_VERTICES = 100_000
-
-
-def symmetrize_weighted(e: DataFrame) -> DataFrame:
-    cols = e.columns
-    rev = e.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"),
-        *[F.col(c) for c in cols if c not in ("src", "dst")]
-    ).select(*cols)
-    return e.unionAll(rev)
 
 
 def harmonic(
@@ -79,17 +74,8 @@ def harmonic(
     if cost not in ("unit", "weight"):
         raise InvalidParameterError(f"bad cost {cost!r}")
     n = g.num_vertices
-    nparts = g.edges.rdd.getNumPartitions()
-
     if cost == "unit":
-        e = dedup_edges(g.edges)
-        if direction == "in":
-            adj = e
-        elif direction == "out":
-            adj = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        else:
-            adj = symmetrize(e).distinct()
-        adj = adj.withColumn("w", F.lit(1.0))
+        w = F.lit(1.0)
     else:
         # weight = length; strictly positive and finite or typed error
         # naming the edge (harmonic.rs:219-236)
@@ -119,16 +105,15 @@ def harmonic(
                 f"positive weights; edge {names[b['src']]} → "
                 f"{names[b['dst']]} has weight {b['weight']}"
             )
-        e = g.edges.select("src", "dst", F.col("weight").alias("w"))
-        if direction == "out":
-            e = e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        elif direction == "total":
-            e = symmetrize_weighted(e)
-        # parallel edges: Dijkstra takes the min anyway — fold it in now
-        adj = e.groupBy("src", "dst").agg(F.min("w").alias("w"))
-    adj = truncate_lineage(adj.repartition(nparts, "src"))
+        w = F.col("weight")
+    e = g.edges.select("src", "dst", w.alias("w"))
+    if direction == "out":
+        e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+    elif direction == "total":
+        e = symmetrize(e)
+    # parallel edges: the relaxation takes the min anyway — fold it in
+    # now (for unit lengths this is the dedup)
+    adj = e.groupBy(F.col("src").alias("node"), "dst").agg(F.min("w").alias("w"))
 
     vids = g.vocab.select("id")
     if sources is not None:
@@ -171,13 +156,10 @@ def harmonic(
         )
         scale = n / float(sample)
 
-    if cost == "unit":
-        contrib = _bfs_contrib(source_ids, adj, nparts, max_depth)
-    else:
-        contrib = _dijkstra_contrib(source_ids, adj, nparts, max_depth)
-
-    if contrib is None:
-        return sorted_scores(g.vocab.select("name", F.lit(0.0).alias("score")))
+    dist = _relax(source_ids, adj, max_depth)
+    contrib = dist.where(F.col("d") > 0).groupBy("node").agg(
+        F.sum(1.0 / F.col("d")).alias("h")
+    )
     out = g.vocab.join(contrib.withColumnRenamed("node", "id"), "id", "left").select(
         "name",
         (F.coalesce("h", F.lit(0.0)) * F.lit(scale)).alias("score"),
@@ -185,87 +167,58 @@ def harmonic(
     return sorted_scores(out)
 
 
-def _bfs_contrib(
-    sources: DataFrame, adj: DataFrame, nparts: int, max_depth: int
-) -> DataFrame | None:
-    """Batched unit-cost BFS: (node, Σ 1/d) partial harmonic sums."""
-    frontier = truncate_lineage(
-        sources.select("source", F.col("source").alias("node"))
-    )
-    visited = frontier
-    contrib = None
-
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        nxt = (
-            frontier.join(adj.select(F.col("src").alias("node"), "dst"), "node")
-            .select("source", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, ["source", "node"], "left_anti")
-        )
-        nxt = truncate_lineage(nxt.repartition(nparts, "node"))
-        if nxt.isEmpty():
-            break
-        step = nxt.groupBy("node").agg(
-            (F.count("*") / F.lit(float(depth))).alias("h")
-        )
-        contrib = (
-            step
-            if contrib is None
-            else truncate_lineage(
-                contrib.unionAll(step).groupBy("node").agg(F.sum("h").alias("h"))
-            )
-        )
-        visited = truncate_lineage(visited.unionAll(nxt))
-        frontier = nxt
-    return contrib
-
-
-def _dijkstra_contrib(
-    sources: DataFrame, adj: DataFrame, nparts: int, max_rounds: int
-) -> DataFrame | None:
-    """Batched weighted SSSP by dataflow relaxation (Bellman-Ford rounds
-    with min-combine): exact shortest path lengths once no distance
-    improves, bounded by ``max_rounds`` hops."""
+def _relax(sources: DataFrame, adj: DataFrame, max_rounds: int) -> DataFrame:
+    """Batched SSSP by dataflow relaxation (Bellman-Ford rounds with
+    min-combine) over ``adj`` = ``(node, dst, w)``: ``(source, node, d,
+    fresh)``, exact shortest path lengths once no distance improves,
+    bounded by ``max_rounds`` hops."""
+    adj = truncate_lineage(adj)
     dist = truncate_lineage(
         sources.select(
-            "source", F.col("source").alias("node"), F.lit(0.0).alias("d")
+            "source",
+            F.col("source").alias("node"),
+            F.lit(0.0).alias("d"),
+            F.lit(True).alias("fresh"),
         )
     )
-    frontier = dist
 
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
+    def step(dist: DataFrame) -> DataFrame:
+        # the frontier's candidates and the held distances, tagged
+        # ``held``, meet in ONE (source, node) aggregation
         cand = (
-            frontier.join(
-                adj.select(F.col("src").alias("node"), "dst", "w"), "node"
+            dist.where("fresh")
+            .join(adj, "node")
+            .select(
+                "source",
+                F.col("dst").alias("node"),
+                (F.col("d") + F.col("w")).alias("d"),
+                F.lit(False).alias("held"),
             )
-            .groupBy("source", F.col("dst").alias("node"))
-            .agg(F.min(F.col("d") + F.col("w")).alias("nd"))
         )
-        joined = cand.join(
-            dist.select("source", "node", F.col("d").alias("cur")),
-            ["source", "node"],
-            "left",
-        )
-        improved = truncate_lineage(
-            joined.where(F.col("cur").isNull() | (F.col("nd") < F.col("cur")))
-            .select("source", "node", F.col("nd").alias("d"))
-            .repartition(nparts, "node")
-        )
-        if improved.isEmpty():
-            break
-        dist = truncate_lineage(
-            dist.unionAll(improved)
+        return (
+            dist.select("source", "node", "d", F.lit(True).alias("held"))
+            .unionAll(cand)
             .groupBy("source", "node")
-            .agg(F.min("d").alias("d"))
+            .agg(
+                F.min("d").alias("d"),
+                F.min(F.when(F.col("held"), F.col("d"))).alias("cur"),
+            )
+            .select(
+                "source",
+                "node",
+                "d",
+                (F.col("cur").isNull() | (F.col("d") < F.col("cur"))).alias(
+                    "fresh"
+                ),
+            )
         )
-        frontier = improved
 
-    sc = dist.where(F.col("d") > 0).groupBy("node").agg(
-        F.sum(1.0 / F.col("d")).alias("h")
+    dist, _ = fixpoint(
+        dist,
+        step,
+        {"fresh": F.count(F.when(F.col("fresh"), 1))},
+        lambda turn, m, last: m["fresh"] == 0,
+        max_turns=max_rounds,
+        invariants=[adj],
     )
-    # empty-contrib guard: a graph with no positive-distance pairs
-    return sc if not sc.isEmpty() else None
+    return dist

@@ -10,7 +10,8 @@ as a Spark-first power iteration:
   the big edge side),
 - **gather**: ``groupBy(dst).sum`` — partial+final hash aggregation, the
   one unavoidable shuffle per iteration,
-- **normalize/update**: broadcast scalars (sink mass) + a projection.
+- **normalize/update**: the sink mass as a driver literal (observed on
+  the job that materialized the ranks) + a projection.
 
 Reference semantics reproduced exactly (parity fixtures in tests):
 - parallel edges deduplicated, weights ignored (``pagerank.rs:6-7,133-141``);
@@ -351,18 +352,6 @@ def pagerank(
         .repartition(loop_nparts, "id")
         .persist(_STORAGE)
     )
-    vstat.count()
-    # sink-free graphs (every vertex has out-edges — e.g. any symmetric
-    # graph) make every sink policy IDENTICAL: the pooled sink mass is
-    # exactly 0, so uniform/all degenerate to none and reverse rewrites
-    # nothing. Detect it once (vertex-sized scan of the persisted frame)
-    # and run the cheap single-reference step plan — the per-step sink
-    # machinery (gather materialization + mass scalar) is pure overhead.
-    # `reverse` removes sinks by construction (canon.reverse_sinks).
-    has_sinks = (
-        sink != "reverse"
-        and vstat.where(F.col("is_sink")).limit(1).count() > 0
-    )
     # materialize the persisted scatter inside "setup"; row count = the
     # canonicalized edges actually processed per iteration (scaling harness
     # reads it from timings instead of re-running the distinct)
@@ -375,15 +364,30 @@ def pagerank(
     # (round-5 huge run). Release it the moment its derived frames exist.
     edges.unpersist(blocking=False)
 
+    # the pooled sink mass S = Σ rank·[is_sink] of every ranks frame is
+    # observed on the job that materializes it: the initial (or resumed)
+    # ranks here, which also materialize vstat and count its sinks, then
+    # every loop turn
+    sink_mass = F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0))
     if state is not None:
-        ranks = truncate_lineage(
-            state.select("id", "rank").repartition(loop_nparts, "id")
-        )
+        init = state.select("id", "rank").repartition(loop_nparts, "id") \
+            .join(vstat.select("id", "is_sink"), "id")
     else:
         # init = teleport vector (pagerank.rs:170-173)
-        ranks = truncate_lineage(vstat.select(
-            "id", F.col("v").alias("rank")
-        ))
+        init = vstat.select("id", F.col("v").alias("rank"), "is_sink")
+    ranks, m = materialize(
+        init,
+        {"sinks": F.count(F.when(F.col("is_sink"), 1)), "sink_mass": sink_mass},
+        ["id", "rank"],
+    )
+    s_mass = float(m["sink_mass"])
+    # sink-free graphs (every vertex has out-edges — e.g. any symmetric
+    # graph) make every sink policy IDENTICAL: the pooled sink mass is
+    # exactly 0, so uniform/all degenerate to none and reverse rewrites
+    # nothing, and the steps chain (below). `reverse` removes sinks by
+    # construction (canon.reverse_sinks).
+    has_sinks = sink != "reverse" and m["sinks"] > 0
+    redistribute = has_sinks and sink in ("uniform", "all")
 
     def gather_frame(ranks: DataFrame) -> DataFrame:
         """Scatter + gather — the edge-heavy half of one step: (id, m).
@@ -421,30 +425,26 @@ def pagerank(
     ) -> DataFrame:
         """Sink redistribution + damping update over one gather result.
 
-        ``s_mass`` is the pooled sink-rank scalar S as a plain DRIVER
-        FLOAT, folded into the plan as a literal. Round 3 derived S
-        in-plan via a broadcast 1-row aggregate over the gather subtree —
-        measured this round, that second reference DOUBLES the edge pass
-        per step (Catalyst's ReuseExchange does not bridge the broadcast
+        ``s_mass`` is the pooled sink-rank scalar S of the ranks this
+        step reads, observed on the job that materialized them, as a
+        plain DRIVER FLOAT folded into the plan as a literal. Round 3
+        derived S in-plan via a broadcast 1-row aggregate over the
+        gather subtree — that second reference DOUBLES the edge pass per
+        step (Catalyst's ReuseExchange does not bridge the broadcast
         boundary on these iterated plans), and chaining such steps
         recomputes the gather 2^C times (a 4-step chain measured 47 s vs
-        4×2 s single steps at 8 cores / 22M edges). The caller now
-        materializes the gather output with S observed on the SAME job
-        (Observation — no extra pass), so this update is a pure
-        single-reference projection: vertex-sized vstat join, literal
-        arithmetic, no broadcast subtree anywhere.
-
-        S = M − Σm (total gathered mass is exactly the rank mass of
-        non-sink vertices), with M tracked analytically on the driver and
-        re-anchored to the observed mass at every materialization; FP
-        deviation vs the reference's direct sink-rank sum is ~1e-15, far
-        inside the 1e-6 parity contract (pagerank.rs:194-218).
+        4×2 s single steps at 8 cores / 22M edges). So this update is a
+        pure single-reference projection: vertex-sized vstat join,
+        literal arithmetic, no broadcast subtree anywhere. With
+        redistributing sinks it emits ``is_sink`` for the next S.
 
         ``carry_old=True`` emits the previous rank as ``old`` (the L1
-        delta's input); ``old_ranks`` must then be a MATERIALIZED leaf so
-        the second plan reference costs a leaf scan, not a recompute.
-        The ``all`` sink needs ``old`` for its self-exclusion term
-        regardless (pagerank.rs:194-201).
+        delta's input); ``old_ranks`` (the ranks ``gathered`` came from)
+        must then be a MATERIALIZED leaf so the second plan reference
+        costs a leaf scan, not a recompute. The ``all`` sink needs
+        ``old`` for its self-exclusion term regardless
+        (pagerank.rs:194-201); it runs one step per job, so its
+        ``old_ranks`` is always the turn's materialized ranks.
         """
         joined = vstat.join(gathered.hint("shuffle_hash"), "id", "left")
         need_old = carry_old or (sink == "all" and has_sinks)
@@ -455,7 +455,7 @@ def pagerank(
                 ),
                 "id",
             )
-        if not has_sinks or sink in ("none", "reverse"):
+        if not redistribute:
             # sink-free graph or non-redistributing policy: S ≡ 0
             sink_term = F.lit(0.0)
         elif sink == "uniform":
@@ -471,7 +471,11 @@ def pagerank(
                 else F.lit(0.0)
             )
 
-        cols = ["id"] + (["old"] if carry_old else [])
+        cols = (
+            ["id"]
+            + (["old"] if carry_old else [])
+            + (["is_sink"] if redistribute else [])
+        )
         return joined.select(
             *cols,
             (
@@ -480,50 +484,35 @@ def pagerank(
             ).alias("rank"),
         )
 
-    # Step scheduling. Two shapes, chosen by whether a per-step SCALAR
-    # barrier exists (pooled sink mass S — only when the graph actually
-    # has sinks AND the policy redistributes):
+    # Step scheduling. Each step of the single-reference path (none/
+    # reverse, or any policy on a sink-free graph) references the
+    # previous iterate exactly once, so steps CHAIN into one Spark job
+    # as a linear pipeline (no duplicated subtree anywhere). Convergence
+    # turns run the chain as TWO jobs: job A = steps−1 pure chained
+    # steps, materialized; job B = one final step whose `old` reference
+    # hits job A's materialized LEAF (a second reference to a leaf is a
+    # scan, not a recompute — measured: carrying `old` on the last step
+    # of a LAZY chain doubled the whole edge pass). The stop test stays
+    # the TRUE single-step delta ||p_{t+C} − p_{t+C−1}||₁ (a chain-START
+    # delta is unsound: under a negative second eigenvalue consecutive
+    # deltas alternate sign and partially cancel, stopping early while
+    # the reference's criterion is still above tol).
     #
-    # - single-reference path (none/reverse, or any policy on a sink-free
-    #   graph): steps CHAIN into one Spark job — each step references the
-    #   previous iterate exactly once, so the chained plan is a linear
-    #   pipeline (no duplicated subtree anywhere). Convergence turns run
-    #   the chain as TWO jobs: job A = steps−1 pure chained steps,
-    #   materialized; job B = one final step whose `old` reference hits
-    #   job A's materialized LEAF (a second reference to a leaf is a
-    #   scan, not a recompute — measured this round: carrying `old` on
-    #   the last step of a LAZY chain doubled the whole edge pass).
-    #   The stop test stays the TRUE single-step delta
-    #   ||p_{t+C} − p_{t+C−1}||₁ (a chain-START delta is unsound: under
-    #   a negative second eigenvalue consecutive deltas alternate sign
-    #   and partially cancel, stopping early while the reference's
-    #   criterion is still above tol).
-    #
-    # - two-phase path (uniform/all WITH sinks): the update needs
-    #   S = M − Σm before any output row can be emitted, so each step is
-    #   job A = edge-heavy gather, materialized with Σm as an Observation
-    #   riding the same job; job B = vertex-sized update with S folded in
-    #   as a driver LITERAL. Round 3 derived S in-plan via a broadcast
-    #   aggregate over the gather subtree instead — that second subtree
-    #   reference recomputed the edge pass per step (2× at chain 1, 2^C
-    #   chained; a 4-step uniform chain measured 47 s vs 4×2 s single).
+    # Redistributing sinks (uniform/all on a graph WITH sinks) run one
+    # step per job: each step needs the S of its input ranks, which is
+    # observed on the job that materializes them.
     #
     # Convergence mode sizes chains ADAPTIVELY: the first two turns run
     # single steps to measure the L1 decay rate, then each turn runs
     # min(chain_max, predicted-steps-to-tol) — amortizing per-job fixed
     # cost (Catalyst planning, scheduling, lineage materialization) while
     # bounding overshoot by the prediction error instead of a fixed C−1.
-    two_phase = has_sinks and sink in ("uniform", "all")
-    chain_max = 1 if two_phase else _CHAIN_MAX
+    chain_max = 1 if redistribute else _CHAIN_MAX
     converged = False
     it = start_iter
     last_ckpt = start_iter
-    # analytic mass at turn start: redistributing sinks conserve
-    # M' = d·M + (1−d); re-anchored to the observed mass each turn
-    mass_cur = float(metrics[-1]["mass"]) if metrics else 1.0
     prev_l1: float | None = None
     rate: float | None = None
-    # the gather/update phase split falls out of the two-job structure
     timings = {"kernel": "join", "edge_rows": n_scatter,
                "gather_mode": gather_mode,
                "dedup_plan": "folded" if pre_partitioned else "separate",
@@ -544,9 +533,7 @@ def pagerank(
         while it < total_iters:
             t0 = time.monotonic()
             need_delta = tol is not None
-            if two_phase:
-                steps = 1
-            elif tol is None:
+            if tol is None:
                 steps = min(chain_max, total_iters - it)
             elif prev_l1 is None or rate is None:
                 steps = 1  # first two turns calibrate the decay rate
@@ -560,41 +547,30 @@ def pagerank(
             # the turn's materialized intermediates, released with the
             # superseded ranks once the new ranks are materialized
             spent = [ranks]
-            if two_phase:
-                # job A: edge pass; Σm observed on the SAME job, so the
-                # sink-mass scalar costs no extra pass and no broadcast.
-                t_g = time.monotonic()
-                gath, m = materialize(gather_frame(ranks), {"sigma": F.sum("m")})
-                spent.append(gath)
-                sigma = float(m["sigma"])
-                timings["iterate_gather_s"] += time.monotonic() - t_g
-                cur = update_from(gath, need_delta, ranks, mass_cur - sigma)
-            else:
-                cur = ranks
-                pure = steps - 1 if need_delta else steps
-                for _ in range(pure):
-                    cur = update_from(gather_frame(cur), False, None, 0.0)
-                if need_delta:
-                    if pure > 0:
-                        # job A: materialize the pure chain; the final
-                        # delta-carrying step then references a LEAF
-                        t_g = time.monotonic()
-                        cur, m = materialize(cur, {"mass": F.sum("rank")})
-                        spent.append(cur)
-                        mass_cur = float(m["mass"])
-                        timings["iterate_gather_s"] += (
-                            time.monotonic() - t_g
-                        )
-                    cur = update_from(gather_frame(cur), True, cur, 0.0)
+            cur = ranks
+            pure = steps - 1 if need_delta else steps
+            for _ in range(pure):
+                cur = update_from(gather_frame(cur), False, cur, s_mass)
+            if need_delta:
+                if pure > 0:
+                    # job A: materialize the pure chain; the final
+                    # delta-carrying step then references a LEAF
+                    t_g = time.monotonic()
+                    cur = truncate_lineage(cur)
+                    spent.append(cur)
+                    timings["iterate_gather_s"] += time.monotonic() - t_g
+                cur = update_from(gather_frame(cur), True, cur, s_mass)
 
             # materialize + truncate lineage every loop turn — without
             # truncation the logical plan compounds per iteration.
-            # Convergence metrics ride along as observed aggregates of the
-            # SAME job (CollectMetrics): one Spark job per loop turn.
+            # Convergence metrics and the next step's S ride along as
+            # observed aggregates of the SAME job (CollectMetrics).
             t_u = time.monotonic()
             stats = {"mass": F.sum("rank")}
             if need_delta:
                 stats["l1"] = F.sum(F.abs(F.col("rank") - F.col("old")))
+            if redistribute:
+                stats["sink_mass"] = sink_mass
             new_ranks, agg = materialize(cur, stats, ["id", "rank"])
             l1 = float(agg["l1"]) if need_delta else None
             mass = float(agg["mass"])
@@ -604,6 +580,8 @@ def pagerank(
                 raise NumericError(
                     f"pagerank diverged at iteration {it}: mass={mass}"
                 )
+            if redistribute:
+                s_mass = float(agg["sink_mass"])
             timings["iterate_update_s"] += time.monotonic() - t_u
 
             # observed decay rate of the single-step L1 across this turn's
@@ -615,7 +593,6 @@ def pagerank(
             ranks = new_ranks
             for frame in spent:
                 release(frame)
-            mass_cur = mass
             it += steps
             metrics.append(
                 {

@@ -127,14 +127,14 @@ _BLOCK_CACHE: dict = {}
 #: per-worker cache budget in bytes (task→worker binding is not stable,
 #: so a worker can accumulate many blocks over a long fit; evict FIFO
 #: beyond this). Uncached blocks are re-read from Parquet — cheap.
-_CACHE_BYTES = int(os.environ.get("PROPAGON_CSR_CACHE_BYTES", 2_000_000_000))
+_CACHE_BYTES = 2_000_000_000
 
 #: per-worker cap on cached mmap ENTRIES: each np.load(mmap_mode="r")
 #: holds an open file descriptor until evicted, and a long fit can walk a
 #: worker across many buckets' shards (unstable task→worker binding).
 #: 512 entries = 1024 fds worst case, inside a default RLIMIT_NOFILE;
 #: eviction costs one re-mmap on the next touch, no decode.
-_MMAP_CACHE_ENTRIES = int(os.environ.get("PROPAGON_CSR_MMAP_ENTRIES", 512))
+_MMAP_CACHE_ENTRIES = 512
 
 
 def _cache_size() -> int:

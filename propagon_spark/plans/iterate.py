@@ -20,7 +20,9 @@ Connect).
 
 :func:`fixpoint` is the round loop of the dataflow kernels (katz,
 leader_rank, hits, rank_centrality, random_walker, components, lpa,
-k-core above the edge-block bound, tally's ``filter_min_count``):
+k-core above the edge-block bound, tally's ``filter_min_count``,
+harmonic's relaxation, birank's sweeps; join PageRank's chained steps
+keep their own loop):
 
 - a turn is ONE materializing job — the eager truncation — and the stop
   statistics are observed (``Observation``) on that same job;
@@ -78,10 +80,13 @@ def materialize(
     df: DataFrame, stats: dict[str, Column], columns: Sequence[str] = ()
 ) -> tuple[DataFrame, dict]:
     """Truncate ``df`` (projected to ``columns`` if given) and return it
-    with ``stats`` observed on the one job that materializes it."""
+    with ``stats`` (may be empty) observed on the one job that
+    materializes it."""
     obs = Observation()
-    df = df.observe(obs, *(c.alias(k) for k, c in stats.items()))
-    return truncate_lineage(df.select(*columns) if columns else df), obs.get
+    if stats:
+        df = df.observe(obs, *(c.alias(k) for k, c in stats.items()))
+    out = truncate_lineage(df.select(*columns) if columns else df)
+    return out, obs.get if stats else {}
 
 
 def fixpoint(

@@ -134,22 +134,20 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-        # Iterative kernels re-bind their state frame every loop turn
-        # (ranks = truncate_lineage(...)); the PREVIOUS turn's
-        # localCheckpoint blocks and shuffle files are only reaped when a
-        # JVM GC lets the ContextCleaner see the dead references. On big
-        # heaps (48-96g here) organic GC is so rare that a long
-        # convergence fit accumulates every iteration's state on local
-        # disk — measured: a 103.8M-vertex / 591.5M-edge fit at ~5 GB of
-        # checkpoint blocks + shuffle per iteration filled a 75 GB
-        # scratch volume in minutes (BENCH/RUNS.md, round 5).
-        # The default 30min periodic-GC cadence is tuned for streaming;
-        # 2min bounds in-flight orphaned state to a few iterations at
+        # Iterative kernels release each superseded state's checkpoint
+        # blocks explicitly (plans.iterate.release), but every turn's
+        # shuffle files are reaped only when a JVM GC lets the
+        # ContextCleaner see the dead shuffle references. On big heaps
+        # (48-96g here) organic GC is so rare that a long convergence fit
+        # accumulates every iteration's shuffle on local disk — measured:
+        # a 103.8M-vertex / 591.5M-edge fit at ~5 GB of checkpoint blocks
+        # + shuffle per iteration filled a 75 GB scratch volume in
+        # minutes (BENCH/RUNS.md, round 5). The default 30min
+        # periodic-GC cadence is tuned for streaming; 2min bounds
+        # in-flight orphaned shuffle state to a few iterations at
         # negligible GC cost (System.gc on a mostly-dead young gen).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("PROPAGON_PERIODIC_GC", "2min"),
-        )
+        # ``extra_conf`` overrides it.
+        .config("spark.cleaner.periodicGC.interval", "2min")
         # pyspark.daemon plus a zipimport fix: on CPython < 3.13 every
         # Python task re-read pyspark.zip's directory, ~0.2 s of fixed
         # cost per task (see _daemon.py). Executors must import

@@ -135,6 +135,20 @@ def test_birank_uniform_init_matches_hand_computation(spark):
     s5, s13 = math.sqrt(5.0), math.sqrt(13.0)
     assert abs(dst["d1"] - 1.0 / s5) < 1e-12
     assert abs(dst["d2"] - (4.0 / (s5 * s13) + 9.0 / (3.0 * s13))) < 1e-12
+    # the same sweep then refreshes u from the refreshed p: u1 = Σ nw·p1
+    nw = {("s1", "d1"): 1.0 / s5, ("s1", "d2"): 4.0 / (s5 * s13),
+          ("s2", "d2"): 9.0 / (3.0 * s13)}
+    src = scores_dict(res.src_scores)
+    for s in ("s1", "s2"):
+        u1 = sum(w * dst[d] for (si, d), w in nw.items() if si == s)
+        assert abs(src[s] - u1) < 1e-12, s
+
+
+def test_birank_zero_iterations_returns_the_init(spark):
+    e = make_edges(spark, [("s1", "d1"), ("s1", "d2"), ("s2", "d2")])
+    res = birank(e, iterations=0, init="uniform")
+    assert scores_dict(res.src_scores) == {"s1": 1.0, "s2": 1.0}
+    assert scores_dict(res.dst_scores) == {"d1": 1.0, "d2": 1.0}
 
 
 def test_birank_uniform_deterministic_across_parallelism(spark):

@@ -23,8 +23,22 @@ def g(spark):
     gr.unpersist()
 
 
-@pytest.mark.parametrize("impl", ["csr", "join"])
-def test_resume_equals_continuous(spark, g, tmp_path, impl):
+@pytest.fixture(scope="module")
+def g_sink(spark):
+    # "6" is a sink: uniform redistribution moves mass every step, and a
+    # resumed join fit takes its first sink mass from the resumed ranks
+    gr = Graph.from_edges(make_edges(spark, ROWS + [("5", "6")]))
+    yield gr
+    gr.unpersist()
+
+
+@pytest.mark.parametrize(
+    "impl, graph",
+    [("csr", "g"), ("join", "g"), ("csr", "g_sink"), ("join", "g_sink")],
+    ids=["csr", "join", "csr-sink", "join-sink"],
+)
+def test_resume_equals_continuous(spark, request, tmp_path, impl, graph):
+    g = request.getfixturevalue(graph)
     ck = str(tmp_path / impl)
     cont = scores_dict(
         pagerank(g, sink="uniform", tol=1e-10, max_iterations=150, impl=impl).scores
@@ -50,8 +64,9 @@ def test_resume_equals_continuous(spark, g, tmp_path, impl):
     # metrics carry the pre-interrupt history and continue past the
     # resume point with no reset to 0 — evidence the run resumed
     # mid-convergence. Iteration numbers advance by the kernel's chain
-    # stride (1 for csr; up to 3 chained lazy steps per job for the
-    # uniform-sink join kernel), so assert the invariants, not a stride.
+    # stride (1 for csr and for the join kernel with sinks; chained lazy
+    # steps per job for the sink-free join kernel), so assert the
+    # invariants, not a stride.
     iters = [m["iteration"] for m in resumed.metrics]
     assert all(a < b for a, b in zip(iters, iters[1:]))
     assert iters[0] <= 6 and 6 in iters

@@ -58,6 +58,21 @@ def test_harmonic_explicit_sources_scaled(spark):
     g.unpersist()
 
 
+@pytest.mark.parametrize("cost", ["unit", "weight"])
+def test_harmonic_zero_depth_scores_zero(spark, cost):
+    # no round runs: every vertex, sources included, scores 0.0
+    g = Graph.from_edges(
+        make_edges(spark, [("a", "b", 2.0), ("b", "c", 1.0)], weights=True),
+        weight="weight",
+    )
+    zeros = {"a": 0.0, "b": 0.0, "c": 0.0}
+    assert scores_dict(harmonic(g, "in", max_depth=0, cost=cost)) == zeros
+    assert scores_dict(
+        harmonic(g, "total", max_depth=0, cost=cost, sources=["a"])
+    ) == zeros
+    g.unpersist()
+
+
 def pairwise(spark, rows):
     return spark.createDataFrame(
         [(w, l, float(x), 0) for w, l, x in rows],

@@ -22,8 +22,10 @@ from pyspark.sql import functions as F
 
 from conftest import job_ids_of
 
+from propagon_spark.graph.birank import birank
 from propagon_spark.graph.components import connected_components
 from propagon_spark.graph.core import Graph
+from propagon_spark.graph.harmonic import harmonic
 from propagon_spark.graph.hits import hits
 from propagon_spark.graph.katz import katz
 from propagon_spark.graph.kcore import kcore
@@ -198,6 +200,26 @@ def _stage_names_of(spark, fn) -> list[str]:
     return names
 
 
+def test_birank_sweep_gathers_p_once(spark, monkeypatch):
+    # a sweep reads the refreshed p twice (output + u gather): both
+    # reads share one exchange
+    from propagon_spark.graph import birank as birank_mod
+
+    plans = []
+    real = birank_mod.fixpoint
+
+    def spy(state, step, *args, **kw):
+        plans.append(_plan(step(state)))
+        return real(state, step, *args, **kw)
+
+    monkeypatch.setattr(birank_mod, "fixpoint", spy)
+    e = spark.createDataFrame(
+        [(f"s{i % 7}", f"d{i % 5}") for i in range(40)], "src string, dst string"
+    )
+    birank(e, iterations=1)
+    assert "ReusedExchange" in plans[0]
+
+
 def test_from_edges_runs_no_local_checkpoint_below_bound(spark):
     # below the driver-state bound the vocab is sorted on the driver and
     # created from Arrow: no bucket sample, window or localCheckpoint job
@@ -226,8 +248,19 @@ def _loop_rows():
                    if a != b})
 
 
-def _loop_inputs(spark):
-    rows = _loop_rows()
+#: kernels whose turn count the input's depth bounds: they run on a
+#: directed path, whose relaxation takes one round per hop and whose
+#: last vertex is a sink
+_PATH_KERNELS = ("harmonic_unit", "harmonic_weight", "birank", "pagerank_join")
+
+
+def _loop_inputs(spark, kernel):
+    if kernel in _PATH_KERNELS:
+        rows = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(39)]
+        # a sink, so that pagerank_join's uniform policy redistributes
+        assert {b for _, b in rows} - {a for a, _ in rows}
+    else:
+        rows = _loop_rows()
     g = Graph.from_edges(
         spark.createDataFrame(rows, "src string, dst string")
     )
@@ -260,8 +293,14 @@ _LOOPS = {
     "components": lambda g, pw, t: connected_components(g),
     "kcore_dataflow": lambda g, pw, t: _dataflow(kcore, g),
     "filter_min_count": lambda g, pw, t: filter_min_count(pw, 9),
+    "harmonic_unit": lambda g, pw, t: harmonic(g, max_depth=t),
+    "harmonic_weight": lambda g, pw, t: harmonic(g, max_depth=t, cost="weight"),
+    "birank": lambda g, pw, t: birank(
+        pw.select(F.col("winner").alias("src"), F.col("loser").alias("dst")),
+        iterations=t).dst_scores,
     # not a fixpoint loop: the join PageRank's hand loop, which releases
-    # each superseded ranks leaf and each turn's gather / chain leaf
+    # each superseded ranks leaf; with redistributing sinks a step is
+    # one job, its sink mass observed on the previous step's job
     "pagerank_join": lambda g, pw, t: pagerank(
         g, impl="join", sink="uniform", iterations=t).scores,
 }
@@ -270,7 +309,8 @@ _LOOPS = {
 #: broadcast normalizer jobs next to the materializing one
 _TURN_JOBS = {
     "katz": 1, "leader_rank": 1, "hits": 3, "rank_centrality": 1,
-    "random_walker": 1,
+    "random_walker": 1, "harmonic_unit": 1, "harmonic_weight": 1,
+    "birank": 1, "pagerank_join": 1,
 }
 
 
@@ -279,7 +319,7 @@ def test_fixpoint_runs_one_materializing_job_per_turn(spark, kernel):
     # the stop statistics ride the job that materializes the state: no
     # separate .agg().first() or count() job per turn
     run = _LOOPS[kernel]
-    g, pw = _loop_inputs(spark)
+    g, pw = _loop_inputs(spark, kernel)
     try:
         jobs = {t: len(job_ids_of(spark, lambda t=t: run(g, pw, t).collect()))
                 for t in (3, 6)}
@@ -296,7 +336,7 @@ def test_fixpoint_keeps_only_the_final_state(spark, kernel):
     # counted, since the context cleaner may free older ones meanwhile;
     # the results are held, so it cannot free a final state.
     run = _LOOPS[kernel]
-    g, pw = _loop_inputs(spark)
+    g, pw = _loop_inputs(spark, kernel)
     jsc = spark.sparkContext._jsc
 
     def persisted():
