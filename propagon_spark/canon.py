@@ -15,12 +15,17 @@ katz            no     yes      kept        directed    (katz.rs:72-76)
 lpa/triangles   yes    no       dropped     undirected  (new; SURVEY §2.4-2.5)
 ==============  =====  =======  ==========  ==========
 
-All helpers operate on id-typed edge frames ``(src: long, dst: long
-[, weight: double])`` and stay in pure Catalyst expressions.
+The frame helpers operate on id-typed edge frames ``(src: long, dst: long
+[, weight: double])`` and stay in pure Catalyst expressions. The three
+forms a Graph keeps as edge-block stores also have a numpy twin over
+driver-held id columns (``*_pairs``), which returns the same set of
+``(src, dst)`` pairs as its frame helper; a Graph at or below the edge
+bound cuts its stores with them (``Graph.store``).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,3 +97,27 @@ def reverse_sinks(edges: DataFrame) -> DataFrame:
         .distinct()
     )
     return edges.unionAll(sink_in)
+
+
+def unique_pairs(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`dedup_edges` of id columns: the distinct ``(src, dst)``
+    pairs, sorted by ``(src, dst)``."""
+    order = np.lexsort((dst, src))
+    s, d = src[order], dst[order]
+    keep = np.ones(len(s), bool)
+    keep[1:] = (s[1:] != s[:-1]) | (d[1:] != d[:-1])
+    return s[keep], d[keep]
+
+
+def reverse_sinks_pairs(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`reverse_sinks` of :func:`dedup_edges`, on id columns."""
+    s, d = unique_pairs(src, dst)
+    sink_in = ~np.isin(d, s)
+    return np.concatenate([s, d[sink_in]]), np.concatenate([d, s[sink_in]])
+
+
+def undirected_pairs(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`undirected_adjacency` of id columns."""
+    loop = src == dst
+    s, d = src[~loop], dst[~loop]
+    return unique_pairs(np.concatenate([s, d]), np.concatenate([d, s]))

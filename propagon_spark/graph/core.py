@@ -13,9 +13,14 @@ Scale notes:
   partitioning instead of re-shuffling per iteration;
 - vocab joins are broadcast when small, shuffle-hash otherwise (Catalyst /
   AQE decide from stats);
-- edges reach the driver only as a small Graph's stores: at or below
-  ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` edge rows a store is one
-  Arrow collect of its canonical form, held in driver memory.
+- a small Graph lives on the driver, from build to store. An input of at
+  most ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` rows is collected
+  once with Arrow and interned there (:meth:`Graph.from_edges`): the
+  Graph holds its id-typed edge columns (:meth:`Graph.driver_edges`),
+  and its edge frame is created from them and cached by the first
+  dataflow kernel that reads it. Any Graph at or below that many edge
+  rows cuts each store form in numpy from those columns; one that was
+  not built on the driver collects its edge frame once for them.
 
 Below the driver-state bound (``plans.blocks.DRIVER_STATE_MAX_VERTICES``)
 a Graph also holds its ``names`` on the driver, one Arrow column in id
@@ -27,9 +32,11 @@ through a vocab join + ``orderBy``. A Graph owns one edge-block store
 per canonical form a kernel asks for (:meth:`Graph.store`:
 ``"undirected"`` for k-core and LPA, ``"out"`` / ``"out_reverse"`` for
 CSR PageRank), built on first use, at most once per Graph, on the
-driver or in worker shards (see above). Stores and
-derived frames (:meth:`Graph.cached`) live until :meth:`Graph.unpersist`;
-a Graph that is garbage-collected first still deletes its stores' files.
+driver or in worker shards (see above). Stores, the driver-held edge
+columns and derived frames (:meth:`Graph.cached`) live until
+:meth:`Graph.unpersist`; a Graph that is garbage-collected first still
+deletes its stores' files. A copy made with ``dataclasses.replace(g,
+_owned={})`` (bootstrap replicates, bench repeats) shares none of them.
 """
 
 from __future__ import annotations
@@ -47,16 +54,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
-from propagon_spark.canon import dedup_edges, reverse_sinks, undirected_adjacency
+from propagon_spark import canon
 from propagon_spark.errors import EmptyDatasetError
-from propagon_spark.ids import _build_vocab
+from propagon_spark.ids import _build_vocab, driver_vocab
 from propagon_spark.plans import blocks
 
-#: the canonical forms :meth:`Graph.store` builds, from the id-typed edges
-_FORMS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "undirected": undirected_adjacency,
-    "out": dedup_edges,
-    "out_reverse": lambda e: reverse_sinks(dedup_edges(e)),
+#: the canonical forms :meth:`Graph.store` builds: each as a plan over
+#: the edge frame (worker stores) and as its numpy twin over the
+#: driver-held id columns (driver stores)
+_FORMS: dict[str, tuple[Callable[[DataFrame], DataFrame], Callable]] = {
+    "undirected": (canon.undirected_adjacency, canon.undirected_pairs),
+    "out": (canon.dedup_edges, canon.unique_pairs),
+    "out_reverse": (lambda e: canon.reverse_sinks(canon.dedup_edges(e)),
+                    canon.reverse_sinks_pairs),
 }
 
 
@@ -79,8 +89,8 @@ class Graph:
     num_vertices: int
     num_edge_rows: int
     names: pa.ChunkedArray | pa.Array | None = None
-    #: what :meth:`unpersist` releases: the edge frame, the stores and
-    #: the derived frames, by key
+    #: what :meth:`unpersist` releases: the edge frame, the driver-held
+    #: edge columns, the stores and the derived frames, by key
     _owned: dict[str, object] = field(default_factory=dict)
     #: ids are their own names (:meth:`from_dense_ids`)
     _dense: bool = False
@@ -107,8 +117,20 @@ class Graph:
 
         ``src``/``dst`` may be any column type; ``weight`` defaults to 1.0
         when absent (reference reader default,
-        ``propagon-cli/src/io.rs:117-122``). Vertices are all edge
-        endpoints, matching the reference where only pushed names exist.
+        ``propagon-cli/src/io.rs:117-122``). Vertices are all non-null
+        edge endpoints, matching the reference where only pushed names
+        exist; a row with a null endpoint is dropped after its other
+        name joined the vocab.
+
+        The normalized input is persisted and probed with one collect of
+        at most ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS + 1`` rows. If
+        the probe holds the whole input, it is interned on the driver
+        (:func:`ids.driver_vocab` ranks the names, ``pc.index_in`` maps
+        them to ids) and the Graph holds its id-typed edge columns; its
+        vocab and edge frames are created from Arrow, and the edge frame
+        is cached lazily. Otherwise the vocab is built with Spark, the
+        names are interned by two joins and the edge frame is cached
+        eagerly. Both give the same ids, names and edge rows.
         """
         w = (
             F.col(weight).cast("double")
@@ -120,18 +142,29 @@ class Graph:
             F.col(dst).cast("string").alias("dst_name"),
             w.alias("weight"),
         )
-        # The input plan executes TWICE below — once under the vocab's
-        # name-distinct scan, once under the interning join. For a plain
-        # table scan that's neutral, but callers routinely pass expensive
+        # The input plan executes more than once below: under the probe,
+        # and above the bound under the vocab's name-distinct scan and
+        # the interning join. Callers routinely pass expensive
         # derivations (the co-commit pair aggregation: two shuffles over
-        # the repo table), so materialize the normalized frame
-        # once and release it as soon as the interned edges are counted.
+        # the repo table), so materialize the normalized frame once and
+        # release it as soon as the Graph is built.
         raw.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-
-        names = raw.select(F.col("src_name").alias("name")).unionAll(
-            raw.select(F.col("dst_name").alias("name"))
-        )
+        if num_partitions is None:
+            num_partitions = int(
+                edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+            )
         try:
+            # a limit, not a count: below the bound the probe is the
+            # whole input, and above it the probe's scan fills the cache
+            # the joins read
+            bound = blocks.DRIVER_STORE_MAX_EDGE_ROWS
+            probe = raw.limit(bound + 1).toArrow()
+            if probe.num_rows <= bound:
+                return cls._from_arrow(raw, probe, num_partitions)
+
+            names = raw.select(F.col("src_name").alias("name")).unionAll(
+                raw.select(F.col("dst_name").alias("name"))
+            )
             vocab, n, names = _build_vocab(names)  # flat leaf (see ids.py)
             if n == 0:
                 raise EmptyDatasetError("empty edge dataset")
@@ -147,10 +180,6 @@ class Graph:
                 .join(dv, "dst_name")
                 .select("src", "dst", "weight")
             )
-            if num_partitions is None:
-                num_partitions = int(
-                    edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-                )
             # One stable hash partitioning by src, reused by every scatter
             # join in the iterative kernels (kills one Exchange per
             # iteration).
@@ -164,6 +193,38 @@ class Graph:
             raw.unpersist(blocking=False)
 
         return cls(vocab, e, n, m, names, {"edges": e})
+
+    @classmethod
+    def _from_arrow(cls, raw: DataFrame, probe: pa.Table,
+                    num_partitions: int) -> "Graph":
+        """:meth:`from_edges` of ``raw``, the whole of which is
+        ``probe``: interned on the driver."""
+        src, dst = probe.column("src_name"), probe.column("dst_name")
+        both = pa.chunked_array(src.chunks + dst.chunks, src.type)
+        vocab, names = driver_vocab(raw.sparkSession, pc.unique(both).drop_null())
+        n = len(names)
+        if n == 0:
+            raise EmptyDatasetError("empty edge dataset")
+        held = pa.table({
+            "src": pc.index_in(src, value_set=names).cast(pa.int64()),
+            "dst": pc.index_in(dst, value_set=names).cast(pa.int64()),
+            "weight": probe.column("weight"),
+        })
+        # the inner joins' semantics: a null endpoint has no id
+        held = held.filter(pc.and_(pc.is_valid(held["src"]),
+                                   pc.is_valid(held["dst"]))).combine_chunks()
+        schema = StructType([StructField("src", LongType()),
+                             StructField("dst", LongType()),
+                             raw.schema["weight"]])
+        e = raw.sparkSession.createDataFrame(held, schema)
+        # the same src partitioning and cache as the joined frame, filled
+        # by the first kernel that scans it; the driver stores never do
+        e = e.repartition(num_partitions, "src").persist(
+            StorageLevel.MEMORY_AND_DISK_DESER)
+        if n > blocks.DRIVER_STATE_MAX_VERTICES:
+            names = None
+        return cls(vocab, e, n, held.num_rows, names,
+                   {"edges": e, "driver_edges": held})
 
     @classmethod
     def from_dense_ids(
@@ -234,9 +295,31 @@ class Graph:
     def store(self, form: str) -> blocks.EdgeBlocks:
         """The edge-block store of canonical ``form`` (``"undirected"``,
         ``"out"`` or ``"out_reverse"``), built on first use and kept
-        until :meth:`unpersist`."""
-        return self._own(form, lambda: blocks.build(
-            _FORMS[form](self.edges), self.num_vertices, self.num_edge_rows))
+        until :meth:`unpersist`: cut in numpy from :meth:`driver_edges`
+        at or below the edge bound, written as worker shards above it."""
+        plan, cut = _FORMS[form]
+
+        def build():
+            held = self.driver_edges()
+            if held is None:
+                return blocks.build(plan(self.edges), self.num_vertices)
+            src, dst = (held.column(c).to_numpy() for c in ("src", "dst"))
+            return blocks.DriverBlocks(self.num_vertices, *cut(src, dst))
+
+        return self._own(form, build)
+
+    def driver_edges(self) -> pa.Table | None:
+        """The id-typed ``(src, dst, weight)`` edge columns, held on the
+        driver at or below ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS``
+        edge rows (read at call time); None above it. A Graph interned on
+        the driver holds them from its build; any other (a dense-id
+        Graph, a bootstrap replicate, a copy with its own ``_owned``)
+        collects :attr:`edges` once, on first use. Kept until
+        :meth:`unpersist`."""
+        if self.num_edge_rows > blocks.DRIVER_STORE_MAX_EDGE_ROWS:
+            return None
+        return self._own("driver_edges", lambda: self.edges.select(
+            "src", "dst", "weight").toArrow().combine_chunks())
 
     def cached(self, key: str, frame: Callable[[], DataFrame]) -> DataFrame:
         """``frame()`` persisted and materialized on first use, and kept
@@ -296,8 +379,9 @@ def _release(owned: dict[str, object], kind: type) -> None:
     for key, obj in list(owned.items()):
         if isinstance(obj, kind):
             del owned[key]
-            with suppress(Exception):
-                obj.unpersist()
+            if hasattr(obj, "unpersist"):  # not the driver-held columns
+                with suppress(Exception):
+                    obj.unpersist()
 
 
 def sorted_scores(scored: DataFrame) -> DataFrame:

@@ -28,7 +28,9 @@ every driver-held structure in the engine shares
   which is exactly Spark's ``UTF8_BINARY`` string order (and Python's
   ``sorted(key=str.encode)``), so the ids equal the distributed path's.
   Arrow rather than a numpy object array: a 2M-name sort peaked at about
-  half the driver RSS.
+  half the driver RSS. The sort and numbering are :func:`driver_vocab`,
+  which ``Graph.from_edges`` also calls when it interns a small edge
+  list on the driver (``graph/core.py``).
 - **Above it**, no global sort bottleneck: bucket names by
   **driver-fixed range split points** (computed once from a seeded
   sample and inlined as literals), count per bucket, broadcast the
@@ -64,6 +66,20 @@ def build_vocab(names: DataFrame, num_buckets: int | None = None) -> DataFrame:
     return _build_vocab(names, num_buckets)[0]
 
 
+def driver_vocab(
+    spark, names: pa.ChunkedArray | pa.Array
+) -> tuple[DataFrame, pa.ChunkedArray | pa.Array]:
+    """Rank distinct, non-null ``names`` on the driver: the ``(name, id)``
+    vocab frame, created from Arrow, and the names in id order. Arrow
+    sorts strings by the unsigned bytes of their UTF-8 encoding, which is
+    Spark's ``UTF8_BINARY`` order, so the ids are the distributed path's.
+    The one rank rule of both driver-side interners
+    (:func:`_build_vocab` and ``Graph.from_edges`` below the edge bound)."""
+    names = names.take(pc.sort_indices(names))
+    table = pa.table({"name": names, "id": np.arange(len(names), dtype=np.int64)})
+    return spark.createDataFrame(table, "name string, id long"), names
+
+
 def _build_vocab(
     names: DataFrame, num_buckets: int | None = None
 ) -> tuple[DataFrame, int, pa.ChunkedArray | None]:
@@ -82,9 +98,8 @@ def _build_vocab(
     if n <= blocks.DRIVER_STATE_MAX_VERTICES:
         col = d.toArrow().column("name")
         d.unpersist()
-        col = col.take(pc.sort_indices(col))
-        table = pa.table({"name": col, "id": np.arange(n, dtype=np.int64)})
-        return spark.createDataFrame(table, "name string, id long"), n, col
+        vocab, col = driver_vocab(spark, col)
+        return vocab, n, col
 
     # driver-fixed split points from a seeded sample (deterministic for
     # the rest of this build; ids don't depend on the choice)

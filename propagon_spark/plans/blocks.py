@@ -8,21 +8,24 @@ once per Graph, and kept until ``Graph.unpersist()`` closes it. A round
 (``EdgeBlocks.gather(kernel, state, dtype)``) runs one per-bucket numpy
 kernel over ``(src, dst_local)`` columns and returns the n-vector.
 
-Placement. :func:`build` decides it once per store, from the Graph's
-``num_edge_rows`` against :data:`DRIVER_STORE_MAX_EDGE_ROWS`:
+Placement. ``Graph.store`` decides it once per store, from the Graph's
+``num_edge_rows`` against :data:`DRIVER_STORE_MAX_EDGE_ROWS`, read at
+call time:
 
 - **Driver** (at or below the bound, :class:`DriverBlocks`): the form is
-  collected once with ``toArrow()`` and held as ONE bucket
-  (``nblocks = 1``, ``dst_local = dst``) in the store's id dtype; its
-  ``src_degree`` is an ``np.bincount``. A round calls the kernel in the
-  driver process: no broadcast, no Spark job, no shard file, no Python
-  worker. Driver bytes at the bound: a form has at most 2·10⁵ rows, held
-  as 8 B/edge of int32 columns (1.6 MB) plus the 8 B/vertex degree
-  vector. The collect's Arrow batches (21 of them at 2·10⁵ rows) are
-  another 8 B/edge while they are copied into the contiguous columns:
-  a 16 B/edge (3.2 MB) peak.
-- **Workers** (above the bound, :class:`EdgeBlocks`): worker-written
-  shard files, one Python-worker job per round, described below.
+  cut in numpy (``canon.*_pairs``) from the id columns the Graph holds
+  on the driver (``Graph.driver_edges``), with no Spark job, and held as
+  ONE bucket (``nblocks = 1``, ``dst_local = dst``) in the store's id
+  dtype; its ``src_degree`` is an ``np.bincount``. A round calls the
+  kernel in the driver process: no broadcast, no Spark job, no shard
+  file, no Python worker. Driver bytes at the bound: a form has at most
+  2·10⁵ rows, held as 8 B/edge of int32 columns (1.6 MB) plus the
+  8 B/vertex degree vector. The Graph's own columns (int64 ids and a
+  float64 weight, 24 B/edge: 2.4 MB at 10⁵ rows) are held once for all
+  of its forms.
+- **Workers** (above the bound, :class:`EdgeBlocks`, :func:`build`):
+  worker-written shard files, one Python-worker job per round, described
+  below.
 
 The bound is where a driver round stops winning. One round per kernel
 on a seeded random Graph (n = rows/10, few reciprocal edges, so the
@@ -111,6 +114,8 @@ DRIVER_STATE_MAX_VERTICES = 10_000_000
 #: Largest Graph, in ``num_edge_rows``, whose stores are held on the
 #: driver (:class:`DriverBlocks`); a canonical form has at most twice
 #: as many rows. Set by the round timings in the module docstring.
+#: ``Graph.from_edges`` also interns an input of at most this many rows
+#: on the driver.
 DRIVER_STORE_MAX_EDGE_ROWS = 100_000
 
 #: worker-process block cache: {(store_token, block_file): (src, dst)}.
@@ -501,12 +506,12 @@ class DriverBlocks(EdgeBlocks):
     def __init__(self, n: int, src: np.ndarray, dst: np.ndarray):
         self.n = n
         self.nblocks = 1
-        self.dtype = src.dtype
+        self.dtype = np.int32 if n <= 2**31 - 1 else np.int64
         self.src_degree = np.bincount(src, minlength=n)
         self.edge_rows = len(src)
         self.bcast_s = 0.0
         self.gather_s = 0.0
-        self._bucket = [(src, dst)]
+        self._bucket = [(src.astype(self.dtype), dst.astype(self.dtype))]
 
     def gather(self, kernel: Kernel, state, dtype) -> np.ndarray:
         t0 = time.monotonic()
@@ -518,13 +523,11 @@ class DriverBlocks(EdgeBlocks):
         self._bucket = []
 
 
-def build(edges: DataFrame, n: int, graph_rows: int) -> EdgeBlocks:
-    """Build the store of ``edges`` (id-typed ``(src, dst)`` over dense
-    ids 0..n-1), a canonical form of a Graph of ``graph_rows`` edge rows.
-
-    At or below :data:`DRIVER_STORE_MAX_EDGE_ROWS` the form is collected
-    once with ``toArrow()`` into a :class:`DriverBlocks`. Above it, it
-    is written as dst-bucketed blocks under the session checkpoint dir.
+def build(edges: DataFrame, n: int) -> EdgeBlocks:
+    """Build the worker store of ``edges`` (id-typed ``(src, dst)`` over
+    dense ids 0..n-1), a canonical form of a Graph above
+    :data:`DRIVER_STORE_MAX_EDGE_ROWS`: dst-bucketed blocks under the
+    session checkpoint dir.
 
     Blocks hold ONLY (src, dst) — int32 below 2^31 vertices, 8
     bytes/edge; anything per-vertex (PageRank's inverse out-degree,
@@ -532,10 +535,6 @@ def build(edges: DataFrame, n: int, graph_rows: int) -> EdgeBlocks:
     read once on the worker-side shard path; the portable path persists
     it for its two reads (per-src counts + write)."""
     ext = "i32" if n <= 2**31 - 1 else "i64"
-    if graph_rows <= DRIVER_STORE_MAX_EDGE_ROWS:
-        id_type = "int" if ext == "i32" else "long"
-        t = edges.select(F.col("src").cast(id_type), F.col("dst").cast(id_type)).toArrow()
-        return DriverBlocks(n, t.column("src").to_numpy(), t.column("dst").to_numpy())
     spark = edges.sparkSession
     sc = spark.sparkContext
     # a path all executors can read — on a cluster that's HDFS/S3 or a

@@ -240,7 +240,7 @@ class StreamingPageRankRefit:
         self.periods.append(
             {
                 "period": int(batch_id),
-                "edge_rows": g.edges.count(),
+                "edge_rows": g.num_edge_rows,
                 "iterations": res.iterations,
                 "converged": res.converged,
             }

@@ -264,6 +264,10 @@ def _loop_inputs(spark, kernel):
     g = Graph.from_edges(
         spark.createDataFrame(rows, "src string, dst string")
     )
+    # a small Graph's edge cache is filled by the first kernel that
+    # scans it; fill it here, so that what a kernel call leaves
+    # persisted counts only the call's own frames
+    g.edges.count()
     pairwise = spark.createDataFrame(
         [(a, b, 1.0, 0) for a, b in rows],
         "winner string, loser string, weight double, period int",

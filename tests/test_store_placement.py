@@ -1,18 +1,25 @@
-"""Where a Graph's edge-block stores live: on the driver at or below
-``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` Graph edge rows, in worker
-shard files above it. Both placements run the same kernels."""
+"""Where a Graph lives: built on the driver from an input of at most
+``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` rows, with Spark above it;
+its edge-block stores on the driver at or below that many Graph edge
+rows, in worker shard files above it. Both placements build the same
+Graph and run the same kernels."""
 
 import gc
 import os
 import random
 import weakref
+from collections import Counter
 
+import pytest
 from conftest import block_dirs, job_ids_of, make_edges, place_stores, scores_dict
 
+from propagon_spark import canon
+from propagon_spark.errors import EmptyDatasetError
 from propagon_spark.graph import Graph
 from propagon_spark.graph import kcore as kcore_mod
 from propagon_spark.graph import lpa as lpa_mod
 from propagon_spark.graph import pagerank_csr
+from propagon_spark.graph.bootstrap import bootstrap
 from propagon_spark.graph.kcore import kcore
 from propagon_spark.graph.lpa import label_propagation
 from propagon_spark.graph.pagerank import pagerank
@@ -112,20 +119,23 @@ def test_placement_flips_at_the_bound(spark, monkeypatch):
 
 def test_driver_copy_freed_with_its_graph(spark):
     # Graph.unpersist() and garbage collection of the Graph both drop the
-    # driver-held columns and degree vector
+    # driver-held store columns and degree vector, and the Graph's own
+    # held edge columns
     rows = _random_rows()
 
     def held(g):
         store = g.store("undirected")
         assert isinstance(store, blocks.DriverBlocks)
         (src, dst), = store._bucket
-        return [weakref.ref(a) for a in (src, dst, store.src_degree)]
+        edges = g.driver_edges()
+        assert edges.num_rows == g.num_edge_rows
+        return [weakref.ref(a) for a in (src, dst, store.src_degree, edges)]
 
     g = Graph.from_edges(make_edges(spark, rows))
     refs = held(g)
     g.unpersist()
     gc.collect()
-    assert [r() for r in refs] == [None] * 3
+    assert [r() for r in refs] == [None] * 4
 
     g = Graph.from_edges(make_edges(spark, rows))
     kcore(g).collect()
@@ -133,5 +143,132 @@ def test_driver_copy_freed_with_its_graph(spark):
     edges = g.edges
     del g
     gc.collect()
-    assert [r() for r in refs] == [None] * 3
+    assert [r() for r in refs] == [None] * 4
     edges.unpersist()
+
+
+def _build_inputs(spark):
+    # a null endpoint on either side (its other name stays a vertex, the
+    # edge goes), a self-loop, weighted parallel edges, non-ASCII names
+    # ("ß" sorts before "é" by UTF-8 bytes); then integer-typed ids,
+    # which are interned as strings ("10" < "100" < "9")
+    named = spark.createDataFrame(
+        [("b", "a", 1.0), ("a", "b", 2.0), ("a", "b", 2.0), ("a", "b", 0.5),
+         ("c", "c", 1.0), (None, "d", 1.0), ("e", None, 3.0),
+         ("é", "ß", 1.0), ("ß", "a", None)],
+        "src string, dst string, weight double")
+    ints = spark.createDataFrame(
+        [(9, 10, 1.0), (10, 100, 1.0), (100, 9, 2.0), (100, 9, 2.0),
+         (7, 7, 1.0), (None, 8, 1.0)],
+        "src long, dst long, weight double")
+    return {"named": named, "ints": ints}
+
+
+@pytest.mark.parametrize("frame", ["named", "ints"])
+def test_build_paths_agree(spark, monkeypatch, frame):
+    df = _build_inputs(spark)[frame]
+    got = {}
+    for placement in ("driver", "workers"):
+        place_stores(monkeypatch, placement)
+        g = Graph.from_edges(df, weight="weight")
+        try:
+            assert ("driver_edges" in g._owned) == (placement == "driver")
+            got[placement] = (
+                sorted(tuple(r) for r in g.vocab.collect()),
+                g.names.to_pylist(),
+                g.num_vertices,
+                g.num_edge_rows,
+                Counter(tuple(r) for r in g.edges.collect()),
+            )
+        finally:
+            g.unpersist()
+        monkeypatch.undo()
+    assert got["driver"] == got["workers"]
+    vocab, names, n, m, edges = got["driver"]
+    endpoints = {str(v) for r in df.collect() for v in r[:2] if v is not None}
+    assert names == sorted(endpoints, key=str.encode)
+    assert vocab == [(name, i) for i, name in enumerate(names)]
+    assert n == len(names)
+    # every row with two endpoints, parallel edges and the loop kept
+    assert m == sum(edges.values()) == sum(
+        r[0] is not None and r[1] is not None for r in df.collect())
+
+
+@pytest.mark.parametrize("rows", [[], [(None, None)]], ids=["empty", "all_null"])
+def test_build_paths_reject_no_vertices(spark, monkeypatch, rows, store_placement):
+    # with the bound forced to 0, an empty input still probes to 0 rows
+    # and is interned on the driver; the all-null row takes the Spark path
+    df = spark.createDataFrame(rows, "src string, dst string")
+    with pytest.raises(EmptyDatasetError):
+        Graph.from_edges(df)
+
+
+def test_small_build_runs_only_the_probe(spark):
+    # below the bound a build over a local input runs one job, the
+    # limit collect of the normalized input; the first k-core, LPA and
+    # CSR PageRank on the Graph then run none and write no block dir
+    dirs = block_dirs(spark)
+    built = []
+    assert len(job_ids_of(spark, lambda: built.append(
+        Graph.from_edges(make_edges(spark, _random_rows()))))) == 1
+    g, = built
+    try:
+        assert len(job_ids_of(spark, lambda: (
+            kcore(g).collect(), label_propagation(g).collect(),
+            pagerank(g, impl="csr", sink="uniform", iterations=5).scores.collect(),
+            pagerank(g, impl="csr", sink="reverse", iterations=5).scores.collect(),
+        ))) == 0
+        assert block_dirs(spark) == dirs
+    finally:
+        g.unpersist()
+
+
+def test_dense_id_stores_collect_edges_once(spark):
+    # a Graph not built on the driver collects its edge frame once for
+    # all of its driver stores; each store is its canon.py form as a set
+    rows = [(0, 1), (0, 1), (1, 2), (2, 0), (3, 4), (4, 4), (5, 3), (6, 5)]
+    g = Graph.from_dense_ids(spark.createDataFrame(rows, "src long, dst long"))
+    plans = {
+        "out": canon.dedup_edges,
+        "out_reverse": lambda e: canon.reverse_sinks(canon.dedup_edges(e)),
+        "undirected": canon.undirected_adjacency,
+    }
+    try:
+        stores = {}
+        assert len(job_ids_of(spark, lambda: stores.update(
+            (form, g.store(form)) for form in plans))) == 1
+        for form, plan in plans.items():
+            (src, dst), = stores[form]._bucket
+            pairs = list(zip(src.tolist(), dst.tolist()))
+            assert len(pairs) == len(set(pairs))
+            assert set(pairs) == {tuple(r) for r in plan(g.edges).collect()}, form
+    finally:
+        g.unpersist()
+
+
+def test_bootstrap_replicates_cut_their_own_stores(spark, monkeypatch):
+    # each replicate Graph shares g's vocab but not its driver-held
+    # edges: an exact bootstrap of a CSR PageRank on a driver-built g
+    # equals the same bootstrap on a Spark-built g with worker stores
+    rows = _random_rows()
+
+    def fit(rg):
+        return pagerank(rg, impl="csr", sink="uniform", iterations=20).scores
+
+    out = {}
+    for placement in ("driver", "workers"):
+        place_stores(monkeypatch, placement)
+        g = Graph.from_edges(make_edges(spark, rows))
+        try:
+            res = bootstrap(g, fit, replicates=3, seed=5, method="exact")
+            out[placement] = {r["name"]: r for r in res.intervals.collect()}
+        finally:
+            g.unpersist()
+        monkeypatch.undo()
+    drv, wrk = out["driver"], out["workers"]
+    assert drv.keys() == wrk.keys()
+    for name in drv:
+        for col in ("score_mean", "score_lo", "score_hi"):
+            assert abs(drv[name][col] - wrk[name][col]) < 1e-12, (name, col)
+        for col in ("rank_lo", "rank_hi"):
+            assert drv[name][col] == wrk[name][col], (name, col)
