@@ -68,8 +68,8 @@ if os.path.exists(_data + ".json"):
                              weight="weight",
                              num_vertices=meta["num_vertices"])
 elif sf_dir == "synth-wide":
-    # PAST-THE-CSR-CAP input: ~12M file vertices (> csr_max_vertices =
-    # 10M, so only the join kernel can run it) at web-link density
+    # PAST-THE-CSR-CAP input: ~12M file vertices (> the store kernels'
+    # DRIVER_STATE_MAX_VERTICES = 10M, so only the join kernel can run it) at web-link density
     # E/V ~ 15 — direct sparse generation, no cross grid
     from propagon_spark.sources.repo_table import synth_repo_table_sparse
 
@@ -82,7 +82,7 @@ elif sf_dir == "synth-huge":
     # FIRST BEYOND-EXTRAPOLATION datapoint (round-4 verdict item 1):
     # ~1.04e8 file vertices / ~5.9e8 directed co-commit edges — an
     # order of magnitude past the 12M-vertex wide input, 10x past
-    # csr_max_vertices. Join kernel only. Sized so a 1-core leg stays
+    # DRIVER_STATE_MAX_VERTICES. Join kernel only. Sized so a 1-core leg stays
     # ~35-40 min at MAXIT=3 (same direct sparse generation as wide).
     from propagon_spark.sources.repo_table import synth_repo_table_sparse
 

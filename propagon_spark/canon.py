@@ -70,7 +70,8 @@ def canonical_undirected(edges: DataFrame) -> DataFrame:
 
 def undirected_adjacency(edges: DataFrame) -> DataFrame:
     """Symmetric, self-loop-free, dedup'd ``(src, dst)`` adjacency,
-    hash-partitioned by ``src`` like ``edges`` (k-core / LPA).
+    hash-partitioned by ``src`` like ``edges`` (components / k-core /
+    LPA; a self-loop never changes a component).
 
     The same set as ``symmetrize(canonical_undirected(edges))`` from ONE
     exchange instead of two: the src clustering of the repartition already

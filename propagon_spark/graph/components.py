@@ -21,28 +21,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from propagon_spark.canon import symmetrize
+from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
+from propagon_spark.plans import blocks
 from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 from propagon_spark.progress import as_progress
-
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
 
 
 def _min_label_fixpoint(g: Graph, progress=None) -> DataFrame:
     """Return (id, label) with label = min vertex id reachable (undirected)."""
     nparts = g.edges.rdd.getNumPartitions()
-    sym = (
-        symmetrize(g.edges.select("src", "dst"))
-        .distinct()
-        .repartition(nparts, "src")
-        .persist(_STORAGE)
-    )
+    # self-loops are dropped: a loop only offers a vertex its own label,
+    # which least(old, ·) below keeps anyway
+    sym = undirected_adjacency(g.edges).persist(blocks.STORAGE)
     sym.count()
 
     def step(labels: DataFrame) -> DataFrame:

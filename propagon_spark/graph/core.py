@@ -52,7 +52,6 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark import canon
 from propagon_spark.errors import EmptyDatasetError
@@ -148,7 +147,7 @@ class Graph:
         # derivations (the co-commit pair aggregation: two shuffles over
         # the repo table), so materialize the normalized frame once and
         # release it as soon as the Graph is built.
-        raw.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        raw.persist(blocks.STORAGE)
         if num_partitions is None:
             num_partitions = int(
                 edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -183,11 +182,7 @@ class Graph:
             # One stable hash partitioning by src, reused by every scatter
             # join in the iterative kernels (kills one Exchange per
             # iteration).
-            e = e.repartition(num_partitions, "src")
-            # deserialized columnar cache — every kernel re-reads this
-            # frame; the serialized level costs ~3.5x per scan at 2e8 rows
-            # (measured)
-            e.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+            e = e.repartition(num_partitions, "src").persist(blocks.STORAGE)
             m = e.count()
         finally:
             raw.unpersist(blocking=False)
@@ -219,8 +214,7 @@ class Graph:
         e = raw.sparkSession.createDataFrame(held, schema)
         # the same src partitioning and cache as the joined frame, filled
         # by the first kernel that scans it; the driver stores never do
-        e = e.repartition(num_partitions, "src").persist(
-            StorageLevel.MEMORY_AND_DISK_DESER)
+        e = e.repartition(num_partitions, "src").persist(blocks.STORAGE)
         if n > blocks.DRIVER_STATE_MAX_VERTICES:
             names = None
         return cls(vocab, e, n, held.num_rows, names,
@@ -260,10 +254,9 @@ class Graph:
             num_partitions = int(
                 spark.conf.get("spark.sql.shuffle.partitions")
             )
-        # same stable src hash partitioning + deserialized cache as
-        # from_edges — kernels rely on both
-        e = e.repartition(num_partitions, "src")
-        e.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        # same stable src hash partitioning + cache as from_edges —
+        # kernels rely on both
+        e = e.repartition(num_partitions, "src").persist(blocks.STORAGE)
         m = e.count()
         if m == 0:
             raise EmptyDatasetError("empty edge dataset")
@@ -326,7 +319,7 @@ class Graph:
         under ``key`` until :meth:`unpersist`."""
 
         def build():
-            df = frame().persist(StorageLevel.MEMORY_AND_DISK_DESER)
+            df = frame().persist(blocks.STORAGE)
             df.count()
             return df
 

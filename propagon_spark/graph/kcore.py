@@ -52,37 +52,30 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
 from propagon_spark.plans import blocks
 from propagon_spark.plans.iterate import fixpoint, materialize
 
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
 _STATE_ROW_BYTES = 24  # Catalyst's row estimate for (src, h): header + 2 longs
 
 
-def kcore(g: Graph, method: str = "hindex") -> DataFrame:
+def kcore(g: Graph) -> DataFrame:
     """Return ``(name, id, coreness)`` ordered (coreness desc, id asc).
 
-    ``method="hindex"`` (default): iterated H-index (Lü, Chen, Ren,
-    Zhang, Zhang & Zhou, *Nature Physics* 2016) — h₀ = degree,
-    h_{n+1}[v] = H-index of {h_n[u] : u ∈ N(v)}; the fixpoint is exactly
-    the coreness. Converges in tens of rounds on real graphs, each round
+    Iterated H-index (Lü, Chen, Ren, Zhang, Zhang & Zhou, *Nature
+    Physics* 2016) — h₀ = degree, h_{n+1}[v] = H-index of
+    {h_n[u] : u ∈ N(v)}; the fixpoint is exactly the coreness.
+    Converges in tens of rounds on real graphs, each round
     one vertex-parallel pass over the edge set (on the edge-block store
     while the vertex state fits the driver, a dataflow join+window above
     that; see the module docstring) — versus a peel cascade's HUNDREDS
     of driver rounds (the sf0.1 full graph cascades ~450 rounds; measured
     86-125 s peel vs ~20 s hindex, same output). Bounded round count ×
     all-parallel rounds is the shape that survives a 1000-executor
-    scale-up. ``"hindex"`` is the only method.
+    scale-up.
     """
-    if method != "hindex":
-        raise ValueError(f"method must be hindex, got {method!r}")
     if g.num_vertices <= blocks.DRIVER_STATE_MAX_VERTICES:
         return _kcore_blocks(g)
     return _kcore_hindex(g)
@@ -153,7 +146,7 @@ def _kcore_hindex(g: Graph) -> DataFrame:
     """Iterated-H-index coreness (see module docstring for the shape).
     The sequence is monotonically non-increasing and lower-bounded by
     the coreness, so an unchanged ``sum(h)`` IS the fixpoint."""
-    sym = undirected_adjacency(g.edges).persist(_STORAGE)
+    sym = undirected_adjacency(g.edges).persist(blocks.STORAGE)
     # h₀ = degree; this job also fills sym's cache
     h, m = materialize(
         sym.groupBy("src").agg(F.count("*").alias("h")),

@@ -37,17 +37,11 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import undirected_adjacency
 from propagon_spark.graph.core import Graph
 from propagon_spark.plans import blocks
 from propagon_spark.plans.iterate import fixpoint, truncate_lineage
-
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
 
 
 def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
@@ -60,7 +54,7 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
     if g.num_vertices <= blocks.DRIVER_STATE_MAX_VERTICES:
         return _lpa_blocks(g, max_rounds)
     nparts = g.edges.rdd.getNumPartitions()
-    sym = undirected_adjacency(g.edges).persist(_STORAGE)
+    sym = undirected_adjacency(g.edges).persist(blocks.STORAGE)
     sym.count()
 
     def step(labels: DataFrame) -> DataFrame:

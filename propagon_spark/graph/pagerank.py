@@ -49,12 +49,11 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import dedup_edges, reverse_sinks
 from propagon_spark.errors import InvalidParameterError, NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
-from propagon_spark.plans.blocks import DRIVER_STATE_MAX_VERTICES
+from propagon_spark.plans import blocks
 from propagon_spark.plans.checkpoint import CheckpointManager
 from propagon_spark.plans.iterate import materialize, release, truncate_lineage
 from propagon_spark.progress import as_progress
@@ -63,11 +62,6 @@ logger = logging.getLogger("propagon_spark.pagerank")
 
 _SINKS = ("none", "uniform", "all", "reverse")
 
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
-
 # Skew guard for the folded dedup (repartition-by-src-then-distinct):
 # probe partition sizes only when a partition above the row floor is even
 # possible, and fall back to dedup-then-repartition when one partition
@@ -75,6 +69,12 @@ _STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
 # so tests can exercise the fallback on small graphs.
 _SKEW_PROBE_MIN_ROWS = 5_000_000
 _SKEW_MAX_RATIO = 4
+
+# Hub salting of the join kernel's scatter join: a source with at least
+# _HUB_MIN_OUT_DEGREE dedup'd out-edges has them spread over _HUB_SALTS
+# join keys.
+_HUB_MIN_OUT_DEGREE = 1_000_000
+_HUB_SALTS = 16
 
 # Join-kernel gather layout (see pagerank()): from this many vertices on,
 # the gather runs as an explicit dst repartition over about
@@ -149,10 +149,7 @@ def pagerank(
     checkpoint_dir: str | None = None,
     run_id: str | None = None,
     resume: bool = False,
-    hub_threshold: int = 1_000_000,
-    hub_salts: int = 16,
     impl: str = "auto",
-    csr_max_vertices: int = DRIVER_STATE_MAX_VERTICES,
     progress=None,
 ) -> PageRankResult:
     """Fit PageRank. ``tol=None`` → fixed ``iterations`` (reference parity
@@ -166,9 +163,9 @@ def pagerank(
     ``impl``: ``"auto"`` picks the CSR-blocked vectorized kernel
     (pagerank_csr.py on the plans/blocks.py edge-block store — distributed
     edge blocks, broadcast vertex state, no per-iteration shuffle) while
-    ``num_vertices <= csr_max_vertices`` (default: the store's
-    ``DRIVER_STATE_MAX_VERTICES``), the pure-dataflow join kernel beyond;
-    force with ``"csr"`` / ``"join"``.
+    ``num_vertices`` is at most ``plans.blocks.DRIVER_STATE_MAX_VERTICES``
+    (read at call time, the bound of every store kernel), the
+    pure-dataflow join kernel beyond; force with ``"csr"`` / ``"join"``.
 
     ``progress``: a :class:`propagon_spark.progress.Progress` or a bare
     ``callable(phase, metrics_row)`` invoked on the driver after every
@@ -185,7 +182,8 @@ def pagerank(
 
     spark = g.spark
     n = g.num_vertices
-    use_csr = impl == "csr" or (impl == "auto" and n <= csr_max_vertices)
+    use_csr = impl == "csr" or (
+        impl == "auto" and n <= blocks.DRIVER_STATE_MAX_VERTICES)
     # validate seeds up front (shared by both kernels)
     seed_ids = None if seeds is None else _seed_ids(g, seeds)
 
@@ -299,7 +297,7 @@ def pagerank(
     # persist the canonicalized frame: the setup passes that follow
     # (out-degrees, scatter build, sink detection) would otherwise each
     # re-run the full-width distinct over the raw edge table
-    edges = edges.persist(_STORAGE)
+    edges = edges.persist(blocks.STORAGE)
 
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     # scatter frame: (src, dst, inv) — inverse out-degree folded in so the
@@ -315,7 +313,7 @@ def pagerank(
     # the whole fit on hub-heavy graphs.
     hub_ids = [
         r["src"]
-        for r in outdeg.where(F.col("outdeg") >= hub_threshold)
+        for r in outdeg.where(F.col("outdeg") >= _HUB_MIN_OUT_DEGREE)
         .select("src")
         .collect()
     ]
@@ -327,18 +325,18 @@ def pagerank(
             scatter_base.withColumn(
                 "salt",
                 F.when(
-                    is_hub, F.pmod(F.hash("dst"), F.lit(hub_salts))
+                    is_hub, F.pmod(F.hash("dst"), F.lit(_HUB_SALTS))
                 ).otherwise(F.lit(0)),
             )
             .repartition(loop_nparts, "src", "salt")
-            .persist(_STORAGE)
+            .persist(blocks.STORAGE)
         )
-        salt_df = spark.range(hub_salts).select(F.col("id").cast("int").alias("salt"))
+        salt_df = spark.range(_HUB_SALTS).select(F.col("id").cast("int").alias("salt"))
     elif pre_partitioned:
         # already hash-partitioned by src (dedup rode the same exchange)
-        scatter = scatter_base.persist(_STORAGE)
+        scatter = scatter_base.persist(blocks.STORAGE)
     else:
-        scatter = scatter_base.repartition(loop_nparts, "src").persist(_STORAGE)
+        scatter = scatter_base.repartition(loop_nparts, "src").persist(blocks.STORAGE)
 
     # vertex frame: (id, v, is_sink) — static across iterations
     vstat = (
@@ -350,7 +348,7 @@ def pagerank(
         )
         .select("id", "v", F.coalesce(F.col("ns"), F.lit(True)).alias("is_sink"))
         .repartition(loop_nparts, "id")
-        .persist(_STORAGE)
+        .persist(blocks.STORAGE)
     )
     # materialize the persisted scatter inside "setup"; row count = the
     # canonicalized edges actually processed per iteration (scaling harness

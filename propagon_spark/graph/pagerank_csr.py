@@ -20,9 +20,9 @@ costs are documented in the store module.
 
 This is the right physical strategy while the vertex state fits the
 driver/executor memory (8 bytes/vertex: ~80 MB at 10^7). Beyond
-``csr_max_vertices`` (default :data:`~propagon_spark.plans.blocks.
-DRIVER_STATE_MAX_VERTICES`) the caller falls back to the pure-dataflow
-join kernel in pagerank.py, which has no such cap. Driver-side numpy
+:data:`~propagon_spark.plans.blocks.DRIVER_STATE_MAX_VERTICES` vertices
+(read at call time) ``pagerank(impl="auto")`` falls back to the
+pure-dataflow join kernel in pagerank.py, which has no such cap. Driver-side numpy
 updates also make score sums bit-deterministic at any parallelism (fixed
 summation order), strictly stronger than the 1e-6 allclose contract.
 

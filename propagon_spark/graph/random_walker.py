@@ -10,9 +10,10 @@ Semantics:
 - implicit self-loop remainder, rows sum to exactly 1;
 - power iteration from uniform; defaults iterations=1000, tol=1e-12.
 
-Spark shape: one pair-aggregation to build the transition frame, then the
-power iteration ``rank_centrality.stationary`` (the same walk update as
-rank-centrality).
+Spark shape: the names are interned by ``Graph.from_edges`` (winner →
+loser edges), one pair-aggregation over its edge frame builds the
+transition frame, then the power iteration
+``rank_centrality.stationary`` (the same walk update as rank-centrality).
 """
 
 from __future__ import annotations
@@ -21,7 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from propagon_spark.errors import InvalidParameterError
-from propagon_spark.graph.rank_centrality import interned, stationary
+from propagon_spark.graph.core import Graph
+from propagon_spark.graph.rank_centrality import stationary
 from propagon_spark.plans.iterate import truncate_lineage
 
 
@@ -37,7 +39,10 @@ def random_walker(
         raise InvalidParameterError(
             f"random-walker bias p must lie strictly in (0.5, 1), got {p}"
         )
-    vocab, n, rows = interned(pairwise)
+    g = Graph.from_edges(pairwise, "winner", "loser", "weight")
+    rows = g.edges.select(
+        F.col("src").alias("wi"), F.col("dst").alias("li"), F.col("weight").alias("x")
+    )
 
     games = (
         rows.select(F.col("wi").alias("id"), "x")
@@ -80,4 +85,4 @@ def random_walker(
             )
         )
     )
-    return stationary(vocab, n, trans, iterations, tolerance, "random-walker")
+    return stationary(g, trans, iterations, tolerance, "random-walker")

@@ -10,10 +10,12 @@ Semantics:
   defaults iterations=200, tolerance=1e-10 (L1 change);
 - stationary distribution sums to 1.
 
-Spark shape: one pair-aggregation pass builds the transition edge frame,
-then the scatter-gather power iteration :func:`stationary` (shared with
-random_walker), run by ``plans.iterate.fixpoint``: one job per
-iteration, the L1 change observed on it.
+Spark shape: the names are interned by ``Graph.from_edges`` (winner →
+loser edges), one pair-aggregation pass over its edge frame builds the
+transition edge frame, then the scatter-gather power iteration
+:func:`stationary` (shared with random_walker), run by
+``plans.iterate.fixpoint``: one job per iteration, the L1 change
+observed on it.
 """
 
 from __future__ import annotations
@@ -23,46 +25,25 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from propagon_spark.errors import EmptyDatasetError, NumericError
-from propagon_spark.graph.core import sorted_scores
-from propagon_spark.ids import build_vocab
+from propagon_spark.errors import NumericError
+from propagon_spark.graph.core import Graph, sorted_scores
 from propagon_spark.plans.iterate import fixpoint, release, truncate_lineage
 
 
-def interned(pairwise: DataFrame) -> tuple[DataFrame, int, DataFrame]:
-    """Intern a ``(winner, loser, weight[, period])`` frame: return the
-    ``(name, id)`` vocab, its size and the ``(wi, li, x)`` id rows."""
-    raw = pairwise.select(
-        F.col("winner").cast("string").alias("w"),
-        F.col("loser").cast("string").alias("l"),
-        F.col("weight").cast("double").alias("x"),
-    )
-    if raw.rdd.isEmpty():
-        raise EmptyDatasetError("empty pairwise dataset")
-
-    vocab = build_vocab(
-        raw.select(F.col("w").alias("name")).unionAll(
-            raw.select(F.col("l").alias("name"))
-        )
-    )
-    ids_w = vocab.select(F.col("name").alias("w"), F.col("id").alias("wi"))
-    ids_l = vocab.select(F.col("name").alias("l"), F.col("id").alias("li"))
-    rows = raw.join(ids_w, "w").join(ids_l, "l").select("wi", "li", "x")
-    return vocab, vocab.count(), rows
-
-
 def stationary(
-    vocab: DataFrame,
-    n: int,
+    g: Graph,
     trans: DataFrame,
     iterations: int,
     tolerance: float,
     kernel: str,
 ) -> DataFrame:
     """Power-iterate ``pi ← pi·stay + Σ p·pi`` from uniform over the
-    truncated transition frame ``trans`` (src, dst, p), with the implicit
-    self-loop ``stay = 1 − Σ leaving``, until the L1 change is below
-    ``tolerance``; return ``(name, score)``. Releases ``trans``."""
+    truncated transition frame ``trans`` (src, dst, p) on ``g``'s
+    vertices, with the implicit self-loop ``stay = 1 − Σ leaving``, until
+    the L1 change is below ``tolerance``; return ``(name, score)``.
+    Releases ``trans`` and unpersists ``g``: the loop reads none of its
+    edges."""
+    vocab, n = g.vocab, g.num_vertices
     stay = truncate_lineage(
         vocab.select("id")
         .join(
@@ -74,6 +55,7 @@ def stationary(
         )
         .select("id", (1.0 - F.coalesce("leave", F.lit(0.0))).alias("stay"))
     )
+    g.unpersist()
 
     def step(pi: DataFrame) -> DataFrame:
         gathered = (
@@ -118,9 +100,9 @@ def rank_centrality(
 ) -> DataFrame:
     """Fit on a ``(winner, loser, weight[, period])`` frame; returns
     ``(name, score)`` (scores sum to 1)."""
-    vocab, n, rows = interned(pairwise)
-    wins = rows.groupBy(F.col("wi").alias("a"), F.col("li").alias("b")).agg(
-        F.sum("x").alias("wab")
+    g = Graph.from_edges(pairwise, "winner", "loser", "weight")
+    wins = g.edges.groupBy(F.col("src").alias("a"), F.col("dst").alias("b")).agg(
+        F.sum("weight").alias("wab")
     )
 
     # unordered pair stats: (lo, hi, w_lo_beats_hi, w_hi_beats_lo)
@@ -161,4 +143,4 @@ def rank_centrality(
         )
     )
     release(upair)  # trans and d_max hold all the loop reads of it
-    return stationary(vocab, n, trans, iterations, tolerance, "rank-centrality")
+    return stationary(g, trans, iterations, tolerance, "rank-centrality")

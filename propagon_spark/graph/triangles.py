@@ -11,7 +11,8 @@ counting; Suri & Vassilvitskii 2011): orient each undirected edge from the
 lower-(degree, id) endpoint to the higher one — every vertex's oriented
 out-degree is O(sqrt(m)) — then join oriented edges on their source to
 enumerate wedges and semi-join the wedge closures against the oriented
-edge set. Skew-bounded by construction; both joins shuffle on vertex keys.
+edge set, read as unordered id pairs. Skew-bounded by construction; both
+joins shuffle on vertex keys.
 The oriented edge frame is cached once per Graph (``Graph.cached``) and
 released by ``Graph.unpersist()``.
 """
@@ -61,15 +62,11 @@ def triangles(g: Graph) -> DataFrame:
             F.col("e2.b").alias("c"),
         )
     )
-    # closure: (b, c) must be an edge in either orientation
+    # closure: the edge {b, c}, whichever way o orients it (b < c by id)
     closures = w.join(
-        o.select(F.col("a").alias("b"), F.col("b").alias("c")), ["b", "c"], "left_semi"
-    ).unionAll(
-        w.join(
-            o.select(F.col("b").alias("b"), F.col("a").alias("c")),
-            ["b", "c"],
-            "left_semi",
-        )
+        o.select(F.least("a", "b").alias("b"), F.greatest("a", "b").alias("c")),
+        ["b", "c"],
+        "left_semi",
     )
     tri = closures.select(
         F.least("a", "b", "c").alias("x"),

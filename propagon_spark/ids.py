@@ -90,7 +90,7 @@ def _build_vocab(
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     d = names.select("name").where(F.col("name").isNotNull()).distinct()
-    d = d.persist()
+    d = d.persist(blocks.STORAGE)
     n = d.count()
     if n == 0:
         d.unpersist()
@@ -157,7 +157,3 @@ def _build_vocab(
     out = truncate_lineage(out)
     d.unpersist()
     return out, n, None
-
-
-def vocab_size(vocab: DataFrame) -> int:
-    return vocab.count()

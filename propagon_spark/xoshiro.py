@@ -120,17 +120,6 @@ class Xoshiro256PlusPlus:
         raise ValueError(f"method must be canon|lemire, got {method!r}")
 
 
-def first_seen_ranks(names: Iterable[str]) -> dict[str, int]:
-    """The reference interner's id assignment: first-occurrence order
-    (``interner.rs:14-46``; side-local interners in
-    ``algos/birank.rs:147-173``)."""
-    ranks: dict[str, int] = {}
-    for nm in names:
-        if nm not in ranks:
-            ranks[nm] = len(ranks)
-    return ranks
-
-
 def birank_reference_init(
     src_seq: Iterable[str], dst_seq: Iterable[str], seed: int = 2019
 ) -> tuple[dict[str, float], dict[str, float]]:

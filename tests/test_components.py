@@ -100,3 +100,17 @@ def test_extract_components_jobs_independent_of_component_count(spark):
         assert [m for m, _ in comps] == [[f"a{i}", f"b{i}"] for i in range(k)]
         g.unpersist()
     assert jobs[2] == jobs[8]
+
+
+def test_self_loops_change_no_component(spark):
+    # a self-loop only offers a vertex its own label: the graph's rows are
+    # those of the loop-free graph, and a vertex whose only edge is a loop
+    # ("z", the last id) is a component of its own
+    rows = [("a", "b"), ("b", "c"), ("x", "y")]
+    loops = [("a", "a"), ("c", "c"), ("y", "y"), ("z", "z")]
+    got = {}
+    for key, edges in (("plain", rows), ("loops", rows + loops)):
+        g = Graph.from_edges(make_edges(spark, edges))
+        got[key] = [tuple(r) for r in connected_components(g).collect()]
+        g.unpersist()
+    assert got["loops"] == got["plain"] + [("z", 5, 5, 1)]

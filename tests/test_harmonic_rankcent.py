@@ -98,3 +98,21 @@ def test_rank_centrality_balance(spark):
     d = pairwise(spark, [("a", "b", 3), ("b", "a", 1)])
     s = scores_dict(rank_centrality(d))
     assert s["a"] / s["b"] == pytest.approx(3.0, abs=1e-6)
+
+
+def test_rank_centrality_duplicate_pair_non_ascii(spark):
+    # a repeated (winner, loser) pair adds its wins; non-ASCII names intern
+    # in UTF-8 byte order. Pinned rows, 20 steps with no early stop.
+    d = pairwise(
+        spark,
+        [("Zoë", "ärger", 2), ("ärger", "Zoë", 1), ("Zoë", "ärger", 1),
+         ("東京", "Zoë", 3), ("ärger", "東京", 1), ("bob", "東京", 2),
+         ("東京", "bob", 1)],
+    )
+    rows = rank_centrality(d, iterations=20, tolerance=0.0).collect()
+    assert [r["name"] for r in rows] == ["bob", "ärger", "Zoë", "東京"]
+    assert [r["score"] for r in rows] == pytest.approx(
+        [0.34864051402606633, 0.29625118164570735, 0.17831647848608476,
+         0.17679182584214068],
+        abs=1e-12,
+    )

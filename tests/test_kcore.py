@@ -64,7 +64,7 @@ def test_hindex_equals_peel_random_graph(spark, hindex_path):
     # the recursive-CTE peel at 3 scale factors by check_oracles.py)
     rows = sorted(_random_rows())
     g = Graph.from_edges(make_edges(spark, rows))
-    hi = {r["name"]: r["coreness"] for r in kcore(g, method="hindex").collect()}
+    hi = {r["name"]: r["coreness"] for r in kcore(g).collect()}
     assert hi == peel_coreness(rows)
     assert max(hi.values()) >= 2  # graph dense enough to be a real case
     g.unpersist()
@@ -81,7 +81,7 @@ def test_hindex_equals_peel_without_broadcast(spark, monkeypatch):
         assert _broadcast_threshold(spark) == -1  # the unhinted plan runs
         rows = sorted(_random_rows() | {("loop", "loop")})
         g = Graph.from_edges(make_edges(spark, rows))
-        hi = {r["name"]: r["coreness"] for r in kcore(g, method="hindex").collect()}
+        hi = {r["name"]: r["coreness"] for r in kcore(g).collect()}
         g.unpersist()
     finally:
         spark.conf.set(key, old)

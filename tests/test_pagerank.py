@@ -11,6 +11,7 @@ from conftest import job_ids_of, make_edges, place_stores, scores_dict
 from propagon_spark.errors import InvalidParameterError
 from propagon_spark.graph import Graph
 from propagon_spark.graph.pagerank import pagerank
+from propagon_spark.plans import blocks
 
 
 # F1: matches (winner, loser) stored as loser → winner edges
@@ -140,17 +141,18 @@ def test_convergence_metrics(g4):
     assert res.metrics[-1]["l1_delta"] < res.metrics[0]["l1_delta"]
 
 
-def test_salting_equivalence(g4):
+def test_salting_equivalence(g4, monkeypatch):
     # hub salting must not change results: force every vertex to be a "hub"
     # salting lives in the join kernel only — force it on both runs
+    from propagon_spark.graph import pagerank as pr
+
     base = scores_dict(
         pagerank(g4, iterations=10, sink="uniform", impl="join").scores
     )
+    monkeypatch.setattr(pr, "_HUB_MIN_OUT_DEGREE", 1)
+    monkeypatch.setattr(pr, "_HUB_SALTS", 4)
     salted = scores_dict(
-        pagerank(
-            g4, iterations=10, sink="uniform", hub_threshold=1, hub_salts=4,
-            impl="join",
-        ).scores
+        pagerank(g4, iterations=10, sink="uniform", impl="join").scores
     )
     for k in base:
         assert abs(base[k] - salted[k]) < 1e-12, k
@@ -233,3 +235,11 @@ def test_seeded_csr_runs_no_lookup_job(spark, store_placement):
             seeds={"nope": 1.0}, **kw))) == 0
     finally:
         g.unpersist()
+
+
+def test_auto_reads_the_vertex_bound_at_call_time(g4, monkeypatch):
+    # impl="auto" reads the store kernels' vertex bound on each call, as
+    # k-core and LPA do: a bound patched after import picks the join kernel
+    assert pagerank(g4, iterations=2).timings["kernel"] == "csr"
+    monkeypatch.setattr(blocks, "DRIVER_STATE_MAX_VERTICES", 0)
+    assert pagerank(g4, iterations=2).timings["kernel"] == "join"

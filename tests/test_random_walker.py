@@ -6,6 +6,7 @@ from conftest import scores_dict
 
 from propagon_spark.errors import EmptyDatasetError, InvalidParameterError
 from propagon_spark.graph.random_walker import random_walker
+from propagon_spark.graph.rank_centrality import rank_centrality
 
 
 def pairwise(spark, rows):
@@ -37,6 +38,17 @@ def test_empty(spark):
                 [], "winner string, loser string, weight double, period long"
             )
         )
+
+
+@pytest.mark.parametrize("kernel", [random_walker, rank_centrality])
+def test_all_null_names(spark, kernel):
+    # no row names a vertex: an empty graph, not a division by n = 0
+    d = spark.createDataFrame(
+        [(None, None, 1.0, 0)] * 3,
+        "winner string, loser string, weight double, period long",
+    )
+    with pytest.raises(EmptyDatasetError):
+        kernel(d)
 
 
 def test_transitive_chain_order(spark):
