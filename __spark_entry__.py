@@ -393,7 +393,7 @@ def q_leader_rank_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pagerank_conv60(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drives the CONVERGENCE-mode loop machinery (per-step delta
-    # observation, chain=1, lineage truncation) against a hard oracle: a
+    # observation, lineage truncation) against a hard oracle: a
     # tolerance no power iteration reaches makes the loop run exactly
     # max_iterations steps, which a 60-step unrolled SQL twin reproduces
     from propagon_spark.graph.pagerank import pagerank

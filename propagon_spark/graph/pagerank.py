@@ -10,8 +10,14 @@ as a Spark-first power iteration:
   the big edge side),
 - **gather**: ``groupBy(dst).sum`` — partial+final hash aggregation, the
   one unavoidable shuffle per iteration,
-- **normalize/update**: the sink mass as a driver literal (observed on
-  the job that materialized the ranks) + a projection.
+- **normalize/update**: one join of the state ``(id, v, is_sink, rank)``
+  with the gathered frame, the sink mass a driver literal (observed on
+  the job that materialized the state) + a projection.
+
+Each power step is one turn of ``plans.iterate.fixpoint``: one
+materializing job, on which the L1 delta, the mass and the next sink
+mass are observed. The loop runs under the session's conf (AQE on by
+default), so its skew-join handling backs up the hub salting below.
 
 Reference semantics reproduced exactly (parity fixtures in tests):
 - parallel edges deduplicated, weights ignored (``pagerank.rs:6-7,133-141``);
@@ -31,9 +37,10 @@ Reference semantics reproduced exactly (parity fixtures in tests):
 - update ``p ← d·(gathered + sink_term) + (1−d)·v``.
 
 Beyond the reference (north rule): convergence mode (L1 delta < tol) with
-per-iteration metrics, checkpoint/resume mid-convergence, lineage
-truncation via localCheckpoint, and explicit salting of the scatter join
-for high-out-degree hubs (AQE skew join as backstop).
+per-iteration metrics, checkpoint/resume mid-convergence (saved from
+``fixpoint``'s per-turn ``save`` hook), lineage truncation via
+localCheckpoint, and explicit salting of the scatter join for
+high-out-degree hubs (AQE skew join as backstop).
 """
 
 from __future__ import annotations
@@ -55,20 +62,12 @@ from propagon_spark.errors import InvalidParameterError, NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
 from propagon_spark.plans import blocks
 from propagon_spark.plans.checkpoint import CheckpointManager
-from propagon_spark.plans.iterate import materialize, release, truncate_lineage
+from propagon_spark.plans.iterate import fixpoint, materialize
 from propagon_spark.progress import as_progress
 
 logger = logging.getLogger("propagon_spark.pagerank")
 
 _SINKS = ("none", "uniform", "all", "reverse")
-
-# Skew guard for the folded dedup (repartition-by-src-then-distinct):
-# probe partition sizes only when a partition above the row floor is even
-# possible, and fall back to dedup-then-repartition when one partition
-# holds > _SKEW_MAX_RATIO x the mean AND exceeds the floor. Module-level
-# so tests can exercise the fallback on small graphs.
-_SKEW_PROBE_MIN_ROWS = 5_000_000
-_SKEW_MAX_RATIO = 4
 
 # Hub salting of the join kernel's scatter join: a source with at least
 # _HUB_MIN_OUT_DEGREE dedup'd out-edges has them spread over _HUB_SALTS
@@ -78,11 +77,9 @@ _HUB_SALTS = 16
 
 # Join-kernel gather layout (see pagerank()): from this many vertices on,
 # the gather runs as an explicit dst repartition over about
-# _KEYS_PER_TASK vertex keys per task; a sink-free convergence turn
-# chains at most _CHAIN_MAX power steps into one job.
+# _KEYS_PER_TASK vertex keys per task.
 _REPART_MIN_VERTICES = 2_000_000
 _KEYS_PER_TASK = 100_000
-_CHAIN_MAX = 8
 
 
 @dataclass
@@ -252,65 +249,26 @@ def pagerank(
             -(-n // _KEYS_PER_TASK),                   # ceil
             -(-g.num_edge_rows // 16_000_000),
         )
-    # Join kernel (no reverse rewrite): fold the dedup INTO the scatter
-    # partitioning — repartition by src FIRST, then distinct. A hash
-    # partitioning on src satisfies the (src, dst) clustering the dedup
-    # aggregate requires, so the frame is deduplicated AND scatter-ready
-    # after ONE exchange of the edge data, replacing distinct's
-    # (src, dst) exchange plus a separate scatter repartition (verified
-    # plan-level: no Exchange between the repartition, the dedup
-    # HashAggregate, the out-degree agg, and the scatter join).
-    pre_partitioned = sink != "reverse"
-    if pre_partitioned:
-        # SKEW GUARD: folding dedup into the src repartition removes the
-        # partial aggregation that would otherwise collapse duplicate
-        # rows BEFORE the exchange, and hash(src) clustering puts a hub's
-        # ENTIRE raw edge set into one dedup task (hub salting only
-        # protects the downstream scatter join). g.edges is already
-        # hash-partitioned by src (core.py), so its partition sizes are a
-        # faithful preview of the post-repartition layout: probe them
-        # with one cheap partial-agg job over the cached frame and fall
-        # back to dedup-then-repartition (balanced (src,dst) exchange
-        # with map-side combine, one extra exchange of DEDUP'D rows) when
-        # one partition dominates — the power-law-hub regression risk on
-        # the common PageRank input.
-        # probe only when a partition above the floor is even possible —
-        # the count(*) scan over the cached frame is wasted work below it
-        if g.num_edge_rows > _SKEW_PROBE_MIN_ROWS:
-            psizes = [
-                r["cnt"]
-                for r in g.edges.groupBy(F.spark_partition_id().alias("_p"))
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            ]
-            pmax = max(psizes, default=0)
-            pmean = (sum(psizes) / len(psizes)) if psizes else 0.0
-            if pmax > _SKEW_MAX_RATIO * pmean and pmax > _SKEW_PROBE_MIN_ROWS:
-                pre_partitioned = False
-    if pre_partitioned:
-        edges = g.edges.select("src", "dst") \
-            .repartition(loop_nparts, "src").distinct()
-    else:
-        edges = dedup_edges(g.edges)
-        if sink == "reverse":
-            edges = reverse_sinks(edges)
-    # persist the canonicalized frame: the setup passes that follow
-    # (out-degrees, scatter build, sink detection) would otherwise each
-    # re-run the full-width distinct over the raw edge table
+    # the canonical form of Graph.store("out" / "out_reverse"): g.edges
+    # is hash-partitioned by src, which already satisfies the (src, dst)
+    # distinct, so the dedup and the out-degree aggregate below run
+    # with no exchange of the edge data. Persisted: the setup passes
+    # that follow (out-degrees, scatter build, sink flags) would
+    # otherwise each re-run the distinct.
+    edges = dedup_edges(g.edges)
+    if sink == "reverse":
+        edges = reverse_sinks(edges)
     edges = edges.persist(blocks.STORAGE)
 
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     # scatter frame: (src, dst, inv) — inverse out-degree folded in so the
     # per-iteration join multiplies instead of dividing after a second join
-    scatter_base = edges.join(outdeg, "src").select(
+    scatter = edges.join(outdeg, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("inv")
     )
 
     # hub salting: split the scatter join key for very-high-out-degree
-    # sources so a single hub's edges don't land in one join task. The
-    # persist happens ONCE, after the salting decision — persisting the
-    # pre-salt frame and then replacing it would leak the first cache for
-    # the whole fit on hub-heavy graphs.
+    # sources so a single hub's edges don't land in one join task
     hub_ids = [
         r["src"]
         for r in outdeg.where(F.col("outdeg") >= _HUB_MIN_OUT_DEGREE)
@@ -319,87 +277,80 @@ def pagerank(
     ]
     salted = len(hub_ids) > 0
     if salted:
-        hubs = set(hub_ids)
-        is_hub = F.col("src").isin(list(hubs))
-        scatter = (
-            scatter_base.withColumn(
-                "salt",
-                F.when(
-                    is_hub, F.pmod(F.hash("dst"), F.lit(_HUB_SALTS))
-                ).otherwise(F.lit(0)),
-            )
-            .repartition(loop_nparts, "src", "salt")
-            .persist(blocks.STORAGE)
-        )
+        is_hub = F.col("src").isin(hub_ids)
+        scatter = scatter.withColumn(
+            "salt",
+            F.when(is_hub, F.pmod(F.hash("dst"), F.lit(_HUB_SALTS)))
+            .otherwise(F.lit(0)),
+        ).repartition(loop_nparts, "src", "salt")
         salt_df = spark.range(_HUB_SALTS).select(F.col("id").cast("int").alias("salt"))
-    elif pre_partitioned:
-        # already hash-partitioned by src (dedup rode the same exchange)
-        scatter = scatter_base.persist(blocks.STORAGE)
     else:
-        scatter = scatter_base.repartition(loop_nparts, "src").persist(blocks.STORAGE)
-
-    # vertex frame: (id, v, is_sink) — static across iterations
-    vstat = (
-        _teleport_frame(g, seeds)
-        .join(
-            outdeg.select(F.col("src").alias("id"), F.lit(False).alias("ns")),
-            "id",
-            "left",
-        )
-        .select("id", "v", F.coalesce(F.col("ns"), F.lit(True)).alias("is_sink"))
-        .repartition(loop_nparts, "id")
-        .persist(blocks.STORAGE)
-    )
+        # no exchange where edges already has this layout (not reversed,
+        # loop_nparts == nparts)
+        scatter = scatter.repartition(loop_nparts, "src")
+    scatter = scatter.persist(blocks.STORAGE)
     # materialize the persisted scatter inside "setup"; row count = the
     # canonicalized edges actually processed per iteration (scaling harness
     # reads it from timings instead of re-running the distinct)
     n_scatter = scatter.count()
-    # the dedup'd frame is a SETUP intermediate in the join kernel: the
-    # loop reads only scatter/vstat (both just materialized). Holding it
-    # for the whole fit keeps a third edge-scale cache alive — and pins
-    # its upstream shuffle files through the cached lineage — which at
-    # 591M edges was enough to overflow a 75 GB local-disk budget
-    # (round-5 huge run). Release it the moment its derived frames exist.
-    edges.unpersist(blocking=False)
 
-    # the pooled sink mass S = Σ rank·[is_sink] of every ranks frame is
-    # observed on the job that materializes it: the initial (or resumed)
-    # ranks here, which also materialize vstat and count its sinks, then
-    # every loop turn
+    # the state (id, v, is_sink, rank): the teleport weight and sink flag
+    # ride along, so a step's update is one join of the state with its
+    # gathered frame. The pooled sink mass S = Σ rank·[is_sink] of every
+    # state is observed on the job that materializes it: the initial (or
+    # resumed) ranks here, which also count the sinks, then every turn.
     sink_mass = F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0))
+    vstat = _teleport_frame(g, seeds).join(
+        outdeg.select(F.col("src").alias("id"), F.lit(False).alias("ns")),
+        "id",
+        "left",
+    ).select("id", "v", F.coalesce(F.col("ns"), F.lit(True)).alias("is_sink"))
     if state is not None:
-        init = state.select("id", "rank").repartition(loop_nparts, "id") \
-            .join(vstat.select("id", "is_sink"), "id")
+        init = vstat.join(state.select("id", "rank"), "id")
     else:
         # init = teleport vector (pagerank.rs:170-173)
-        init = vstat.select("id", F.col("v").alias("rank"), "is_sink")
-    ranks, m = materialize(
+        init = vstat.withColumn("rank", F.col("v"))
+    init, m = materialize(
         init,
         {"sinks": F.count(F.when(F.col("is_sink"), 1)), "sink_mass": sink_mass},
-        ["id", "rank"],
+        ["id", "v", "is_sink", "rank"],
     )
+    # the dedup'd frame is a SETUP intermediate: the loop reads only
+    # scatter and the state. Holding it for the whole fit keeps a third
+    # edge-scale cache alive — and pins its upstream shuffle files through
+    # the cached lineage — which at 591M edges was enough to overflow a
+    # 75 GB local-disk budget (round-5 huge run).
+    edges.unpersist(blocking=False)
     s_mass = float(m["sink_mass"])
     # sink-free graphs (every vertex has out-edges — e.g. any symmetric
     # graph) make every sink policy IDENTICAL: the pooled sink mass is
     # exactly 0, so uniform/all degenerate to none and reverse rewrites
-    # nothing, and the steps chain (below). `reverse` removes sinks by
-    # construction (canon.reverse_sinks).
-    has_sinks = sink != "reverse" and m["sinks"] > 0
-    redistribute = has_sinks and sink in ("uniform", "all")
+    # nothing. `reverse` removes sinks by construction
+    # (canon.reverse_sinks).
+    redistribute = sink in ("uniform", "all") and m["sinks"] > 0
 
-    def gather_frame(ranks: DataFrame) -> DataFrame:
-        """Scatter + gather — the edge-heavy half of one step: (id, m).
+    def step(cur: DataFrame) -> DataFrame:
+        """One power step: scatter + gather, then sink redistribution and
+        the damping update in one join of ``cur`` with the gathered
+        ``(id, m)``; emits the previous rank as ``old``.
 
         Shuffle-hash joins: the ranks side is a vertex-sized frame, and
         broadcasting it every iteration is a serial driver collect that
         caps scaling; a hash exchange of the small side is parallel and
         the big edge side stays put.
+
+        ``s_mass`` is the pooled sink-rank scalar S of ``cur``, observed
+        on the job that materialized it, as a plain DRIVER FLOAT folded
+        into the plan as a literal. Round 3 derived S in-plan via a
+        broadcast 1-row aggregate over the gather subtree — that second
+        reference DOUBLES the edge pass per step (Catalyst's
+        ReuseExchange does not bridge the broadcast boundary on these
+        iterated plans). So the update is a pure single-reference
+        projection: literal arithmetic, no broadcast subtree anywhere.
         """
-        r = ranks.withColumnRenamed("id", "src").select("src", "rank").hint(
-            "shuffle_hash"
-        )
+        r = cur.select(F.col("id").alias("src"), "rank").hint("shuffle_hash")
         if salted:
-            r = r.join(F.broadcast(salt_df), F.col("src").isin(list(hubs)), "left") \
+            r = r.join(F.broadcast(salt_df), F.col("src").isin(hub_ids), "left") \
                  .select("src", "rank", F.coalesce("salt", F.lit(0)).alias("salt")) \
                  .hint("shuffle_hash")
             contrib = scatter.join(r, ["src", "salt"])
@@ -413,231 +364,99 @@ def pagerank(
             # no map-side agg table: the exchange pipelines off the join,
             # and the downstream aggregates are dst-partition-local
             msgs = msgs.repartition(loop_nparts, "id")
-        return msgs.groupBy("id").agg(F.sum("_c").alias("m"))
+        gathered = msgs.groupBy("id").agg(F.sum("_c").alias("m"))
 
-    def update_from(
-        gathered: DataFrame,
-        carry_old: bool,
-        old_ranks: DataFrame | None,
-        s_mass: float,
-    ) -> DataFrame:
-        """Sink redistribution + damping update over one gather result.
-
-        ``s_mass`` is the pooled sink-rank scalar S of the ranks this
-        step reads, observed on the job that materialized them, as a
-        plain DRIVER FLOAT folded into the plan as a literal. Round 3
-        derived S in-plan via a broadcast 1-row aggregate over the
-        gather subtree — that second reference DOUBLES the edge pass per
-        step (Catalyst's ReuseExchange does not bridge the broadcast
-        boundary on these iterated plans), and chaining such steps
-        recomputes the gather 2^C times (a 4-step chain measured 47 s vs
-        4×2 s single steps at 8 cores / 22M edges). So this update is a
-        pure single-reference projection: vertex-sized vstat join,
-        literal arithmetic, no broadcast subtree anywhere. With
-        redistributing sinks it emits ``is_sink`` for the next S.
-
-        ``carry_old=True`` emits the previous rank as ``old`` (the L1
-        delta's input); ``old_ranks`` (the ranks ``gathered`` came from)
-        must then be a MATERIALIZED leaf so the second plan reference
-        costs a leaf scan, not a recompute. The ``all`` sink needs
-        ``old`` for its self-exclusion term regardless
-        (pagerank.rs:194-201); it runs one step per job, so its
-        ``old_ranks`` is always the turn's materialized ranks.
-        """
-        joined = vstat.join(gathered.hint("shuffle_hash"), "id", "left")
-        need_old = carry_old or (sink == "all" and has_sinks)
-        if need_old:
-            joined = joined.join(
-                old_ranks.select("id", F.col("rank").alias("old")).hint(
-                    "shuffle_hash"
-                ),
-                "id",
-            )
-        if not redistribute:
-            # sink-free graph or non-redistributing policy: S ≡ 0
-            sink_term = F.lit(0.0)
-        elif sink == "uniform":
+        if redistribute and sink == "uniform":
             sink_term = F.lit(s_mass) * F.col("v")
-        else:  # all: (S - p_i·[i sink]) / (n-1), pagerank.rs:194-201
+        elif redistribute and n > 1:  # all: (S - p_i·[i sink]) / (n-1), pagerank.rs:194-201
             sink_term = (
-                (
-                    F.lit(s_mass)
-                    - F.when(F.col("is_sink"), F.col("old")).otherwise(0.0)
-                )
-                / F.lit(float(n - 1))
-                if n > 1
-                else F.lit(0.0)
-            )
-
-        cols = (
-            ["id"]
-            + (["old"] if carry_old else [])
-            + (["is_sink"] if redistribute else [])
-        )
-        return joined.select(
-            *cols,
+                F.lit(s_mass) - F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)
+            ) / F.lit(float(n - 1))
+        else:  # sink-free graph, non-redistributing policy or one vertex
+            sink_term = F.lit(0.0)
+        return cur.join(gathered.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            "v",
+            "is_sink",
+            F.col("rank").alias("old"),
             (
                 F.lit(damping) * (F.coalesce("m", F.lit(0.0)) + sink_term)
                 + F.lit(1.0 - damping) * F.col("v")
             ).alias("rank"),
         )
 
-    # Step scheduling. Each step of the single-reference path (none/
-    # reverse, or any policy on a sink-free graph) references the
-    # previous iterate exactly once, so steps CHAIN into one Spark job
-    # as a linear pipeline (no duplicated subtree anywhere). Convergence
-    # turns run the chain as TWO jobs: job A = steps−1 pure chained
-    # steps, materialized; job B = one final step whose `old` reference
-    # hits job A's materialized LEAF (a second reference to a leaf is a
-    # scan, not a recompute — measured: carrying `old` on the last step
-    # of a LAZY chain doubled the whole edge pass). The stop test stays
-    # the TRUE single-step delta ||p_{t+C} − p_{t+C−1}||₁ (a chain-START
-    # delta is unsound: under a negative second eigenvalue consecutive
-    # deltas alternate sign and partially cancel, stopping early while
-    # the reference's criterion is still above tol).
-    #
-    # Redistributing sinks (uniform/all on a graph WITH sinks) run one
-    # step per job: each step needs the S of its input ranks, which is
-    # observed on the job that materializes them.
-    #
-    # Convergence mode sizes chains ADAPTIVELY: the first two turns run
-    # single steps to measure the L1 decay rate, then each turn runs
-    # min(chain_max, predicted-steps-to-tol) — amortizing per-job fixed
-    # cost (Catalyst planning, scheduling, lineage materialization) while
-    # bounding overshoot by the prediction error instead of a fixed C−1.
-    chain_max = 1 if redistribute else _CHAIN_MAX
+    # One power step per turn, one job each: fixpoint materializes the
+    # state and observes the L1 delta, the mass and the next step's S on
+    # that job. Chaining steps into one job would save a job's fixed cost
+    # per step, but this kernel runs by default only above
+    # DRIVER_STATE_MAX_VERTICES, where a step's edge pass dwarfs it.
     converged = False
-    it = start_iter
-    last_ckpt = start_iter
-    prev_l1: float | None = None
-    rate: float | None = None
+    t_loop = t_turn = time.monotonic()
     timings = {"kernel": "join", "edge_rows": n_scatter,
-               "gather_mode": gather_mode,
-               "dedup_plan": "folded" if pre_partitioned else "separate",
-               "loop_nparts": loop_nparts,
-               "setup_s": time.monotonic() - t_setup, "iterate_s": 0.0,
-               "iterate_gather_s": 0.0, "iterate_update_s": 0.0}
-    # AQE off for the loop: every chained job re-plans each exchange as a
-    # separate adaptive query stage (serial driver work per iteration)
-    # and its partition coalescing breaks the pinned nparts partitioning
-    # that makes the vstat join exchange-free. Skew is already handled
-    # explicitly (hub salting above); AQE returns for the final scores.
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_old = spark.conf.get(aqe_key, "true")
-    spark.conf.set(aqe_key, "false")
+               "gather_mode": gather_mode, "loop_nparts": loop_nparts,
+               "setup_s": t_loop - t_setup}
 
-    prog.start("pagerank", total=total_iters)
+    def settled(turn: int, m: dict, _last) -> bool:
+        nonlocal s_mass, converged
+        l1, mass = m["l1"], m["mass"]
+        if not (math.isfinite(mass) and math.isfinite(l1)):
+            raise NumericError(
+                f"pagerank diverged at iteration {start_iter + turn}: mass={mass}"
+            )
+        s_mass = float(m["sink_mass"])
+        converged = tol is not None and l1 < tol
+        return converged
+
+    def row(turn: int, m: dict) -> dict:
+        nonlocal t_turn
+        now = time.monotonic()
+        metrics.append({
+            "iteration": start_iter + turn,
+            "steps": 1,
+            "l1_delta": m["l1"],
+            "mass": m["mass"],
+            "seconds": now - t_turn,
+        })
+        t_turn = now
+        logger.info("pagerank iter=%d l1=%.3e mass=%.6f %.2fs",
+                    start_iter + turn, m["l1"], m["mass"], metrics[-1]["seconds"])
+        return metrics[-1]
+
+    def save(turn: int, cur: DataFrame) -> None:
+        it = start_iter + turn
+        if it % checkpoint_interval == 0:
+            ckpt.save(it, cur.select("id", "rank"), metrics)
+
     try:
-        while it < total_iters:
-            t0 = time.monotonic()
-            need_delta = tol is not None
-            if tol is None:
-                steps = min(chain_max, total_iters - it)
-            elif prev_l1 is None or rate is None:
-                steps = 1  # first two turns calibrate the decay rate
-            elif not (0.0 < rate < 1.0):
-                steps = chain_max  # not decaying: amortize fixed cost
-            else:
-                need = math.log(tol / prev_l1) / math.log(rate)
-                steps = max(1, min(chain_max, math.ceil(need)))
-            steps = min(steps, total_iters - it)
-
-            # the turn's materialized intermediates, released with the
-            # superseded ranks once the new ranks are materialized
-            spent = [ranks]
-            cur = ranks
-            pure = steps - 1 if need_delta else steps
-            for _ in range(pure):
-                cur = update_from(gather_frame(cur), False, cur, s_mass)
-            if need_delta:
-                if pure > 0:
-                    # job A: materialize the pure chain; the final
-                    # delta-carrying step then references a LEAF
-                    t_g = time.monotonic()
-                    cur = truncate_lineage(cur)
-                    spent.append(cur)
-                    timings["iterate_gather_s"] += time.monotonic() - t_g
-                cur = update_from(gather_frame(cur), True, cur, s_mass)
-
-            # materialize + truncate lineage every loop turn — without
-            # truncation the logical plan compounds per iteration.
-            # Convergence metrics and the next step's S ride along as
-            # observed aggregates of the SAME job (CollectMetrics).
-            t_u = time.monotonic()
-            stats = {"mass": F.sum("rank")}
-            if need_delta:
-                stats["l1"] = F.sum(F.abs(F.col("rank") - F.col("old")))
-            if redistribute:
-                stats["sink_mass"] = sink_mass
-            new_ranks, agg = materialize(cur, stats, ["id", "rank"])
-            l1 = float(agg["l1"]) if need_delta else None
-            mass = float(agg["mass"])
-            if not math.isfinite(mass) or (
-                l1 is not None and not math.isfinite(l1)
-            ):
-                raise NumericError(
-                    f"pagerank diverged at iteration {it}: mass={mass}"
-                )
-            if redistribute:
-                s_mass = float(agg["sink_mass"])
-            timings["iterate_update_s"] += time.monotonic() - t_u
-
-            # observed decay rate of the single-step L1 across this turn's
-            # `steps` power steps — feeds the next turn's chain prediction
-            if l1 is not None and prev_l1 is not None and prev_l1 > 0 and l1 > 0:
-                rate = (l1 / prev_l1) ** (1.0 / steps)
-            prev_l1 = l1
-
-            ranks = new_ranks
-            for frame in spent:
-                release(frame)
-            it += steps
-            metrics.append(
-                {
-                    "iteration": it,
-                    "steps": steps,
-                    "l1_delta": l1,
-                    "mass": mass,
-                    "seconds": time.monotonic() - t0,
-                }
-            )
-            timings["iterate_s"] += metrics[-1]["seconds"]
-            prog.iteration("pagerank", metrics[-1])
-
-            logger.info(
-                "pagerank iter=%d l1=%s mass=%.6f %.2fs",
-                it, f"{l1:.3e}" if l1 is not None else "-", mass,
-                metrics[-1]["seconds"],
-            )
-
-            # save whenever the iteration counter CROSSES a checkpoint
-            # boundary — chained turns advance `it` by up to chain_max, so
-            # an exact `it % interval == 0` test would rarely fire
-            if ckpt is not None and (
-                it // checkpoint_interval > last_ckpt // checkpoint_interval
-            ):
-                ckpt.save(it, ranks.select("id", "rank"), metrics)
-                last_ckpt = it
-
-            if tol is not None and l1 < tol:
-                converged = True
-                break
+        final, turns = fixpoint(
+            init,
+            step,
+            {
+                "mass": F.sum("rank"),
+                "l1": F.sum(F.abs(F.col("rank") - F.col("old"))),
+                "sink_mass": sink_mass,
+            },
+            settled,
+            max_turns=total_iters - start_iter,
+            progress=prog,
+            phase="pagerank",
+            row=row,
+            save=save if ckpt is not None else None,
+        )
     finally:
-        spark.conf.set(aqe_key, aqe_old)
-        prog.finish()
+        scatter.unpersist()
+    timings["iterate_s"] = time.monotonic() - t_loop
 
+    ranks = final.select("id", "rank")
     scores = sorted_scores(
         g.with_names(ranks.select("id", F.col("rank").alias("score")))
         .select("name", "score")
     )
-    scatter.unpersist()
-    vstat.unpersist()
     return PageRankResult(
         scores=scores,
         ranks=ranks,
-        iterations=it,
+        iterations=start_iter + turns,
         converged=converged if tol is not None else True,
         metrics=metrics,
         timings=timings,
     )
-

@@ -18,16 +18,18 @@ per-iteration planning cost constant. Falls back to plain
 ``localCheckpoint`` where the internal API is unavailable (e.g. Spark
 Connect).
 
-:func:`fixpoint` is the round loop of the dataflow kernels (katz,
+:func:`fixpoint` is the round loop of every dataflow kernel (katz,
 leader_rank, hits, rank_centrality, random_walker, components, lpa,
 k-core above the edge-block bound, tally's ``filter_min_count``,
-harmonic's relaxation, birank's sweeps; join PageRank's chained steps
-keep their own loop):
+harmonic's relaxation, birank's sweeps and join PageRank's power
+steps); no kernel keeps a loop of its own:
 
 - a turn is ONE materializing job — the eager truncation — and the stop
   statistics are observed (``Observation``) on that same job;
 - the previous state's checkpoint blocks are released once its successor
   is materialized, and the loop-invariant frames when the loop ends;
+- an optional ``save`` hook sees each turn's state after its stop test
+  (join PageRank writes its durable checkpoints there);
 - the final state is kept: the kernel's lazy result reads it.
 
 Released blocks live in executor block managers, so a plan that still
@@ -100,6 +102,7 @@ def fixpoint(
     progress: Progress = SILENT,
     phase: str = "",
     row: Callable[[int, dict], dict] | None = None,
+    save: Callable[[int, DataFrame], None] | None = None,
 ) -> tuple[DataFrame, int]:
     """Run ``state ← step(state)`` until ``stop(turn, stats, last)`` holds
     or ``max_turns`` turns ran; return the final state and the turn count.
@@ -109,8 +112,9 @@ def fixpoint(
     ``stats`` read; only the state's columns are materialized. ``last``
     is the previous turn's stats (``initial_stats`` at turn 1); ``stop``
     may raise the kernel's ``NumericError``. ``invariants``: truncated
-    frames every step reads. With a ``row``, ``row(turn, stats)`` goes to
-    ``progress`` after each stop test.
+    frames every step reads. After each stop test, ``row(turn, stats)``
+    (if given) goes to ``progress``, and then ``save(turn, state)`` (if
+    given) sees the turn's materialized state.
     """
     columns = state.columns
     turn, last = 0, initial_stats
@@ -124,6 +128,8 @@ def fixpoint(
             done = stop(turn, m, last)
             if row is not None:
                 progress.iteration(phase, row(turn, m))
+            if save is not None:
+                save(turn, state)
             if done:
                 break
             last = m

@@ -63,14 +63,21 @@ def test_resume_equals_continuous(spark, request, tmp_path, impl, graph):
         assert abs(cont[k] - res[k]) < 1e-9, k
     # metrics carry the pre-interrupt history and continue past the
     # resume point with no reset to 0 — evidence the run resumed
-    # mid-convergence. Iteration numbers advance by the kernel's chain
-    # stride (1 for csr and for the join kernel with sinks; chained lazy
-    # steps per job for the sink-free join kernel), so assert the
-    # invariants, not a stride.
+    # mid-convergence. Both kernels run one power step per iteration.
     iters = [m["iteration"] for m in resumed.metrics]
-    assert all(a < b for a, b in zip(iters, iters[1:]))
-    assert iters[0] <= 6 and 6 in iters
+    assert iters == list(range(1, len(iters) + 1))
     assert iters[-1] > 6
+
+
+@pytest.mark.parametrize("graph", ["g", "g_sink"])
+def test_join_and_csr_converge_alike(request, graph):
+    # convergence mode: both kernels take the same single-step L1 delta
+    # each iteration, so they stop at the same one
+    g = request.getfixturevalue(graph)
+    res = {impl: pagerank(g, sink="uniform", tol=1e-10, max_iterations=150,
+                          impl=impl) for impl in ("csr", "join")}
+    assert res["csr"].converged and res["join"].converged
+    assert res["csr"].iterations == res["join"].iterations
 
 
 def test_manifest_contents(spark, g, tmp_path):

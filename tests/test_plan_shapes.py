@@ -1,8 +1,8 @@
 """Physical-plan shape pins for the kernel's shuffle-economy claims.
 
-The join kernel's docstrings make concrete plan-level claims (one
-exchange serves dedup + out-degree + scatter join; the cached edge
-frame's partitioning is reused; parquet scans prune and push down).
+The join kernel's docstrings make concrete plan-level claims (the
+cached edge frame's src partitioning serves dedup + out-degree +
+scatter join with no edge exchange; parquet scans prune and push down).
 These tests pin them so a Spark upgrade or refactor that silently
 reintroduces a shuffle fails loudly instead of doubling iteration cost
 at 100-TB scale.
@@ -20,8 +20,9 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import job_ids_of
+from conftest import job_ids_of, place_stores
 
+from propagon_spark.canon import dedup_edges
 from propagon_spark.graph.birank import birank
 from propagon_spark.graph.components import connected_components
 from propagon_spark.graph.core import Graph
@@ -45,19 +46,29 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _live_plan(df) -> str:
+    """The physical plan without the cached-build subtrees under each
+    InMemoryRelation: they are display-only (already materialized)."""
+    live, cached = [], None
+    for line in _plan(df).splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached is not None and depth > cached:
+            continue
+        cached = depth if "InMemoryRelation" in line else None
+        live.append(line)
+    return "\n".join(live)
+
+
 def _live_exchanges(df) -> int:
-    """Exchanges in the live execution path — the cached-build subtree
-    under InMemoryRelation is display-only (already materialized) and
-    excluded."""
-    return _plan(df).split("InMemoryRelation")[0].count("Exchange")
+    """Exchanges in the live execution path."""
+    return _live_plan(df).count("Exchange")
 
 
 def _live_shuffles(df) -> int:
     """Live shuffle exchanges: as :func:`_live_exchanges`, but a
     ``BroadcastExchange`` (the |V|-row build side of a broadcast join)
     does not count."""
-    live = _plan(df).split("InMemoryRelation")[0]
-    return len(re.findall(r"(?<![A-Za-z])Exchange", live))
+    return len(re.findall(r"(?<![A-Za-z])Exchange", _live_plan(df)))
 
 
 def _raw_edges(spark):
@@ -67,15 +78,24 @@ def _raw_edges(spark):
     )
 
 
-def test_folded_dedup_single_exchange_serves_dedup_and_outdeg(spark):
-    # pagerank.py folds dedup into the scatter repartition: hash(src)
-    # clustering satisfies the (src, dst) distinct AND the out-degree
-    # aggregate — ONE exchange of the edge data end to end
-    e = _raw_edges(spark)
-    ded = e.select("src", "dst").repartition(4, "src").distinct()
-    assert _live_exchanges(ded) == 1
-    outdeg = ded.groupBy("src").agg(F.count("*").alias("outdeg"))
-    assert _live_exchanges(outdeg) == 1
+@pytest.mark.parametrize("build", ["driver", "spark", "dense_ids"])
+def test_graph_dedup_runs_no_exchange(spark, monkeypatch, build):
+    # the join PageRank's dedup: every Graph constructor caches the edge
+    # frame hash-partitioned by src, which satisfies the (src, dst)
+    # distinct, so the dedup and the out-degree aggregate over it
+    # exchange no edge data
+    if build == "dense_ids":
+        g = Graph.from_dense_ids(_raw_edges(spark), weight="weight")
+    else:
+        if build == "spark":
+            place_stores(monkeypatch, "workers")
+        g = Graph.from_edges(_raw_edges(spark), weight="weight")
+    try:
+        ded = dedup_edges(g.edges)
+        assert _live_exchanges(ded) == 0
+        assert _live_exchanges(ded.groupBy("src").count()) == 0
+    finally:
+        g.unpersist()
 
 
 def test_cached_graph_partitioning_reused_by_src_aggregates(spark):
@@ -90,18 +110,19 @@ def test_cached_graph_partitioning_reused_by_src_aggregates(spark):
 
 
 def test_scatter_join_ships_only_the_vertex_side(spark):
-    # per-iteration scatter join: the edge side stays put (its one
-    # exchange is the dedup repartition), the vertex-sized ranks side
-    # hash-exchanges to meet it — exactly 2 exchanges, never 3
-    e = _raw_edges(spark)
-    ded = e.select("src", "dst").repartition(4, "src").distinct()
-    ranks = (
-        spark.range(7)
-        .select(F.col("id").alias("src"), F.lit(0.1).alias("rank"))
-        .hint("shuffle_hash")
-    )
-    contrib = ded.join(ranks, "src")
-    assert _plan(contrib).count("Exchange") == 2
+    # per-iteration scatter join: the dedup'd edge side keeps the Graph's
+    # src partitioning, and only the vertex-sized ranks side
+    # hash-exchanges to meet it
+    g = Graph.from_dense_ids(_raw_edges(spark), weight="weight")
+    try:
+        ranks = (
+            spark.range(7)
+            .select(F.col("id").alias("src"), F.lit(0.1).alias("rank"))
+            .hint("shuffle_hash")
+        )
+        assert _live_exchanges(dedup_edges(g.edges).join(ranks, "src")) == 1
+    finally:
+        g.unpersist()
 
 
 def test_parquet_scan_prunes_and_pushes_down(spark):
@@ -302,11 +323,13 @@ _LOOPS = {
     "birank": lambda g, pw, t: birank(
         pw.select(F.col("winner").alias("src"), F.col("loser").alias("dst")),
         iterations=t).dst_scores,
-    # not a fixpoint loop: the join PageRank's hand loop, which releases
-    # each superseded ranks leaf; with redistributing sinks a step is
-    # one job, its sink mass observed on the previous step's job
+    # with redistributing sinks a step's sink mass is observed on the
+    # previous step's job
     "pagerank_join": lambda g, pw, t: pagerank(
         g, impl="join", sink="uniform", iterations=t).scores,
+    # sink-free by the reverse rewrite: still one power step per turn
+    "pagerank_join_sinkfree": lambda g, pw, t: pagerank(
+        g, impl="join", sink="reverse", iterations=t).scores,
 }
 
 #: jobs per turn: 1 for the single-plan walks; hits keeps its two
@@ -314,7 +337,7 @@ _LOOPS = {
 _TURN_JOBS = {
     "katz": 1, "leader_rank": 1, "hits": 3, "rank_centrality": 1,
     "random_walker": 1, "harmonic_unit": 1, "harmonic_weight": 1,
-    "birank": 1, "pagerank_join": 1,
+    "birank": 1, "pagerank_join": 1, "pagerank_join_sinkfree": 1,
 }
 
 

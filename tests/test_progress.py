@@ -31,12 +31,30 @@ def test_pagerank_callback_per_iteration_both_kernels(spark):
         res = pagerank(
             g, iterations=3, impl=impl, progress=lambda ph, m: calls.append((ph, m))
         )
-        # join kernel may chain several power steps into one solver turn;
-        # callback fires per TURN and the steps sum to the iteration count
-        assert all(ph == "pagerank" for ph, _ in calls)
-        assert sum(m["steps"] for _, m in calls) == res.iterations == 3
+        # one callback per power step, with the row appended to metrics
+        assert [m["iteration"] for _, m in calls] == [1, 2, 3]
+        assert all(m["steps"] == 1 for _, m in calls)
+        assert res.iterations == 3
         assert calls == [("pagerank", m) for m in res.metrics]
         assert all("l1_delta" in m and "mass" in m for _, m in calls)
+
+
+def test_join_pagerank_loop_keeps_the_session_conf(spark):
+    # the join loop runs under the session's conf: a query that runs
+    # between its turns sees AQE as the session set it
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    g = chain_graph(spark)
+    spark.conf.set(key, "true")
+    try:
+        seen = []
+        res = pagerank(g, iterations=2, impl="join",
+                       progress=lambda ph, m: seen.append(spark.conf.get(key)))
+        assert seen == ["true", "true"]
+        assert len(res.scores.collect()) == 6
+    finally:
+        spark.conf.set(key, old)
+        g.unpersist()
 
 
 def test_hits_callback_counts(spark):
