@@ -15,10 +15,14 @@ Scale notes:
   AQE decide from stats);
 - a small Graph lives on the driver, from build to store. An input of at
   most ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` rows is collected
-  once with Arrow and interned there (:meth:`Graph.from_edges`): the
-  Graph holds its id-typed edge columns (:meth:`Graph.driver_edges`),
-  and its edge frame is created from them and cached by the first
-  dataflow kernel that reads it. Any Graph at or below that many edge
+  once with Arrow and interned there (:meth:`Graph.from_edges`); a
+  co-commit frame from ``sources.repo_table.derive_edges`` is not run
+  at all below that bound: its repo table is collected instead and
+  derived by the plan's numpy twin. The Graph holds its id-typed edge
+  columns (:meth:`Graph.driver_edges`) and creates its vocab and edge
+  frames from them only when something first reads them; the edge
+  frame is cached by the first dataflow kernel that scans it, so a
+  CSR-only use uploads neither. Any Graph at or below that many edge
   rows cuts each store form in numpy from those columns; one that was
   not built on the driver collects its edge frame once for them.
 
@@ -55,8 +59,9 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from propagon_spark import canon
 from propagon_spark.errors import EmptyDatasetError
-from propagon_spark.ids import _build_vocab, driver_vocab
+from propagon_spark.ids import VOCAB_SCHEMA, _build_vocab, driver_vocab, vocab_frame
 from propagon_spark.plans import blocks
+from propagon_spark.sources.repo_table import derive_pairs, derive_recipe
 
 #: the canonical forms :meth:`Graph.store` builds: each as a plan over
 #: the edge frame (worker stores) and as its numpy twin over the
@@ -69,6 +74,26 @@ _FORMS: dict[str, tuple[Callable[[DataFrame], DataFrame], Callable]] = {
 }
 
 
+class _FirstRead:
+    """A frame field that may be given a zero-argument builder in place
+    of the frame: the builder runs on the field's first read, and the
+    frame it returns is kept."""
+
+    def __set_name__(self, owner, name):
+        self.slot = "_" + name
+
+    def __get__(self, g, owner=None):
+        if g is None:  # the dataclass asks for a default: there is none
+            raise AttributeError(self.slot)
+        value = g.__dict__[self.slot]
+        if not isinstance(value, DataFrame):
+            value = g.__dict__[self.slot] = value()
+        return value
+
+    def __set__(self, g, value):
+        g.__dict__[self.slot] = value
+
+
 @dataclass
 class Graph:
     """An interned, id-typed edge list.
@@ -77,16 +102,19 @@ class Graph:
         vocab: ``(name, id)`` — dense long ids, deterministic.
         edges: ``(src: long, dst: long, weight: double)`` — parallel edges
             preserved (canonicalization is per-algorithm, see canon.py).
+            A Graph built on the driver creates both frames on first read.
         num_vertices: entity count (== vocab rows).
+        spark: the session the frames belong to.
         names: the vocab's names in id order, held on the driver at or
             below the driver-state bound (see :meth:`driver_names`);
             None above it.
     """
 
-    vocab: DataFrame
-    edges: DataFrame
+    vocab: DataFrame = _FirstRead()
+    edges: DataFrame = _FirstRead()
     num_vertices: int
     num_edge_rows: int
+    spark: SparkSession
     names: pa.ChunkedArray | pa.Array | None = None
     #: what :meth:`unpersist` releases: the edge frame, the driver-held
     #: edge columns, the stores and the derived frames, by key
@@ -98,10 +126,6 @@ class Graph:
         # stores are files, which no JVM cleanup deletes: a Graph nobody
         # unpersists releases them when it is garbage-collected
         weakref.finalize(self, _release, self._owned, blocks.EdgeBlocks)
-
-    @property
-    def spark(self) -> SparkSession:
-        return self.edges.sparkSession
 
     @classmethod
     def from_edges(
@@ -121,16 +145,40 @@ class Graph:
         exist; a row with a null endpoint is dropped after its other
         name joined the vocab.
 
-        The normalized input is persisted and probed with one collect of
-        at most ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS + 1`` rows. If
-        the probe holds the whole input, it is interned on the driver
-        (:func:`ids.driver_vocab` ranks the names, ``pc.index_in`` maps
-        them to ids) and the Graph holds its id-typed edge columns; its
-        vocab and edge frames are created from Arrow, and the edge frame
-        is cached lazily. Otherwise the vocab is built with Spark, the
-        names are interned by two joins and the edge frame is cached
-        eagerly. Both give the same ids, names and edge rows.
+        A frame returned by ``sources.repo_table.derive_edges``, with the
+        default column names and its ``weight`` or none, is built from
+        its repo table: one collect of at most
+        ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS + 1`` repo rows. When
+        that is the whole table and neither the pairs formed nor the
+        rows derived exceed the bound, the numpy twin ``derive_pairs``
+        derives and interns them on the driver. Any other input is
+        normalized, persisted and probed with one collect of at most
+        that many + 1 rows; if the probe holds the whole input, it is
+        interned on the driver (:func:`ids.driver_vocab` ranks the
+        names, ``pc.index_in`` maps them to ids). A Graph built on the
+        driver holds its id-typed edge columns and creates its vocab and
+        edge frames on first read. Otherwise the vocab is built with
+        Spark, the names are interned by two joins and the edge frame is
+        cached eagerly. All paths give the same ids, names and edge rows.
         """
+        spark = edges.sparkSession
+        if num_partitions is None:
+            num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        bound = blocks.DRIVER_STORE_MAX_EDGE_ROWS
+        recipe = derive_recipe(edges)
+        if recipe is not None and (src, dst) == ("src", "dst") and weight in ("weight", None):
+            repo, cap, symmetric = recipe
+            table = repo.limit(bound + 1).toArrow()
+            derived = (derive_pairs(table, cap, symmetric, max_rows=bound)
+                       if table.num_rows <= bound else None)
+            if derived is not None:
+                names, s, d, w = derived
+                held = pa.table({"src": s, "dst": d,
+                                 "weight": w if weight else np.ones(len(w))})
+                # the plan's weight, a count or lit(1.0), is never null
+                return cls._driver_built(spark, names, held, num_partitions,
+                                         StructField("weight", DoubleType(), False))
+
         w = (
             F.col(weight).cast("double")
             if weight is not None
@@ -148,18 +196,14 @@ class Graph:
         # the repo table), so materialize the normalized frame once and
         # release it as soon as the Graph is built.
         raw.persist(blocks.STORAGE)
-        if num_partitions is None:
-            num_partitions = int(
-                edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
         try:
             # a limit, not a count: below the bound the probe is the
             # whole input, and above it the probe's scan fills the cache
             # the joins read
-            bound = blocks.DRIVER_STORE_MAX_EDGE_ROWS
             probe = raw.limit(bound + 1).toArrow()
             if probe.num_rows <= bound:
-                return cls._from_arrow(raw, probe, num_partitions)
+                return cls._from_arrow(spark, probe, num_partitions,
+                                       raw.schema["weight"])
 
             names = raw.select(F.col("src_name").alias("name")).unionAll(
                 raw.select(F.col("dst_name").alias("name"))
@@ -187,19 +231,16 @@ class Graph:
         finally:
             raw.unpersist(blocking=False)
 
-        return cls(vocab, e, n, m, names, {"edges": e})
+        return cls(vocab, e, n, m, spark, names, {"edges": e})
 
     @classmethod
-    def _from_arrow(cls, raw: DataFrame, probe: pa.Table,
-                    num_partitions: int) -> "Graph":
-        """:meth:`from_edges` of ``raw``, the whole of which is
-        ``probe``: interned on the driver."""
+    def _from_arrow(cls, spark: SparkSession, probe: pa.Table,
+                    num_partitions: int, weight: StructField) -> "Graph":
+        """:meth:`from_edges` of a normalized input, the whole of which
+        is ``probe``: interned on the driver."""
         src, dst = probe.column("src_name"), probe.column("dst_name")
         both = pa.chunked_array(src.chunks + dst.chunks, src.type)
-        vocab, names = driver_vocab(raw.sparkSession, pc.unique(both).drop_null())
-        n = len(names)
-        if n == 0:
-            raise EmptyDatasetError("empty edge dataset")
+        names = driver_vocab(pc.unique(both).drop_null())
         held = pa.table({
             "src": pc.index_in(src, value_set=names).cast(pa.int64()),
             "dst": pc.index_in(dst, value_set=names).cast(pa.int64()),
@@ -208,17 +249,34 @@ class Graph:
         # the inner joins' semantics: a null endpoint has no id
         held = held.filter(pc.and_(pc.is_valid(held["src"]),
                                    pc.is_valid(held["dst"]))).combine_chunks()
+        return cls._driver_built(spark, names, held, num_partitions, weight)
+
+    @classmethod
+    def _driver_built(cls, spark: SparkSession, names, held: pa.Table,
+                      num_partitions: int, weight: StructField) -> "Graph":
+        """The Graph of ``names`` (in id order) and the id-typed
+        ``(src, dst, weight)`` columns ``held``, which it keeps on the
+        driver; ``weight`` is the edge frame's weight field. The vocab
+        and edge frames are created from them on first read; the edge
+        frame is partitioned by ``src`` as the joined one is, and cached
+        by the first kernel that scans it."""
+        n = len(names)
+        if n == 0:
+            raise EmptyDatasetError("empty edge dataset")
+        owned = {"driver_edges": held}
         schema = StructType([StructField("src", LongType()),
-                             StructField("dst", LongType()),
-                             raw.schema["weight"]])
-        e = raw.sparkSession.createDataFrame(held, schema)
-        # the same src partitioning and cache as the joined frame, filled
-        # by the first kernel that scans it; the driver stores never do
-        e = e.repartition(num_partitions, "src").persist(blocks.STORAGE)
-        if n > blocks.DRIVER_STATE_MAX_VERTICES:
-            names = None
-        return cls(vocab, e, n, held.num_rows, names,
-                   {"edges": e, "driver_edges": held})
+                             StructField("dst", LongType()), weight])
+
+        def edges() -> DataFrame:
+            # read from owned, not held: unpersist() frees the columns
+            if "driver_edges" not in owned:
+                raise RuntimeError("the Graph was unpersisted before its edges were read")
+            e = spark.createDataFrame(owned["driver_edges"], schema)
+            e = owned["edges"] = e.repartition(num_partitions, "src").persist(blocks.STORAGE)
+            return e
+
+        kept = names if n <= blocks.DRIVER_STATE_MAX_VERTICES else None
+        return cls(lambda: vocab_frame(spark, names), edges, n, held.num_rows, spark, kept, owned)
 
     @classmethod
     def from_dense_ids(
@@ -271,7 +329,7 @@ class Graph:
         vocab = spark.range(n).select(
             F.col("id").cast("string").alias("name"), F.col("id")
         )
-        return cls(vocab, e, n, m, None, {"edges": e}, _dense=True)
+        return cls(vocab, e, n, m, spark, None, {"edges": e}, _dense=True)
 
     def with_names(self, df: DataFrame, id_col: str = "id") -> DataFrame:
         """Join names back onto an id-keyed result frame."""
@@ -356,7 +414,9 @@ class Graph:
             return self.with_names(frame).select("name", "id", column).orderBy(
                 *[F.desc(c) if o == "descending" else F.asc(c) for c, o in sort_keys])
         table = table.add_column(0, "name", names)
-        vocab = self.vocab.schema
+        # a vocab still to be created is a vocab_frame: its schema is known
+        made = isinstance(self.__dict__["_vocab"], DataFrame)
+        vocab = self.vocab.schema if made else VOCAB_SCHEMA
         return self.spark.createDataFrame(
             table.take(pc.sort_indices(table, sort_keys=sort_keys)),
             StructType([vocab["name"], vocab["id"], value]),

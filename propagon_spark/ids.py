@@ -28,9 +28,10 @@ every driver-held structure in the engine shares
   which is exactly Spark's ``UTF8_BINARY`` string order (and Python's
   ``sorted(key=str.encode)``), so the ids equal the distributed path's.
   Arrow rather than a numpy object array: a 2M-name sort peaked at about
-  half the driver RSS. The sort and numbering are :func:`driver_vocab`,
-  which ``Graph.from_edges`` also calls when it interns a small edge
-  list on the driver (``graph/core.py``).
+  half the driver RSS. The sort is :func:`driver_vocab`, which
+  ``Graph.from_edges`` also calls when it interns a small edge list on
+  the driver (``graph/core.py``), and so does the co-commit derivation's
+  numpy twin (``sources/repo_table.py``).
 - **Above it**, no global sort bottleneck: bucket names by
   **driver-fixed range split points** (computed once from a seeded
   sample and inlined as literals), count per bucket, broadcast the
@@ -52,6 +53,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from propagon_spark.plans import blocks
 from propagon_spark.plans.iterate import truncate_lineage
@@ -66,18 +68,25 @@ def build_vocab(names: DataFrame, num_buckets: int | None = None) -> DataFrame:
     return _build_vocab(names, num_buckets)[0]
 
 
-def driver_vocab(
-    spark, names: pa.ChunkedArray | pa.Array
-) -> tuple[DataFrame, pa.ChunkedArray | pa.Array]:
-    """Rank distinct, non-null ``names`` on the driver: the ``(name, id)``
-    vocab frame, created from Arrow, and the names in id order. Arrow
-    sorts strings by the unsigned bytes of their UTF-8 encoding, which is
-    Spark's ``UTF8_BINARY`` order, so the ids are the distributed path's.
-    The one rank rule of both driver-side interners
-    (:func:`_build_vocab` and ``Graph.from_edges`` below the edge bound)."""
-    names = names.take(pc.sort_indices(names))
+#: the schema of a driver-ranked vocab frame (:func:`vocab_frame`)
+VOCAB_SCHEMA = StructType([StructField("name", StringType()), StructField("id", LongType())])
+
+
+def driver_vocab(names: pa.ChunkedArray | pa.Array) -> pa.ChunkedArray | pa.Array:
+    """Rank distinct, non-null ``names`` on the driver: the names in id
+    order. Arrow sorts strings by the unsigned bytes of their UTF-8
+    encoding, which is Spark's ``UTF8_BINARY`` order, so the ids are the
+    distributed path's. The one rank rule of every driver-side interner
+    (:func:`_build_vocab`, ``Graph.from_edges`` below the edge bound and
+    ``sources.repo_table.derive_pairs``)."""
+    return names.take(pc.sort_indices(names))
+
+
+def vocab_frame(spark, names: pa.ChunkedArray | pa.Array) -> DataFrame:
+    """The ``(name, id)`` vocab frame of ``names`` in id order, created
+    from Arrow with :data:`VOCAB_SCHEMA`."""
     table = pa.table({"name": names, "id": np.arange(len(names), dtype=np.int64)})
-    return spark.createDataFrame(table, "name string, id long"), names
+    return spark.createDataFrame(table, VOCAB_SCHEMA)
 
 
 def _build_vocab(
@@ -98,8 +107,8 @@ def _build_vocab(
     if n <= blocks.DRIVER_STATE_MAX_VERTICES:
         col = d.toArrow().column("name")
         d.unpersist()
-        vocab, col = driver_vocab(spark, col)
-        return vocab, n, col
+        col = driver_vocab(col)
+        return vocab_frame(spark, col), n, col
 
     # driver-fixed split points from a seeded sample (deterministic for
     # the rest of this build; ids don't depend on the choice)

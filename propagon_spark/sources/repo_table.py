@@ -6,13 +6,18 @@ table of source-code repositories with columns
 content: string)``. The reference has no such table — its graphs come
 from ``src dst [weight]`` text files
 (``/root/reference/crates/propagon-cli/src/io.rs:107-125``) — so the
-derivation layer is new, deterministic, and pure Spark SQL (SURVEY.md
-§7.2), cross-checkable row-for-row by a DuckDB oracle.
+derivation layer is new and deterministic: a Spark SQL plan (SURVEY.md
+§7.2) with a numpy twin for small tables, both cross-checkable
+row-for-row by a DuckDB oracle.
 
 Edge derivation is one ``groupBy(repo, commit)`` that collects each
 commit's sorted distinct paths, then generates the commit's file pairs
 inside the array and counts them per pair: two shuffle exchanges, no
-self-join (:func:`derive_edges`).
+self-join (:func:`derive_edges`). Its numpy twin :func:`derive_pairs`
+derives the same rows from one Arrow batch of the repo table; below the
+driver edge bound ``Graph.from_edges`` builds a derived frame's Graph
+with it, from the recipe :func:`derive_edges` records
+(:func:`derive_recipe`).
 
 Scale notes: a commit of g files is one aggregation buffer of O(g) paths
 until the cap test drops it, so a giant merge/bot commit costs O(g)
@@ -24,8 +29,16 @@ results stay deterministic and SQL-expressible.
 
 from __future__ import annotations
 
+import weakref
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+from propagon_spark.ids import driver_vocab
 
 #: commits touching more than this many files are excluded from edge
 #: derivation (fan-out bound; SURVEY.md §7.2)
@@ -243,7 +256,9 @@ def derive_edges(
     max_commit_files: int = MAX_COMMIT_FILES,
     symmetric: bool = True,
 ) -> DataFrame:
-    """Co-commit edge derivation (SURVEY.md §7.2) — pure Catalyst.
+    """Co-commit edge derivation (SURVEY.md §7.2): a Catalyst plan,
+    and its numpy twin :func:`derive_pairs`, both pinned by the oracle
+    SQL below.
 
     Files sharing a (repo, commit) group are linked; weight = number of
     shared commits. One row per unordered pair, ``src < dst`` by path;
@@ -258,6 +273,11 @@ def derive_edges(
     order of ``a.path < b.path``); the pairs ``(p[i], p[j]), i < j`` are
     generated inside the array and counted per pair by a second
     ``groupBy``. Two shuffle exchanges; no self-join.
+
+    The returned frame's recipe ``(repo projection, cap, symmetric)`` is
+    recorded (:func:`derive_recipe`) when ``repo``, ``commit`` and
+    ``path`` are string-typed, so that ``Graph.from_edges`` can derive a
+    small table's rows on the driver instead of running this plan.
 
     The spec is the oracle SQL (DuckDB, same column names):
 
@@ -303,13 +323,80 @@ def derive_edges(
         )
         .agg(F.count("*").cast("double").alias("weight"))
     )
-    if not symmetric:
-        return pairs
-    return pairs.unionAll(
-        pairs.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
+    if symmetric:
+        pairs = pairs.unionAll(
+            pairs.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
+            )
         )
-    )
+    cols = ("repo", "commit", "path")
+    if all(isinstance(repo_df.schema[c].dataType, StringType) for c in cols):
+        _RECIPES[pairs] = (repo_df.select(*cols), max_commit_files, symmetric)
+    return pairs
+
+
+#: derive_edges frame -> (repo projection, cap, symmetric); a frame
+#: hashes by identity, so a transformed derive frame has no recipe
+_RECIPES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def derive_recipe(edges: DataFrame) -> tuple[DataFrame, int, bool] | None:
+    """``(repo projection, cap, symmetric)`` of a frame returned by
+    :func:`derive_edges`; None for any other frame."""
+    return _RECIPES.get(edges)
+
+
+def derive_pairs(
+    table: pa.Table, cap: int, symmetric: bool, max_rows: int
+) -> tuple[pa.Array, np.ndarray, np.ndarray, np.ndarray] | None:
+    """:func:`derive_edges` of the ``(repo, commit, path)`` columns of
+    ``table`` in numpy: the endpoint names in id order (the vocab's rank
+    rule, :func:`ids.driver_vocab`), int64 ``src``/``dst`` ids into them
+    and float64 weights; the same row multiset as the plan, whose names
+    are ``names[src]``, ``names[dst]``. None when more than ``max_rows``
+    unordered pairs would be formed before they are counted (checked
+    before any pair is), or when more than ``max_rows`` rows are
+    derived."""
+    repo, commit, path = (
+        table.column(c).combine_chunks().cast(pa.string()) for c in ("repo", "commit", "path"))
+    named = pc.and_(pc.is_valid(repo), pc.is_valid(commit))
+    repo, commit, path = (c.filter(named) for c in (repo, commit, path))
+    # file ranks over every row; a null path ranks -1, first in a commit
+    name = pc.binary_join_element_wise(repo, path, ":")
+    files = driver_vocab(pc.unique(name).drop_null())
+    nf = len(files)
+    f = pc.index_in(name, value_set=files).fill_null(-1).to_numpy().astype(np.int64)
+    r, c = (x.dictionary_encode().indices.to_numpy() for x in (repo, commit))
+    # distinct (commit, file) rows, by commit, files ascending
+    order = np.lexsort((f, c, r))
+    r, c, f = r[order], c[order], f[order]
+    head = np.ones(f.size, bool)
+    head[1:] = (r[1:] != r[:-1]) | (c[1:] != c[:-1])
+    distinct = head.copy()
+    distinct[1:] |= f[1:] != f[:-1]
+    group, f = np.cumsum(head[distinct]) - 1, f[distinct]
+    # the cap counts a null path; pairs form among real paths only
+    kept = (np.bincount(group) <= cap)[group] & (f >= 0)
+    group, f = group[kept], f[kept]
+    start = np.flatnonzero(np.r_[True, group[1:] != group[:-1]])
+    size = np.diff(np.r_[start, f.size])
+    later = np.repeat(size, size) - (np.arange(f.size) - np.repeat(start, size)) - 1
+    total = int(later.sum())
+    if total > max_rows:
+        return None
+    # the i < j pairs: each entry with every later entry of its commit
+    a = np.repeat(np.arange(f.size), later)
+    b = a + 1 + np.arange(total) - np.repeat(np.cumsum(later) - later, later)
+    code, weight = np.unique(f[a] * nf + f[b], return_counts=True)
+    if code.size * (1 + symmetric) > max_rows:
+        return None
+    used = np.unique(np.concatenate([code // nf, code % nf]))
+    src, dst = np.searchsorted(used, code // nf), np.searchsorted(used, code % nf)
+    weight = weight.astype(np.float64)
+    if symmetric:
+        src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+        weight = np.concatenate([weight, weight])
+    return files.take(pa.array(used)), src, dst, weight
 
 
 def content_sha(repo_df: DataFrame) -> DataFrame:

@@ -45,9 +45,12 @@ def cocommit_edges(
         F.lit("sql").alias("lang"),
         F.lit("").alias("content"),
     )
+    if min_weight == 1:
+        # derive_edges' own frame, which Graph.from_edges can derive on
+        # the driver when the table is small
+        return derive_edges(repo_shaped, max_commit_files=ORDER_CAP, symmetric=symmetric)
     e = derive_edges(repo_shaped, max_commit_files=ORDER_CAP, symmetric=False)
-    if min_weight > 1:
-        e = e.where(F.col("weight") >= min_weight)
+    e = e.where(F.col("weight") >= min_weight)
     if symmetric:
         e = e.unionAll(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")

@@ -6,10 +6,13 @@ import itertools
 import random
 
 import pytest
+from conftest import place_stores
 from pyspark.sql import functions as F
 
 from propagon_spark.graph import Graph
+from propagon_spark.graph import core as core_mod
 from propagon_spark.graph.pagerank import pagerank
+from propagon_spark.plans import blocks
 from propagon_spark.sources.repo_table import (
     derive_edges,
     load_repo_table,
@@ -57,6 +60,43 @@ def test_derive_edges_matches_manual(spark):
     assert sym.count() == 6
 
 
+def _random_table():
+    rng = random.Random(7)
+    repos = ["r0", "r1", "r2", None]
+    commits = [f"c{i}" for i in range(12)] + [None]
+    paths = [f"p{i}.py" for i in range(14)] + ["é.py", "Z.py", None]
+    rows = [
+        (rng.choice(repos), rng.choice(paths), rng.choice(commits))
+        for _ in range(250)
+    ]
+    rows += rng.sample(rows, 50)  # exact duplicates
+    return rows
+
+
+#: the derivation cases: ``(repo, path, commit)`` rows and their cap
+_CASES = {
+    "cap": ([("r", f"f{i}.py", "big") for i in range(5)]
+            + [("r", "a.py", "ok"), ("r", "b.py", "ok")], 4),
+    # "full" has cap real paths plus one null path: cap + 1 distinct
+    # paths, so it is dropped; "fits" has cap - 1 real paths plus a null
+    "null_path_at_cap": ([("r", f"f{i}", "full") for i in range(3)] + [("r", None, "full")]
+                         + [("r", "a", "fits"), ("r", "b", "fits"), ("r", None, "fits")], 3),
+    "null_repo_or_commit": ([("r", "a", None), ("r", "b", None),
+                             (None, "a", "c1"), (None, "b", "c1"),
+                             ("r", "a", "c2"), ("r", "b", "c2")], 100),
+    # 4 distinct paths fit a cap of 4 although the commit has 7 rows
+    "duplicate_rows": ([("r", "a", "c1")] * 3 + [("r", "b", "c1")] * 2
+                       + [("r", "c", "c1"), ("r", "d", "c1")], 4),
+    "same_commit_two_repos": ([("r", "a", "c"), ("r", "b", "c"),
+                               ("s", "a", "c"), ("s", "z", "c")], 100),
+    # UTF-8 byte order: "Z" < "a" < "z" < "é"; and repo "r-" sorts
+    # before "r" once ":" is appended ("r-:" < "r:")
+    "byte_order": ([("r", p, "c1") for p in ("é", "z", "Z", "a")]
+                   + [("r-", "é", "c2"), ("r-", "Z", "c2"), ("r", "é", "c2"), ("r", "Z", "c2")], 100),
+    "random": (_random_table(), 6),
+}
+
+
 def test_commit_cap(spark):
     rows = [("r", f"f{i}.py", "big", "py", "x") for i in range(5)]
     rows += [("r", "a.py", "ok", "py", "x"), ("r", "b.py", "ok", "py", "y")]
@@ -78,27 +118,18 @@ def _derived(spark, rows, **kw):
 
 
 def test_null_repo_or_commit_contributes_nothing(spark):
-    rows = [
-        ("r", "a", None), ("r", "b", None),
-        (None, "a", "c1"), (None, "b", "c1"),
-        ("r", "a", "c2"), ("r", "b", "c2"),
-    ]
+    rows, _ = _CASES["null_repo_or_commit"]
     assert _derived(spark, rows) == {("r:a", "r:b"): 1.0}
 
 
 def test_null_path_counts_toward_cap_but_forms_no_edge(spark):
-    # "full" has cap real paths plus one null path: cap + 1 distinct
-    # paths, so it is dropped; "fits" has cap - 1 real paths plus a null
-    rows = [("r", f"f{i}", "full") for i in range(3)] + [("r", None, "full")]
-    rows += [("r", "a", "fits"), ("r", "b", "fits"), ("r", None, "fits")]
-    assert _derived(spark, rows, max_commit_files=3) == {("r:a", "r:b"): 1.0}
+    rows, cap = _CASES["null_path_at_cap"]
+    assert _derived(spark, rows, max_commit_files=cap) == {("r:a", "r:b"): 1.0}
 
 
 def test_duplicate_rows_count_once(spark):
-    rows = [("r", "a", "c1")] * 3 + [("r", "b", "c1")] * 2
-    rows += [("r", "c", "c1"), ("r", "d", "c1")]
-    # 4 distinct paths fit a cap of 4 although the commit has 7 rows
-    e = _derived(spark, rows, max_commit_files=4)
+    rows, cap = _CASES["duplicate_rows"]
+    e = _derived(spark, rows, max_commit_files=cap)
     assert e == {
         (f"r:{a}", f"r:{b}"): 1.0
         for a, b in itertools.combinations("abcd", 2)
@@ -106,21 +137,12 @@ def test_duplicate_rows_count_once(spark):
 
 
 def test_same_commit_in_two_repos_forms_no_cross_repo_edge(spark):
-    rows = [("r", "a", "c"), ("r", "b", "c"), ("s", "a", "c"), ("s", "z", "c")]
+    rows, _ = _CASES["same_commit_two_repos"]
     assert _derived(spark, rows) == {("r:a", "r:b"): 1.0, ("s:a", "s:z"): 1.0}
 
 
 def test_derive_edges_matches_python_reference(spark):
-    rng = random.Random(7)
-    repos = ["r0", "r1", "r2", None]
-    commits = [f"c{i}" for i in range(12)] + [None]
-    paths = [f"p{i}.py" for i in range(14)] + ["é.py", "Z.py", None]
-    rows = [
-        (rng.choice(repos), rng.choice(paths), rng.choice(commits))
-        for _ in range(250)
-    ]
-    rows += rng.sample(rows, 50)  # exact duplicates
-    cap = 6
+    rows, cap = _CASES["random"]
 
     groups = collections.defaultdict(set)
     for repo, path, commit in rows:
@@ -219,3 +241,93 @@ def test_sparse_generator_contract(spark):
     fwd = e.select("src", "dst")
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     assert fwd.exceptAll(rev).count() == 0
+
+
+def _spy_derive_pairs(monkeypatch):
+    """Record each ``derive_pairs`` result ``Graph.from_edges`` gets."""
+    results = []
+
+    def spy(*args, **kw):
+        results.append(real(*args, **kw))
+        return results[-1]
+
+    real = core_mod.derive_pairs
+    monkeypatch.setattr(core_mod, "derive_pairs", spy)
+    return results
+
+
+def _graph_values(g, driver_held):
+    """A Graph's vocab, names and edge-row multiset: its driver-held
+    columns when ``driver_held``, its edge frame otherwise."""
+    if driver_held:
+        held = g.driver_edges()
+        edges = zip(*(held.column(c).to_pylist() for c in ("src", "dst", "weight")))
+    else:
+        assert "driver_edges" not in g._owned
+        edges = (tuple(r) for r in g.edges.collect())
+    return (sorted(tuple(r) for r in g.vocab.collect()), g.names.to_pylist(),
+            g.num_vertices, g.num_edge_rows, collections.Counter(edges))
+
+
+def _spark_built(spark, monkeypatch, edges, weight):
+    """``_graph_values`` of ``edges``' Graph built with Spark."""
+    with monkeypatch.context() as m:
+        place_stores(m, "workers")
+        g = Graph.from_edges(edges, weight=weight)
+        try:
+            return _graph_values(g, driver_held=False)
+        finally:
+            g.unpersist()
+
+
+@pytest.mark.parametrize("symmetric, weight", [(False, "weight"), (True, "weight"), (True, None)])
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_driver_derive_builds_the_spark_graph(spark, monkeypatch, case, symmetric, weight):
+    # below the bound a derive frame's Graph is derived and interned by
+    # the numpy twin: the vocab, names and edge rows of the Spark build
+    rows, cap = _CASES[case]
+    df = spark.createDataFrame(rows, "repo string, path string, commit string")
+    edges = derive_edges(df, max_commit_files=cap, symmetric=symmetric)
+    want = _spark_built(spark, monkeypatch, edges, weight)
+    derived = _spy_derive_pairs(monkeypatch)
+    g = Graph.from_edges(edges, weight=weight)
+    try:
+        assert len(derived) == 1 and derived[0] is not None
+        assert _graph_values(g, driver_held=True) == want
+    finally:
+        g.unpersist()
+
+
+#: (repo rows, transform of the derive frame, edge bound) of inputs the
+#: driver derivation must leave to today's path: more repo rows than the
+#: bound (46 > 45); more pairs formed than the bound (75 > 60, with 42
+#: rows derived); more rows derived than the bound (30 > 20, 15 pairs);
+#: a derive frame transformed before the build
+_FOUR_FILES = [("r", p, f"c{i}") for i in range(10) for p in "abcd"]
+_SIX_FILES = [("r", p, "big") for p in "efghij"]
+_FALLBACKS = {
+    "repo_rows": (_FOUR_FILES + _SIX_FILES, None, 45),
+    "pairs_formed": (_FOUR_FILES + _SIX_FILES, None, 60),
+    "rows_derived": (_SIX_FILES, None, 20),
+    "transformed": (_FOUR_FILES + _SIX_FILES, lambda e: e.where("weight > 0"), None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FALLBACKS))
+def test_driver_derive_falls_back(spark, monkeypatch, case):
+    rows, transform, bound = _FALLBACKS[case]
+    df = spark.createDataFrame(rows, "repo string, path string, commit string")
+    edges = derive_edges(df)
+    if transform is not None:
+        edges = transform(edges)
+    want = _spark_built(spark, monkeypatch, edges, "weight")
+    derived = _spy_derive_pairs(monkeypatch)
+    if bound is not None:
+        monkeypatch.setattr(blocks, "DRIVER_STORE_MAX_EDGE_ROWS", bound)
+    g = Graph.from_edges(edges, weight="weight")
+    try:
+        assert all(d is None for d in derived)
+        assert (case == "repo_rows" or transform is not None) == (not derived)
+        assert _graph_values(g, "driver_edges" in g._owned) == want
+    finally:
+        g.unpersist()

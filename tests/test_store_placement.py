@@ -11,6 +11,7 @@ import weakref
 from collections import Counter
 
 import pytest
+from pyspark.sql import DataFrame
 from conftest import block_dirs, job_ids_of, make_edges, place_stores, scores_dict
 
 from propagon_spark import canon
@@ -20,10 +21,12 @@ from propagon_spark.graph import kcore as kcore_mod
 from propagon_spark.graph import lpa as lpa_mod
 from propagon_spark.graph import pagerank_csr
 from propagon_spark.graph.bootstrap import bootstrap
+from propagon_spark.graph.degree import degree
 from propagon_spark.graph.kcore import kcore
 from propagon_spark.graph.lpa import label_propagation
 from propagon_spark.graph.pagerank import pagerank
 from propagon_spark.plans import blocks
+from propagon_spark.sources.repo_table import derive_edges, load_repo_table, synth_repo_table
 
 
 def _random_rows():
@@ -206,7 +209,8 @@ def test_build_paths_reject_no_vertices(spark, monkeypatch, rows, store_placemen
 def test_small_build_runs_only_the_probe(spark):
     # below the bound a build over a local input runs one job, the
     # limit collect of the normalized input; the first k-core, LPA and
-    # CSR PageRank on the Graph then run none and write no block dir
+    # CSR PageRank on the Graph then run none, write no block dir and
+    # create no edge frame, which the first dataflow kernel creates
     dirs = block_dirs(spark)
     built = []
     assert len(job_ids_of(spark, lambda: built.append(
@@ -219,8 +223,37 @@ def test_small_build_runs_only_the_probe(spark):
             pagerank(g, impl="csr", sink="reverse", iterations=5).scores.collect(),
         ))) == 0
         assert block_dirs(spark) == dirs
+        assert "edges" not in g._owned
+        assert degree(g, "out").count() == g.num_vertices
+        assert "edges" in g._owned
     finally:
         g.unpersist()
+
+
+def test_small_repo_table_build_runs_the_schema_and_scan_jobs(spark, tmp_path):
+    # a parquet repo table below the bound -> Graph -> CSR PageRank runs
+    # the loader's schema job and the one repo scan: the derive plan,
+    # the vocab and the edge frame run none, and none is created
+    path = str(tmp_path / "repo.parquet")
+    synth_repo_table(spark, n_repos=3, n_files_per_repo=10,
+                     n_commits_per_repo=8).write.parquet(path)
+    built = []
+
+    def run():
+        edges = derive_edges(load_repo_table(spark, path))
+        built.append(Graph.from_edges(edges, weight="weight"))
+        pagerank(built[0], impl="csr", sink="uniform", iterations=5).scores.collect()
+
+    assert len(job_ids_of(spark, run)) == 2
+    g, = built
+    try:
+        # neither frame was created: both are still their builders
+        assert "edges" not in g._owned
+        assert not isinstance(g.__dict__["_vocab"], DataFrame)
+    finally:
+        g.unpersist()
+    with pytest.raises(RuntimeError, match="unpersisted"):
+        g.edges
 
 
 def test_dense_id_stores_collect_edges_once(spark):
