@@ -9,7 +9,7 @@ pagerank/ppr    yes    no       kept        directed    (pagerank.rs:6-7,133-141
 leader_rank     yes    no       kept        directed    (leader_rank.rs:74-87)
 hits            yes    no       kept        directed    (hits.rs:118-126)
 k-core          yes    no       dropped     undirected  (kcore.rs:47-58)
-components      no     carried  kept        undirected reach (components.rs:8-11)
+components      yes    no       dropped     undirected  (components.rs:8-11)
 degree          no     yes      kept        per flag    (degree.rs:20-37)
 katz            no     yes      kept        directed    (katz.rs:72-76)
 lpa/triangles   yes    no       dropped     undirected  (new; SURVEY §2.4-2.5)

@@ -29,9 +29,10 @@ CSR PageRank uses):
   process, with no Spark job; above that it is dst-bucketed worker
   shards and a round is ONE Python-worker RDD job (broadcast ``h``, one
   kernel call per bucket, the buckets' buffers assembled on the
-  driver). Exact array equality ``h_next == h`` on the driver stops the
-  loop. Isolated vertices keep degree 0. The result is named and sorted
-  on the driver (``Graph.emit``): a ``LocalRelation``, no vocab join.
+  driver). The rounds run on ``plans.iterate.fixpoint``'s driver
+  backend; a round that changes no ``h`` stops the loop. Isolated
+  vertices keep degree 0. The result is named and sorted on the driver
+  (``Graph.emit``): a ``LocalRelation``, no vocab join.
 - **Dataflow** (n > the bound, :func:`_kcore_hindex`): state ``h`` only
   for non-isolated vertices, h₀ = degree (a per-src aggregate of the
   cached adjacency). A round is ``cache ⋈ broadcast(h)`` on ``dst``,
@@ -130,13 +131,14 @@ def _kcore_blocks(g: Graph) -> DataFrame:
     docstring). ``h`` is non-increasing, so the first round that changes
     nothing is the fixpoint."""
     store = g.store("undirected")
-    # h ≤ degree < n: the store's id dtype (int32 below 2³¹) holds it
-    h = store.src_degree.astype(store.dtype)
-    while True:
+
+    def step(h: np.ndarray) -> tuple[np.ndarray, dict]:
         nxt = store.gather(_hindex, h, store.dtype)
-        if np.array_equal(nxt, h):
-            break
-        h = nxt
+        return nxt, {"changed": int(np.count_nonzero(nxt != h))}
+
+    # h ≤ degree < n: the store's id dtype (int32 below 2³¹) holds it
+    h, _ = fixpoint(store.src_degree.astype(store.dtype), step, {},
+                    lambda _turn, m, _last: m["changed"] == 0)
     return g.emit("coreness", h.astype(np.int64),
                   [("coreness", "descending"), ("id", "ascending")],
                   nullable=False)

@@ -22,8 +22,9 @@ Two executions, split at the edge-block store's bound
   ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` edge rows (the store is
   held on the driver, no Spark job), ONE Python-worker job over the
   store's worker shards above that. Vertices whose ``src_degree`` is 0
-  keep their label; exact array equality stops the loop. The result is
-  a driver-sorted ``LocalRelation`` (``Graph.emit``).
+  keep their label. The rounds run on ``plans.iterate.fixpoint``'s
+  driver backend; a round that changes no label stops the loop. The
+  result is a driver-sorted ``LocalRelation`` (``Graph.emit``).
 - **Dataflow** (n > the bound): per round one scatter join (labels onto
   symmetric edges), ``groupBy(dst, label).count()`` for neighborhood
   histograms, then a ``max_by``-style struct-max to pick (count desc,
@@ -118,13 +119,15 @@ def _lpa_blocks(g: Graph, max_rounds: int) -> DataFrame:
     """Label propagation on the edge-block store (module docstring)."""
     store = g.store("undirected")
     isolated = store.src_degree == 0
-    label = np.arange(g.num_vertices, dtype=store.dtype)
-    for _ in range(max_rounds):
+
+    def step(label: np.ndarray) -> tuple[np.ndarray, dict]:
         nxt = store.gather(_mode, label, store.dtype)
         nxt[isolated] = label[isolated]
-        if np.array_equal(nxt, label):
-            break
-        label = nxt
+        return nxt, {"changed": int(np.count_nonzero(nxt != label))}
+
+    label, _ = fixpoint(np.arange(g.num_vertices, dtype=store.dtype), step, {},
+                        lambda _turn, m, _last: m["changed"] == 0,
+                        max_turns=max_rounds)
     return g.emit("label", label.astype(np.int64),
                   [("label", "ascending"), ("id", "ascending")],
                   nullable=g.vocab.schema["id"].nullable)

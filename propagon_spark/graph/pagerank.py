@@ -3,7 +3,25 @@
 Re-creates the exact semantics of
 ``/root/reference/crates/propagon/src/algos/pagerank.rs`` (params 63-83,
 sink policies 31-46/147-218, teleport 51-59/106-131, update rule 175-235)
-as a Spark-first power iteration:
+as a power iteration with two kernels. Both run their power steps on
+``plans.iterate.fixpoint``, one step per turn, under one stop rule, one
+metrics row and one checkpoint cadence; only the setup and the
+emission differ.
+
+**CSR** (the default up to ``plans.blocks.DRIVER_STATE_MAX_VERTICES``
+vertices, 8 bytes each): the rank vector is a driver state, and a step
+is one round of ``A^T·(p·inv_out)`` (:func:`_spmv`, an ``np.bincount``)
+on the Graph's ``"out"`` edge-block store (``"out_reverse"`` for
+``sink="reverse"``; built once per Graph, its ``src_degree`` the
+out-degrees), then the sink term and update in numpy. At most
+``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` edge rows the store is held
+on the driver and a fit runs no Spark job; above that a round is one
+Python-worker job (``plans/blocks.py``). No join or shuffle anywhere,
+and the driver's fixed summation order makes the scores
+bit-deterministic at any parallelism. ``Graph.emit`` names and sorts
+them on the driver.
+
+**Join** (``impl="join"``): pure dataflow, with no vertex cap:
 
 - **scatter**: join ranks to the dedup'd edge frame on ``src``
   (both sides hash-partitioned on the key → no per-iteration re-shuffle of
@@ -14,12 +32,14 @@ as a Spark-first power iteration:
   with the gathered frame, the sink mass a driver literal (observed on
   the job that materialized the state) + a projection.
 
-Each power step is one turn of ``plans.iterate.fixpoint``: one
-materializing job, on which the L1 delta, the mass and the next sink
-mass are observed. The loop runs under the session's conf (AQE on by
-default), so its skew-join handling backs up the hub salting below.
+A join step is one materializing job, on which the L1 delta, the mass
+and the next sink mass are observed. The loop runs under the session's
+conf (AQE on by default), so its skew-join handling backs up the hub
+salting below.
 
-Reference semantics reproduced exactly (parity fixtures in tests):
+Reference semantics reproduced exactly by both kernels (parity
+fixtures in tests; csr/join equality pinned by the ``impl``-parametrized
+cases):
 - parallel edges deduplicated, weights ignored (``pagerank.rs:6-7,133-141``);
 - sink policies ``none | uniform | all | reverse``:
   - ``reverse`` (reference default): each sink's out-edges are replaced by
@@ -39,8 +59,8 @@ Reference semantics reproduced exactly (parity fixtures in tests):
 Beyond the reference (north rule): convergence mode (L1 delta < tol) with
 per-iteration metrics, checkpoint/resume mid-convergence (saved from
 ``fixpoint``'s per-turn ``save`` hook), lineage truncation via
-localCheckpoint, and explicit salting of the scatter join for
-high-out-degree hubs (AQE skew join as backstop).
+localCheckpoint, and explicit salting of the join kernel's scatter join
+for high-out-degree hubs (AQE skew join as backstop).
 """
 
 from __future__ import annotations
@@ -52,9 +72,10 @@ import uuid
 from dataclasses import dataclass, field
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from propagon_spark.canon import dedup_edges, reverse_sinks
@@ -75,7 +96,7 @@ _SINKS = ("none", "uniform", "all", "reverse")
 _HUB_MIN_OUT_DEGREE = 1_000_000
 _HUB_SALTS = 16
 
-# Join-kernel gather layout (see pagerank()): from this many vertices on,
+# Join-kernel gather layout (see _join_kernel()): from this many vertices on,
 # the gather runs as an explicit dst repartition over about
 # _KEYS_PER_TASK vertex keys per task.
 _REPART_MIN_VERTICES = 2_000_000
@@ -94,11 +115,12 @@ class PageRankResult:
     timings: dict = field(default_factory=dict)
 
 
-def _seed_ids(g: Graph, seeds: dict[str, float]) -> np.ndarray:
+def _teleport(g: Graph, seeds: dict[str, float]) -> tuple[np.ndarray, list[float]]:
     """Validate ``seeds`` (``pagerank.rs:106-131``: non-empty, weights
     positive and finite, names must exist in the graph) and return their
-    ids in ``seeds`` order. They resolve against the driver-held names
-    with no Spark job; above the bound, with one lookup join."""
+    ids and normalized weights in ``seeds`` order: the teleport of both
+    kernels. Names resolve against the driver-held names with no Spark
+    job; above the bound, with one lookup join."""
     if len(seeds) == 0:
         raise InvalidParameterError("seed list must not be empty")
     for name, w in seeds.items():
@@ -117,20 +139,29 @@ def _seed_ids(g: Graph, seeds: dict[str, float]) -> np.ndarray:
     if any(known.get(k) is None for k in keys):
         missing = sorted(k for k in seeds if known.get(str(k)) is None)
         raise InvalidParameterError(f"unknown seed name(s): {missing}")
-    return np.array([known[k] for k in keys], dtype=np.int64)
-
-
-def _teleport_frame(g: Graph, seeds: dict[str, float] | None) -> DataFrame:
-    """(id, v) teleport distribution; uniform 1/n when seeds is None
-    (``seeds`` already checked by :func:`_seed_ids`)."""
-    n = g.num_vertices
-    if seeds is None:
-        return g.vocab.select("id", F.lit(1.0 / n).alias("v"))
     total = float(sum(seeds.values()))
-    rows = [(str(k), float(v) / total) for k, v in seeds.items()]
-    seed_df = g.spark.createDataFrame(rows, "name string, v double")
-    return g.vocab.join(seed_df, "name", "left").select(
-        "id", F.coalesce("v", F.lit(0.0)).alias("v")
+    return (np.array([known[k] for k in keys], dtype=np.int64),
+            [float(w) / total for w in seeds.values()])
+
+
+def _spmv(pdiv: np.ndarray, bucket: list, nlocal: int) -> np.ndarray:
+    """Store kernel: one bucket's share of ``A^T·pdiv`` (``pdiv`` =
+    p·inv_out, the division pre-folded on the driver). An
+    order-insensitive scatter-add, so shards add up in any order."""
+    acc = np.zeros(nlocal)
+    for src, dstl in bucket:
+        if len(dstl):
+            acc += np.bincount(dstl, weights=pdiv[src], minlength=nlocal)
+    return acc
+
+
+def _ranks(spark: SparkSession, state) -> DataFrame:
+    """``(id, rank)`` of a kernel state: the join kernel's frame or the
+    CSR kernel's driver vector."""
+    if isinstance(state, DataFrame):
+        return state.select("id", "rank")
+    return spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(len(state), dtype="int64"), "rank": state})
     )
 
 
@@ -154,13 +185,11 @@ def pagerank(
     convergence mode, bounded by ``max_iterations``).
 
     ``checkpoint_dir`` + ``run_id`` enable durable Parquet checkpoints every
-    ``checkpoint_interval`` iterations; ``resume=True`` continues from the
+    ``checkpoint_interval`` (≥ 1) iterations; ``resume=True`` continues from the
     newest durable checkpoint of the same run.
 
-    ``impl``: ``"auto"`` picks the CSR-blocked vectorized kernel
-    (pagerank_csr.py on the plans/blocks.py edge-block store — distributed
-    edge blocks, broadcast vertex state, no per-iteration shuffle) while
-    ``num_vertices`` is at most ``plans.blocks.DRIVER_STATE_MAX_VERTICES``
+    ``impl``: ``"auto"`` picks the CSR kernel (see the module docstring)
+    while ``num_vertices`` is at most ``plans.blocks.DRIVER_STATE_MAX_VERTICES``
     (read at call time, the bound of every store kernel), the
     pure-dataflow join kernel beyond; force with ``"csr"`` / ``"join"``.
 
@@ -173,18 +202,19 @@ def pagerank(
         raise InvalidParameterError(f"sink must be one of {_SINKS}, got {sink!r}")
     if not (0.0 < damping < 1.0):
         raise InvalidParameterError(f"damping must be in (0,1), got {damping}")
+    if checkpoint_interval < 1:
+        raise InvalidParameterError(
+            f"checkpoint_interval must be at least 1, got {checkpoint_interval}")
     prog = as_progress(progress)
     if impl not in ("auto", "csr", "join"):
         raise InvalidParameterError(f"impl must be auto|csr|join, got {impl!r}")
 
     spark = g.spark
-    n = g.num_vertices
     use_csr = impl == "csr" or (
-        impl == "auto" and n <= blocks.DRIVER_STATE_MAX_VERTICES)
-    # validate seeds up front (shared by both kernels)
-    seed_ids = None if seeds is None else _seed_ids(g, seeds)
+        impl == "auto" and g.num_vertices <= blocks.DRIVER_STATE_MAX_VERTICES)
+    teleport = None if seeds is None else _teleport(g, seeds)  # None: uniform
 
-    # ---- init / resume (shared by both kernels) ------------------------
+    # ---- init / resume -------------------------------------------------
     ckpt: CheckpointManager | None = None
     if checkpoint_dir is not None:
         ckpt = CheckpointManager(spark, checkpoint_dir, run_id or uuid.uuid4().hex)
@@ -196,19 +226,150 @@ def pagerank(
             start_iter, state, metrics = latest
     total_iters = iterations if tol is None else max_iterations
 
-    if use_csr:
-        from propagon_spark.graph.pagerank_csr import pagerank_csr
-
-        if seeds is not None:
-            total = float(sum(seeds.values()))
-            seeds = (seed_ids, [float(w) / total for w in seeds.values()])
-        return pagerank_csr(
-            g, damping, sink, seeds, tol, total_iters, checkpoint_interval,
-            ckpt, start_iter, state, metrics, prog,
-        )
-
-    nparts = g.edges.rdd.getNumPartitions()
     t_setup = time.monotonic()
+    # the stats observed on the last materialized state: a join step
+    # reads its sink mass here
+    observed: dict = {}
+    init, step, stats, timings, close = (
+        _csr_kernel(g, damping, sink, teleport, state) if use_csr
+        else _join_kernel(g, damping, sink, teleport, state, observed))
+    kernel = timings["kernel"]
+    converged = False
+    t_loop = t_turn = time.monotonic()
+    timings["setup_s"] = t_loop - t_setup
+
+    def settled(turn: int, m: dict, _last) -> bool:
+        nonlocal converged
+        l1, mass = m["l1"], m["mass"]
+        if not (math.isfinite(mass) and math.isfinite(l1)):
+            raise NumericError(
+                f"pagerank diverged at iteration {start_iter + turn}: mass={mass}"
+            )
+        observed.update(m)
+        converged = tol is not None and l1 < tol
+        return converged
+
+    def row(turn: int, m: dict) -> dict:
+        nonlocal t_turn
+        now = time.monotonic()
+        metrics.append({
+            "iteration": start_iter + turn,
+            "steps": 1,
+            "l1_delta": m["l1"],
+            "mass": m["mass"],
+            "seconds": now - t_turn,
+            "kernel": kernel,
+        })
+        t_turn = now
+        logger.info("pagerank[%s] iter=%d l1=%.3e mass=%.6f %.2fs", kernel,
+                    start_iter + turn, m["l1"], m["mass"], metrics[-1]["seconds"])
+        return metrics[-1]
+
+    def save(turn: int, cur) -> None:
+        it = start_iter + turn
+        if it % checkpoint_interval == 0:
+            ckpt.save(it, _ranks(spark, cur), metrics)
+
+    try:
+        final, turns = fixpoint(
+            init,
+            step,
+            stats,
+            settled,
+            max_turns=total_iters - start_iter,
+            progress=prog,
+            phase="pagerank",
+            row=row,
+            save=save if ckpt is not None else None,
+        )
+    finally:
+        close()
+    timings["iterate_s"] = time.monotonic() - t_loop
+
+    ranks = _ranks(spark, final)
+    if use_csr:
+        scores = g.emit(
+            "score", final, [("score", "descending"), ("name", "ascending")]
+        ).select("name", "score")
+    else:
+        scores = sorted_scores(
+            g.with_names(ranks.select("id", F.col("rank").alias("score")))
+            .select("name", "score")
+        )
+    return PageRankResult(
+        scores=scores,
+        ranks=ranks,
+        iterations=start_iter + turns,
+        converged=converged if tol is not None else True,
+        metrics=metrics,
+        timings=timings,
+    )
+
+
+def _csr_kernel(g: Graph, damping: float, sink: str, teleport,
+                state: DataFrame | None) -> tuple:
+    """Set up the CSR power step on the Graph's edge-block store (module
+    docstring), from ``state`` (resumed ``(id, rank)``) or the teleport
+    vector. Returns ``fixpoint``'s initial state, step and stats (none:
+    a driver state), the timings, and ``close`` for when the loop ends,
+    however it ends."""
+    n = g.num_vertices
+    # Blocks hold ONLY (src, dst): the inverse out-degree is folded into
+    # the broadcast on the DRIVER (p·inv_out is n multiplies), so every
+    # iteration streams a third of the bytes.
+    store = g.store("out_reverse" if sink == "reverse" else "out")
+    bcast0, gather0 = store.bcast_s, store.gather_s
+    if teleport is None:
+        v = np.full(n, 1.0 / n)
+    else:
+        v = np.zeros(n)
+        v[teleport[0]] = teleport[1]
+    # zero-outdegree rows ARE the sinks — no separate anti-join pass
+    outdeg = store.src_degree.astype(np.float64)
+    inv_out = np.divide(1.0, outdeg, out=np.zeros(n), where=outdeg > 0)
+    sink_ids = np.nonzero(outdeg == 0)[0].astype("int64")
+    if state is None:
+        p = v.copy()
+    else:
+        init = state.select("id", "rank").toPandas()
+        p = np.zeros(n)
+        p[init["id"].to_numpy()] = init["rank"].to_numpy()
+
+    def step(p: np.ndarray) -> tuple[np.ndarray, dict]:
+        # p·inv_out on the driver (n multiplies) — elementwise identical
+        # to the join kernel's rank·inv, keeping csr/join parity exact
+        gathered = store.gather(_spmv, p * inv_out, np.float64)
+        s_mass = float(p[sink_ids].sum()) if len(sink_ids) else 0.0
+        if sink == "uniform":
+            gathered += s_mass * v
+        elif sink == "all" and n > 1:
+            term = np.full(n, s_mass)
+            term[sink_ids] -= p[sink_ids]
+            gathered += term / (n - 1)
+        new_p = damping * gathered + (1.0 - damping) * v
+        return new_p, {"l1": float(np.abs(new_p - p).sum()),
+                       "mass": float(new_p.sum())}
+
+    # bcast/gather: the store rounds' wall time (bcast 0 on a
+    # driver-held store)
+    timings = {"kernel": "csr", "nblocks": store.nblocks,
+               "edge_rows": store.edge_rows}
+
+    def close() -> None:
+        timings["bcast_s"] = store.bcast_s - bcast0
+        timings["gather_s"] = store.gather_s - gather0
+
+    return p, step, {}, timings, close
+
+
+def _join_kernel(g: Graph, damping: float, sink: str, teleport,
+                 state: DataFrame | None, observed: dict) -> tuple:
+    """Set up the join power step (module docstring) as
+    :func:`_csr_kernel` does: a persisted scatter frame and an ``(id, v,
+    is_sink, rank)`` state. A step reads the sink mass ``observed`` on
+    the job that materialized its input."""
+    spark, n = g.spark, g.num_vertices
+    nparts = g.edges.rdd.getNumPartitions()
 
     # ---- one-time setup (loop-invariant, persisted) --------------------
     # Gather plan + loop partition LAYOUT, decided up front from graph
@@ -300,7 +461,14 @@ def pagerank(
     # state is observed on the job that materializes it: the initial (or
     # resumed) ranks here, which also count the sinks, then every turn.
     sink_mass = F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0))
-    vstat = _teleport_frame(g, seeds).join(
+    if teleport is None:
+        tele = g.vocab.select("id", F.lit(1.0 / n).alias("v"))
+    else:
+        seed_df = spark.createDataFrame(
+            list(zip(teleport[0].tolist(), teleport[1])), "id long, v double")
+        tele = g.vocab.select("id").join(seed_df, "id", "left").select(
+            "id", F.coalesce("v", F.lit(0.0)).alias("v"))
+    vstat = tele.join(
         outdeg.select(F.col("src").alias("id"), F.lit(False).alias("ns")),
         "id",
         "left",
@@ -321,7 +489,7 @@ def pagerank(
     # the cached lineage — which at 591M edges was enough to overflow a
     # 75 GB local-disk budget (round-5 huge run).
     edges.unpersist(blocking=False)
-    s_mass = float(m["sink_mass"])
+    observed.update(m)
     # sink-free graphs (every vertex has out-edges — e.g. any symmetric
     # graph) make every sink policy IDENTICAL: the pooled sink mass is
     # exactly 0, so uniform/all degenerate to none and reverse rewrites
@@ -340,7 +508,8 @@ def pagerank(
         the big edge side stays put.
 
         ``s_mass`` is the pooled sink-rank scalar S of ``cur``, observed
-        on the job that materialized it, as a plain DRIVER FLOAT folded
+        on the job that materialized it (``observed``, which the caller
+        updates each turn), as a plain DRIVER FLOAT folded
         into the plan as a literal. Round 3 derived S in-plan via a
         broadcast 1-row aggregate over the gather subtree — that second
         reference DOUBLES the edge pass per step (Catalyst's
@@ -348,6 +517,7 @@ def pagerank(
         iterated plans). So the update is a pure single-reference
         projection: literal arithmetic, no broadcast subtree anywhere.
         """
+        s_mass = float(observed["sink_mass"])
         r = cur.select(F.col("id").alias("src"), "rank").hint("shuffle_hash")
         if salted:
             r = r.join(F.broadcast(salt_df), F.col("src").isin(hub_ids), "left") \
@@ -390,73 +560,11 @@ def pagerank(
     # that job. Chaining steps into one job would save a job's fixed cost
     # per step, but this kernel runs by default only above
     # DRIVER_STATE_MAX_VERTICES, where a step's edge pass dwarfs it.
-    converged = False
-    t_loop = t_turn = time.monotonic()
     timings = {"kernel": "join", "edge_rows": n_scatter,
-               "gather_mode": gather_mode, "loop_nparts": loop_nparts,
-               "setup_s": t_loop - t_setup}
-
-    def settled(turn: int, m: dict, _last) -> bool:
-        nonlocal s_mass, converged
-        l1, mass = m["l1"], m["mass"]
-        if not (math.isfinite(mass) and math.isfinite(l1)):
-            raise NumericError(
-                f"pagerank diverged at iteration {start_iter + turn}: mass={mass}"
-            )
-        s_mass = float(m["sink_mass"])
-        converged = tol is not None and l1 < tol
-        return converged
-
-    def row(turn: int, m: dict) -> dict:
-        nonlocal t_turn
-        now = time.monotonic()
-        metrics.append({
-            "iteration": start_iter + turn,
-            "steps": 1,
-            "l1_delta": m["l1"],
-            "mass": m["mass"],
-            "seconds": now - t_turn,
-        })
-        t_turn = now
-        logger.info("pagerank iter=%d l1=%.3e mass=%.6f %.2fs",
-                    start_iter + turn, m["l1"], m["mass"], metrics[-1]["seconds"])
-        return metrics[-1]
-
-    def save(turn: int, cur: DataFrame) -> None:
-        it = start_iter + turn
-        if it % checkpoint_interval == 0:
-            ckpt.save(it, cur.select("id", "rank"), metrics)
-
-    try:
-        final, turns = fixpoint(
-            init,
-            step,
-            {
-                "mass": F.sum("rank"),
-                "l1": F.sum(F.abs(F.col("rank") - F.col("old"))),
-                "sink_mass": sink_mass,
-            },
-            settled,
-            max_turns=total_iters - start_iter,
-            progress=prog,
-            phase="pagerank",
-            row=row,
-            save=save if ckpt is not None else None,
-        )
-    finally:
-        scatter.unpersist()
-    timings["iterate_s"] = time.monotonic() - t_loop
-
-    ranks = final.select("id", "rank")
-    scores = sorted_scores(
-        g.with_names(ranks.select("id", F.col("rank").alias("score")))
-        .select("name", "score")
-    )
-    return PageRankResult(
-        scores=scores,
-        ranks=ranks,
-        iterations=start_iter + turns,
-        converged=converged if tol is not None else True,
-        metrics=metrics,
-        timings=timings,
-    )
+               "gather_mode": gather_mode, "loop_nparts": loop_nparts}
+    stats = {
+        "mass": F.sum("rank"),
+        "l1": F.sum(F.abs(F.col("rank") - F.col("old"))),
+        "sink_mass": sink_mass,
+    }
+    return init, step, stats, timings, scatter.unpersist

@@ -1,6 +1,7 @@
 """Edge blocks + driver-held vertex state: the store behind CSR PageRank
-(graph/pagerank_csr.py), k-core's H-index rounds (graph/kcore.py) and
-label propagation (graph/lpa.py).
+(graph/pagerank.py), k-core's H-index rounds (graph/kcore.py) and
+label propagation (graph/lpa.py), whose rounds run on the driver
+backend of ``plans.iterate.fixpoint``.
 
 A store is one canonical form of a Graph's edges. The Graph owns it
 (``Graph.store(form)``, graph/core.py): it is built on first use, at most

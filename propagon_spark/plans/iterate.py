@@ -18,19 +18,24 @@ per-iteration planning cost constant. Falls back to plain
 ``localCheckpoint`` where the internal API is unavailable (e.g. Spark
 Connect).
 
-:func:`fixpoint` is the round loop of every dataflow kernel (katz,
-leader_rank, hits, rank_centrality, random_walker, components, lpa,
-k-core above the edge-block bound, tally's ``filter_min_count``,
-harmonic's relaxation, birank's sweeps and join PageRank's power
-steps); no kernel keeps a loop of its own:
+:func:`fixpoint` is the round loop of every iterative kernel; no kernel
+keeps a loop of its own. The state's type selects its backend:
 
-- a turn is ONE materializing job — the eager truncation — and the stop
-  statistics are observed (``Observation``) on that same job;
-- the previous state's checkpoint blocks are released once its successor
-  is materialized, and the loop-invariant frames when the loop ends;
-- an optional ``save`` hook sees each turn's state after its stop test
-  (join PageRank writes its durable checkpoints there);
-- the final state is kept: the kernel's lazy result reads it.
+- **dataflow**, a DataFrame (katz, leader_rank, hits, rank_centrality,
+  random_walker, components, lpa and k-core above the edge-block bound,
+  tally's ``filter_min_count``, harmonic, birank, join PageRank): a turn
+  is ONE materializing job — the eager truncation — with the stop
+  statistics observed (``Observation``) on it; the previous state's
+  checkpoint blocks are released once its successor is materialized,
+  the loop-invariant frames when the loop ends, and the final state is
+  kept for the kernel's lazy result;
+- **driver**, anything else, e.g. a numpy vector (CSR PageRank, k-core
+  and LPA on the edge-block store): ``step`` returns the successor and
+  its stats from driver numpy or one store round; nothing is
+  materialized or released.
+
+On both, ``row`` feeds ``progress`` and an optional ``save`` hook sees
+each turn's state after its stop test (PageRank's durable checkpoints).
 
 Released blocks live in executor block managers, so a plan that still
 read one fails only across JVMs: run ``scripts/check_oracles.py`` under
@@ -92,8 +97,8 @@ def materialize(
 
 
 def fixpoint(
-    state: DataFrame,
-    step: Callable[[DataFrame], DataFrame],
+    state,
+    step: Callable,
     stats: dict[str, Column],
     stop: Callable[[int, dict, dict | None], bool],
     max_turns: int | None = None,
@@ -102,29 +107,35 @@ def fixpoint(
     progress: Progress = SILENT,
     phase: str = "",
     row: Callable[[int, dict], dict] | None = None,
-    save: Callable[[int, DataFrame], None] | None = None,
-) -> tuple[DataFrame, int]:
+    save: Callable[[int, object], None] | None = None,
+) -> tuple:
     """Run ``state ← step(state)`` until ``stop(turn, stats, last)`` holds
     or ``max_turns`` turns ran; return the final state and the turn count.
 
-    ``state`` is a :func:`truncate_lineage` frame, owned by the loop from
-    here on. ``step`` returns the successor's columns plus any that
-    ``stats`` read; only the state's columns are materialized. ``last``
-    is the previous turn's stats (``initial_stats`` at turn 1); ``stop``
-    may raise the kernel's ``NumericError``. ``invariants``: truncated
-    frames every step reads. After each stop test, ``row(turn, stats)``
-    (if given) goes to ``progress``, and then ``save(turn, state)`` (if
-    given) sees the turn's materialized state.
+    A DataFrame ``state`` is a :func:`truncate_lineage` frame, owned by
+    the loop from here on. ``step`` returns the successor's columns plus
+    any that ``stats`` read; only the state's columns are materialized.
+    ``invariants``: truncated frames every step reads. Any other
+    ``state`` is a driver state: ``step`` returns ``(successor, stats
+    dict)`` and ``stats`` is not read. ``last`` is the previous turn's
+    stats (``initial_stats`` at turn 1); ``stop`` may raise the kernel's
+    ``NumericError``. After each stop test, ``row(turn, stats)`` (if
+    given) goes to ``progress``, and then ``save(turn, state)`` (if
+    given) sees the turn's state.
     """
-    columns = state.columns
+    dataflow = isinstance(state, DataFrame)
+    columns = state.columns if dataflow else None
     turn, last = 0, initial_stats
     try:
         progress.start(phase, total=max_turns)
         while max_turns is None or turn < max_turns:
             turn += 1
-            nxt, m = materialize(step(state), stats, columns)
-            release(state)
-            state = nxt
+            if dataflow:
+                nxt, m = materialize(step(state), stats, columns)
+                release(state)
+                state = nxt
+            else:
+                state, m = step(state)
             done = stop(turn, m, last)
             if row is not None:
                 progress.iteration(phase, row(turn, m))
@@ -135,7 +146,8 @@ def fixpoint(
             last = m
         progress.finish()
     except BaseException:
-        release(state)
+        if dataflow:
+            release(state)
         raise
     finally:
         for frame in invariants:

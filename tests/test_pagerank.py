@@ -49,11 +49,13 @@ def test_f1_ten_iterations_reverse_and_all(g4, sink, impl):
     assert abs(sum(s.values()) - 1.0) < 1e-5
 
 
-def test_f2_analytic_ppr_cycle(spark):
+@pytest.mark.parametrize("impl", ["csr", "join"])
+def test_f2_analytic_ppr_cycle(spark, impl):
     # pagerank.rs:337-360 — 3-cycle, seed {1}, d=0.5, sink=none → (4/7,2/7,1/7)
     g = Graph.from_edges(make_edges(spark, [("1", "2"), ("2", "3"), ("3", "1")]))
     res = pagerank(
-        g, damping=0.5, sink="none", seeds={"1": 1.0}, tol=1e-12, max_iterations=200
+        g, damping=0.5, sink="none", seeds={"1": 1.0}, tol=1e-12, max_iterations=200,
+        impl=impl,
     )
     s = scores_dict(res.scores)
     assert abs(s["1"] - 4 / 7) < 1e-9
@@ -63,12 +65,13 @@ def test_f2_analytic_ppr_cycle(spark):
     g.unpersist()
 
 
-def test_f3_seeded_uniform_sink_chain(spark):
+@pytest.mark.parametrize("impl", ["csr", "join"])
+def test_f3_seeded_uniform_sink_chain(spark, impl):
     # pagerank.rs:362-379 — chain 1→2, seed {1}, d=0.5, uniform → (2/3, 1/3)
     g = Graph.from_edges(make_edges(spark, [("1", "2")]))
     res = pagerank(
         g, damping=0.5, sink="uniform", seeds={"1": 1.0}, tol=1e-12,
-        max_iterations=200,
+        max_iterations=200, impl=impl,
     )
     s = scores_dict(res.scores)
     assert abs(s["1"] - 2 / 3) < 1e-9
@@ -76,25 +79,26 @@ def test_f3_seeded_uniform_sink_chain(spark):
     g.unpersist()
 
 
-def test_f4_seed_weight_normalization(spark):
+@pytest.mark.parametrize("impl", ["csr", "join"])
+def test_f4_seed_weight_normalization(spark, impl):
     # pagerank.rs:381-416 — 1⇄2, seeds {1:5, 2:5} → (0.5, 0.5)
     g = Graph.from_edges(make_edges(spark, [("1", "2"), ("2", "1")]))
     res = pagerank(
         g, damping=0.85, sink="none", seeds={"1": 5.0, "2": 5.0}, tol=1e-13,
-        max_iterations=300,
+        max_iterations=300, impl=impl,
     )
     s = scores_dict(res.scores)
     assert abs(s["1"] - 0.5) < 1e-12
     assert abs(s["2"] - 0.5) < 1e-12
 
     with pytest.raises(InvalidParameterError):
-        pagerank(g, seeds={})
+        pagerank(g, seeds={}, impl=impl)
     with pytest.raises(InvalidParameterError):
-        pagerank(g, seeds={"nope": 1.0})
+        pagerank(g, seeds={"nope": 1.0}, impl=impl)
     with pytest.raises(InvalidParameterError):
-        pagerank(g, seeds={"1": 0.0})
+        pagerank(g, seeds={"1": 0.0}, impl=impl)
     with pytest.raises(InvalidParameterError):
-        pagerank(g, seeds={"1": float("nan")})
+        pagerank(g, seeds={"1": float("nan")}, impl=impl)
     g.unpersist()
 
 
@@ -120,6 +124,17 @@ def test_bad_params(g4):
         pagerank(g4, sink="bogus")
     with pytest.raises(InvalidParameterError):
         pagerank(g4, damping=1.5)
+
+
+@pytest.mark.parametrize("impl", ["csr", "join"])
+def test_checkpoint_interval_below_one_fails_before_any_job(spark, g4, tmp_path, impl):
+    # an interval below 1 is rejected with the other parameters, before
+    # any Spark job: the save hook takes the iteration modulo it
+    for interval in (0, -3):
+        jobs = job_ids_of(spark, lambda: pytest.raises(
+            InvalidParameterError, pagerank, g4, iterations=2, impl=impl,
+            checkpoint_interval=interval, checkpoint_dir=str(tmp_path)))
+        assert jobs == [], interval
 
 
 def test_mass_leak_sink_none(g4):

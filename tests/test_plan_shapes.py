@@ -17,12 +17,14 @@ import io
 import os
 import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from conftest import job_ids_of, place_stores
 
 from propagon_spark.canon import dedup_edges
+from propagon_spark.errors import NumericError
 from propagon_spark.graph.birank import birank
 from propagon_spark.graph.components import connected_components
 from propagon_spark.graph.core import Graph
@@ -37,6 +39,8 @@ from propagon_spark.graph.random_walker import random_walker
 from propagon_spark.graph.rank_centrality import rank_centrality
 from propagon_spark.graph.tally import filter_min_count
 from propagon_spark.plans import blocks
+from propagon_spark.plans.iterate import fixpoint
+from propagon_spark.progress import CallbackProgress
 
 
 def _plan(df) -> str:
@@ -380,3 +384,66 @@ def test_fixpoint_keeps_only_the_final_state(spark, kernel):
         g.unpersist()
     assert growth[3] == growth[30] <= 1, growth
 
+
+
+def test_fixpoint_driver_state_runs_no_job(spark):
+    # a state that is not a DataFrame runs on the driver backend: step
+    # returns the successor and its stats, and each turn calls stop, row
+    # (whose return goes to progress) and save in that order, with no
+    # Spark job
+    trace = []
+
+    def step(x):
+        trace.append(("step", int(x[0])))
+        return x + 1, {"x": int(x[0]) + 1}
+
+    def stop(turn, m, last):
+        trace.append(("stop", turn, m["x"], last["x"]))
+        return m["x"] == 3
+
+    out = []
+    jobs = job_ids_of(spark, lambda: out.append(fixpoint(
+        np.zeros(4, np.int64), step, {}, stop, initial_stats={"x": 0},
+        progress=CallbackProgress(lambda ph, m: trace.append(("progress", ph, m))),
+        phase="count",
+        row=lambda turn, m: trace.append(("row", turn)) or m,
+        save=lambda turn, x: trace.append(("save", turn, int(x[0]))),
+    )))
+    assert jobs == []
+    state, turns = out[0]
+    assert turns == 3 and (state == 3).all()
+    assert trace == [
+        e for t in (1, 2, 3) for e in (
+            ("step", t - 1), ("stop", t, t, t - 1), ("row", t),
+            ("progress", "count", {"x": t}), ("save", t, t))
+    ]
+
+
+def test_fixpoint_driver_state_honours_max_turns(spark):
+    def run(max_turns):
+        return fixpoint(np.zeros(2), lambda x: (x + 1, {}), {},
+                        lambda *_: False, max_turns=max_turns)
+
+    out = []
+    assert job_ids_of(spark, lambda: out.extend(run(t) for t in (0, 4))) == []
+    for max_turns, (state, turns) in zip((0, 4), out):
+        assert turns == max_turns and (state == max_turns).all()
+
+
+def test_fixpoint_driver_state_stop_error_propagates(spark):
+    # a stop that raises the kernel's NumericError ends the loop with that
+    # error: release() is never reached for a driver state (vars() of an
+    # ndarray raises TypeError), save does not see the failed turn, and
+    # no Spark job runs
+    saved = []
+
+    def stop(turn, m, last):
+        if turn == 2:
+            raise NumericError("diverged at turn 2")
+        return False
+
+    jobs = job_ids_of(spark, lambda: pytest.raises(
+        NumericError, fixpoint, np.ones(3), lambda x: (x * 2, {}), {}, stop,
+        save=lambda turn, x: saved.append(turn)))
+    assert jobs == []
+    assert saved == [1]

@@ -26,6 +26,7 @@ def chain_graph(spark, n=6):
 
 def test_pagerank_callback_per_iteration_both_kernels(spark):
     g = chain_graph(spark)
+    keys = {}
     for impl in ("csr", "join"):
         calls = []
         res = pagerank(
@@ -37,6 +38,10 @@ def test_pagerank_callback_per_iteration_both_kernels(spark):
         assert res.iterations == 3
         assert calls == [("pagerank", m) for m in res.metrics]
         assert all("l1_delta" in m and "mass" in m for _, m in calls)
+        assert all(m["kernel"] == impl for _, m in calls)
+        keys[impl] = {frozenset(m) for _, m in calls}
+    # one row builder serves both kernels
+    assert keys["csr"] == keys["join"] and len(keys["csr"]) == 1
 
 
 def test_join_pagerank_loop_keeps_the_session_conf(spark):

@@ -19,7 +19,7 @@ from propagon_spark.errors import EmptyDatasetError
 from propagon_spark.graph import Graph
 from propagon_spark.graph import kcore as kcore_mod
 from propagon_spark.graph import lpa as lpa_mod
-from propagon_spark.graph import pagerank_csr
+from propagon_spark.graph import pagerank as pagerank_mod
 from propagon_spark.graph.bootstrap import bootstrap
 from propagon_spark.graph.degree import degree
 from propagon_spark.graph.kcore import kcore
@@ -79,7 +79,7 @@ def test_warm_driver_store_runs_no_job(spark, monkeypatch):
 
     monkeypatch.setattr(kcore_mod, "_hindex", in_driver(kcore_mod._hindex))
     monkeypatch.setattr(lpa_mod, "_mode", in_driver(lpa_mod._mode))
-    monkeypatch.setattr(pagerank_csr, "_spmv", in_driver(pagerank_csr._spmv))
+    monkeypatch.setattr(pagerank_mod, "_spmv", in_driver(pagerank_mod._spmv))
     dirs = block_dirs(spark)
     g = Graph.from_edges(make_edges(spark, _random_rows()))
     try:
