@@ -17,12 +17,15 @@ Scale notes:
   most ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` rows is collected
   once with Arrow and interned there (:meth:`Graph.from_edges`); a
   co-commit frame from ``sources.repo_table.derive_edges`` is not run
-  at all below that bound: its repo table is collected instead and
-  derived by the plan's numpy twin. The Graph holds its id-typed edge
-  columns (:meth:`Graph.driver_edges`) and creates its vocab and edge
-  frames from them only when something first reads them; the edge
-  frame is cached by the first dataflow kernel that scans it, so a
-  CSR-only use uploads neither. Any Graph at or below that many edge
+  at all below that bound: its repo table is derived by the plan's
+  numpy twin instead. A ``load_repo_table`` frame over local parquet
+  has its table read with pyarrow from the files its footers name, with
+  no Spark job (their row count shows a table above the bound unread);
+  any other repo frame is collected with one job. The Graph holds its
+  id-typed edge columns (:meth:`Graph.driver_edges`) and creates its
+  vocab and edge frames from them only when something first reads
+  them; the edge frame is cached by the first dataflow kernel that
+  scans it, so a CSR-only use uploads neither. Any Graph at or below that many edge
   rows cuts each store form in numpy from those columns; one that was
   not built on the driver collects its edge frame once for them.
 
@@ -53,6 +56,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -147,15 +151,20 @@ class Graph:
 
         A frame returned by ``sources.repo_table.derive_edges``, with the
         default column names and its ``weight`` or none, is built from
-        its repo table: one collect of at most
-        ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS + 1`` repo rows. When
-        that is the whole table and neither the pairs formed nor the
-        rows derived exceed the bound, the numpy twin ``derive_pairs``
-        derives and interns them on the driver. Any other input is
-        normalized, persisted and probed with one collect of at most
-        that many + 1 rows; if the probe holds the whole input, it is
-        interned on the driver (:func:`ids.driver_vocab` ranks the
-        names, ``pc.index_in`` maps them to ids). A Graph built on the
+        its repo table when that has at most
+        ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` rows. The table of a
+        ``load_repo_table`` frame read from local parquet footers is
+        read with pyarrow from their files if their row count is within
+        the bound, and not read at all otherwise: no Spark job either
+        way. Any other repo frame is probed with one collect of at most
+        bound + 1 rows. When the table is read whole and neither the
+        pairs formed nor the rows derived exceed the bound, the numpy
+        twin ``derive_pairs`` derives and interns them on the driver.
+        Any other input is normalized, persisted and probed with one
+        collect of at most that many + 1 rows; if the probe holds the
+        whole input, it is interned on the driver
+        (:func:`ids.driver_vocab` ranks the names, ``pc.index_in`` maps
+        them to ids). A Graph built on the
         driver holds its id-typed edge columns and creates its vocab and
         edge frames on first read. Otherwise the vocab is built with
         Spark, the names are interned by two joins and the edge frame is
@@ -167,10 +176,16 @@ class Graph:
         bound = blocks.DRIVER_STORE_MAX_EDGE_ROWS
         recipe = derive_recipe(edges)
         if recipe is not None and (src, dst) == ("src", "dst") and weight in ("weight", None):
-            repo, cap, symmetric = recipe
-            table = repo.limit(bound + 1).toArrow()
+            repo, cap, symmetric, footer = recipe
+            if footer is None:  # probe the repo table
+                table = repo.limit(bound + 1).toArrow()
+            elif footer[1] <= bound:  # a loader frame: read its files
+                table = pa.concat_tables(
+                    pq.read_table(f, columns=repo.columns) for f in footer[0])
+            else:
+                table = None
             derived = (derive_pairs(table, cap, symmetric, max_rows=bound)
-                       if table.num_rows <= bound else None)
+                       if table is not None and table.num_rows <= bound else None)
             if derived is not None:
                 names, s, d, w = derived
                 held = pa.table({"src": s, "dst": d,
@@ -396,16 +411,19 @@ class Graph:
         return self.names
 
     def emit(self, column: str, values: np.ndarray, sort_keys: list,
-             nullable: bool = True) -> DataFrame:
+             nullable: bool | None = True) -> DataFrame:
         """A named result ``(name, id, column)`` ordered by ``sort_keys``
         (pyarrow ``(column, order)`` pairs). ``values`` is the n-vector
         of ``column`` by id (int64 or float64), ``nullable`` its
-        nullability; name and id keep the vocab's, so the schema is the
-        vocab join's. Below the bound it is sorted on the driver and
-        returned as one ``LocalRelation``; above it, a vocab join +
-        ``orderBy``."""
+        nullability (None: the id's, for a column of ids); name and id
+        keep the vocab's, so the schema is the vocab join's. Below the
+        bound it is sorted on the driver and returned as one
+        ``LocalRelation``; above it, a vocab join + ``orderBy``."""
+        # a vocab still to be created is a vocab_frame: its schema is known
+        made = isinstance(self.__dict__["_vocab"], DataFrame)
+        vocab = self.vocab.schema if made else VOCAB_SCHEMA
         kind = LongType() if values.dtype.kind == "i" else DoubleType()
-        value = StructField(column, kind, nullable)
+        value = StructField(column, kind, vocab["id"].nullable if nullable is None else nullable)
         table = pa.table({"id": np.arange(self.num_vertices, dtype=np.int64), column: values})
         names = self.driver_names()
         if names is None:
@@ -414,9 +432,6 @@ class Graph:
             return self.with_names(frame).select("name", "id", column).orderBy(
                 *[F.desc(c) if o == "descending" else F.asc(c) for c, o in sort_keys])
         table = table.add_column(0, "name", names)
-        # a vocab still to be created is a vocab_frame: its schema is known
-        made = isinstance(self.__dict__["_vocab"], DataFrame)
-        vocab = self.vocab.schema if made else VOCAB_SCHEMA
         return self.spark.createDataFrame(
             table.take(pc.sort_indices(table, sort_keys=sort_keys)),
             StructType([vocab["name"], vocab["id"], value]),

@@ -129,5 +129,4 @@ def _lpa_blocks(g: Graph, max_rounds: int) -> DataFrame:
                         lambda _turn, m, _last: m["changed"] == 0,
                         max_turns=max_rounds)
     return g.emit("label", label.astype(np.int64),
-                  [("label", "ascending"), ("id", "ascending")],
-                  nullable=g.vocab.schema["id"].nullable)
+                  [("label", "ascending"), ("id", "ascending")], nullable=None)

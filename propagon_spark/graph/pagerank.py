@@ -129,6 +129,9 @@ def _teleport(g: Graph, seeds: dict[str, float]) -> tuple[np.ndarray, list[float
                 f"seed weight for {name!r} must be positive and finite, got {w!r}"
             )
     keys = [str(k) for k in seeds]
+    if len(set(keys)) < len(keys):
+        same = sorted({repr(k) for k in seeds if keys.count(str(k)) > 1})
+        raise InvalidParameterError(f"seed keys {same} name the same vertex")
     names = g.driver_names()
     if names is not None:
         idx = pc.index_in(pa.array(keys, pa.string()), value_set=names)

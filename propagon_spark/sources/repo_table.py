@@ -19,6 +19,12 @@ driver edge bound ``Graph.from_edges`` builds a derived frame's Graph
 with it, from the recipe :func:`derive_edges` records
 (:func:`derive_recipe`).
 
+A local parquet source is read from its footers on the driver
+(:func:`parquet_footer`): :func:`load_repo_table` hands Spark the schema
+they give, so no inference job runs, and the recipe of a loader frame
+carries their files and row count, so ``Graph.from_edges`` reads a
+small table with pyarrow instead of running a Spark scan.
+
 Scale notes: a commit of g files is one aggregation buffer of O(g) paths
 until the cap test drops it, so a giant merge/bot commit costs O(g)
 memory on one task, not O(g) shuffle rows. Pair generation is O(g²) in
@@ -29,16 +35,19 @@ results stay deterministic and SQL-expressible.
 
 from __future__ import annotations
 
+import os
 import weakref
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from propagon_spark.ids import driver_vocab
+from propagon_spark.plans.blocks import _as_local_path
 
 #: commits touching more than this many files are excluded from edge
 #: derivation (fan-out bound; SURVEY.md §7.2)
@@ -181,6 +190,56 @@ def synth_repo_table_sparse(
 REPO_TABLE_COLUMNS = ("repo", "path", "commit", "lang", "content")
 
 
+#: load_repo_table frame -> (files, num_rows) of its parquet footers
+_FOOTERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def parquet_footer(
+    spark: SparkSession, source: str, columns: tuple[str, ...]
+) -> tuple[list[str], int] | None:
+    """``(files, num_rows)`` of a local parquet ``source`` whose footers
+    show every one of ``columns`` as a UTF-8 string, read on the driver
+    with no Spark job; None for any other source.
+
+    The source must be a plain path on a local default filesystem or a
+    ``file:`` URI, naming a parquet file or a flat directory of parquet
+    files (names starting with ``_`` or ``.`` are skipped, as Spark
+    skips them), and every file's footer must give the same Arrow
+    schema. A hive-partitioned directory, a glob, a remote URI, an
+    unreadable footer, a missing or non-string column: None, and
+    :func:`load_repo_table` reads the source with Spark as it does any
+    other, so its contract checks stay the only ones.
+    """
+    local = _as_local_path(source)
+    if local is None or any(c in local for c in "*?[{\\"):
+        return None
+    if local == source:  # a plain path names a file on the default filesystem
+        default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS")  # noqa: SLF001
+        if not (default_fs or "file:").startswith("file:"):
+            return None
+    if os.path.isfile(local):
+        files = [local]
+    elif os.path.isdir(local):
+        entries = [e for e in os.scandir(local) if not e.name.startswith(("_", "."))]
+        if not entries or not all(e.is_file() for e in entries):
+            return None
+        files = sorted(e.path for e in entries)
+    else:
+        return None
+    try:
+        footers = [pq.read_metadata(f) for f in files]
+    except (OSError, pa.ArrowException):
+        return None
+    schema = footers[0].schema.to_arrow_schema()
+    if any(not f.schema.to_arrow_schema().equals(schema) for f in footers[1:]):
+        return None
+    if any(schema.get_field_index(c) < 0
+           or schema.field(c).type not in (pa.string(), pa.large_string())
+           for c in columns):
+        return None
+    return files, sum(f.num_rows for f in footers)
+
+
 def load_repo_table(
     spark: SparkSession,
     source: str,
@@ -202,6 +261,13 @@ def load_repo_table(
       (``.parquet``/dir → parquet, ``.jsonl``/``.json`` → JSON lines,
       ``.orc`` → ORC).
 
+    A local parquet source whose footers already satisfy the contract
+    (:func:`parquet_footer`) is read with the schema they give, so no
+    Spark job runs here, and the returned frame remembers the footers'
+    files and row count for ``Graph.from_edges`` (through
+    :func:`derive_edges`). Any other source is read with Spark's schema
+    inference, one job for a parquet path.
+
     The frame is validated against the input-hint contract: every column
     in ``columns`` must exist and be string-typed. Extra columns are
     pruned (column pruning reaches the scan — the 100-TB table's
@@ -211,6 +277,7 @@ def load_repo_table(
     """
     from propagon_spark.errors import InvalidParameterError
 
+    footer = None
     looks_like_path = "/" in source or source.endswith(
         (".parquet", ".json", ".jsonl", ".orc")
     )
@@ -220,6 +287,10 @@ def load_repo_table(
         df = spark.read.json(source)
     elif source.rstrip("/").endswith(".orc"):
         df = spark.read.orc(source)
+    elif (footer := parquet_footer(spark, source, columns)) is not None:
+        df = spark.read.schema(
+            StructType([StructField(c, StringType()) for c in columns])
+        ).parquet(source)
     else:
         df = spark.read.parquet(source)
 
@@ -241,7 +312,10 @@ def load_repo_table(
             "typed per the input contract; cast upstream if the catalog "
             "stores them otherwise"
         )
-    return df.select(*columns)
+    df = df.select(*columns)
+    if footer is not None:
+        _FOOTERS[df] = footer
+    return df
 
 
 def file_vertex(repo: F.Column | str = "repo", path: F.Column | str = "path") -> F.Column:
@@ -274,10 +348,13 @@ def derive_edges(
     generated inside the array and counted per pair by a second
     ``groupBy``. Two shuffle exchanges; no self-join.
 
-    The returned frame's recipe ``(repo projection, cap, symmetric)`` is
-    recorded (:func:`derive_recipe`) when ``repo``, ``commit`` and
-    ``path`` are string-typed, so that ``Graph.from_edges`` can derive a
-    small table's rows on the driver instead of running this plan.
+    The returned frame's recipe ``(repo projection, cap, symmetric,
+    footer)`` is recorded (:func:`derive_recipe`) when ``repo``,
+    ``commit`` and ``path`` are string-typed, so that ``Graph.from_edges``
+    can derive a small table's rows on the driver instead of running
+    this plan; ``footer`` is the ``(files, num_rows)`` of a
+    ``repo_df`` returned by :func:`load_repo_table` from parquet
+    footers, None for any other frame.
 
     The spec is the oracle SQL (DuckDB, same column names):
 
@@ -331,18 +408,21 @@ def derive_edges(
         )
     cols = ("repo", "commit", "path")
     if all(isinstance(repo_df.schema[c].dataType, StringType) for c in cols):
-        _RECIPES[pairs] = (repo_df.select(*cols), max_commit_files, symmetric)
+        _RECIPES[pairs] = (repo_df.select(*cols), max_commit_files, symmetric,
+                           _FOOTERS.get(repo_df))
     return pairs
 
 
-#: derive_edges frame -> (repo projection, cap, symmetric); a frame
-#: hashes by identity, so a transformed derive frame has no recipe
+#: derive_edges frame -> (repo projection, cap, symmetric, footer); a
+#: frame hashes by identity, so a transformed derive frame has no recipe
 _RECIPES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def derive_recipe(edges: DataFrame) -> tuple[DataFrame, int, bool] | None:
-    """``(repo projection, cap, symmetric)`` of a frame returned by
-    :func:`derive_edges`; None for any other frame."""
+def derive_recipe(
+    edges: DataFrame,
+) -> tuple[DataFrame, int, bool, tuple[list[str], int] | None] | None:
+    """``(repo projection, cap, symmetric, footer)`` of a frame returned
+    by :func:`derive_edges`; None for any other frame."""
     return _RECIPES.get(edges)
 
 

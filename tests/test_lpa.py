@@ -1,6 +1,7 @@
 """LPA fixture F14 (new operator; SURVEY.md §2.4 semantics)."""
 
 import pytest
+from pyspark.sql import DataFrame
 
 from conftest import make_edges
 
@@ -45,3 +46,23 @@ def test_isolated_self_loop_keeps_own_label(spark):
     ids = {r["name"]: r["id"] for r in res.collect()}
     assert labels["z"] == ids["z"]
     g.unpersist()
+
+
+def test_driver_lpa_leaves_the_vocab_unbuilt(spark):
+    # LPA on a driver-built Graph names its labels from the driver-held
+    # names without creating the vocab frame, and its schema is the one
+    # it has once the vocab frame exists; a dense-id Graph's labels keep
+    # its vocab's non-null ids
+    rows = clique(["a1", "a2", "a3"]) + [("a3", "b1")]
+    g, built = (Graph.from_edges(make_edges(spark, rows)) for _ in range(2))
+    dense = Graph.from_dense_ids(spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long"))
+    try:
+        lazy = label_propagation(g)
+        assert not isinstance(g.__dict__["_vocab"], DataFrame)
+        built.vocab  # noqa: B018  (creates the vocab frame)
+        assert lazy.schema == label_propagation(built).schema
+        assert lazy.collect() == label_propagation(built).collect()
+        assert not label_propagation(dense).schema["label"].nullable
+    finally:
+        for x in (g, built, dense):
+            x.unpersist()

@@ -137,6 +137,21 @@ def test_checkpoint_interval_below_one_fails_before_any_job(spark, g4, tmp_path,
         assert jobs == [], interval
 
 
+@pytest.mark.parametrize("impl", ["csr", "join"])
+def test_seed_keys_naming_one_vertex_fail_before_any_job(spark, impl):
+    # 1 and "1" both name vertex "1": CSR kept one of the two weights
+    # (scores summing to 0.5) and join gave the vertex two state rows
+    g = Graph.from_edges(make_edges(spark, [("1", "2"), ("2", "3"), ("3", "1"), ("3", "4")]))
+    def run():
+        with pytest.raises(InvalidParameterError, match="name the same vertex"):
+            pagerank(g, iterations=3, sink="none", seeds={1: 1.0, "1": 1.0}, impl=impl)
+
+    try:
+        assert job_ids_of(spark, run) == []
+    finally:
+        g.unpersist()
+
+
 def test_mass_leak_sink_none(g4):
     # Sink::None leaks mass (pagerank.rs:44-45): total < 1 after iterating
     res = pagerank(g4, iterations=5, sink="none")

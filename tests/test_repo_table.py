@@ -2,20 +2,27 @@
 (SURVEY.md §7.2, BASELINE.json input_hint)."""
 
 import collections
+import glob
 import itertools
+import os
 import random
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
-from conftest import place_stores
+from conftest import job_ids_of, place_stores
 from pyspark.sql import functions as F
 
+from propagon_spark.errors import InvalidParameterError
 from propagon_spark.graph import Graph
 from propagon_spark.graph import core as core_mod
 from propagon_spark.graph.pagerank import pagerank
 from propagon_spark.plans import blocks
 from propagon_spark.sources.repo_table import (
     derive_edges,
+    derive_recipe,
     load_repo_table,
+    parquet_footer,
     synth_repo_table,
     verify_content_sha,
 )
@@ -329,5 +336,105 @@ def test_driver_derive_falls_back(spark, monkeypatch, case):
         assert all(d is None for d in derived)
         assert (case == "repo_rows" or transform is not None) == (not derived)
         assert _graph_values(g, "driver_edges" in g._owned) == want
+    finally:
+        g.unpersist()
+
+
+_COLS = ("repo", "path", "commit")
+
+
+def _arrow(rows):
+    return pa.table({c: pa.array([r[i] for r in rows], pa.string())
+                     for i, c in enumerate(_COLS)})
+
+
+def _scan_graph(spark, monkeypatch, scan, cap):
+    """``_graph_values`` of the Spark build of ``scan``'s derive frame."""
+    return _spark_built(spark, monkeypatch,
+                        derive_edges(scan.select(*_COLS), max_commit_files=cap), "weight")
+
+
+@pytest.mark.parametrize("writer", ["spark", "pyarrow"])
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_footer_read_builds_the_scan_graph(spark, monkeypatch, tmp_path, case, writer):
+    # a local parquet table, a Spark output directory of several part
+    # files or one pyarrow file, is loaded from its footers with no job,
+    # and its derive frame's Graph is built from its files on the
+    # driver: the Graph of the Spark scan of the same table
+    rows, cap = _CASES[case]
+    path = str(tmp_path / "repo.parquet")
+    if writer == "spark":
+        spark.createDataFrame(rows, "repo string, path string, commit string") \
+            .repartition(3).write.parquet(path)
+        files = sorted(glob.glob(os.path.join(path, "part-*")))
+        assert len(files) > 1 and os.path.exists(os.path.join(path, "_SUCCESS"))
+    else:
+        pq.write_table(_arrow(rows), path)
+        files = [path]
+    loaded = []
+    assert job_ids_of(spark, lambda: loaded.append(
+        load_repo_table(spark, path, columns=_COLS))) == []
+    edges = derive_edges(loaded[0], max_commit_files=cap)
+    assert derive_recipe(edges)[3] == (files, len(rows))
+    # a transformed loader frame has no footers
+    assert derive_recipe(derive_edges(loaded[0].where("true")))[3] is None
+    want = _scan_graph(spark, monkeypatch, spark.read.parquet(path), cap)
+    derived = _spy_derive_pairs(monkeypatch)
+    g = Graph.from_edges(edges, weight="weight")
+    try:
+        assert len(derived) == 1 and derived[0] is not None
+        assert _graph_values(g, driver_held=True) == want
+    finally:
+        g.unpersist()
+
+
+def _stored(spark, tmp_path, how, rows):
+    """``(source, the frame Spark scans)`` of ``rows`` stored ``how``."""
+    df = spark.createDataFrame(rows, "repo string, path string, commit string")
+    path = str(tmp_path / "repo")
+    if how == "file_uri":
+        df.write.parquet(path)
+        return "file://" + path, spark.read.parquet(path)
+    if how == "hive_partitioned":
+        df.write.partitionBy("repo").parquet(path)
+        return path, spark.read.parquet(path)
+    if how in ("schemas_differ", "binary_path"):
+        os.makedirs(path)
+        table, half = _arrow(rows), len(rows) // 2
+        if how == "binary_path":  # bytes with no UTF-8 annotation
+            table = table.set_column(1, "path", table.column("path").cast(pa.binary()))
+        pq.write_table(table.slice(0, half), os.path.join(path, "a.parquet"))
+        rest = table.slice(half)
+        if how == "schemas_differ":
+            rest = rest.append_column("lang", pa.array(["py"] * rest.num_rows))
+        pq.write_table(rest, os.path.join(path, "b.parquet"))
+        return path, spark.read.parquet(path)
+    if how == "json":
+        df.write.json(path + ".jsonl")
+        return path + ".jsonl", spark.read.json(path + ".jsonl")
+    df.createOrReplaceTempView("repo_footer_v")
+    return "repo_footer_v", spark.table("repo_footer_v")
+
+
+@pytest.mark.parametrize("how", ["file_uri", "hive_partitioned", "schemas_differ",
+                                 "binary_path", "json", "catalog"])
+def test_loader_reads_footers_of_local_parquet_only(spark, monkeypatch, tmp_path, how):
+    # only a local parquet source with one string schema is read from
+    # its footers; any other takes the Spark read, which keeps the
+    # contract checks: a binary path column is not a string
+    rows, cap = _CASES["random"]
+    source, scan = _stored(spark, tmp_path, how, rows)
+    footer = parquet_footer(spark, source, _COLS)
+    assert (footer is not None) == (how == "file_uri")
+    if how == "binary_path":
+        with pytest.raises(InvalidParameterError, match="must be string-typed"):
+            load_repo_table(spark, source, columns=_COLS)
+        return
+    edges = derive_edges(load_repo_table(spark, source, columns=_COLS), max_commit_files=cap)
+    assert derive_recipe(edges)[3] == footer
+    want = _scan_graph(spark, monkeypatch, scan, cap)
+    g = Graph.from_edges(edges, weight="weight")
+    try:
+        assert _graph_values(g, driver_held=True) == want
     finally:
         g.unpersist()

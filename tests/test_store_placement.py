@@ -230,10 +230,11 @@ def test_small_build_runs_only_the_probe(spark):
         g.unpersist()
 
 
-def test_small_repo_table_build_runs_the_schema_and_scan_jobs(spark, tmp_path):
-    # a parquet repo table below the bound -> Graph -> CSR PageRank runs
-    # the loader's schema job and the one repo scan: the derive plan,
-    # the vocab and the edge frame run none, and none is created
+def test_small_repo_table_build_runs_no_job(spark, tmp_path):
+    # a local parquet repo table below the bound -> Graph -> CSR PageRank
+    # runs no job: the loader takes its schema and the build its rows
+    # from the parquet files on the driver; the derive plan, the vocab
+    # and the edge frame run none, and none is created
     path = str(tmp_path / "repo.parquet")
     synth_repo_table(spark, n_repos=3, n_files_per_repo=10,
                      n_commits_per_repo=8).write.parquet(path)
@@ -244,7 +245,7 @@ def test_small_repo_table_build_runs_the_schema_and_scan_jobs(spark, tmp_path):
         built.append(Graph.from_edges(edges, weight="weight"))
         pagerank(built[0], impl="csr", sink="uniform", iterations=5).scores.collect()
 
-    assert len(job_ids_of(spark, run)) == 2
+    assert len(job_ids_of(spark, run)) == 0
     g, = built
     try:
         # neither frame was created: both are still their builders
@@ -254,6 +255,29 @@ def test_small_repo_table_build_runs_the_schema_and_scan_jobs(spark, tmp_path):
         g.unpersist()
     with pytest.raises(RuntimeError, match="unpersisted"):
         g.edges
+
+
+def test_large_repo_table_build_skips_the_repo_probe(spark, monkeypatch, tmp_path):
+    # above the bound the footers' row count sends a loader frame's
+    # build straight to Spark: one job fewer than the same table read
+    # with schema inference, whose build probes the repo table first
+    path = str(tmp_path / "repo.parquet")
+    synth_repo_table(spark, n_repos=3, n_files_per_repo=10,
+                     n_commits_per_repo=8).coalesce(1).write.parquet(path)
+    cols = ("repo", "path", "commit", "lang", "content")
+    frames = {"loader": load_repo_table(spark, path),
+              "scan": spark.read.parquet(path).select(*cols)}
+    assert frames["loader"].count() > 10
+    monkeypatch.setattr(blocks, "DRIVER_STORE_MAX_EDGE_ROWS", 10)
+    jobs = {}
+    for name, repo in frames.items():
+        built = []
+        edges = derive_edges(repo)
+        jobs[name] = len(job_ids_of(spark, lambda: built.append(
+            Graph.from_edges(edges, weight="weight"))))
+        assert "driver_edges" not in built[0]._owned
+        built[0].unpersist()
+    assert jobs["loader"] == jobs["scan"] - 1, jobs
 
 
 def test_dense_id_stores_collect_edges_once(spark):
