@@ -17,11 +17,8 @@ Scale notes:
   most ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` rows is collected
   once with Arrow and interned there (:meth:`Graph.from_edges`); a
   co-commit frame from ``sources.repo_table.derive_edges`` is not run
-  at all below that bound: its repo table is derived by the plan's
-  numpy twin instead. A ``load_repo_table`` frame over local parquet
-  has its table read with pyarrow from the files its footers name, with
-  no Spark job (their row count shows a table above the bound unread);
-  any other repo frame is collected with one job. The Graph holds its
+  at all below that bound: ``sources.repo_table.driver_derive`` derives
+  its rows from its repo table instead. The Graph holds its
   id-typed edge columns (:meth:`Graph.driver_edges`) and creates its
   vocab and edge frames from them only when something first reads
   them; the edge frame is cached by the first dataflow kernel that
@@ -56,7 +53,6 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -65,7 +61,7 @@ from propagon_spark import canon
 from propagon_spark.errors import EmptyDatasetError
 from propagon_spark.ids import VOCAB_SCHEMA, _build_vocab, driver_vocab, vocab_frame
 from propagon_spark.plans import blocks
-from propagon_spark.sources.repo_table import derive_pairs, derive_recipe
+from propagon_spark.sources.repo_table import driver_derive
 
 #: the canonical forms :meth:`Graph.store` builds: each as a plan over
 #: the edge frame (worker stores) and as its numpy twin over the
@@ -150,18 +146,11 @@ class Graph:
         name joined the vocab.
 
         A frame returned by ``sources.repo_table.derive_edges``, with the
-        default column names and its ``weight`` or none, is built from
-        its repo table when that has at most
-        ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` rows. The table of a
-        ``load_repo_table`` frame read from local parquet footers is
-        read with pyarrow from their files if their row count is within
-        the bound, and not read at all otherwise: no Spark job either
-        way. Any other repo frame is probed with one collect of at most
-        bound + 1 rows. When the table is read whole and neither the
-        pairs formed nor the rows derived exceed the bound, the numpy
-        twin ``derive_pairs`` derives and interns them on the driver.
-        Any other input is normalized, persisted and probed with one
-        collect of at most that many + 1 rows; if the probe holds the
+        default column names and its ``weight`` or none, is built on the
+        driver by ``sources.repo_table.driver_derive`` when that derives
+        it within ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS``. Any other
+        input is normalized, persisted and probed with one collect of
+        at most that many + 1 rows; if the probe holds the
         whole input, it is interned on the driver
         (:func:`ids.driver_vocab` ranks the names, ``pc.index_in`` maps
         them to ids). A Graph built on the
@@ -174,18 +163,8 @@ class Graph:
         if num_partitions is None:
             num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         bound = blocks.DRIVER_STORE_MAX_EDGE_ROWS
-        recipe = derive_recipe(edges)
-        if recipe is not None and (src, dst) == ("src", "dst") and weight in ("weight", None):
-            repo, cap, symmetric, footer = recipe
-            if footer is None:  # probe the repo table
-                table = repo.limit(bound + 1).toArrow()
-            elif footer[1] <= bound:  # a loader frame: read its files
-                table = pa.concat_tables(
-                    pq.read_table(f, columns=repo.columns) for f in footer[0])
-            else:
-                table = None
-            derived = (derive_pairs(table, cap, symmetric, max_rows=bound)
-                       if table is not None and table.num_rows <= bound else None)
+        if (src, dst) == ("src", "dst") and weight in ("weight", None):
+            derived = driver_derive(edges, bound)
             if derived is not None:
                 names, s, d, w = derived
                 held = pa.table({"src": s, "dst": d,

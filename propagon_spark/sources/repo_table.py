@@ -6,24 +6,24 @@ table of source-code repositories with columns
 content: string)``. The reference has no such table — its graphs come
 from ``src dst [weight]`` text files
 (``/root/reference/crates/propagon-cli/src/io.rs:107-125``) — so the
-derivation layer is new and deterministic: a Spark SQL plan (SURVEY.md
-§7.2) with a numpy twin for small tables, both cross-checkable
-row-for-row by a DuckDB oracle.
+derivation layer is new and deterministic: one Spark SQL statement
+(SURVEY.md §7.2) with a numpy twin for small tables, both
+cross-checkable row-for-row by a DuckDB oracle. This module owns both.
 
-Edge derivation is one ``groupBy(repo, commit)`` that collects each
+Edge derivation groups the table by ``(repo, commit)``, collecting each
 commit's sorted distinct paths, then generates the commit's file pairs
 inside the array and counts them per pair: two shuffle exchanges, no
 self-join (:func:`derive_edges`). Its numpy twin :func:`derive_pairs`
-derives the same rows from one Arrow batch of the repo table; below the
-driver edge bound ``Graph.from_edges`` builds a derived frame's Graph
-with it, from the recipe :func:`derive_edges` records
-(:func:`derive_recipe`).
+derives the same rows from one Arrow batch of the repo table. Below the
+driver edge bound ``Graph.from_edges`` asks :func:`driver_derive` for a
+derive frame's rows, which reads the repo table on the driver from the
+recipe :func:`derive_edges` records, and runs no Spark plan of it.
 
 A local parquet source is read from its footers on the driver
 (:func:`parquet_footer`): :func:`load_repo_table` hands Spark the schema
-they give, so no inference job runs, and the recipe of a loader frame
-carries their files and row count, so ``Graph.from_edges`` reads a
-small table with pyarrow instead of running a Spark scan.
+they give, so no inference job runs, and remembers their files and row
+count, so :func:`driver_derive` reads a small table with pyarrow
+instead of running a Spark scan, and leaves a large one unread.
 
 Scale notes: a commit of g files is one aggregation buffer of O(g) paths
 until the cap test drops it, so a giant merge/bot commit costs O(g)
@@ -264,9 +264,8 @@ def load_repo_table(
     A local parquet source whose footers already satisfy the contract
     (:func:`parquet_footer`) is read with the schema they give, so no
     Spark job runs here, and the returned frame remembers the footers'
-    files and row count for ``Graph.from_edges`` (through
-    :func:`derive_edges`). Any other source is read with Spark's schema
-    inference, one job for a parquet path.
+    files and row count for :func:`driver_derive`. Any other source is
+    read with Spark's schema inference, one job for a parquet path.
 
     The frame is validated against the input-hint contract: every column
     in ``columns`` must exist and be string-typed. Extra columns are
@@ -318,11 +317,21 @@ def load_repo_table(
     return df
 
 
-def file_vertex(repo: F.Column | str = "repo", path: F.Column | str = "path") -> F.Column:
-    """Stable file vertex name: ``repo || ':' || path`` (SURVEY.md §7.2)."""
-    r = F.col(repo) if isinstance(repo, str) else repo
-    p = F.col(path) if isinstance(path, str) else path
-    return F.concat_ws(":", r, p)
+#: the plan of :func:`derive_edges`: ``{repo}`` is the repo frame, ``:cap``
+#: its commit cap; internal names start with ``_`` so that a repo frame's
+#: other columns cannot clash with them
+_DERIVE_SQL = """
+WITH g AS (SELECT repo, array_sort(collect_set(path)) AS _p,
+                  max(CAST(path IS NULL AS INT)) AS _np
+           FROM {repo} WHERE repo IS NOT NULL AND `commit` IS NOT NULL
+           GROUP BY repo, `commit`),
+c AS (SELECT concat_ws(':', repo, _ab.a) AS src, concat_ws(':', repo, _ab.b) AS dst,
+             CAST(count(*) AS DOUBLE) AS weight
+      FROM (SELECT repo, explode(flatten(transform(_p, (a, i) ->
+              transform(slice(_p, i + 2, size(_p)), b -> struct(a, b))))) AS _ab
+            FROM g WHERE size(_p) + _np <= :cap AND size(_p) >= 2)
+      GROUP BY 1, 2)
+SELECT * FROM c"""
 
 
 def derive_edges(
@@ -330,9 +339,9 @@ def derive_edges(
     max_commit_files: int = MAX_COMMIT_FILES,
     symmetric: bool = True,
 ) -> DataFrame:
-    """Co-commit edge derivation (SURVEY.md §7.2): a Catalyst plan,
-    and its numpy twin :func:`derive_pairs`, both pinned by the oracle
-    SQL below.
+    """Co-commit edge derivation (SURVEY.md §7.2): one Spark SQL
+    statement, and its numpy twin :func:`derive_pairs`, both pinned by
+    the oracle SQL below.
 
     Files sharing a (repo, commit) group are linked; weight = number of
     shared commits. One row per unordered pair, ``src < dst`` by path;
@@ -342,19 +351,17 @@ def derive_edges(
     formed. Rows with a null ``repo`` or ``commit`` contribute nothing; a
     null ``path`` counts toward the cap but forms no pair.
 
-    Plan: one ``groupBy(repo, commit)`` collects each commit's distinct
+    The plan is the statement ``_DERIVE_SQL``, plus ``UNION ALL SELECT
+    dst, src, weight FROM c`` when ``symmetric``: each commit's distinct
     paths, sorted (``array_sort`` is Spark's binary string order, the
-    order of ``a.path < b.path``); the pairs ``(p[i], p[j]), i < j`` are
-    generated inside the array and counted per pair by a second
-    ``groupBy``. Two shuffle exchanges; no self-join.
+    order of ``a.path < b.path``), give the commit's pairs inside the
+    array, which are counted per pair. Two shuffle exchanges; no
+    self-join.
 
-    The returned frame's recipe ``(repo projection, cap, symmetric,
-    footer)`` is recorded (:func:`derive_recipe`) when ``repo``,
-    ``commit`` and ``path`` are string-typed, so that ``Graph.from_edges``
-    can derive a small table's rows on the driver instead of running
-    this plan; ``footer`` is the ``(files, num_rows)`` of a
-    ``repo_df`` returned by :func:`load_repo_table` from parquet
-    footers, None for any other frame.
+    When ``repo``, ``commit`` and ``path`` are string-typed, the frame's
+    recipe is recorded, so that ``Graph.from_edges`` can derive a small
+    table's rows on the driver (:func:`driver_derive`) instead of
+    running this plan.
 
     The spec is the oracle SQL (DuckDB, same column names):
 
@@ -368,62 +375,47 @@ def derive_edges(
         FROM fo a JOIN fo b USING (repo, commit)
         WHERE a.path < b.path GROUP BY 1, 2
     """
-    paths = F.col("_p")
-    groups = (
-        repo_df.where(F.col("repo").isNotNull() & F.col("commit").isNotNull())
-        .groupBy("repo", "commit")
-        .agg(
-            F.array_sort(F.collect_set("path")).alias("_p"),
-            F.max(F.col("path").isNull().cast("int")).alias("_np"),
-        )
-        .where(
-            (F.size(paths) + F.col("_np") <= max_commit_files)
-            & (F.size(paths) >= 2)
-        )
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                paths,
-                lambda a, i: F.transform(
-                    F.slice(paths, i + 2, F.size(paths)),
-                    lambda b: F.struct(a.alias("a"), b.alias("b")),
-                ),
-            )
-        )
-    ).alias("_ab")
-    pairs = (
-        groups.select("repo", pair)
-        .groupBy(
-            file_vertex(F.col("repo"), F.col("_ab.a")).alias("src"),
-            file_vertex(F.col("repo"), F.col("_ab.b")).alias("dst"),
-        )
-        .agg(F.count("*").cast("double").alias("weight"))
-    )
-    if symmetric:
-        pairs = pairs.unionAll(
-            pairs.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
-            )
-        )
-    cols = ("repo", "commit", "path")
-    if all(isinstance(repo_df.schema[c].dataType, StringType) for c in cols):
-        _RECIPES[pairs] = (repo_df.select(*cols), max_commit_files, symmetric,
-                           _FOOTERS.get(repo_df))
+    text = _DERIVE_SQL + (" UNION ALL SELECT dst, src, weight FROM c" if symmetric else "")
+    pairs = repo_df.sparkSession.sql(text, args={"cap": max_commit_files}, repo=repo_df)
+    if all(isinstance(repo_df.schema[c].dataType, StringType)
+           for c in ("repo", "commit", "path")):
+        _RECIPES[pairs] = (repo_df, max_commit_files, symmetric)
     return pairs
 
 
-#: derive_edges frame -> (repo projection, cap, symmetric, footer); a
-#: frame hashes by identity, so a transformed derive frame has no recipe
+#: derive_edges frame -> (repo frame, cap, symmetric); a frame hashes by
+#: identity, so a transformed derive frame has no recipe
 _RECIPES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def derive_recipe(
-    edges: DataFrame,
-) -> tuple[DataFrame, int, bool, tuple[list[str], int] | None] | None:
-    """``(repo projection, cap, symmetric, footer)`` of a frame returned
-    by :func:`derive_edges`; None for any other frame."""
-    return _RECIPES.get(edges)
+def driver_derive(
+    edges: DataFrame, max_rows: int
+) -> tuple[pa.Array, np.ndarray, np.ndarray, np.ndarray] | None:
+    """:func:`derive_pairs` of the repo table of a frame returned by
+    :func:`derive_edges`, read on the driver when it has at most
+    ``max_rows`` rows; None for any other frame, a larger table or too
+    many pairs.
+
+    A :func:`load_repo_table` frame read from parquet footers has its
+    files read with pyarrow when their row count is within the bound and
+    is not read otherwise: no Spark job either way. Any other repo frame
+    is probed with one collect of at most ``max_rows + 1`` rows.
+    """
+    recipe = _RECIPES.get(edges)
+    if recipe is None:
+        return None
+    repo, cap, symmetric = recipe
+    cols = ["repo", "commit", "path"]
+    footer = _FOOTERS.get(repo)
+    if footer is None:  # probe the repo table
+        table = repo.select(*cols).limit(max_rows + 1).toArrow()
+    elif footer[1] <= max_rows:  # a loader frame: read its files
+        table = pa.concat_tables(pq.read_table(f, columns=cols) for f in footer[0])
+    else:
+        return None
+    if table.num_rows > max_rows:
+        return None
+    return derive_pairs(table, cap, symmetric, max_rows)
 
 
 def derive_pairs(

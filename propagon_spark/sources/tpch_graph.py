@@ -45,17 +45,10 @@ def cocommit_edges(
         F.lit("sql").alias("lang"),
         F.lit("").alias("content"),
     )
-    if min_weight == 1:
-        # derive_edges' own frame, which Graph.from_edges can derive on
-        # the driver when the table is small
-        return derive_edges(repo_shaped, max_commit_files=ORDER_CAP, symmetric=symmetric)
-    e = derive_edges(repo_shaped, max_commit_files=ORDER_CAP, symmetric=False)
-    e = e.where(F.col("weight") >= min_weight)
-    if symmetric:
-        e = e.unionAll(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-        )
-    return e
+    e = derive_edges(repo_shaped, max_commit_files=ORDER_CAP, symmetric=symmetric)
+    # derive_edges' own frame, which Graph.from_edges can derive on the
+    # driver when the table is small; a reversed row keeps its weight
+    return e if min_weight == 1 else e.where(F.col("weight") >= min_weight)
 
 
 #: DuckDB CTE prologue matching :func:`cocommit_edges` row-for-row

@@ -20,6 +20,10 @@ fit_warm"). The Spark equivalents:
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import uuid
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -122,38 +126,37 @@ def pagerank_warm(
     ``prev_ranks`` (id, rank) — e.g. the previous period's result with new
     vertices absent (they start at 0 after the left join, then receive
     teleport mass on the first step). Mass is re-normalized so the warm
-    vector is a distribution."""
+    vector is a distribution. Without a ``checkpoint_dir`` the run
+    checkpoints to a temporary directory, removed before the call
+    returns."""
     from propagon_spark.graph.pagerank import pagerank
-
-    spark = g.spark
-    import uuid
+    from propagon_spark.plans.checkpoint import CheckpointManager
 
     ckdir = kwargs.pop("checkpoint_dir", None)
     run_id = kwargs.pop("run_id", uuid.uuid4().hex)
-    if ckdir is None:
-        import tempfile
-
+    made = ckdir is None
+    if made:
         ckdir = tempfile.mkdtemp(prefix="propagon_warm_")
+    try:
+        warm = g.vocab.select("id").join(prev_ranks, "id", "left").select(
+            "id", F.coalesce("rank", F.lit(0.0)).alias("rank")
+        )
+        if normalize:
+            total = warm.agg(F.sum("rank")).first()[0] or 1.0
+            warm = warm.select("id", (F.col("rank") / F.lit(float(total))).alias("rank"))
 
-    warm = g.vocab.select("id").join(prev_ranks, "id", "left").select(
-        "id", F.coalesce("rank", F.lit(0.0)).alias("rank")
-    )
-    if normalize:
-        total = warm.agg(F.sum("rank")).first()[0] or 1.0
-        warm = warm.select("id", (F.col("rank") / F.lit(float(total))).alias("rank"))
-
-    # seed the checkpoint machinery with the warm state as "iteration 0"
-    from propagon_spark.plans.checkpoint import CheckpointManager
-
-    ckpt = CheckpointManager(spark, ckdir, run_id)
-    ckpt.save(0, warm, [])
-    return pagerank(
-        g,
-        checkpoint_dir=ckdir,
-        run_id=run_id,
-        resume=True,
-        **kwargs,
-    )
+        # seed the checkpoint machinery with the warm state as "iteration 0"
+        CheckpointManager(g.spark, ckdir, run_id).save(0, warm, [])
+        return pagerank(
+            g,
+            checkpoint_dir=ckdir,
+            run_id=run_id,
+            resume=True,
+            **kwargs,
+        )
+    finally:
+        if made:
+            shutil.rmtree(ckdir, ignore_errors=True)
 
 
 class StreamingPageRankRefit:

@@ -89,3 +89,20 @@ def test_two_period_warm_equals_continuous(spark, tmp_path):
     assert rewarm.iterations <= 3
     g1.unpersist()
     g12.unpersist()
+
+
+@pytest.mark.parametrize("impl", ["csr", "join"])
+def test_warm_refit_removes_its_checkpoint_dir(spark, monkeypatch, tmp_path, impl):
+    # without a checkpoint_dir the refit checkpoints to a directory of
+    # its own and removes it before returning; the result reads none of it
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    g = Graph.from_edges(make_edges(spark, [("a", "b"), ("b", "c"), ("c", "a")]))
+    try:
+        prev = pagerank(g, sink="uniform", iterations=3, impl=impl)
+        res = pagerank_warm(g, prev.ranks, sink="uniform", iterations=3, impl=impl)
+        assert list(tmp_path.glob("propagon_warm_*")) == []
+        assert len(res.scores.collect()) == len(res.ranks.collect()) == 3
+    finally:
+        g.unpersist()

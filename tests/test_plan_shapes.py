@@ -197,7 +197,9 @@ def test_kcore_round_adds_no_exchange(spark):
 
 def test_derive_edges_two_shuffles(spark):
     # one groupBy(repo, commit) with in-array pair generation, then the
-    # per-pair count: two shuffle exchanges and no (repo, commit) self-join
+    # per-pair count: two shuffle exchanges and no (repo, commit)
+    # self-join; the symmetric union's reversed branch reuses the
+    # per-pair exchange (its ``ReusedExchange`` line names it once more)
     from propagon_spark.sources.repo_table import derive_edges
 
     df = spark.createDataFrame(
@@ -209,6 +211,7 @@ def test_derive_edges_two_shuffles(spark):
     spark.conf.set(key, "-1")
     try:
         assert _live_shuffles(derive_edges(df, symmetric=False)) == 2
+        assert _live_shuffles(derive_edges(df, symmetric=True)) == 3
     finally:
         spark.conf.set(key, old)
 

@@ -7,6 +7,7 @@ import itertools
 import os
 import random
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -15,12 +16,12 @@ from pyspark.sql import functions as F
 
 from propagon_spark.errors import InvalidParameterError
 from propagon_spark.graph import Graph
-from propagon_spark.graph import core as core_mod
 from propagon_spark.graph.pagerank import pagerank
 from propagon_spark.plans import blocks
+from propagon_spark.sources import repo_table
 from propagon_spark.sources.repo_table import (
     derive_edges,
-    derive_recipe,
+    driver_derive,
     load_repo_table,
     parquet_footer,
     synth_repo_table,
@@ -65,6 +66,27 @@ def test_derive_edges_matches_manual(spark):
     }
     sym = derive_edges(df, symmetric=True)
     assert sym.count() == 6
+
+
+@pytest.mark.parametrize("symmetric", [False, True])
+def test_derive_edges_reads_only_its_columns(spark, symmetric):
+    # extra columns named like the plan's own and an integer commit
+    # derive the rows of the string projection, as non-null columns;
+    # the statement's repo view is gone after the call
+    rows = [(r, p, c) for r, p, c in _CASES["random"][0] if c is not None]
+    wide = spark.createDataFrame(
+        [(r, p, int(c[1:]), "py", "x", 1, 2) for r, p, c in rows],
+        "repo string, path string, commit int, lang string, content string, _p int, _ab int")
+    narrow = spark.createDataFrame(
+        [(r, p, c[1:]) for r, p, c in rows], "repo string, path string, commit string")
+    got, want = (derive_edges(df, max_commit_files=6, symmetric=symmetric)
+                 for df in (wide, narrow))
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("_pyspark_")] == []
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in got.schema.fields] == [
+        ("src", "string", False), ("dst", "string", False), ("weight", "double", False)]
+    assert got.schema == want.schema
+    assert collections.Counter(map(tuple, got.collect())) == \
+        collections.Counter(map(tuple, want.collect()))
 
 
 def _random_table():
@@ -258,8 +280,8 @@ def _spy_derive_pairs(monkeypatch):
         results.append(real(*args, **kw))
         return results[-1]
 
-    real = core_mod.derive_pairs
-    monkeypatch.setattr(core_mod, "derive_pairs", spy)
+    real = repo_table.derive_pairs
+    monkeypatch.setattr(repo_table, "derive_pairs", spy)
     return results
 
 
@@ -348,6 +370,11 @@ def _arrow(rows):
                      for i, c in enumerate(_COLS)})
 
 
+def _same_derivation(a, b) -> bool:
+    """Whether two ``derive_pairs`` results are the same rows."""
+    return a[0].equals(b[0]) and all(map(np.array_equal, a[1:], b[1:]))
+
+
 def _scan_graph(spark, monkeypatch, scan, cap):
     """``_graph_values`` of the Spark build of ``scan``'s derive frame."""
     return _spark_built(spark, monkeypatch,
@@ -374,10 +401,20 @@ def test_footer_read_builds_the_scan_graph(spark, monkeypatch, tmp_path, case, w
     loaded = []
     assert job_ids_of(spark, lambda: loaded.append(
         load_repo_table(spark, path, columns=_COLS))) == []
+    assert parquet_footer(spark, path, _COLS) == (files, len(rows))
     edges = derive_edges(loaded[0], max_commit_files=cap)
-    assert derive_recipe(edges)[3] == (files, len(rows))
-    # a transformed loader frame has no footers
-    assert derive_recipe(derive_edges(loaded[0].where("true")))[3] is None
+    bound = blocks.DRIVER_STORE_MAX_EDGE_ROWS
+    # the loader frame derives with no job, and so it does not when the
+    # derive frame is transformed, which has no recipe; a transformed
+    # loader frame has no footers: its repo table is probed
+    out = []
+    assert job_ids_of(spark, lambda: out.append(driver_derive(edges, bound))) == []
+    assert out[0] is not None
+    assert job_ids_of(spark, lambda: out.append(driver_derive(edges.where("true"), bound))) == []
+    assert out[1] is None
+    assert job_ids_of(spark, lambda: out.append(
+        driver_derive(derive_edges(loaded[0].where("true"), max_commit_files=cap), bound)))
+    assert _same_derivation(out[2], out[0])
     want = _scan_graph(spark, monkeypatch, spark.read.parquet(path), cap)
     derived = _spy_derive_pairs(monkeypatch)
     g = Graph.from_edges(edges, weight="weight")
@@ -431,7 +468,13 @@ def test_loader_reads_footers_of_local_parquet_only(spark, monkeypatch, tmp_path
             load_repo_table(spark, source, columns=_COLS)
         return
     edges = derive_edges(load_repo_table(spark, source, columns=_COLS), max_commit_files=cap)
-    assert derive_recipe(edges)[3] == footer
+    # above the bound a loader frame read from footers returns None with
+    # no job: its footers show the row count
+    out = []
+    jobs = job_ids_of(spark, lambda: out.append(driver_derive(edges, len(rows) - 1)))
+    assert out == [None]
+    if footer is not None:
+        assert jobs == []
     want = _scan_graph(spark, monkeypatch, scan, cap)
     g = Graph.from_edges(edges, weight="weight")
     try:
