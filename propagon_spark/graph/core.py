@@ -16,8 +16,8 @@ Scale notes:
 - a small Graph lives on the driver, from build to store. An input of at
   most ``plans.blocks.DRIVER_STORE_MAX_EDGE_ROWS`` rows is collected
   once with Arrow and interned there (:meth:`Graph.from_edges`); a
-  co-commit frame from ``sources.repo_table.derive_edges`` is not run
-  at all below that bound: ``sources.repo_table.driver_derive`` derives
+  co-commit frame from ``sources.repo_table.derive_edges`` is not even
+  planned below that bound: ``sources.repo_table.driver_derive`` derives
   its rows from its repo table instead. The Graph holds its
   id-typed edge columns (:meth:`Graph.driver_edges`) and creates its
   vocab and edge frames from them only when something first reads
@@ -160,8 +160,6 @@ class Graph:
         cached eagerly. All paths give the same ids, names and edge rows.
         """
         spark = edges.sparkSession
-        if num_partitions is None:
-            num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         bound = blocks.DRIVER_STORE_MAX_EDGE_ROWS
         if (src, dst) == ("src", "dst") and weight in ("weight", None):
             derived = driver_derive(edges, bound)
@@ -198,6 +196,8 @@ class Graph:
             if probe.num_rows <= bound:
                 return cls._from_arrow(spark, probe, num_partitions,
                                        raw.schema["weight"])
+            if num_partitions is None:
+                num_partitions = _shuffle_partitions(spark)
 
             names = raw.select(F.col("src_name").alias("name")).unionAll(
                 raw.select(F.col("dst_name").alias("name"))
@@ -229,7 +229,7 @@ class Graph:
 
     @classmethod
     def _from_arrow(cls, spark: SparkSession, probe: pa.Table,
-                    num_partitions: int, weight: StructField) -> "Graph":
+                    num_partitions: int | None, weight: StructField) -> "Graph":
         """:meth:`from_edges` of a normalized input, the whole of which
         is ``probe``: interned on the driver."""
         src, dst = probe.column("src_name"), probe.column("dst_name")
@@ -247,13 +247,14 @@ class Graph:
 
     @classmethod
     def _driver_built(cls, spark: SparkSession, names, held: pa.Table,
-                      num_partitions: int, weight: StructField) -> "Graph":
+                      num_partitions: int | None, weight: StructField) -> "Graph":
         """The Graph of ``names`` (in id order) and the id-typed
         ``(src, dst, weight)`` columns ``held``, which it keeps on the
         driver; ``weight`` is the edge frame's weight field. The vocab
         and edge frames are created from them on first read; the edge
-        frame is partitioned by ``src`` as the joined one is, and cached
-        by the first kernel that scans it."""
+        frame is partitioned by ``src`` as the joined one is (into
+        ``num_partitions``, or the session's shuffle partitions at that
+        read), and cached by the first kernel that scans it."""
         n = len(names)
         if n == 0:
             raise EmptyDatasetError("empty edge dataset")
@@ -266,7 +267,8 @@ class Graph:
             if "driver_edges" not in owned:
                 raise RuntimeError("the Graph was unpersisted before its edges were read")
             e = spark.createDataFrame(owned["driver_edges"], schema)
-            e = owned["edges"] = e.repartition(num_partitions, "src").persist(blocks.STORAGE)
+            parts = _shuffle_partitions(spark) if num_partitions is None else num_partitions
+            e = owned["edges"] = e.repartition(parts, "src").persist(blocks.STORAGE)
             return e
 
         kept = names if n <= blocks.DRIVER_STATE_MAX_VERTICES else None
@@ -303,9 +305,7 @@ class Graph:
             w.alias("weight"),
         )
         if num_partitions is None:
-            num_partitions = int(
-                spark.conf.get("spark.sql.shuffle.partitions")
-            )
+            num_partitions = _shuffle_partitions(spark)
         # same stable src hash partitioning + cache as from_edges —
         # kernels rely on both
         e = e.repartition(num_partitions, "src").persist(blocks.STORAGE)
@@ -419,6 +419,10 @@ class Graph:
     def unpersist(self) -> None:
         """Release the edge frame, every store and every derived frame."""
         _release(self._owned, object)
+
+
+def _shuffle_partitions(spark: SparkSession) -> int:
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def _release(owned: dict[str, object], kind: type) -> None:

@@ -83,6 +83,7 @@ from propagon_spark.errors import InvalidParameterError, NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
 from propagon_spark.plans import blocks
 from propagon_spark.plans.checkpoint import CheckpointManager
+from propagon_spark.plans.deferred import DeferredFrame
 from propagon_spark.plans.iterate import fixpoint, materialize
 from propagon_spark.progress import as_progress
 
@@ -106,7 +107,8 @@ _KEYS_PER_TASK = 100_000
 @dataclass
 class PageRankResult:
     scores: DataFrame  # (name, score) sorted desc, name asc
-    ranks: DataFrame  # (id, rank)
+    #: (id, rank); the CSR kernel's is built on its first read
+    ranks: DataFrame
     iterations: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
@@ -160,12 +162,13 @@ def _spmv(pdiv: np.ndarray, bucket: list, nlocal: int) -> np.ndarray:
 
 def _ranks(spark: SparkSession, state) -> DataFrame:
     """``(id, rank)`` of a kernel state: the join kernel's frame or the
-    CSR kernel's driver vector."""
+    CSR kernel's driver vector, whose frame is deferred, built on its
+    first read."""
     if isinstance(state, DataFrame):
         return state.select("id", "rank")
-    return spark.createDataFrame(
+    return DeferredFrame(spark, lambda: spark.createDataFrame(
         pd.DataFrame({"id": np.arange(len(state), dtype="int64"), "rank": state})
-    )
+    ))
 
 
 def pagerank(

@@ -17,13 +17,17 @@ self-join (:func:`derive_edges`). Its numpy twin :func:`derive_pairs`
 derives the same rows from one Arrow batch of the repo table. Below the
 driver edge bound ``Graph.from_edges`` asks :func:`driver_derive` for a
 derive frame's rows, which reads the repo table on the driver from the
-recipe :func:`derive_edges` records, and runs no Spark plan of it.
+recipe the frame carries, and builds no Spark plan of it: the derive
+frame is a ``plans.deferred.DeferredFrame``, whose plan is built only
+when Spark reads it.
 
 A local parquet source is read from its footers on the driver
-(:func:`parquet_footer`): :func:`load_repo_table` hands Spark the schema
-they give, so no inference job runs, and remembers their files and row
-count, so :func:`driver_derive` reads a small table with pyarrow
-instead of running a Spark scan, and leaves a large one unread.
+(:func:`parquet_footer`): :func:`load_repo_table` returns a deferred
+frame of the schema they give, whose scan is built only when Spark
+reads it (with that schema, so no inference job runs), and which
+carries their files and row count, so :func:`driver_derive` reads a
+small table with pyarrow instead of running a Spark scan, and leaves a
+large one unread.
 
 Scale notes: a commit of g files is one aggregation buffer of O(g) paths
 until the cap test drops it, so a giant merge/bot commit costs O(g)
@@ -36,7 +40,7 @@ results stay deterministic and SQL-expressible.
 from __future__ import annotations
 
 import os
-import weakref
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -48,6 +52,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from propagon_spark.ids import driver_vocab
 from propagon_spark.plans.blocks import _as_local_path
+from propagon_spark.plans.deferred import DeferredFrame
 
 #: commits touching more than this many files are excluded from edge
 #: derivation (fan-out bound; SURVEY.md §7.2)
@@ -190,8 +195,26 @@ def synth_repo_table_sparse(
 REPO_TABLE_COLUMNS = ("repo", "path", "commit", "lang", "content")
 
 
-#: load_repo_table frame -> (files, num_rows) of its parquet footers
-_FOOTERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+class _Footer(NamedTuple):
+    """The recipe of a :func:`load_repo_table` frame read from footers."""
+
+    files: list[str]
+    num_rows: int
+
+
+class _Derivation(NamedTuple):
+    """The recipe of a :func:`derive_edges` frame."""
+
+    repo: DataFrame
+    cap: int
+    symmetric: bool
+
+
+def _recipe(frame: DataFrame, kind: type):
+    """The ``kind`` recipe ``frame`` carries; None for any other frame,
+    a transformed one included."""
+    recipe = frame.recipe if isinstance(frame, DeferredFrame) else None
+    return recipe if isinstance(recipe, kind) else None
 
 
 def parquet_footer(
@@ -237,7 +260,7 @@ def parquet_footer(
            or schema.field(c).type not in (pa.string(), pa.large_string())
            for c in columns):
         return None
-    return files, sum(f.num_rows for f in footers)
+    return _Footer(files, sum(f.num_rows for f in footers))
 
 
 def load_repo_table(
@@ -262,10 +285,12 @@ def load_repo_table(
       ``.orc`` → ORC).
 
     A local parquet source whose footers already satisfy the contract
-    (:func:`parquet_footer`) is read with the schema they give, so no
-    Spark job runs here, and the returned frame remembers the footers'
-    files and row count for :func:`driver_derive`. Any other source is
-    read with Spark's schema inference, one job for a parquet path.
+    (:func:`parquet_footer`) is returned as a deferred frame of the
+    nullable-string schema they give: its scan, read with that schema so
+    that no inference job runs, is built only when Spark reads the
+    frame, and the frame carries the footers' files and row count for
+    :func:`driver_derive`. Any other source is read here with Spark's
+    schema inference, one job for a parquet path.
 
     The frame is validated against the input-hint contract: every column
     in ``columns`` must exist and be string-typed. Extra columns are
@@ -276,7 +301,6 @@ def load_repo_table(
     """
     from propagon_spark.errors import InvalidParameterError
 
-    footer = None
     looks_like_path = "/" in source or source.endswith(
         (".parquet", ".json", ".jsonl", ".orc")
     )
@@ -287,9 +311,15 @@ def load_repo_table(
     elif source.rstrip("/").endswith(".orc"):
         df = spark.read.orc(source)
     elif (footer := parquet_footer(spark, source, columns)) is not None:
-        df = spark.read.schema(
-            StructType([StructField(c, StringType()) for c in columns])
-        ).parquet(source)
+        schema = StructType([StructField(c, StringType()) for c in columns])
+
+        def scan() -> DataFrame:
+            return spark.read.schema(schema).parquet(source).select(*columns)
+
+        # a column named twice fails the read's analysis: raise it here
+        if len(set(columns)) < len(columns):
+            return scan()
+        return DeferredFrame(spark, scan, schema, footer)
     else:
         df = spark.read.parquet(source)
 
@@ -311,10 +341,7 @@ def load_repo_table(
             "typed per the input contract; cast upstream if the catalog "
             "stores them otherwise"
         )
-    df = df.select(*columns)
-    if footer is not None:
-        _FOOTERS[df] = footer
-    return df
+    return df.select(*columns)
 
 
 #: the plan of :func:`derive_edges`: ``{repo}`` is the repo frame, ``:cap``
@@ -358,10 +385,12 @@ def derive_edges(
     array, which are counted per pair. Two shuffle exchanges; no
     self-join.
 
-    When ``repo``, ``commit`` and ``path`` are string-typed, the frame's
-    recipe is recorded, so that ``Graph.from_edges`` can derive a small
-    table's rows on the driver (:func:`driver_derive`) instead of
-    running this plan.
+    When ``repo``, ``commit`` and ``path`` are each present once and
+    string-typed, the frame is a deferred frame carrying its recipe: its
+    plan is built only when Spark reads it, and ``Graph.from_edges`` can
+    derive a small table's rows on the driver (:func:`driver_derive`)
+    without ever building it. Any other repo frame gets its plan here,
+    so that an analysis error is raised by this call.
 
     The spec is the oracle SQL (DuckDB, same column names):
 
@@ -375,17 +404,18 @@ def derive_edges(
         FROM fo a JOIN fo b USING (repo, commit)
         WHERE a.path < b.path GROUP BY 1, 2
     """
+    spark = repo_df.sparkSession
     text = _DERIVE_SQL + (" UNION ALL SELECT dst, src, weight FROM c" if symmetric else "")
-    pairs = repo_df.sparkSession.sql(text, args={"cap": max_commit_files}, repo=repo_df)
-    if all(isinstance(repo_df.schema[c].dataType, StringType)
-           for c in ("repo", "commit", "path")):
-        _RECIPES[pairs] = (repo_df, max_commit_files, symmetric)
-    return pairs
 
+    def plan() -> DataFrame:
+        return spark.sql(text, args={"cap": max_commit_files}, repo=repo_df)
 
-#: derive_edges frame -> (repo frame, cap, symmetric); a frame hashes by
-#: identity, so a transformed derive frame has no recipe
-_RECIPES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+    # exact names, once each: a case variant or a duplicate goes eager
+    used = [f for f in repo_df.schema.fields if f.name.lower() in ("repo", "commit", "path")]
+    if (sorted(f.name for f in used) != ["commit", "path", "repo"]
+            or not all(isinstance(f.dataType, StringType) for f in used)):
+        return plan()
+    return DeferredFrame(spark, plan, recipe=_Derivation(repo_df, max_commit_files, symmetric))
 
 
 def driver_derive(
@@ -399,18 +429,19 @@ def driver_derive(
     A :func:`load_repo_table` frame read from parquet footers has its
     files read with pyarrow when their row count is within the bound and
     is not read otherwise: no Spark job either way. Any other repo frame
-    is probed with one collect of at most ``max_rows + 1`` rows.
+    is probed with one collect of at most ``max_rows + 1`` rows. Neither
+    builds the derive frame's plan.
     """
-    recipe = _RECIPES.get(edges)
+    recipe = _recipe(edges, _Derivation)
     if recipe is None:
         return None
     repo, cap, symmetric = recipe
     cols = ["repo", "commit", "path"]
-    footer = _FOOTERS.get(repo)
+    footer = _recipe(repo, _Footer)
     if footer is None:  # probe the repo table
         table = repo.select(*cols).limit(max_rows + 1).toArrow()
-    elif footer[1] <= max_rows:  # a loader frame: read its files
-        table = pa.concat_tables(pq.read_table(f, columns=cols) for f in footer[0])
+    elif footer.num_rows <= max_rows:  # a loader frame: read its files
+        table = pa.concat_tables(pq.read_table(f, columns=cols) for f in footer.files)
     else:
         return None
     if table.num_rows > max_rows:
