@@ -30,7 +30,9 @@ Below the driver-state bound (``plans.blocks.DRIVER_STATE_MAX_VERTICES``)
 a Graph also holds its ``names`` on the driver, one Arrow column in id
 order (a dense-id Graph casts its ids on first use): k-core, LPA and CSR
 PageRank sort and name their results there (:meth:`Graph.emit`), so each
-is a ``LocalRelation`` whose collect runs no Spark job. Above the bound
+is a deferred frame over the sorted driver rows: collecting it reads
+them with no plan and no Spark job, and any other read builds one
+``LocalRelation``. Above the bound
 the names stay in the vocab frame and a forced CSR PageRank emits
 through a vocab join + ``orderBy``. A Graph owns one edge-block store
 per canonical form a kernel asks for (:meth:`Graph.store`:
@@ -61,6 +63,7 @@ from propagon_spark import canon
 from propagon_spark.errors import EmptyDatasetError
 from propagon_spark.ids import VOCAB_SCHEMA, _build_vocab, driver_vocab, vocab_frame
 from propagon_spark.plans import blocks
+from propagon_spark.plans.deferred import DeferredFrame
 from propagon_spark.sources.repo_table import driver_derive
 
 #: the canonical forms :meth:`Graph.store` builds: each as a plan over
@@ -396,8 +399,10 @@ class Graph:
         of ``column`` by id (int64 or float64), ``nullable`` its
         nullability (None: the id's, for a column of ids); name and id
         keep the vocab's, so the schema is the vocab join's. Below the
-        bound it is sorted on the driver and returned as one
-        ``LocalRelation``; above it, a vocab join + ``orderBy``."""
+        bound it is sorted on the driver and returned as a deferred
+        frame of those rows: ``collect()`` returns them without the JVM,
+        and any other read builds one ``LocalRelation`` of them. Above
+        the bound it is a vocab join + ``orderBy``."""
         # a vocab still to be created is a vocab_frame: its schema is known
         made = isinstance(self.__dict__["_vocab"], DataFrame)
         vocab = self.vocab.schema if made else VOCAB_SCHEMA
@@ -411,10 +416,10 @@ class Graph:
             return self.with_names(frame).select("name", "id", column).orderBy(
                 *[F.desc(c) if o == "descending" else F.asc(c) for c, o in sort_keys])
         table = table.add_column(0, "name", names)
-        return self.spark.createDataFrame(
-            table.take(pc.sort_indices(table, sort_keys=sort_keys)),
-            StructType([vocab["name"], vocab["id"], value]),
-        )
+        rows = table.take(pc.sort_indices(table, sort_keys=sort_keys))
+        schema = StructType([vocab["name"], vocab["id"], value])
+        return DeferredFrame(self.spark, lambda: self.spark.createDataFrame(rows, schema),
+                             schema, rows=rows)
 
     def unpersist(self) -> None:
         """Release the edge frame, every store and every derived frame."""

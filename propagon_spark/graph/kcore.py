@@ -32,7 +32,8 @@ CSR PageRank uses):
   driver). The rounds run on ``plans.iterate.fixpoint``'s driver
   backend; a round that changes no ``h`` stops the loop. Isolated
   vertices keep degree 0. The result is named and sorted on the driver
-  (``Graph.emit``): a ``LocalRelation``, no vocab join.
+  (``Graph.emit``): no vocab join, and ``collect()`` reads the sorted
+  driver rows without the JVM.
 - **Dataflow** (n > the bound, :func:`_kcore_hindex`): state ``h`` only
   for non-isolated vertices, h₀ = degree (a per-src aggregate of the
   cached adjacency). A round is ``cache ⋈ broadcast(h)`` on ``dst``,

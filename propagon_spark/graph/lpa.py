@@ -24,7 +24,8 @@ Two executions, split at the edge-block store's bound
   store's worker shards above that. Vertices whose ``src_degree`` is 0
   keep their label. The rounds run on ``plans.iterate.fixpoint``'s
   driver backend; a round that changes no label stops the loop. The
-  result is a driver-sorted ``LocalRelation`` (``Graph.emit``).
+  result is sorted on the driver and collected from there
+  (``Graph.emit``).
 - **Dataflow** (n > the bound): per round one scatter join (labels onto
   symmetric edges), ``groupBy(dst, label).count()`` for neighborhood
   histograms, then a ``max_by``-style struct-max to pick (count desc,

@@ -1,7 +1,7 @@
 """Deferred frames (``plans.deferred.DeferredFrame``): the loader frame
-over parquet footers, the derive frame and CSR PageRank's ``ranks``
-build no Spark plan on the driver path, and once read are the frames
-their producers built eagerly before."""
+over parquet footers, the derive frame, CSR PageRank's ``ranks`` and a
+driver emit build no Spark plan on the driver path, and once read are
+the frames their producers built eagerly before."""
 
 import json
 import os
@@ -24,6 +24,7 @@ from pyspark.sql.types import (
 )
 
 from propagon_spark.graph import Graph
+from propagon_spark.graph.kcore import kcore
 from propagon_spark.graph.pagerank import pagerank
 from propagon_spark.plans.deferred import DeferredFrame
 from propagon_spark.sources import repo_table
@@ -175,5 +176,33 @@ def test_warm_refit_and_resume_from_deferred_ranks(spark, repo_path, tmp_path):
             got = scores_dict(res.scores)
             assert got.keys() == want.keys()
             assert all(abs(got[k] - want[k]) < 1e-8 for k in want)
+    finally:
+        g.unpersist()
+
+
+def _row_types(rows):
+    return [(r.__fields__, [type(v) for v in r]) for r in rows]
+
+
+def test_emit_collects_its_driver_rows(spark, monkeypatch, repo_path):
+    # k-core's and a float column's emit: collect builds no plan and
+    # returns the rows, fields and value types of Spark's collect
+    g = _csr_graph(spark, repo_path)
+    try:
+        n = g.num_vertices
+        scores = np.linspace(1.0, 0.0, n)
+        scores[1] = scores[0]  # a tie, ordered by name
+        for frame in (kcore(g), g.emit("score", scores, [("score", "descending"),
+                                                          ("name", "ascending")])):
+            calls = {"createDataFrame": 0}
+            _spy(monkeypatch, calls, SparkSession, "createDataFrame")
+            rows = frame.collect()
+            assert calls["createDataFrame"] == 0 and "_jdf" not in frame.__dict__
+            monkeypatch.undo()
+            eager = DataFrame.collect(frame)  # builds the LocalRelation
+            assert rows == eager and len(rows) == n
+            assert _row_types(rows) == _row_types(eager)
+            assert frame.schema == _jvm_schema(frame)
+            assert frame.collect() == eager
     finally:
         g.unpersist()
